@@ -79,11 +79,11 @@ def _t(spark: SparkSession, sf_dir: str, name: str,
         # yields fewer partitions than half the cores: at real
         # scale the scan has many splits and this is a no-op
         # (metadata check, no job).  The probe is cached per
-        # (sf_dir, table, cores): building the RDD-conversion plan
-        # costs ~0.1 s of driver time per call and the answer cannot
-        # change within a run.
+        # (sf_dir, table, cores, source mtime): building the
+        # RDD-conversion plan costs ~0.1 s of driver time per call,
+        # and a rewritten source gets a fresh probe.
         p = spark.sparkContext.defaultParallelism
-        key = (sf_dir, name, p)
+        key = (sf_dir, name, p, _src_mtime(sf_dir, name))
         n = _SCAN_PARTS_CACHE.get(key)
         if n is None:
             n = df.rdd.getNumPartitions()
@@ -107,10 +107,20 @@ _REBALANCE_MIN_BYTES = int(os.environ.get(
     "VPS_REBALANCE_MIN_BYTES", str(2 << 20)))
 
 
+def _src_mtime(sf_dir: str, name: str) -> int | None:
+    """Modification time (ns) of a parquet source; ``None`` when the
+    path is not local (object store)."""
+    try:
+        return os.stat(f"{sf_dir}/{name}.parquet").st_mtime_ns
+    except OSError:
+        return None
+
+
 def _src_bytes(sf_dir: str, name: str) -> int:
-    """On-disk size of a parquet source (file or directory)."""
+    """On-disk size of a parquet source (file or directory), cached
+    per source mtime like the partition probe in :func:`_t`."""
     path = f"{sf_dir}/{name}.parquet"
-    key = ("bytes", path)
+    key = ("bytes", path, _src_mtime(sf_dir, name))
     b = _SCAN_PARTS_CACHE.get(key)
     if b is None:
         try:
@@ -516,14 +526,11 @@ def _q_bm25(spark, sf_dir):
 
 def _q_minhash_dedup(spark, sf_dir):
     # full LSH dedup pipeline (signature -> banding -> bucket join ->
-    # jaccard verify -> survivor set), portable md5 construction so
-    # DuckDB replays the ENTIRE pipeline and hash-checks the survivor
-    # set.  The pandas-hash signature path (operators/dedup.py
-    # minhash_dedup) is the throughput twin benchmarked in bench.py;
-    # tests assert the two constructions' survivor sets agree.
-    from vision_parse_spark.operators.dedup import minhash_dedup_portable
+    # jaccard verify -> survivor set); the md5 construction lets
+    # DuckDB replay the ENTIRE pipeline and hash-check the survivor set
+    from vision_parse_spark.operators.dedup import minhash_dedup
 
-    return minhash_dedup_portable(
+    return minhash_dedup(
         _t(spark, sf_dir, "documents").select("doc_id", "text")
     ).select("doc_id")
 
@@ -532,8 +539,8 @@ def _q_minhash_incremental(spark, sf_dir):
     # incremental near-dedup — the day-to-day training-pipeline shape:
     # a NEW batch (odd doc_ids, demo split) deduped against the
     # accumulated CORPUS (even doc_ids); only new x corpus bucket
-    # collisions are verified.  Portable construction -> full DuckDB
-    # replay of signature/banding/bucket-join/jaccard/anti-join.
+    # collisions are verified.  Full DuckDB replay of
+    # signature/banding/bucket-join/jaccard/anti-join.
     from vision_parse_spark.operators.dedup import minhash_dedup_incremental
 
     d = _t(spark, sf_dir, "documents").select("doc_id", "text")
@@ -549,11 +556,11 @@ def _q_dup_clusters(spark, sf_dir):
     # transitive closure over the same pairs
     from vision_parse_spark.operators.dedup import (
         dup_clusters,
-        minhash_lsh_pairs_portable,
+        minhash_lsh_pairs,
     )
 
     d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    pairs = minhash_lsh_pairs_portable(d)
+    pairs = minhash_lsh_pairs(d)
     return dup_clusters(pairs).select("doc_id", "cluster_id")
 
 
@@ -562,18 +569,6 @@ def _q_curate(spark, sf_dir):
     # -> MinHash near-dedup -> PII scrub.  Every stage is individually
     # oracled; this query proves the COMPOSITION end to end (DuckDB
     # replays all four stages and the semi-join structure).
-    #
-    # Parity note (round-4 design, per the round-3 verdict): the
-    # PRODUCTION dedup stage runs the Arrow xxhash signature path
-    # while the oracle replays the portable md5 construction — both
-    # verify candidates with EXACT jaccard >= 0.5, so they differ only
-    # in LSH candidate RECALL at the threshold boundary.  Equality is
-    # therefore a measured property of the corpus (pytest-asserted on
-    # full and gated subsets), not structural; a pair at jaccard ~0.5
-    # caught by one banding and not the other would split them.  The
-    # alternative (shipping the portable construction in production,
-    # as pre-round-4) was rejected as the bigger evil: it benchmarks
-    # and ships the variant dedup.py explicitly marks do-not-ship.
     from vision_parse_spark.operators.curation import curate
 
     return curate(_tr(spark, sf_dir, "documents")).select(
@@ -589,11 +584,6 @@ def _q_curate_full(spark, sf_dir):
     # cut -> PII scrub.  Each stage is individually oracled; this
     # query proves their composition (gate-first pruning order,
     # subset-consistent KMeans init, anti-join drop semantics).
-    #
-    # Same parity note as `curate`: the production dedup stage runs
-    # the Arrow xxhash signature path while the oracle replays the
-    # portable md5 construction — equality is a measured property of
-    # the corpus (both verify with exact jaccard >= 0.5).
     from vision_parse_spark.operators.curation import curate_full
 
     d = _tr(spark, sf_dir, "documents").select("doc_id", "text")
@@ -804,30 +794,14 @@ def _q_resample_mixture(spark, sf_dir):
 
 
 def _q_minhash_signature(spark, sf_dir):
-    # DuckDB-checkable MinHash: md5-based shingle hashes (portable
-    # across engines, unlike xxhash64/pandas-hash) with 4 affine
-    # permutations over the 2^32 prime field -- the oracle twin of the
-    # production signature in operators/dedup.py
-    from vision_parse_spark.operators.dedup import with_shingles
+    # DuckDB-checkable MinHash: the first 4 md5-hashed affine
+    # permutations of the signature the LSH operators compute
+    from vision_parse_spark.operators.dedup import with_minhash
 
-    P = 4294967311
-    A = [1014583970, 671191146, 734632613, 963375983]
-    B = [3331544683, 967257519, 1289204381, 3751883492]
-    sh = with_shingles(
-        _tr(spark, sf_dir, "documents").select("doc_id", "text"), "text", 3
-    )
-    h = F.expr(
-        f"transform(shingles, s -> cast(conv(substring(md5(s), 1, 15), 16, 10)"
-        f" as bigint) % {P})"
-    )
-    out = sh.withColumn("_h", h)
-    cols = [
-        F.array_min(
-            F.expr(f"transform(_h, x -> (x * {A[k]}L + {B[k]}L) % {P}L)")
-        ).alias(f"perm{k}_min")
-        for k in range(4)
-    ]
-    return out.select("doc_id", *cols)
+    d = _tr(spark, sf_dir, "documents").select("doc_id", "text")
+    return with_minhash(d, num_perm=4).select(
+        "doc_id", *[F.col("minhash")[k].alias(f"perm{k}_min")
+                    for k in range(4)])
 
 
 def _q_simhash(spark, sf_dir):
@@ -1216,13 +1190,11 @@ def _q_leak_safe_split(spark, sf_dir):
     copies of training rows.  Singletons hash on their own key —
     identical to hash_split.  Oracle: the recursive-CTE transitive
     closure (dup_clusters replay) left-joined back, same bucket."""
-    from vision_parse_spark.operators.dedup import (
-        minhash_lsh_pairs_portable,
-    )
+    from vision_parse_spark.operators.dedup import minhash_lsh_pairs
     from vision_parse_spark.operators.sampling import leak_safe_split
 
     d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    pairs = minhash_lsh_pairs_portable(d)
+    pairs = minhash_lsh_pairs(d)
     return (leak_safe_split(d, pairs, train_frac=0.8)
             .select("doc_id", "rep_id", "split"))
 
@@ -2006,16 +1978,14 @@ def oracle_sql() -> dict[str, str]:
         SELECT e.vec_id FROM emb e
         ANTI JOIN dropped d ON e.vec_id = d.vec_id""")
 
-    # minhash_dedup oracle: replay the whole portable LSH pipeline
+    # minhash_dedup oracle: replay the whole LSH pipeline
     # (md5 shingle hashes -> 32 affine perms -> 16 bands of 2 ->
     # bucket self-join -> exact-jaccard verify -> survivor anti-join).
-    from vision_parse_spark.operators.dedup import (
-        _PORTABLE_PERMS_A, _PORTABLE_PERMS_B, _PRIME,
-    )
+    from vision_parse_spark.operators.dedup import _PERMS_A, _PERMS_B, _PRIME
 
     sig_list = ", ".join(
-        f"list_min(list_transform(hv, x -> (x * {_PORTABLE_PERMS_A[k]}"
-        f" + {_PORTABLE_PERMS_B[k]}) % {_PRIME}))"
+        f"list_min(list_transform(hv, x -> (x * {_PERMS_A[k]}"
+        f" + {_PERMS_B[k]}) % {_PRIME}))"
         for k in range(32)
     )
     # shared CTE chain up to the verified near-dup pair set; reused by

@@ -57,6 +57,9 @@ def test_minhash_signature_shape(spark, docs):
     row = with_minhash(docs, num_perm=32).first()
     assert len(row.minhash) == 32
     assert all(v >= 0 for v in row.minhash)
+    # 32 fixed permutations: a longer signature is refused, not cut
+    with pytest.raises(ValueError, match="num_perm"):
+        minhash_lsh_pairs(docs, num_perm=64)
 
 
 def test_minhash_identical_texts_identical_signatures(spark, docs):
@@ -163,43 +166,66 @@ def test_simhash_deterministic(spark, docs):
     assert [r.s for r in a] == [r.s for r in b]
 
 
-def test_portable_and_fast_minhash_survivors_agree(spark):
-    """The contract's md5-portable LSH pipeline and the Arrow/numpy
-    throughput path implement the same construction (32-bit affine
-    perms over distinct 3-shingles, banded buckets, jaccard>=0.5
-    verify); on the driver corpus their survivor sets must agree —
-    both constructions catch the same verified near-dup pairs."""
-    from vision_parse_spark.operators.dedup import (
-        minhash_dedup,
-        minhash_dedup_portable,
-    )
+# A near-duplicate pair at shingle Jaccard 0.533, inside [0.5, 0.6)
+# where LSH candidate recall depends on the construction: the 16 bands
+# of 2 rows over the 32-value md5 signature collide on it, while e.g.
+# 16 bands of 4 rows over a 64-permutation xxhash signature miss it.
+# Operators and DuckDB oracle agree here only by sharing one
+# construction.
+BOUNDARY_A = (
+    "lima hotel quartz cedar victor papa mike fern olive fern lima ember "
+    "sierra dune is quebec mike quebec it sage hotel uniform heath reed "
+    "willow zinnia lima in the papa kilo papa mike vine xray kelp grove "
+    "mike the reed it in willow and fern november thyme tango")
+BOUNDARY_B = (
+    "lima hotel quartz cedar victor papa mike fern olive fern lima ember "
+    "sierra dune zulu quebec mike quebec it sage hotel alpha heath reed "
+    "willow zinnia lima in the papa kilo papa mike vine zulu kelp grove "
+    "whiskey the reed it in willow and fern november yarrow tango")
+BOUNDARY_OTHER = (
+    "an unrelated third document about spark shuffle partitions and the "
+    "adaptive query execution of skew joins, long enough to pass the "
+    "quality gate of the curation pipeline with a few stop words in it")
 
-    docs = spark.read.parquet(
-        "/root/testdata/sf0.001/documents.parquet"
-    ).select("doc_id", "text")
-    fast = {r[0] for r in minhash_dedup(docs).select("doc_id").collect()}
-    portable = {r[0] for r in
-                minhash_dedup_portable(docs).select("doc_id").collect()}
-    assert fast == portable
+
+@pytest.fixture(scope="module")
+def boundary_pdf():
+    return pd.DataFrame({
+        "doc_id": [0, 1, 2], "source": ["s0"] * 3,
+        "text": [BOUNDARY_A, BOUNDARY_B, BOUNDARY_OTHER]})
 
 
-def test_portable_and_fast_minhash_agree_on_gated_subset(spark):
-    """Same equality over an arbitrary SUBSET of the corpus — the
-    property curate() relies on since round 4 (production composition
-    runs the Arrow path over gate survivors, the DuckDB oracle replays
-    the portable construction over the same gated set)."""
-    from vision_parse_spark.operators.dedup import (
-        minhash_dedup,
-        minhash_dedup_portable,
-    )
+def _oracle(name, pdf):
+    import duckdb
 
-    docs = spark.read.parquet(
-        "/root/testdata/sf0.001/documents.parquet"
-    ).select("doc_id", "text").filter("doc_id % 4 != 1")
-    fast = {r[0] for r in minhash_dedup(docs).select("doc_id").collect()}
-    portable = {r[0] for r in
-                minhash_dedup_portable(docs).select("doc_id").collect()}
-    assert fast == portable
+    import __spark_entry__ as entrymod
+
+    con = duckdb.connect()
+    con.register("documents", pdf)
+    return {tuple(r) for r in
+            con.execute(entrymod.oracle_sql()[name]).fetchall()}
+
+
+def test_minhash_dedup_equals_oracle_at_recall_boundary(spark, boundary_pdf):
+    docs = spark.createDataFrame(boundary_pdf)
+    pairs = {(r.id_a, r.id_b): r.jaccard
+             for r in minhash_lsh_pairs(docs).collect()}
+    assert list(pairs) == [(0, 1)]
+    assert 0.5 <= pairs[(0, 1)] < 0.6
+    got = {(r.doc_id,) for r in
+           minhash_dedup(docs).select("doc_id").collect()}
+    assert got == _oracle("minhash_dedup", boundary_pdf) == {(0,), (2,)}
+
+
+def test_curate_equals_oracle_at_recall_boundary(spark, boundary_pdf):
+    from vision_parse_spark.operators.curation import curate
+
+    got = {tuple(r) for r in
+           curate(spark.createDataFrame(boundary_pdf))
+           .select("doc_id", F.md5("text")).collect()}
+    want = _oracle("curate", boundary_pdf)
+    assert {d for d, _ in want} == {0, 2}
+    assert got == want
 
 
 def test_simhash_production_equals_portable(spark, docs):

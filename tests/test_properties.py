@@ -225,3 +225,18 @@ def test_annot_paths_total_on_garbage(data):
     assert len(out) == 1 and isinstance(out.iloc[0], str)
     imgs = extract_images_from_marker_text(body, "url", 0)
     assert isinstance(imgs, list)
+
+
+@given(st.integers(min_value=1, max_value=3000).flatmap(
+    lambda n: st.tuples(st.integers(0, 10**12 - n), st.just(n))))
+@settings(max_examples=60, deadline=None)
+def test_synth_keys_unique_over_any_id_range(span):
+    """``(conv_id, turn_idx)`` is a key of the synthetic transcripts for
+    any contiguous global-id range up to the 10^12-turn scale."""
+    import numpy as np
+
+    from vision_parse_spark.synth import gen_payloads
+
+    start, n = span
+    pdf = gen_payloads(np.arange(start, start + n))
+    assert not pdf.duplicated(["conv_id", "turn_idx"]).any()

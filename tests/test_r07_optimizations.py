@@ -77,20 +77,20 @@ def test_rouge_fast_equals_relational(spark):
         sorted((key(r), r["rouge2"]) for r in fast)
 
 
-# --- portable MinHash Arrow twin vs the Catalyst construction ------
+# --- MinHash Arrow kernel vs the Catalyst reference ----------------
 
-def test_minhash_portable_udf_equals_catalyst(spark):
+def test_minhash_udf_equals_catalyst(spark):
     from vision_parse_spark.operators.dedup import (
-        make_minhash_portable_udf, with_minhash_portable)
+        make_minhash_udf, with_minhash)
 
     d = (spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
          .select("doc_id", "text").limit(60))
     cat = {
         r["doc_id"]: list(r["minhash"])
-        for r in with_minhash_portable(d, "text", 32, 3).select(
+        for r in with_minhash(d, "text", 32, 3).select(
             "doc_id", "minhash").collect()
     }
-    udf = make_minhash_portable_udf(32, 3)
+    udf = make_minhash_udf(32, 3)
     arrow = {
         r["doc_id"]: list(r["mh"])
         for r in d.select("doc_id", udf(F.col("text")).alias("mh"))
@@ -190,29 +190,40 @@ def test_dup_clusters_evaluates_pairs_input_once(spark):
     """The symmetric+self-loop star edges are built with ONE explode
     pass; the old 3-branch union evaluated the (possibly expensive,
     non-materialized) pairs subtree once per branch inside the
-    distinct job.  Pin single evaluation with an accumulator-
-    instrumented input."""
-    import pandas as pd
+    distinct job.  Pin single evaluation with an instrumented input
+    that records which (stage, partition) tasks ran it: a task retry
+    re-records the same pair, a second evaluation adds a new stage."""
+    from pyspark import TaskContext
+    from pyspark.accumulators import AccumulatorParam
 
     from vision_parse_spark.operators.dedup import dup_clusters
 
-    acc = spark.sparkContext.accumulator(0)
+    class SetParam(AccumulatorParam):
+        def zero(self, value):
+            return set()
 
-    def bump(batches):
-        for pdf in batches:
-            acc.add(len(pdf))
-            yield pdf
+        def addInPlace(self, a, b):
+            return a | b
+
+    seen = spark.sparkContext.accumulator(set(), SetParam())
+
+    def record(batches):
+        tc = TaskContext.get()
+        seen.add({(tc.stageId(), tc.partitionId())})
+        yield from batches
 
     # two components: {1,2,3} and {10,11}
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11)], "id_a long, id_b long"
-    ).repartition(2).mapInPandas(bump, "id_a long, id_b long")
+    ).repartition(2).mapInPandas(record, "id_a long, id_b long")
     got = {r["doc_id"]: r["cluster_id"]
            for r in dup_clusters(pairs).collect()}
     assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
-    # every input row crossed the instrumented kernel exactly once
-    assert acc.value == 3, (
-        f"pairs input evaluated {acc.value / 3:.1f}x (expected 1x)")
+    # the instrumented kernel ran in exactly one stage, over its 2
+    # partitions
+    stages = {st for st, _ in seen.value}
+    assert len(stages) == 1, f"pairs input evaluated in stages {stages}"
+    assert sorted(p for _, p in seen.value) == [0, 1]
 
 
 # --- end-of-round wave: GD loop partitioning invariance -------------
@@ -262,3 +273,27 @@ def test_scan_rebalance_size_guard(spark, monkeypatch):
     p = spark.sparkContext.defaultParallelism
     assert em._tr(spark, sf, "documents").rdd.getNumPartitions() == p
     em._SCAN_PARTS_CACHE.clear()
+
+
+def test_scan_rebalance_follows_rewritten_source(spark, monkeypatch,
+                                                 tmp_path):
+    """The partition probe and size caches behind _tr are keyed on the
+    source's mtime: a source rewritten past the size threshold gets a
+    fresh rebalance decision instead of the cached one."""
+    import __spark_entry__ as em
+
+    sf = str(tmp_path)
+    monkeypatch.setattr(em, "_REBALANCE_MIN_BYTES", 64 << 10)
+
+    def write(n):
+        (spark.range(n).selectExpr("id AS doc_id",
+                                   "md5(cast(id AS string)) AS text")
+         .coalesce(1).write.mode("overwrite")
+         .parquet(f"{sf}/documents.parquet"))
+
+    write(10)
+    assert em._tr(spark, sf, "documents").rdd.getNumPartitions() == 1
+    write(20000)
+    assert em._src_bytes(sf, "documents") >= 64 << 10
+    p = spark.sparkContext.defaultParallelism
+    assert em._tr(spark, sf, "documents").rdd.getNumPartitions() == p

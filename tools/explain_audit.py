@@ -118,8 +118,7 @@ def main():
         "can replay the argmax exactly; the PRODUCTION path "
         "(`ivf_topk` + k-means centroids) does the same assignment "
         "NARROWLY inside an Arrow UDF (one matmul per batch, no "
-        "shuffle) — that is the 100 TB shape, same split as "
-        "minhash_dedup's portable/hot twins.",
+        "shuffle) — that is the 100 TB shape.",
         grab(ivf),
     ))
 
@@ -467,13 +466,11 @@ def main():
         grab(vg),
     ))
 
-    from vision_parse_spark.operators.dedup import (
-        minhash_lsh_pairs_portable)
+    from vision_parse_spark.operators.dedup import minhash_lsh_pairs
     from vision_parse_spark.operators.sampling import leak_safe_split
 
     lss = leak_safe_split(docs.select("doc_id", "text"),
-                          minhash_lsh_pairs_portable(
-                              docs.select("doc_id", "text")))
+                          minhash_lsh_pairs(docs.select("doc_id", "text")))
     sections.append((
         "Leakage-safe split (leak_safe_split)",
         "round 6.  The split itself adds ONE shuffle hash join "

@@ -25,9 +25,5 @@ class EncryptedPayloadError(VisionParseSparkError):
     standard handler (non-strict runs record status 'encrypted')."""
 
 
-class ExtractionError(VisionParseSparkError):
-    """Classification/formatting failed (analog of LLMError)."""
-
-
 class ImageExtractionError(VisionParseSparkError):
     """Region detection failed (same name as utils.py:13-14)."""

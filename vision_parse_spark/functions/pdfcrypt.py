@@ -135,22 +135,8 @@ def _expand_key(key: bytes) -> list[list[int]]:
     return [sum(words[4 * r:4 * r + 4], []) for r in range(nr + 1)]
 
 
-def _mix_single(col: list[int], mat: tuple[int, ...]) -> list[int]:
-    return [
-        _gf_mul(col[0], mat[0]) ^ _gf_mul(col[1], mat[1])
-        ^ _gf_mul(col[2], mat[2]) ^ _gf_mul(col[3], mat[3]),
-        _gf_mul(col[0], mat[3]) ^ _gf_mul(col[1], mat[0])
-        ^ _gf_mul(col[2], mat[1]) ^ _gf_mul(col[3], mat[2]),
-        _gf_mul(col[0], mat[2]) ^ _gf_mul(col[1], mat[3])
-        ^ _gf_mul(col[2], mat[0]) ^ _gf_mul(col[3], mat[1]),
-        _gf_mul(col[0], mat[1]) ^ _gf_mul(col[1], mat[2])
-        ^ _gf_mul(col[2], mat[3]) ^ _gf_mul(col[3], mat[0]),
-    ]
-
-
-_MIX = (2, 3, 1, 1)
-_INV_MIX = (14, 11, 13, 9)
-# byte-level lookup tables for the two matrices (speed)
+# byte-level lookup tables for the MixColumns (2, 3, 1, 1) and
+# InvMixColumns (14, 11, 13, 9) coefficients (speed)
 _MUL = {m: bytes(_gf_mul(x, m) for x in range(256))
         for m in (1, 2, 3, 9, 11, 13, 14)}
 

@@ -17,10 +17,9 @@ replays the full pipeline end to end.
 Scale notes: the two filter gates are semi-joins against narrow
 aggregates that prune the corpus BEFORE the LSH shuffle (the only
 heavy exchange) — the dedup stage therefore reads ONLY gate
-survivors, on the Arrow/numpy signature path (``minhash_dedup``, the
-throughput construction; the portable md5 twin exists solely so the
-DuckDB oracle can replay the pipeline — their survivor-set equality
-is pytest-asserted).  The scrub is a codegen'd Project over dedup
+survivors, through ``minhash_dedup``: the md5 MinHash construction
+the DuckDB oracle replays step for step, with its signatures computed
+by an Arrow kernel.  The scrub is a codegen'd Project over dedup
 survivors only.  Filter order is the plan: cheap-and-selective first.
 """
 
@@ -131,7 +130,7 @@ def curate_full(
                               shuffles for it
         -> SemDeDup           KMeans cells + tiled-matmul verify over
                               the gated docs' embeddings (Abbas 2023)
-        -> MinHash near-dedup LSH banding, Arrow signature path
+        -> MinHash near-dedup LSH banding, md5 signatures
         -> span removal       Lee-et-al frequent-span cut (rewrites
                               the text to normalized token space)
         -> PII scrub          one codegen'd Project

@@ -7,10 +7,11 @@ pandas UDFs; no row-at-a-time Python.
 
 Scale design notes:
 * exact dedup: one hash-shuffle on md5(text) with map-side partial agg.
-* MinHash+LSH: per-row signature (narrow), explode to (band, bucket)
-  (x BANDS rows), shuffle on bucket, self-join inside buckets only —
-  the classic sub-quadratic near-dup join.  Candidate verification is
-  a cheap exact-jaccard filter on the pair.
+* MinHash+LSH: per-row md5 signature (narrow), explode to (band,
+  bucket) (x BANDS rows), shuffle on bucket, self-join inside buckets
+  only — the classic sub-quadratic near-dup join.  Candidate
+  verification is a cheap exact-jaccard filter on the pair.  One
+  construction, replayed step for step by the DuckDB oracle.
 * SimHash: 64-bit signature via one Arrow-batched pandas UDF (numpy
   bit ops); near-dups = Manku multi-block bucket tables (~32-bit
   keys), exact-popcount verified.
@@ -101,45 +102,60 @@ def ngram_jaccard_adjacent(df: DataFrame, id_col: str = "doc_id",
 
 
 # ---------------------------------------------------------------------------
-# MinHash + LSH near-dup (the 100 TB path)
+# MinHash + LSH near-dup (the 100 TB path) — ONE construction: md5
+# shingle hashes, affine permutations over a 32-bit prime field, bands
+# keyed on the joined signature slice.  Every step is replayable in
+# DuckDB, so the operators below are exactly what the oracle checks.
 # ---------------------------------------------------------------------------
 
 # 32-bit prime field: keeps a*h + b < 2^62, safe under ANSI-mode
 # (no long overflow) while giving 4e9 distinct hash slots per perm.
 _PRIME = 4294967311  # smallest prime > 2^32
 
+_PERMS_A = [
+    1014583970, 671191146, 734632613, 963375983, 226985795, 1007067010,
+    921662243, 47296482, 272806461, 338641288, 645217332, 1022658562,
+    175079964, 925941178, 72520733, 533869772, 173471368, 186452917,
+    316894857, 276268739, 322916554, 752148285, 961364842, 409553234,
+    977662567, 319581567, 211470499, 167976871, 714976136, 346224596,
+    288657955, 64960918,
+]
+_PERMS_B = [
+    3331544683, 967257519, 1289204381, 3751883492, 706056609, 2118807623,
+    3838793569, 2017967234, 2406218188, 3871812988, 2403916704, 543962863,
+    1587539267, 2784088971, 1282701695, 2696022654, 3531963817, 1116214171,
+    270927619, 1243344256, 2254535710, 1030381776, 2720664690, 3580541493,
+    712620989, 3840089360, 3920124744, 169456119, 2569354540, 436304292,
+    3005503556, 3864822760,
+]
 
-def _perm_params(num_perm: int, seed: int = 7):
-    rng = np.random.default_rng(seed)
-    a = rng.integers(1, 1 << 30, size=num_perm, dtype=np.int64)
-    b = rng.integers(0, _PRIME, size=num_perm, dtype=np.int64)
-    return a, b
+
+def _check_num_perm(num_perm: int) -> None:
+    if not 1 <= num_perm <= len(_PERMS_A):
+        raise ValueError(
+            f"num_perm must be in [1, {len(_PERMS_A)}], got {num_perm}")
 
 
-def with_minhash(df: DataFrame, text_col: str = "text", num_perm: int = 64,
-                 shingle_n: int = 3, seed: int = 7,
-                 out_col: str = "minhash") -> DataFrame:
-    """MinHash signature column (array<bigint> of length num_perm).
-
-    Catalyst-native reference implementation: shingles -> xxhash64 ->
-    num_perm affine permutations, each reduced with array_min.  NOTE:
-    Spark's higher-order array lambdas are interpreted (not
-    whole-stage-codegen'd), so at num_perm=64 the Arrow-vectorized
-    ``with_minhash_np`` below is ~10x faster and is what the LSH path
-    uses; this variant is kept as the pure-SQL reference."""
-    a, b = _perm_params(num_perm, seed)
+def with_minhash(df: DataFrame, text_col: str = "text", num_perm: int = 32,
+                 shingle_n: int = 3, out_col: str = "minhash") -> DataFrame:
+    """MinHash signature column (array<bigint> of length num_perm),
+    Catalyst-native: ``with_shingles`` grams -> md5 hash
+    (``conv(substring(md5(s),1,15),16,10) % P``, the same expression
+    DuckDB replays) -> num_perm affine permutations, each reduced with
+    array_min.  Spark's higher-order array lambdas are interpreted, so
+    this is the reference the Arrow kernel :func:`make_minhash_udf` is
+    tested against, not the path the LSH operators run."""
+    _check_num_perm(num_perm)
     sh = with_shingles(df, text_col, shingle_n, out_col="_sh")
-    hashed = sh.withColumn(
-        "_h", F.expr(f"transform(_sh, s -> abs(xxhash64(s)) % {_PRIME}L)")
-    )
+    hashed = sh.withColumn("_h", F.expr(
+        f"transform(_sh, s -> cast(conv(substring(md5(s), 1, 15),"
+        f" 16, 10) as bigint) % {_PRIME})"))
     mins = F.array(*[
-        F.array_min(
-            F.expr(
-                f"transform(_h, h -> (h * {int(a[i])}L + {int(b[i])}L) "
-                f"% {_PRIME}L)"
-            )
-        )
-        for i in range(num_perm)
+        F.array_min(F.expr(
+            f"transform(_h, x -> (x * {_PERMS_A[k]}L"
+            f" + {_PERMS_B[k]}L) % {_PRIME}L)"
+        ))
+        for k in range(num_perm)
     ])
     return hashed.withColumn(out_col, mins).drop("_sh", "_h")
 
@@ -181,187 +197,24 @@ def make_shingle_udf(n: int = 3):
     return shingles.asNondeterministic()
 
 
-def make_minhash_udf(num_perm: int = 64, shingle_n: int = 3, seed: int = 7):
-    """Arrow-batched numpy MinHash: one (num_perm x total_shingles)
-    matrix op per batch, segmented min via ``np.minimum.reduceat``.
-    The 100 TB hot path (higher-order Catalyst lambdas are interpreted
-    and ~10x slower at this permutation count)."""
-    from pyspark.sql.types import ArrayType, LongType
-
-    a, b = _perm_params(num_perm, seed)
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def minhash_np(texts: pd.Series) -> pd.Series:
-        sh = _shingle_lists(texts, shingle_n)
-        lengths = sh.map(len).to_numpy()
-        flat = [s for lst in sh for s in lst]
-        if not flat:
-            return pd.Series([[]] * len(texts), index=texts.index)
-        h = (
-            pd.util.hash_pandas_object(pd.Series(flat), index=False)
-            .to_numpy().astype(np.uint64) % np.uint64(_PRIME)
-        ).astype(np.int64)
-        # (P, S) permuted hashes; segmented min per doc
-        perm = (a[:, None] * h[None, :] + b[:, None]) % _PRIME
-        offsets = np.concatenate([[0], np.cumsum(lengths)[:-1]])
-        mins = np.minimum.reduceat(perm, offsets, axis=1)  # (P, n_docs)
-        out = mins.T.tolist()
-        return pd.Series(out, index=texts.index)
-
-    # guide §4.4 duplication guard — see make_shingle_udf
-    return minhash_np.asNondeterministic()
-
-
-def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
-                      text_col: str = "text", num_perm: int = 64,
-                      bands: int = 16, shingle_n: int = 3,
-                      jaccard_threshold: float = 0.5,
-                      rebalance: bool = True) -> DataFrame:
-    """Near-duplicate pairs via banded LSH over MinHash signatures.
-
-    shuffle plan: explode to (band, bucket_hash) -> self-join on the
-    bucket (only collisions compared) -> dedupe pairs -> verify with
-    exact shingle jaccard >= threshold.  Returns (id_a, id_b, jaccard)
-    with id_a < id_b.
-
-    ``rebalance=True`` (default) repartitions to the session's default
-    parallelism before the signature UDF: small sources often arrive
-    as one file -> one partition, which would serialize the UDF.  At
-    cluster scale the scan already yields many splits — pass
-    ``rebalance=False`` to skip the extra shuffle (checking the actual
-    partition count would force an RDD conversion on the driver, so
-    the choice is an explicit flag instead)."""
-    rows_per_band = num_perm // bands
-    mh_udf = make_minhash_udf(num_perm, shingle_n)
-    src = df.select(id_col, text_col)
-    if rebalance:
-        src = src.repartition(df.sparkSession.sparkContext.defaultParallelism)
-    # id-only banded frame, persisted: it feeds BOTH sides of the
-    # self-join — without materialization the signature UDF lineage
-    # would be recomputed per join side and again per downstream stage
-    banded = (
-        src.withColumn("minhash", mh_udf(F.col(text_col)))
-        .select(
-            F.col(id_col),
-            F.posexplode(
-                F.expr(
-                    f"transform(sequence(0, {bands - 1}), "
-                    f"b -> xxhash64(concat_ws(',', slice(minhash, "
-                    f"b * {rows_per_band} + 1, {rows_per_band})), b))"
-                )
-            ).alias("band", "bucket"),
-        )
-        .persist()
-    )
-    banded.count()  # materialize BEFORE the self-join so both sides
-    # read the cache (persist alone doesn't guarantee reuse when both
-    # branches of one job race to populate it)
-    left = banded.select(F.col(id_col).alias("id_a"), "band", "bucket")
-    right = banded.select(F.col(id_col).alias("id_b"), "band", "bucket")
-    cand = (
-        left.join(right, ["band", "bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
-        .persist()
-    )
-    cand.count()  # materialize: gives AQE real stats for the verify
-    # joins (tiny cand side -> broadcast) instead of recomputing the
-    # banded self-join lineage inside the verify job
-    banded.unpersist()  # cand is materialized; signatures no longer needed
-    # texts joined back by id, RESTRICTED to candidate ids first
-    # (guide §1.2 per-task work): the interpreted shingle transform
-    # previously ran over the ENTIRE corpus on both verify sides;
-    # semi-joining each side to the (small, materialized) candidate id
-    # set computes shingles only for rows that are actually compared.
-    # Candidate pair set and jaccard expressions are unchanged, so the
-    # verified pair set is identical.
-    # (no explicit broadcast hint: cand is materialized so AQE has
-    # real stats — it broadcasts the id set when small and falls back
-    # to a shuffle join when a pathological corpus makes it big)
-    a = with_shingles(
-        src.join(cand.select(F.col("id_a").alias(id_col)).distinct(),
-                 id_col, "left_semi"),
-        text_col, shingle_n, "sh_a",
-    ).select(F.col(id_col).alias("id_a"), "sh_a")
-    b = with_shingles(
-        src.join(cand.select(F.col("id_b").alias(id_col)).distinct(),
-                 id_col, "left_semi"),
-        text_col, shingle_n, "sh_b",
-    ).select(F.col(id_col).alias("id_b"), "sh_b")
-    both = cand.join(a, "id_a").join(b, "id_b")
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size(F.array_union("sh_a", "sh_b"))
-    jac = F.when(union > 0, inter / union).otherwise(F.lit(0.0))
-    return (
-        both.select("id_a", "id_b", F.round(jac, 6).alias("jaccard"))
-        .filter(F.col("jaccard") >= jaccard_threshold)
-    )
-
-
-def minhash_dedup(df: DataFrame, id_col: str = "doc_id",
-                  text_col: str = "text", **kwargs) -> DataFrame:
-    """Rows that survive near-dup removal: a row is dropped when it is
-    the larger id of any verified near-dup pair (union-by-min after one
-    LSH round — the standard single-pass policy)."""
-    pairs = minhash_lsh_pairs(df, id_col, text_col, **kwargs)
-    losers = pairs.select(F.col("id_b").alias(id_col)).distinct()
-    return df.join(losers, id_col, "left_anti")
-
-
-# ---------------------------------------------------------------------------
-# portable (cross-engine) MinHash LSH — md5 shingle hashes so DuckDB
-# can replay the ENTIRE pipeline (signature -> banding -> bucket join
-# -> jaccard verify -> survivor set) and hash-check the result.  The
-# pandas-hash path above stays the throughput path; this one is the
-# correctness contract for the same construction.
-# ---------------------------------------------------------------------------
-
-_PORTABLE_PERMS_A = [
-    1014583970, 671191146, 734632613, 963375983, 226985795, 1007067010,
-    921662243, 47296482, 272806461, 338641288, 645217332, 1022658562,
-    175079964, 925941178, 72520733, 533869772, 173471368, 186452917,
-    316894857, 276268739, 322916554, 752148285, 961364842, 409553234,
-    977662567, 319581567, 211470499, 167976871, 714976136, 346224596,
-    288657955, 64960918,
-]
-_PORTABLE_PERMS_B = [
-    3331544683, 967257519, 1289204381, 3751883492, 706056609, 2118807623,
-    3838793569, 2017967234, 2406218188, 3871812988, 2403916704, 543962863,
-    1587539267, 2784088971, 1282701695, 2696022654, 3531963817, 1116214171,
-    270927619, 1243344256, 2254535710, 1030381776, 2720664690, 3580541493,
-    712620989, 3840089360, 3920124744, 169456119, 2569354540, 436304292,
-    3005503556, 3864822760,
-]
-
-
-def _portable_hash_expr(shingle_col: str) -> str:
-    """md5-based 32-bit-field shingle hash — identical expression is
-    replayable in DuckDB: CAST(('0x' || substring(md5(s),1,15)) AS
-    BIGINT) % P."""
-    return (
-        f"transform({shingle_col}, s -> cast(conv(substring(md5(s), 1, 15),"
-        f" 16, 10) as bigint) % {_PRIME})"
-    )
-
-
-def make_minhash_portable_udf(num_perm: int = 32, shingle_n: int = 3):
-    """Arrow-batched twin of :func:`with_minhash_portable` producing
-    the EXACT same signature integers: per-doc distinct shingles (the
+def make_minhash_udf(num_perm: int = 32, shingle_n: int = 3):
+    """Arrow-batched MinHash kernel producing the EXACT signature
+    integers of :func:`with_minhash`: per-doc distinct shingles (the
     ``_shingle_lists`` recipe — gram sets identical to
     ``with_shingles`` by construction, pytest-asserted), md5-hex
     15-digit hashes (``int(md5(s).hexdigest()[:15], 16) % P`` ==
     ``conv(substring(md5(s),1,15),16,10) % P`` — integer arithmetic,
-    no float), and the same affine permutations reduced with a
+    no float), and the same affine permutations as one
+    (num_perm x total_shingles) matrix op per batch reduced with a
     segmented min.  Each UNIQUE shingle is hashed once per batch and
-    mapped back (the SimHash kernel's trick).  All values are exact
-    int64 (``a*h + b < 2^62``), so the banded bucket strings built
-    from these signatures are byte-identical to the Catalyst path —
-    the portable/oracle construction at Arrow speed."""
+    mapped back.  All values are exact int64 (``a*h + b < 2^62``), so
+    the bucket strings built from these signatures are byte-identical
+    to the Catalyst and DuckDB constructions."""
     from pyspark.sql.types import ArrayType, LongType
 
-    a = np.array(_PORTABLE_PERMS_A[:num_perm], dtype=np.int64)
-    b = np.array(_PORTABLE_PERMS_B[:num_perm], dtype=np.int64)
+    _check_num_perm(num_perm)
+    a = np.array(_PERMS_A[:num_perm], dtype=np.int64)
+    b = np.array(_PERMS_B[:num_perm], dtype=np.int64)
 
     @F.pandas_udf(ArrayType(LongType()))
     def minhash_md5(texts: pd.Series) -> pd.Series:
@@ -387,54 +240,27 @@ def make_minhash_portable_udf(num_perm: int = 32, shingle_n: int = 3):
     return minhash_md5.asNondeterministic()
 
 
-def with_minhash_portable(df: DataFrame, text_col: str = "text",
-                          num_perm: int = 32, shingle_n: int = 3,
-                          out_col: str = "minhash") -> DataFrame:
-    """Catalyst MinHash signature with md5 shingle hashes (portable
-    across engines, unlike xxhash64/pandas-hash).  Interpreted array
-    lambdas — contract/verification path, not the throughput path."""
-    assert num_perm <= len(_PORTABLE_PERMS_A)
-    sh = with_shingles(df, text_col, shingle_n, out_col="_sh")
-    hashed = sh.withColumn("_h", F.expr(_portable_hash_expr("_sh")))
-    mins = F.array(*[
-        F.array_min(F.expr(
-            f"transform(_h, x -> (x * {_PORTABLE_PERMS_A[k]}L"
-            f" + {_PORTABLE_PERMS_B[k]}L) % {_PRIME}L)"
-        ))
-        for k in range(num_perm)
-    ])
-    return hashed.withColumn(out_col, mins).drop("_h")
+def _banded(src: DataFrame, id_col: str, text_col: str, num_perm: int,
+            bands: int, shingle_n: int, rebalance: bool) -> DataFrame:
+    """``(id_col, band, bucket)`` rows: the signature sliced into
+    ``bands`` runs of ``num_perm // bands`` values, each run joined
+    into a string bucket key (the key the DuckDB replay joins on).
+    Only ids cross the bucket shuffle; shingles are joined back for
+    candidate pairs by :func:`_verified`.
 
-
-def minhash_lsh_pairs_portable(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-    num_perm: int = 32, bands: int = 16, shingle_n: int = 3,
-    jaccard_threshold: float = 0.5,
-) -> DataFrame:
-    """Full LSH near-dup pair pipeline in the portable (md5)
-    construction: signature -> (band, bucket) explode -> bucket
-    self-join -> exact jaccard verify.  Same shuffle plan as
-    ``minhash_lsh_pairs``, and since round 7 the same physical shape
-    too: signatures come from the Arrow twin
-    (:func:`make_minhash_portable_udf` — byte-identical integers),
-    the banded explode carries ONLY ``(id, band, bucket)`` through
-    the self-join shuffle, and the shingle arrays for the exact
-    jaccard verify are joined back by id for CANDIDATE rows only
-    (previously every banded row dragged its full ``_sh`` array
-    through the bucket shuffle — ``bands``× duplication of
-    near-document-size arrays, the do-not-ship warning this change
-    removes)."""
+    ``rebalance=True`` repartitions to the session's default
+    parallelism before the signature kernel: small sources often
+    arrive as one file -> one partition, which would serialize it.
+    At cluster scale the scan already yields many splits — pass
+    ``rebalance=False`` to skip the extra shuffle (checking the actual
+    partition count would force an RDD conversion on the driver, so
+    the choice is an explicit flag instead)."""
     rows_per_band = num_perm // bands
-    src = df.select(id_col, text_col)
-    # small sources often arrive as ONE file -> one partition, which
-    # would serialize the signature kernel (the minhash_lsh_pairs
-    # rebalance rationale); at cluster scale the scan already yields
-    # many splits and AQE coalescing absorbs the extra exchange
-    sig_src = src.repartition(
-        df.sparkSession.sparkContext.defaultParallelism)
-    mh_udf = make_minhash_portable_udf(num_perm, shingle_n)
-    banded = (
-        sig_src.withColumn("minhash", mh_udf(F.col(text_col)))
+    if rebalance:
+        src = src.repartition(src.sparkSession.sparkContext.defaultParallelism)
+    mh_udf = make_minhash_udf(num_perm, shingle_n)
+    return (
+        src.withColumn("minhash", mh_udf(F.col(text_col)))
         .select(
             F.col(id_col),
             F.posexplode(F.expr(
@@ -443,10 +269,61 @@ def minhash_lsh_pairs_portable(
                 f"b * {rows_per_band} + 1, {rows_per_band})))"
             )).alias("band", "bucket"),
         )
-        .persist()
     )
-    banded.count()  # materialize before the self-join (both sides
-    # must read the cache, not recompute the signature lineage)
+
+
+def _verified(cand: DataFrame, left: DataFrame, right: DataFrame,
+              id_col: str, text_col: str, shingle_n: int,
+              jaccard_threshold: float, a: str = "id_a",
+              b: str = "id_b") -> DataFrame:
+    """Exact shingle-Jaccard verify of candidate pairs ``(a, b)``:
+    ``a`` ids index ``left``, ``b`` ids index ``right``.  Shingles are
+    computed for CANDIDATE rows only (each side semi-joined to the
+    materialized candidate id set first, guide §1.2 per-task work),
+    with the same ``with_shingles`` expression the signature's gram
+    sets are derived from.  No explicit broadcast hint: ``cand`` is
+    materialized, so AQE has real stats — it broadcasts the id set
+    when small and falls back to a shuffle join when a pathological
+    corpus makes it big.  Returns ``(a, b, jaccard)`` rows at or above
+    the threshold."""
+    def side(df: DataFrame, col: str) -> DataFrame:
+        return with_shingles(
+            df.select(id_col, text_col).join(
+                cand.select(F.col(col).alias(id_col)).distinct(),
+                id_col, "left_semi"),
+            text_col, shingle_n, f"sh_{col}",
+        ).select(F.col(id_col).alias(col), f"sh_{col}")
+
+    inter = F.size(F.array_intersect(f"sh_{a}", f"sh_{b}"))
+    union = F.size(F.array_union(f"sh_{a}", f"sh_{b}"))
+    jac = F.when(union > 0, inter / union).otherwise(F.lit(0.0))
+    return (
+        cand.join(side(left, a), a).join(side(right, b), b)
+        .select(a, b, F.round(jac, 6).alias("jaccard"))
+        .filter(F.col("jaccard") >= jaccard_threshold)
+    )
+
+
+def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
+                      text_col: str = "text", num_perm: int = 32,
+                      bands: int = 16, shingle_n: int = 3,
+                      jaccard_threshold: float = 0.5,
+                      rebalance: bool = True) -> DataFrame:
+    """Near-duplicate pairs via banded LSH over MinHash signatures.
+
+    shuffle plan: explode to (band, bucket) -> self-join on the bucket
+    (only collisions compared) -> dedupe pairs -> verify with exact
+    shingle jaccard >= threshold.  Returns (id_a, id_b, jaccard) with
+    id_a < id_b.  See :func:`_banded` for ``rebalance``."""
+    src = df.select(id_col, text_col)
+    # id-only banded frame, persisted: it feeds BOTH sides of the
+    # self-join — without materialization the signature UDF lineage
+    # would be recomputed per join side
+    banded = _banded(src, id_col, text_col, num_perm, bands, shingle_n,
+                     rebalance).persist()
+    banded.count()  # materialize BEFORE the self-join so both sides
+    # read the cache (persist alone doesn't guarantee reuse when both
+    # branches of one job race to populate it)
     left = banded.select(F.col(id_col).alias("id_a"), "band", "bucket")
     right = banded.select(F.col(id_col).alias("id_b"), "band", "bucket")
     cand = (
@@ -459,39 +336,22 @@ def minhash_lsh_pairs_portable(
     cand.count()  # materialize: AQE gets real stats for the verify
     # joins and the banded cache can be released
     banded.unpersist()
-    # shingles for candidate ids only — the same ``with_shingles``
-    # expression the signature's gram sets are derived from
-    a = with_shingles(
-        src.join(cand.select(F.col("id_a").alias(id_col)).distinct(),
-                 id_col, "left_semi"),
-        text_col, shingle_n, "sh_a",
-    ).select(F.col(id_col).alias("id_a"), "sh_a")
-    b = with_shingles(
-        src.join(cand.select(F.col("id_b").alias(id_col)).distinct(),
-                 id_col, "left_semi"),
-        text_col, shingle_n, "sh_b",
-    ).select(F.col(id_col).alias("id_b"), "sh_b")
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size(F.array_union("sh_a", "sh_b"))
-    jac = F.when(union > 0, inter / union).otherwise(F.lit(0.0))
-    pairs = (
-        cand.join(a, "id_a").join(b, "id_b")
-        .select("id_a", "id_b", F.round(jac, 6).alias("jaccard"))
-        .filter(F.col("jaccard") >= jaccard_threshold)
-    )
+    pairs = _verified(cand, src, src, id_col, text_col, shingle_n,
+                      jaccard_threshold)
     # pairs is small (post-threshold); truncate its lineage eagerly so
     # the candidate cache can be released NOW instead of accumulating
-    # in executor storage across a contract run.
+    # in executor storage across a pipeline run.
     pairs = pairs.localCheckpoint(eager=True)
     cand.unpersist()
     return pairs
 
 
-def minhash_dedup_portable(df: DataFrame, id_col: str = "doc_id",
-                           text_col: str = "text", **kwargs) -> DataFrame:
-    """Survivor set of the portable LSH pipeline (same union-by-min
-    policy as ``minhash_dedup``)."""
-    pairs = minhash_lsh_pairs_portable(df, id_col, text_col, **kwargs)
+def minhash_dedup(df: DataFrame, id_col: str = "doc_id",
+                  text_col: str = "text", **kwargs) -> DataFrame:
+    """Rows that survive near-dup removal: a row is dropped when it is
+    the larger id of any verified near-dup pair (union-by-min after one
+    LSH round — the standard single-pass policy)."""
+    pairs = minhash_lsh_pairs(df, id_col, text_col, **kwargs)
     losers = pairs.select(F.col("id_b").alias(id_col)).distinct()
     return df.join(losers, id_col, "left_anti")
 
@@ -703,8 +563,8 @@ def minhash_dedup_incremental(
     NOTE (ADVICE r3): by default only new-vs-corpus collisions are
     verified — near-duplicate pairs WITHIN the new batch both survive.
     Before appending the result to the corpus, either pass
-    ``dedup_within_batch=True`` (runs the portable LSH dedup over the
-    survivors, keeping the construction oracle-replayable) or
+    ``dedup_within_batch=True`` (runs :func:`minhash_dedup` over the
+    survivors) or
     self-dedup the batch upstream; appending an internally-duplicated
     batch would seed corpus×corpus duplicates that this operator, by
     design, never re-checks.
@@ -717,66 +577,29 @@ def minhash_dedup_incremental(
     once and persisted alongside the corpus; each side shuffles once
     on (band, bucket) and the verify joins texts back by id.
 
-    Portable construction throughout (md5 shingle hashes, affine
-    permutations), so the DuckDB oracle replays the whole pipeline."""
-    rows_per_band = num_perm // bands
-    band_expr = (
-        f"transform(sequence(0, {bands - 1}), "
-        f"b -> concat_ws(',', slice(minhash, b * {rows_per_band} + 1,"
-        f" {rows_per_band})))"
-    )
-    mh_udf = make_minhash_portable_udf(num_perm, shingle_n)
-
+    Same construction as :func:`minhash_lsh_pairs` (signature,
+    banding and verify are shared), so the DuckDB oracle replays the
+    whole pipeline."""
     def banded(side: DataFrame, suffix: str) -> DataFrame:
-        # Arrow signature twin (byte-identical integers); the banded
-        # rows carry ONLY (id, band, bucket) through the bucket-join
-        # shuffle — shingles are joined back for collided pairs below.
-        # Repartition first: a one-file source would serialize the
-        # signature kernel onto one task (the rebalance rationale).
-        return (
-            side.select(id_col, text_col)
-            .repartition(side.sparkSession.sparkContext
-                         .defaultParallelism)
-            .withColumn("minhash", mh_udf(F.col(text_col)))
-            .select(
-                F.col(id_col).alias(f"id_{suffix}"),
-                F.posexplode(F.expr(band_expr)).alias("band", "bucket"),
-            )
-        )
+        return _banded(side.select(id_col, text_col), id_col, text_col,
+                       num_perm, bands, shingle_n, rebalance=True
+                       ).withColumnRenamed(id_col, f"id_{suffix}")
 
     n = banded(new_df, "n").persist()
     n.count()  # barrier: both the join and the anti-join lineage
-    c = banded(corpus_df, "c")
     # distinct collided pairs first (a pair colliding in several bands
-    # was previously verified once per collision; the loser set is a
-    # distinct over id_n either way), then shingles for EXACTLY the
-    # collided rows
+    # is verified once; the loser set is a distinct over id_n either
+    # way), then shingles for EXACTLY the collided rows
     coll = (
-        n.join(c, ["band", "bucket"])
+        n.join(banded(corpus_df, "c"), ["band", "bucket"])
         .select("id_n", "id_c")
         .dropDuplicates(["id_n", "id_c"])
         .persist()
     )
     coll.count()
-    sh_n = with_shingles(
-        new_df.select(id_col, text_col)
-        .join(coll.select(F.col("id_n").alias(id_col)).distinct(),
-              id_col, "left_semi"),
-        text_col, shingle_n, "sh_n",
-    ).select(F.col(id_col).alias("id_n"), "sh_n")
-    sh_c = with_shingles(
-        corpus_df.select(id_col, text_col)
-        .join(coll.select(F.col("id_c").alias(id_col)).distinct(),
-              id_col, "left_semi"),
-        text_col, shingle_n, "sh_c",
-    ).select(F.col(id_col).alias("id_c"), "sh_c")
-    inter = F.size(F.array_intersect("sh_n", "sh_c"))
-    union = F.size(F.array_union("sh_n", "sh_c"))
-    jac = F.when(union > 0, inter / union).otherwise(F.lit(0.0))
     losers = (
-        coll.join(sh_n, "id_n").join(sh_c, "id_c")
-        .select("id_n", F.round(jac, 6).alias("jaccard"))
-        .filter(F.col("jaccard") >= jaccard_threshold)
+        _verified(coll, new_df, corpus_df, id_col, text_col, shingle_n,
+                  jaccard_threshold, "id_n", "id_c")
         .select(F.col("id_n").alias(id_col))
         .distinct()
     )
@@ -785,7 +608,7 @@ def minhash_dedup_incremental(
     n.unpersist()
     coll.unpersist()
     if dedup_within_batch:
-        out = minhash_dedup_portable(
+        out = minhash_dedup(
             out, id_col, text_col, num_perm=num_perm, bands=bands,
             shingle_n=shingle_n, jaccard_threshold=jaccard_threshold,
         )

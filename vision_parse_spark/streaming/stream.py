@@ -224,10 +224,7 @@ def foreach_batch_dedup_append(
     import os
     import time
 
-    from ..operators.dedup import (
-        minhash_dedup_incremental,
-        minhash_dedup_portable,
-    )
+    from ..operators.dedup import minhash_dedup, minhash_dedup_incremental
     from ..sinks.merge import LINEAGE_DIR, _row_checksum_agg
 
     stream_lineage = os.path.join(path, LINEAGE_DIR, "stream")
@@ -269,7 +266,7 @@ def foreach_batch_dedup_append(
                 dedup_within_batch=True,
             )
         else:  # first batch: self-dedup only
-            survivors = minhash_dedup_portable(
+            survivors = minhash_dedup(
                 new, id_col, text_col,
                 jaccard_threshold=jaccard_threshold)
         survivors = survivors.withColumn(

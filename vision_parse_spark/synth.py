@@ -90,7 +90,9 @@ def gen_payloads(ids: np.ndarray) -> pd.DataFrame:
     ids = np.asarray(ids, dtype=np.int64)
     n = len(ids)
     conv_ord, turn_idx = ids_to_conv(ids)
-    conv_id = np.char.add("conv-", np.char.zfill(conv_ord.astype(str), 6))
+    # full ordinal, zero-padded to >= 6 digits (np.char.zfill would
+    # cut 7+-digit ordinals to its width and collide keys)
+    conv_id = "conv-" + pd.Series(conv_ord).astype(str).str.zfill(6)
     role = _ROLES[turn_idx % 3]
     tool = np.where(role == "tool",
                     np.char.add("tool-", (_mix(ids, 901) % np.uint64(4)).astype(str)),
