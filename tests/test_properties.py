@@ -240,3 +240,21 @@ def test_synth_keys_unique_over_any_id_range(span):
     start, n = span
     pdf = gen_payloads(np.arange(start, start + n))
     assert not pdf.duplicated(["conv_id", "turn_idx"]).any()
+
+
+@given(st.integers(min_value=2, max_value=3000).flatmap(
+    lambda n: st.tuples(st.integers(0, 10**12 - n), st.just(n))))
+@settings(max_examples=60, deadline=None)
+def test_ids_to_conv_monotone_over_any_id_range(span):
+    """From one global id to the next, either the conversation stays
+    and ``turn_idx`` rises by 1, or the next conversation starts at
+    turn 0 — over any contiguous id range up to 10^12."""
+    import numpy as np
+
+    from vision_parse_spark.synth import ids_to_conv
+
+    start, n = span
+    conv, turn = ids_to_conv(np.arange(start, start + n, dtype=np.int64))
+    step = np.diff(conv)
+    assert set(np.unique(step)) <= {0, 1}
+    assert np.all(np.where(step == 0, np.diff(turn) == 1, turn[1:] == 0))

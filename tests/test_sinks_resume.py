@@ -388,3 +388,94 @@ def test_iceberg_dispatch_with_stubbed_catalog(spark, result_df, monkeypatch):
         assert "WHEN NOT MATCHED THEN INSERT *" in sqls[0]
     finally:
         spark.conf.unset("spark.sql.catalog.demo")
+
+
+def test_sinks_restore_partition_overwrite_mode(spark, result_df, out_dir):
+    """merge_write's dynamic partition overwrite is scoped to its own
+    write: afterwards a user's overwrite + partitionBy write must
+    still run in the session's own mode."""
+    from vision_parse_spark.sinks.merge import merge_upsert
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "STATIC")
+    try:
+        merge_write(result_df, out_dir, n_buckets=N_BUCKETS)
+        assert spark.conf.get(key) == "STATIC"
+        merge_upsert(result_df.filter(F.col("turn_idx") == 0), out_dir,
+                     run_id="u", n_buckets=N_BUCKETS)
+        assert spark.conf.get(key) == "STATIC"
+    finally:
+        spark.conf.set(key, prev)
+
+
+def test_verify_lineage_audits_zero_row_buckets(spark, result_df, tmp_path):
+    """Rows that appear in a committed zero-row bucket are served by
+    read_merged, so the audit must catch them; a table whose buckets
+    are all empty (no parquet file at all) audits clean."""
+    empty_dir = str(tmp_path / "empty")
+    merge_write(result_df.filter(F.lit(False)), empty_dir,
+                n_buckets=N_BUCKETS)
+    assert verify_lineage(spark, empty_dir)
+
+    out_dir = str(tmp_path / "merged")
+    bucket = F.pmod(F.xxhash64(F.col("conv_id")), F.lit(N_BUCKETS))
+    written = result_df.filter(bucket != 0)
+    n = written.count()
+    merge_write(written, out_dir, n_buckets=N_BUCKETS)
+    lin = {r["partition_id"]: r["row_count"]
+           for r in read_lineage(spark, out_dir).collect()}
+    assert lin[0] == 0
+    assert verify_lineage(spark, out_dir)
+
+    src = os.path.join(out_dir, "bucket=1")
+    name = next(f for f in sorted(os.listdir(src)) if f.endswith(".parquet"))
+    os.makedirs(os.path.join(out_dir, "bucket=0"))
+    shutil.copy(os.path.join(src, name), os.path.join(out_dir, "bucket=0"))
+    assert read_merged(spark, out_dir).count() > n
+    assert not verify_lineage(spark, out_dir)
+
+
+def test_manifest_key_order_pinned(spark, result_df, tmp_path):
+    """Every manifest kind keeps its keys, in order: the batch MERGE
+    bucket manifest (also what a staged upsert installs), the
+    streaming MERGE batch manifest and the streaming dedup-append
+    batch manifest."""
+    import json
+
+    from vision_parse_spark.sinks.merge import merge_upsert
+    from vision_parse_spark.streaming.stream import (
+        foreach_batch_dedup_append, foreach_batch_merge,
+    )
+
+    def keys(path):
+        with open(path) as f:
+            return list(json.load(f))
+
+    bucket_keys = ["run_id", "partition_id", "input_split", "row_count",
+                   "bytes", "checksum", "committed_unix"]
+    out_dir = str(tmp_path / "merged")
+    merge_write(result_df, out_dir, run_id="w", n_buckets=N_BUCKETS)
+    lin = os.path.join(out_dir, "_lineage")
+    assert keys(os.path.join(lin, "bucket_00000.json")) == bucket_keys
+    up = merge_upsert(result_df.filter(F.col("turn_idx") == 0), out_dir,
+                      run_id="u", n_buckets=N_BUCKETS)
+    staged = os.path.join(lin, f"bucket_{up['updated'][0]:05d}.json")
+    with open(staged) as f:
+        assert json.load(f)["run_id"] == "u"
+    assert keys(staged) == bucket_keys
+
+    stream_dir = str(tmp_path / "stream")
+    foreach_batch_merge(stream_dir, n_buckets=4)(result_df, 0)
+    assert keys(os.path.join(stream_dir, "_lineage", "stream",
+                             "batch_0000000000.json")) \
+        == ["batch_id", "row_count", "bytes", "checksum", "committed_unix"]
+
+    dedup_dir = str(tmp_path / "dedup")
+    docs = spark.createDataFrame(
+        [(0, "the quick brown fox jumps over the lazy dog today")],
+        "doc_id long, text string")
+    foreach_batch_dedup_append(dedup_dir)(docs, 0)
+    assert keys(os.path.join(dedup_dir, "_lineage", "stream",
+                             "batch_0000000000.json")) \
+        == ["batch_id", "row_count", "checksum", "committed_unix"]

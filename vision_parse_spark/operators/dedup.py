@@ -331,19 +331,15 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
         .filter(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b")
         .dropDuplicates(["id_a", "id_b"])
-        .persist()
+        # materialized: AQE gets real stats for the verify joins and
+        # the banded cache can be released.  A local checkpoint rather
+        # than a cache: its blocks go when the returned plan is
+        # garbage-collected, so the verify stays lazy (no job here).
+        .localCheckpoint(eager=True)
     )
-    cand.count()  # materialize: AQE gets real stats for the verify
-    # joins and the banded cache can be released
     banded.unpersist()
-    pairs = _verified(cand, src, src, id_col, text_col, shingle_n,
-                      jaccard_threshold)
-    # pairs is small (post-threshold); truncate its lineage eagerly so
-    # the candidate cache can be released NOW instead of accumulating
-    # in executor storage across a pipeline run.
-    pairs = pairs.localCheckpoint(eager=True)
-    cand.unpersist()
-    return pairs
+    return _verified(cand, src, src, id_col, text_col, shingle_n,
+                     jaccard_threshold)
 
 
 def minhash_dedup(df: DataFrame, id_col: str = "doc_id",

@@ -24,6 +24,10 @@ emulated on parquet with the identical recovery semantics:
 * per-bucket checksum = order-insensitive bit_xor of per-row xxhash64
   over (key, payload), so resumed output can be audited without a
   re-read of the source.
+* every manifest — committed, staged and the streaming sinks'
+  per-batch ones — is built from ``_stats``, written by
+  ``_commit_manifest`` and read back on the driver by
+  ``read_manifests``; no Spark job reads a manifest.
 """
 
 from __future__ import annotations
@@ -32,6 +36,7 @@ import json
 import os
 import shutil
 import time
+from contextlib import contextmanager
 from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -112,6 +117,101 @@ def _row_checksum_agg(key_cols: Sequence[str], payload_col: str):
     return F.expr(f"bit_xor(xxhash64({cols}))")
 
 
+def _bucket_col(key_cols: Sequence[str], n_buckets: int):
+    """A row's bucket: its first key column hashed modulo ``n_buckets``
+    (convs stay co-located)."""
+    return F.pmod(F.xxhash64(F.col(key_cols[0])),
+                  F.lit(n_buckets)).cast("int")
+
+
+def _stats(df: DataFrame, key_cols: Sequence[str], payload_col: str,
+           by: Sequence[str] = ()) -> dict[tuple, dict]:
+    """Manifest stats of ``df`` per ``by`` group: ``{group values:
+    {"row_count", "bytes", "checksum"}}``.  With no ``by`` columns the
+    one global group is ``()``; over no rows its checksum is
+    ``"None"`` (bit_xor of nothing is null)."""
+    rows = (
+        df.groupBy(*by)
+        .agg(
+            F.count(F.lit(1)).alias("row_count"),
+            F.sum(F.length(payload_col)).alias("bytes"),
+            _row_checksum_agg(key_cols, payload_col).alias("checksum"),
+        )
+        .collect()
+    )
+    return {tuple(r[c] for c in by): {"row_count": int(r["row_count"]),
+                                      "bytes": int(r["bytes"] or 0),
+                                      "checksum": str(r["checksum"])}
+            for r in rows}
+
+
+def _bucket_stats(spark: SparkSession, root: str, buckets: Sequence[int],
+                  key_cols: Sequence[str],
+                  payload_col: str) -> dict[int, dict]:
+    """:func:`_stats` of each of ``buckets`` from the data stored under
+    ``root`` (audits the files, not the plan).  A bucket without a
+    ``bucket=`` dir holds no rows: ``(0, 0, "0")`` — and when no bucket
+    has one, no Spark job runs (the path may hold no parquet at all)."""
+    present = [b for b in buckets
+               if os.path.isdir(os.path.join(root, f"bucket={b}"))]
+    stats = {}
+    if present:
+        stored = spark.read.parquet(root).filter(F.col("bucket").isin(present))
+        stats = {b: s for (b,), s in
+                 _stats(stored, key_cols, payload_col, ("bucket",)).items()}
+    empty = {"row_count": 0, "bytes": 0, "checksum": "0"}
+    return {b: stats.get(b, empty) for b in buckets}
+
+
+def _bucket_manifests(spark: SparkSession, root: str, buckets: Sequence[int],
+                      run_id: str, n_buckets: int, key_cols: Sequence[str],
+                      payload_col: str) -> dict[int, dict]:
+    """The lineage manifest of each of ``buckets`` stored under
+    ``root`` (without ``committed_unix``, which the commit adds)."""
+    stats = _bucket_stats(spark, root, buckets, key_cols, payload_col)
+    return {b: {"run_id": run_id, "partition_id": b,
+                "input_split": f"bucket={b}/{n_buckets}", **stats[b]}
+            for b in buckets}
+
+
+def _commit_manifest(file: str, record: dict) -> None:
+    """Write ``record`` plus ``committed_unix`` to ``file`` atomically
+    (tmp + rename): readers see the whole manifest or none of it."""
+    os.makedirs(os.path.dirname(file), exist_ok=True)
+    tmp = file + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump({**record, "committed_unix": int(time.time())}, f)
+    os.replace(tmp, file)
+
+
+def read_manifests(d: str) -> list[dict]:
+    """Every ``*.json`` manifest directly under ``d``, in file-name
+    order; ``[]`` when ``d`` does not exist.  Driver-side: manifests
+    are one small file per bucket or batch."""
+    if not os.path.isdir(d):
+        return []
+    out = []
+    for name in sorted(os.listdir(d)):
+        if name.endswith(".json"):
+            with open(os.path.join(d, name)) as f:
+                out.append(json.load(f))
+    return out
+
+
+@contextmanager
+def _dynamic_overwrite(spark: SparkSession):
+    """Dynamic partition overwrite for the writes inside the block (a
+    write replaces only the partitions it has rows for); the session's
+    previous mode is restored afterwards."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "dynamic")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
+
+
 def _manifest_path(path: str, bucket: int) -> str:
     return os.path.join(path, LINEAGE_DIR, f"bucket_{bucket:05d}.json")
 
@@ -149,9 +249,8 @@ def merge_write(
     if not todo:
         return {"written": [], "skipped": sorted(done), "rows": 0}
 
-    bucket = F.pmod(F.xxhash64(F.col(key_cols[0])), F.lit(n_buckets)).cast("int")
-    with_bucket = df.withColumn("bucket", bucket)
-    pending = with_bucket.filter(F.col("bucket").isin([int(b) for b in todo]))
+    pending = (df.withColumn("bucket", _bucket_col(key_cols, n_buckets))
+               .filter(F.col("bucket").isin(todo)))
 
     # purge UNCOMMITTED bucket dirs before writing: dynamic partition
     # overwrite only replaces partitions present in the current df, so
@@ -159,102 +258,19 @@ def merge_write(
     # rows this time would otherwise survive the write and get audited
     # into the manifest as if it were this run's data.
     for b in todo:
-        stale = os.path.join(path, f"bucket={int(b)}")
+        stale = os.path.join(path, f"bucket={b}")
         if os.path.isdir(stale):
             shutil.rmtree(stale)
 
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    (
-        pending.write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(path)
-    )
+    with _dynamic_overwrite(spark):
+        pending.write.mode("overwrite").partitionBy("bucket").parquet(path)
 
-    # lineage from the data actually persisted (audits the files, not
-    # the plan); guard the read-back — a write where every todo bucket
-    # was empty leaves no bucket dirs (and possibly no readable path)
-    present = [int(b) for b in todo
-               if os.path.isdir(os.path.join(path, f"bucket={int(b)}"))]
-    stats = []
-    if present:
-        written = (
-            spark.read.parquet(path)
-            .filter(F.col("bucket").isin(present))
-        )
-        stats = (
-            written.groupBy("bucket")
-            .agg(
-                F.count(F.lit(1)).alias("row_count"),
-                F.sum(F.length(payload_col)).alias("bytes"),
-                _row_checksum_agg(key_cols, payload_col).alias("checksum"),
-            )
-            .collect()
-        )
-    by_bucket = {r["bucket"]: r for r in stats}
-
-    os.makedirs(os.path.join(path, LINEAGE_DIR), exist_ok=True)
-    rows_total = 0
-    for b in todo:
-        r = by_bucket.get(b)
-        manifest = {
-            "run_id": run_id,
-            "partition_id": int(b),
-            "input_split": f"bucket={b}/{n_buckets}",
-            "row_count": int(r["row_count"]) if r else 0,
-            "bytes": int(r["bytes"] or 0) if r else 0,
-            "checksum": str(r["checksum"]) if r else "0",
-            "committed_unix": int(time.time()),
-        }
-        tmp = _manifest_path(path, b) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, _manifest_path(path, b))
-        rows_total += manifest["row_count"]
-    return {"written": todo, "skipped": sorted(done), "rows": rows_total}
-
-
-def _refresh_manifests(
-    spark: SparkSession,
-    path: str,
-    buckets: Sequence[int],
-    run_id: str,
-    n_buckets: int,
-    key_cols: Sequence[str],
-    payload_col: str,
-) -> int:
-    """(Re)write lineage manifests for ``buckets`` from the data
-    actually stored under ``path``.  Returns total rows covered."""
-    stats = (
-        spark.read.parquet(path)
-        .filter(F.col("bucket").isin([int(b) for b in buckets]))
-        .groupBy("bucket")
-        .agg(
-            F.count(F.lit(1)).alias("row_count"),
-            F.sum(F.length(payload_col)).alias("bytes"),
-            _row_checksum_agg(key_cols, payload_col).alias("checksum"),
-        )
-        .collect()
-    )
-    by_bucket = {int(r["bucket"]): r for r in stats}
-    os.makedirs(os.path.join(path, LINEAGE_DIR), exist_ok=True)
-    total = 0
-    for b in buckets:
-        r = by_bucket.get(int(b))
-        manifest = {
-            "run_id": run_id,
-            "partition_id": int(b),
-            "input_split": f"bucket={int(b)}/{n_buckets}",
-            "row_count": int(r["row_count"]) if r else 0,
-            "bytes": int(r["bytes"] or 0) if r else 0,
-            "checksum": str(r["checksum"]) if r else "0",
-            "committed_unix": int(time.time()),
-        }
-        tmp = _manifest_path(path, int(b)) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, _manifest_path(path, int(b)))
-        total += manifest["row_count"]
-    return total
+    manifests = _bucket_manifests(spark, path, todo, run_id, n_buckets,
+                                  key_cols, payload_col)
+    for b, m in manifests.items():
+        _commit_manifest(_manifest_path(path, b), m)
+    return {"written": todo, "skipped": sorted(done),
+            "rows": sum(m["row_count"] for m in manifests.values())}
 
 
 def _staged_manifest_path(staging: str, bucket: int) -> str:
@@ -275,42 +291,21 @@ def _stage_manifests(
     a crash at any point of the swap can always restore commit state
     (ADVICE r3: refreshing manifests only after the whole swap loop left
     a window where a bucket had neither manifest nor staging copy).
-    The swap is a pure rename, so staged stats == post-swap stats."""
-    present = sorted(
-        int(name.split("=", 1)[1])
-        for name in os.listdir(staging)
-        if name.startswith("bucket=")
-    )
-    if not present:
-        return []
-    stats = (
-        spark.read.parquet(staging)
-        .filter(F.col("bucket").isin(present))
-        .groupBy("bucket")
-        .agg(
-            F.count(F.lit(1)).alias("row_count"),
-            F.sum(F.length(payload_col)).alias("bytes"),
-            _row_checksum_agg(key_cols, payload_col).alias("checksum"),
-        )
-        .collect()
-    )
-    by_bucket = {int(r["bucket"]): r for r in stats}
-    for b in present:
-        r = by_bucket.get(b)
-        manifest = {
-            "run_id": run_id,
-            "partition_id": int(b),
-            "input_split": f"bucket={b}/{n_buckets}",
-            "row_count": int(r["row_count"]) if r else 0,
-            "bytes": int(r["bytes"] or 0) if r else 0,
-            "checksum": str(r["checksum"]) if r else "0",
-            "committed_unix": int(time.time()),
-        }
-        tmp = _staged_manifest_path(staging, b) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, _staged_manifest_path(staging, b))
-    return present
+    The swap is a pure rename, so staged stats == post-swap stats.
+
+    Only staged ``bucket=`` dirs without a staged manifest are
+    computed, so the swap's own call is free after ``merge_upsert``
+    staged them, and a redo log staged without manifests (pre round-4)
+    gets them before its swap.  Returns the buckets staged."""
+    staged = {int(name.split("=", 1)[1]) for name in os.listdir(staging)
+              if name.startswith("bucket=")}
+    todo = sorted(staged - {m["partition_id"]
+                            for m in read_manifests(staging)})
+    manifests = _bucket_manifests(spark, staging, todo, run_id, n_buckets,
+                                  key_cols, payload_col)
+    for b, m in manifests.items():
+        _commit_manifest(_staged_manifest_path(staging, b), m)
+    return todo
 
 
 def _complete_swap(
@@ -341,47 +336,25 @@ def _complete_swap(
     Crash between 3 and 4: the staged manifest is still present with
     no staged data dir, so the replay skips to step 4 and commits.
     Crash between 1 and 3: data dir + manifest both staged; replay
-    redoes 1-4.  Legacy staging dirs without precomputed manifests
-    (pre round-4) fall back to a post-swap ``_refresh_manifests``."""
-    staged_manifests = {
-        int(name[len("manifest_bucket_"):-len(".json")]): name
-        for name in os.listdir(staging)
-        if name.startswith("manifest_bucket_") and name.endswith(".json")
-    }
-    swapped = []
-    if staged_manifests:
-        for b in sorted(staged_manifests):
-            staged_dir = os.path.join(staging, f"bucket={b}")
-            live_dir = os.path.join(path, f"bucket={b}")
-            if os.path.isdir(staged_dir):
-                mpath = _manifest_path(path, b)
-                if os.path.exists(mpath):
-                    os.remove(mpath)  # uncommit: hide from readers
-                if os.path.isdir(live_dir):
-                    shutil.rmtree(live_dir)
-                os.replace(staged_dir, live_dir)
-            # else: data already swapped by a crashed attempt — only
-            # the manifest install remains
-            os.makedirs(os.path.join(path, LINEAGE_DIR), exist_ok=True)
-            os.replace(os.path.join(staging, staged_manifests[b]),
-                       _manifest_path(path, b))
-            swapped.append(b)
-    else:  # legacy redo log (no precomputed manifests)
-        for name in sorted(os.listdir(staging)):
-            if not name.startswith("bucket="):
-                continue
-            b = int(name.split("=", 1)[1])
+    redoes 1-4.  Staged buckets without a manifest get one first
+    (:func:`_stage_manifests`)."""
+    _stage_manifests(spark, staging, run_id, n_buckets, key_cols,
+                     payload_col)
+    swapped = sorted(m["partition_id"] for m in read_manifests(staging))
+    os.makedirs(os.path.join(path, LINEAGE_DIR), exist_ok=True)
+    for b in swapped:
+        staged_dir = os.path.join(staging, f"bucket={b}")
+        live_dir = os.path.join(path, f"bucket={b}")
+        if os.path.isdir(staged_dir):
             mpath = _manifest_path(path, b)
             if os.path.exists(mpath):
-                os.remove(mpath)
-            old = os.path.join(path, name)
-            if os.path.isdir(old):
-                shutil.rmtree(old)
-            os.replace(os.path.join(staging, name), old)
-            swapped.append(b)
-        if swapped:
-            _refresh_manifests(spark, path, swapped, run_id, n_buckets,
-                               key_cols, payload_col)
+                os.remove(mpath)  # uncommit: hide from readers
+            if os.path.isdir(live_dir):
+                shutil.rmtree(live_dir)
+            os.replace(staged_dir, live_dir)
+        # else: data already swapped by a crashed attempt — only
+        # the manifest install remains
+        os.replace(_staged_manifest_path(staging, b), _manifest_path(path, b))
     shutil.rmtree(staging, ignore_errors=True)
     return swapped
 
@@ -453,8 +426,7 @@ def merge_upsert(
     # finish any crashed upsert first (staging dirs are redo logs)
     recover_staged(spark, path, n_buckets, key_cols, payload_col)
 
-    bucket = F.pmod(F.xxhash64(F.col(key_cols[0])), F.lit(n_buckets)).cast("int")
-    incoming = df.withColumn("bucket", bucket).persist()
+    incoming = df.withColumn("bucket", _bucket_col(key_cols, n_buckets)).persist()
     affected = sorted(
         int(r["bucket"])
         for r in incoming.select("bucket").distinct().collect()
@@ -493,22 +465,25 @@ def merge_upsert(
 
     _complete_swap(spark, path, staging, run_id, n_buckets,
                    key_cols, payload_col)
-    rows = sum(
-        int(json.load(open(_manifest_path(path, b)))["row_count"])
-        for b in affected
-    )
+    rows = sum(m["row_count"]
+               for m in read_manifests(os.path.join(path, LINEAGE_DIR))
+               if m["partition_id"] in affected)
     return {"updated": upd,
             "inserted": [b for b in affected if b not in set(upd)],
             "rows": rows}
 
 
+# lineage row columns: alphabetical, integers as bigint — what Spark's
+# JSON reader infers from the manifests, kept for read_lineage callers
+_LINEAGE_SCHEMA = ("bytes bigint, checksum string, committed_unix bigint, "
+                   "input_split string, partition_id bigint, "
+                   "row_count bigint, run_id string")
+
+
 def read_lineage(spark: SparkSession, path: str) -> DataFrame:
     """Lineage manifests as a DataFrame (north_rule lineage rows)."""
-    d = os.path.join(path, LINEAGE_DIR)
-    files = [os.path.join(d, f) for f in sorted(os.listdir(d))
-             if f.endswith(".json")]
-    return spark.read.json(spark.sparkContext.parallelize(
-        [open(f).read() for f in files], max(len(files), 1)))
+    return spark.createDataFrame(
+        read_manifests(os.path.join(path, LINEAGE_DIR)), _LINEAGE_SCHEMA)
 
 
 def read_merged(spark: SparkSession, path: str) -> DataFrame:
@@ -522,21 +497,16 @@ def read_merged(spark: SparkSession, path: str) -> DataFrame:
 def verify_lineage(spark: SparkSession, path: str,
                    key_cols: Sequence[str] = ("conv_id", "turn_idx"),
                    payload_col: str = "markdown") -> bool:
-    """Audit: recompute per-bucket checksums from the stored data and
-    compare with the manifests."""
-    lin = {int(r["partition_id"]): (int(r["row_count"]), str(r["checksum"]))
-           for r in read_lineage(spark, path).collect()}
-    actual = (
-        read_merged(spark, path)
-        .groupBy("bucket")
-        .agg(F.count(F.lit(1)).alias("n"),
-             _row_checksum_agg(key_cols, payload_col).alias("c"))
-        .collect()
+    """Audit: recompute per-bucket row counts and checksums from the
+    stored data and compare them with every manifest, zero-row ones
+    included (rows that appear later in an empty committed bucket are
+    served by ``read_merged``, so they are audited too)."""
+    lin = read_manifests(os.path.join(path, LINEAGE_DIR))
+    stored = _bucket_stats(spark, path, [m["partition_id"] for m in lin],
+                           key_cols, payload_col)
+    return all(
+        (stored[m["partition_id"]]["row_count"],
+         stored[m["partition_id"]]["checksum"])
+        == (m["row_count"], m["checksum"])
+        for m in lin
     )
-    seen = {int(r["bucket"]): (int(r["n"]), str(r["c"])) for r in actual}
-    for b, (n, c) in lin.items():
-        if n == 0:
-            continue
-        if seen.get(b) != (n, c):
-            return False
-    return True

@@ -66,8 +66,8 @@ def foreach_batch_merge(path: str, n_buckets: int = 16,
                         payload_col: str = "markdown"):
     """Streaming analog of the batch MERGE sink: a ``foreachBatch``
     function that appends each micro-batch to the bucketed layout and
-    commits a per-batch lineage manifest (row count, bytes, checksum,
-    bucket histogram).
+    commits a per-batch lineage manifest (batch id, row count, bytes,
+    checksum).
 
     Exactly-once under replay: Structured Streaming re-runs a failed
     micro-batch with the SAME ``batch_id``.  Two guards compose:
@@ -82,13 +82,15 @@ def foreach_batch_merge(path: str, n_buckets: int = 16,
 
     The batch ``merge_write`` is whole-dataset/overwrite semantics —
     wrong for incremental appends — hence the separate per-batch
-    contract; both share the bucketed layout and checksum recipe.
+    contract; both share the bucketed layout and the manifest helpers
+    of ``sinks.merge``.
     """
-    import json
     import os
-    import time
 
-    from ..sinks.merge import LINEAGE_DIR, _row_checksum_agg
+    from ..sinks.merge import (
+        LINEAGE_DIR, _bucket_col, _commit_manifest, _dynamic_overwrite,
+        _stats,
+    )
 
     stream_lineage = os.path.join(path, LINEAGE_DIR, "stream")
 
@@ -97,44 +99,22 @@ def foreach_batch_merge(path: str, n_buckets: int = 16,
                                      f"batch_{batch_id:010d}.json")
         if os.path.exists(manifest_path):  # replayed batch — already in
             return
-        bucket = F.pmod(F.xxhash64(F.col(key_cols[0])),
-                        F.lit(n_buckets)).cast("int")
         with_bucket = (
             batch_df.withColumn("_batch", F.lit(int(batch_id)))
-            .withColumn("bucket", bucket)
+            .withColumn("bucket", _bucket_col(key_cols, n_buckets))
             .persist()
         )
-        stats = with_bucket.groupBy().agg(
-            F.count(F.lit(1)).alias("rows"),
-            F.sum(F.length(payload_col)).alias("bytes"),
-            _row_checksum_agg(key_cols, payload_col).alias("checksum"),
-        ).collect()[0]
-        spark = with_bucket.sparkSession
-        prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode",
-                                   "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         try:
-            (
-                with_bucket.write.mode("overwrite")
-                .partitionBy("_batch", "bucket")
-                .parquet(path)
-            )
+            stats = _stats(with_bucket, key_cols, payload_col)[()]
+            with _dynamic_overwrite(with_bucket.sparkSession):
+                (
+                    with_bucket.write.mode("overwrite")
+                    .partitionBy("_batch", "bucket")
+                    .parquet(path)
+                )
         finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode",
-                           prev_mode)
             with_bucket.unpersist()
-        os.makedirs(stream_lineage, exist_ok=True)
-        manifest = {
-            "batch_id": int(batch_id),
-            "row_count": int(stats["rows"] or 0),
-            "bytes": int(stats["bytes"] or 0),
-            "checksum": str(stats["checksum"]),
-            "committed_unix": int(time.time()),
-        }
-        tmp = manifest_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, manifest_path)
+        _commit_manifest(manifest_path, {"batch_id": int(batch_id), **stats})
 
     return write_batch
 
@@ -220,30 +200,15 @@ def foreach_batch_dedup_append(
     operator boundary is unchanged, so that swap is local to this
     function.
     """
-    import json
     import os
-    import time
 
     from ..operators.dedup import minhash_dedup, minhash_dedup_incremental
-    from ..sinks.merge import LINEAGE_DIR, _row_checksum_agg
+    from ..sinks.merge import (
+        LINEAGE_DIR, _commit_manifest, _dynamic_overwrite, _stats,
+        read_manifests,
+    )
 
     stream_lineage = os.path.join(path, LINEAGE_DIR, "stream")
-
-    def _committed_with_rows() -> list[int]:
-        """Committed batch ids that actually WROTE rows — zero-row
-        batches have a manifest but no ``_batch=`` partition, and
-        reading a path holding only ``_lineage`` would raise
-        UNABLE_TO_INFER_SCHEMA (permanently, since the manifest
-        persists)."""
-        if not os.path.isdir(stream_lineage):
-            return []
-        out = []
-        for name in sorted(os.listdir(stream_lineage)):
-            if name.startswith("batch_") and name.endswith(".json"):
-                with open(os.path.join(stream_lineage, name)) as f:
-                    if int(json.load(f).get("row_count", 0)) > 0:
-                        out.append(int(name[len("batch_"):-len(".json")]))
-        return out
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         manifest_path = os.path.join(stream_lineage,
@@ -252,8 +217,12 @@ def foreach_batch_dedup_append(
             return
         spark = batch_df.sparkSession
         new = batch_df.select(id_col, text_col)
-        committed = [b for b in _committed_with_rows()
-                     if b != int(batch_id)]
+        # committed batches that WROTE rows: a zero-row batch has a
+        # manifest but no ``_batch=`` partition, and reading a path
+        # holding only ``_lineage`` would raise UNABLE_TO_INFER_SCHEMA
+        # (permanently, since the manifest persists)
+        committed = [m["batch_id"] for m in read_manifests(stream_lineage)
+                     if m["row_count"] > 0 and m["batch_id"] != int(batch_id)]
         if committed:
             corpus = (
                 spark.read.parquet(path)
@@ -271,32 +240,16 @@ def foreach_batch_dedup_append(
                 jaccard_threshold=jaccard_threshold)
         survivors = survivors.withColumn(
             "_batch", F.lit(int(batch_id))).persist()
-        stats = survivors.groupBy().agg(
-            F.count(F.lit(1)).alias("rows"),
-            _row_checksum_agg([id_col], text_col).alias("checksum"),
-        ).collect()[0]
-        prev_mode = spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode",
-                       "dynamic")
         try:
-            if int(stats["rows"] or 0) > 0:
-                (survivors.write.mode("overwrite").partitionBy("_batch")
-                 .parquet(path))
+            stats = _stats(survivors, [id_col], text_col)[()]
+            if stats["row_count"] > 0:
+                with _dynamic_overwrite(spark):
+                    (survivors.write.mode("overwrite").partitionBy("_batch")
+                     .parquet(path))
         finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode",
-                           prev_mode)
             survivors.unpersist()
-        os.makedirs(stream_lineage, exist_ok=True)
-        manifest = {
-            "batch_id": int(batch_id),
-            "row_count": int(stats["rows"] or 0),
-            "checksum": str(stats["checksum"]),
-            "committed_unix": int(time.time()),
-        }
-        tmp = manifest_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, manifest_path)
+        _commit_manifest(manifest_path, {"batch_id": int(batch_id),
+                                         "row_count": stats["row_count"],
+                                         "checksum": stats["checksum"]})
 
     return write_batch
