@@ -286,20 +286,17 @@ def _q_lev_similarity(spark, sf_dir):
 def _q_rouge2(spark, sf_dir):
     """ROUGE-2 recall (Lin 2004) on the same adjacent-doc pairing as
     lev_similarity: candidate = doc id_a+1, reference = doc id_a.
-    Since round 7 the clip/total counts come from the Arrow kernel
-    (``rouge_n_pairs_fast`` — exact integers, so identical to the
-    relational (pair, gram) aggregation it replaces; the division +
-    round stays in Catalyst); the pre-r7 shape shuffled one row per
-    bigram occurrence of both sides.  Pairs whose reference has < 2
-    tokens are absent (recall undefined)."""
-    from vision_parse_spark.benchmarks.scoring import rouge_n_pairs_fast
+    The clip/total counts are exact integers from the Arrow kernel;
+    the division + round stays in Catalyst.  Pairs whose reference
+    has < 2 tokens are absent (recall undefined)."""
+    from vision_parse_spark.benchmarks.scoring import rouge_n_pairs
 
     d = _t(spark, sf_dir, "documents").select("doc_id", "text")
     a = d.select(F.col("doc_id").alias("id_a"), F.col("text").alias("ta"))
     b = d.select(F.col("doc_id").alias("id_b"), F.col("text").alias("tb"))
     p = a.join(b, F.col("id_b") == F.col("id_a") + 1)
-    return rouge_n_pairs_fast(p, ["id_a", "id_b"], cand_col="tb",
-                              ref_col="ta", n=2)
+    return rouge_n_pairs(p, ["id_a", "id_b"], cand_col="tb",
+                         ref_col="ta", n=2)
 
 
 def _q_bloom_tokens(spark, sf_dir):
@@ -805,10 +802,11 @@ def _q_minhash_signature(spark, sf_dir):
 
 
 def _q_simhash(spark, sf_dir):
-    # PRODUCTION SimHash path (Arrow-vectorized pandas UDF, unique-
-    # token md5 hashing per batch) — unified onto the portable
-    # construction in round 3, so the same DuckDB SQL that proves the
-    # Catalyst twin now proves the production kernel (hash-green)
+    # 64-bit SimHash (Arrow-vectorized pandas UDF, unique-token md5
+    # hashing per batch): md5 hex halves -> two 32-bit token-hash
+    # streams -> per-bit +/-1 majority -> two packed 32-bit halves
+    # (ANSI-BIGINT-safe in both engines), replayed by DuckDB.  Also
+    # answers the historical ``simhash64_portable`` name.
     from vision_parse_spark.operators.dedup import simhash64_cols
 
     _ensure_pkg(spark)
@@ -817,16 +815,6 @@ def _q_simhash(spark, sf_dir):
         .select("doc_id", simhash64_cols(F.col("text")).alias("_s"))
         .select("doc_id", "_s.simhash_lo", "_s.simhash_hi")
     )
-
-
-def _q_simhash64_portable(spark, sf_dir):
-    # 64-bit SimHash with md5-derived token hashes (two independent
-    # 32-bit fields from the md5 hex halves), packed hi/lo so both
-    # engines stay in ANSI-safe BIGINT range — the full-width portable
-    # twin of the production pandas-hash simhash64 (rows-only)
-    from vision_parse_spark.operators.dedup import simhash64_portable_cols
-
-    return simhash64_portable_cols(_tr(spark, sf_dir, "documents"))
 
 
 def _q_simhash_pairs(spark, sf_dir):
@@ -844,10 +832,9 @@ def _q_simhash_pairs(spark, sf_dir):
 
 
 def _q_simhash16(spark, sf_dir):
-    # DuckDB-checkable 16-bit SimHash twin (md5 token hashes): per-bit
-    # +/-1 majority vote, packed to an int -- portable proof of the
-    # SimHash construction (the production 64-bit one uses faster
-    # non-portable hashing, hence rows-only)
+    # 16-bit SimHash as one Catalyst expression (md5 token hashes):
+    # per-bit +/-1 majority vote, packed to an int — the construction
+    # of the 64-bit ``simhash`` kernel, written in SQL functions only
     P = 4294967311
     d = _tr(spark, sf_dir, "documents").select("doc_id", "text")
     toks = d.withColumn(
@@ -889,17 +876,19 @@ def _q_ann_lsh(spark, sf_dir):
 
 
 def _q_ann_ivf(spark, sf_dir):
-    # IVF cell-restricted ANN, hash-green twin: data-seeded quantizer
-    # (centroids = normalized embeddings of vec_id < 8) so assignment,
-    # probing and rank replay exactly in DuckDB.  The k-means-trained
-    # quantizer (train_ivf_centroids + ivf_topk) is the production
-    # recall path, pinned by pytest recall tests vs the oracled exact
-    # top-k; both share the identical cell-join plan shape.
-    from vision_parse_spark.operators.similarity import ivf_topk_portable
+    # IVF cell-restricted ANN with a data-seeded quantizer: the
+    # centroids are the embeddings of vec_id < 8 (cell = vec_id), so
+    # cosine assignment, probing and rank replay exactly in DuckDB
+    import numpy as np
+
+    from vision_parse_spark.operators.similarity import ivf_topk
 
     e = _tr(spark, sf_dir, "embeddings")
-    return ivf_topk_portable(e, e.filter(F.col("vec_id") < 8),
-                             n_centroids=8, nprobe=3, k=5)
+    seeds = e.filter(F.col("vec_id") < 8)
+    cents = np.array([r.embedding for r in
+                      seeds.orderBy("vec_id").select("embedding").collect()],
+                     dtype=np.float32)
+    return ivf_topk(e, seeds, cents, k=5, nprobe=3)
 
 
 def _q_embedding_near_dups(spark, sf_dir):
@@ -1654,7 +1643,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "simhash": _q_simhash,
         "simhash_pairs": _q_simhash_pairs,
         "simhash16": _q_simhash16,
-        "simhash64_portable": _q_simhash64_portable,
+        "simhash64_portable": _q_simhash,
         "explode_pages": _q_explode_pages,
     }
 
@@ -2111,9 +2100,9 @@ def oracle_sql() -> dict[str, str]:
         FROM documents d
         JOIN read_parquet('{golden_path}') g ON md5(d.text) = g.text_md5
     """
-    # simhash64_portable oracle: same construction as the Spark twin —
-    # md5 hex halves -> two 32-bit token-hash streams -> per-bit ±1
-    # majority -> two packed 32-bit halves.  Generated per bit.
+    # simhash / simhash64_portable oracle: same construction as the
+    # Spark kernel — md5 hex halves -> two 32-bit token-hash streams ->
+    # per-bit ±1 majority -> two packed 32-bit halves.  Generated per bit.
     def _sim_pack(col: str) -> str:
         return " + ".join(
             f"(CASE WHEN list_sum(list_transform({col}, x -> CASE WHEN"

@@ -128,26 +128,41 @@ def test_real_table_shapes(spark):
     assert 0 < surv.count() < df.count()
 
 
+def _semdedup_fold_survivors(df, tau):
+    """Reference survivors: the Catalyst cosine fold over the
+    ``array<double>`` vectors (``dot / (norm_a * norm_b)``), as a
+    within-cluster self-join on the same KMeans assignment."""
+    asg = kmeans_assign(df, k=8, iters=2)
+    v = (df.select("vec_id",
+                   F.col("embedding").cast("array<double>").alias("v"))
+         .join(asg, "vec_id"))
+
+    def fold(x, y):
+        return F.aggregate(F.zip_with(x, y, lambda p, q: p * q),
+                           F.lit(0.0), lambda acc, p: acc + p)
+
+    a = v.select(F.col("vec_id").alias("ia"), F.col("v").alias("va"),
+                 "cluster")
+    b = v.select(F.col("vec_id").alias("ib"), F.col("v").alias("vb"),
+                 "cluster")
+    cos = fold("va", "vb") / (F.sqrt(fold("va", "va"))
+                              * F.sqrt(fold("vb", "vb")))
+    dropped = {r.ib for r in a.join(b, "cluster")
+               .filter((F.col("ia") < F.col("ib")) & (cos >= tau))
+               .select("ib").collect()}
+    return {r.vec_id for r in df.select("vec_id").collect()} - dropped
+
+
 def test_semdedup_arrow_matches_portable(spark):
-    # the production tiled-matmul verify and the cross-engine fold
-    # verify must pick the same survivor set on real data (they can
-    # only diverge for a pair within ~1 ulp of the threshold)
+    # the Arrow verify kernel (tiled matmul candidates, exact fold
+    # cosine) must pick the survivor set of the cross-engine Catalyst
+    # fold self-join on real data — bit-exact, so equal at any tau
     df = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     for tau in (0.3, 0.7):
-        a = {r.vec_id for r in
-             semdedup(df, k=8, iters=2, threshold=tau,
-                      verify="arrow").collect()}
-        p = {r.vec_id for r in
-             semdedup(df, k=8, iters=2, threshold=tau,
-                      verify="portable").collect()}
-        assert a == p, f"tau={tau}: arrow^portable={a ^ p}"
-
-
-def test_semdedup_verify_validation():
-    import pytest
-
-    with pytest.raises(ValueError, match="verify"):
-        semdedup(None, verify="bogus")
+        got = {r.vec_id for r in
+               semdedup(df, k=8, iters=2, threshold=tau).collect()}
+        want = _semdedup_fold_survivors(df, tau)
+        assert got == want, f"tau={tau}: kernel^fold={got ^ want}"
 
 
 def test_fuzz_kmeans_matches_numpy_model(spark):

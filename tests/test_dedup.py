@@ -228,27 +228,6 @@ def test_curate_equals_oracle_at_recall_boundary(spark, boundary_pdf):
     assert got == want
 
 
-def test_simhash_production_equals_portable(spark, docs):
-    """Round-3 unification: the Arrow-vectorized production SimHash and
-    the Catalyst portable construction are ONE construction — same md5
-    token hashes, same ±1 majority, same hi/lo packing."""
-    from vision_parse_spark.operators.dedup import (
-        simhash64_cols,
-        simhash64_portable_cols,
-    )
-
-    prod = docs.select(
-        "doc_id", simhash64_cols(F.col("text")).alias("_s")
-    ).select("doc_id", "_s.simhash_lo", "_s.simhash_hi")
-    port = simhash64_portable_cols(docs)
-    n_diff = (
-        prod.alias("a").join(port.alias("b"), "doc_id")
-        .filter("a.simhash_lo != b.simhash_lo"
-                " or a.simhash_hi != b.simhash_hi").count()
-    )
-    assert n_diff == 0
-
-
 def test_simhash64_packs_unified_halves(spark, docs):
     """The 64-bit bucketing value is (hi << 32) | lo of the unified
     construction (two's-complement int64)."""

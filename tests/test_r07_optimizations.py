@@ -19,43 +19,52 @@ from pyspark.sql import functions as F
 # --- _fold_dot: bit-exact twin of the Catalyst float fold ----------
 
 def test_fold_dot_bitwise_matches_catalyst_fold(spark):
-    """The exact-verify kernel's dot/norm arithmetic (float32
-    products, strict left-to-right float64 accumulation) must equal
-    the interpreted Catalyst ``aggregate(zip_with(a, b, x*y), 0.0D,
-    acc+v)`` fold BIT FOR BIT — the embedding_near_dups pair set
-    depends on the raw double crossing the threshold."""
+    """The exact-verify kernel's dot/norm arithmetic (products in the
+    vectors' own width, strict left-to-right float64 accumulation)
+    must equal the interpreted Catalyst ``aggregate(zip_with(a, b,
+    x*y), 0.0D, acc+v)`` fold BIT FOR BIT, over ``array<float>``
+    (embedding_near_dups, the IVF cell assignment) and
+    ``array<double>`` (SemDeDup's ``_v``) — the pair sets depend on
+    the raw double crossing the threshold."""
     from vision_parse_spark.operators.similarity import _fold_dot
 
     rng = np.random.default_rng(17)
     dim = 23  # odd, non-power-of-two on purpose
-    a = rng.standard_normal((64, dim)).astype(np.float32)
-    b = (rng.standard_normal((64, dim)) * 100).astype(np.float32)
-    rows = [(i, [float(x) for x in a[i]], [float(x) for x in b[i]])
-            for i in range(len(a))]
-    df = spark.createDataFrame(
-        rows, "i int, a array<float>, b array<float>")
-    got = {
-        r["i"]: r["d"]
-        for r in df.select(
-            "i",
-            F.aggregate(
-                F.zip_with("a", "b", lambda x, y: x * y),
-                F.lit(0.0).cast("double"),
-                lambda acc, v: acc + v,
-            ).alias("d"),
-        ).collect()
-    }
-    want = _fold_dot(a, b)
-    for i in range(len(a)):
-        assert struct.pack("<d", got[i]) == struct.pack("<d", want[i]), (
-            f"row {i}: catalyst {got[i]!r} != kernel {want[i]!r}")
+    for elem, np_t in [("float", np.float32), ("double", np.float64)]:
+        a = rng.standard_normal((64, dim)).astype(np_t)
+        b = (rng.standard_normal((64, dim)) * 100).astype(np_t)
+        rows = [(i, [float(x) for x in a[i]], [float(x) for x in b[i]])
+                for i in range(len(a))]
+        df = spark.createDataFrame(
+            rows, f"i int, a array<{elem}>, b array<{elem}>")
+        got = {
+            r["i"]: r["d"]
+            for r in df.select(
+                "i",
+                F.aggregate(
+                    F.zip_with("a", "b", lambda x, y: x * y),
+                    F.lit(0.0).cast("double"),
+                    lambda acc, v: acc + v,
+                ).alias("d"),
+            ).collect()
+        }
+        want = _fold_dot(a, b)
+        for i in range(len(a)):
+            assert struct.pack("<d", got[i]) == struct.pack(
+                "<d", want[i]), (f"{elem} row {i}: catalyst {got[i]!r}"
+                                 f" != kernel {want[i]!r}")
 
 
-# --- rouge fast kernel vs the relational construction --------------
+# --- rouge kernel vs a Counter reference ---------------------------
 
-def test_rouge_fast_equals_relational(spark):
-    from vision_parse_spark.benchmarks.scoring import (
-        rouge_n_pairs, rouge_n_pairs_fast)
+def test_rouge_kernel_equals_counter_reference(spark):
+    """``rouge_n_pairs`` against a driver-side Python ROUGE-2 recall:
+    clipped bigram overlap over reference bigrams of the whitespace
+    token stream, rounded to 6 places; pairs whose reference has no
+    bigram (empty, one token) are absent."""
+    from collections import Counter
+
+    from vision_parse_spark.benchmarks.scoring import rouge_n_pairs
 
     rng = random.Random(5)
     words = ["alpha", "beta", "gamma", "delta", "x", "y9", "Zed"]
@@ -68,13 +77,22 @@ def test_rouge_fast_equals_relational(spark):
     rows.append((101, 102, "one", "two"))     # too short for bigrams
     pairs = spark.createDataFrame(
         rows, "id_a long, id_b long, tb string, ta string")
-    slow = rouge_n_pairs(pairs, ["id_a", "id_b"], cand_col="tb",
-                         ref_col="ta", n=2).collect()
-    fast = rouge_n_pairs_fast(pairs, ["id_a", "id_b"], cand_col="tb",
-                              ref_col="ta", n=2).collect()
-    key = lambda r: (r["id_a"], r["id_b"])  # noqa: E731
-    assert sorted((key(r), r["rouge2"]) for r in slow) == \
-        sorted((key(r), r["rouge2"]) for r in fast)
+    got = sorted(((r["id_a"], r["id_b"]), r["rouge2"]) for r in
+                 rouge_n_pairs(pairs, ["id_a", "id_b"], cand_col="tb",
+                               ref_col="ta", n=2).collect())
+
+    def bigrams(text):
+        t = text.lower().split()
+        return Counter(zip(t, t[1:]))
+
+    want = []
+    for a, b, cand, ref in rows:
+        rg, cg = bigrams(ref), bigrams(cand)
+        if rg:
+            clip = sum(min(v, cg[g]) for g, v in rg.items())
+            want.append(((a, b), round(clip / sum(rg.values()), 6)))
+    assert got == sorted(want)
+    assert all(k not in dict(got) for k in [(99, 100), (101, 102)])
 
 
 # --- MinHash Arrow kernel vs the Catalyst reference ----------------

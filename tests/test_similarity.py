@@ -102,101 +102,115 @@ def test_ivf_recall_vs_brute_force(spark, vectors):
     assert recall >= 0.5  # nprobe=3 of 4 cells on random vectors
 
 
-def test_ivf_portable_matches_plan_and_recall(spark, vectors):
-    """Data-seeded-quantizer IVF (the hash-green contract twin): finds
-    planted near-dups, ranks identically to the exact top-k within the
-    probed cells, and never degenerates into an unrestricted cross
-    product over the corpus."""
-    from vision_parse_spark.operators.similarity import (
-        brute_force_topk,
-        ivf_topk_portable,
-    )
+def _seed_centroids(vectors, n):
+    """Data-seeded quantizer: the float32 embeddings of vec_id < n,
+    in vec_id order (cell c = vec_id c)."""
+    rows = (vectors.filter(F.col("vec_id") < n).orderBy("vec_id")
+            .select("embedding").collect())
+    return np.array([r.embedding for r in rows], dtype=np.float32)
+
+
+def test_ivf_data_seeded_full_probe_equals_exact_topk(spark, vectors):
+    """Data-seeded quantizer (the ann_ivf contract shape): with
+    nprobe == n_centroids every cell is probed, so the result must
+    be the exact top-k, ranks and cosines included."""
+    from vision_parse_spark.operators.similarity import ivf_topk
 
     q = vectors.filter(F.col("vec_id") < 4)
-    out = ivf_topk_portable(vectors, q, n_centroids=4, nprobe=4, k=3)
-    rows = out.collect()
+    rows = ivf_topk(vectors, q, _seed_centroids(vectors, 4), k=3,
+                    nprobe=4).collect()
     assert {r.query_id for r in rows} == {0, 1, 2, 3}
-    assert all(1 <= r.rank <= 3 for r in rows)
-    # with nprobe == n_centroids every cell is probed -> exact recall
-    exact = {(r.query_id, r.rank): r.neighbor_id
+    exact = {(r.query_id, r.rank): (r.neighbor_id, r.cosine)
              for r in brute_force_topk(vectors, q, k=3).collect()}
-    approx = {(r.query_id, r.rank): r.neighbor_id for r in rows}
-    assert approx == exact
+    assert {(r.query_id, r.rank): (r.neighbor_id, r.cosine)
+            for r in rows} == exact
 
 
-def test_near_dups_fast_twin_matches_portable(spark):
-    """Arrow matmul twin and the Catalyst portable path produce the
-    SAME near-dup pair set on real test data (the bench times the
-    twin; the contract hash-checks the portable path)."""
-    from vision_parse_spark.operators.similarity import (
-        embedding_near_dups,
-        embedding_near_dups_fast,
-    )
+def test_ivf_cell_assignment_ties_go_to_lowest_cell(spark):
+    """A row equally close to several centroids lands in the lowest
+    cell, as the oracle's ``ORDER BY cosine DESC, cell ASC`` does;
+    the probe order follows the same rule."""
+    from vision_parse_spark.operators.similarity import _cell_assign_udf
 
-    e = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    dim = len(e.select("embedding").first()[0])
-    slow = {(r.id_a, r.id_b) for r in
-            embedding_near_dups(e, dim=dim, threshold=0.3, n_planes=4)
-            .select("id_a", "id_b").collect()}
-    fast = {(r.id_a, r.id_b) for r in
-            embedding_near_dups_fast(e, dim=dim, threshold=0.3, n_planes=4)
-            .select("id_a", "id_b").collect()}
-    assert slow == fast and len(slow) > 0
+    cents = np.array([[0, 1], [1, 0], [1, 0], [0, 1]], dtype=np.float32)
+    df = spark.createDataFrame(
+        [(0, [1.0, 1.0]), (1, [0.0, 2.0]), (2, [3.0, 0.0])],
+        "vec_id long, embedding array<float>")
+    got = {r.vec_id: list(r.cells) for r in df.select(
+        "vec_id", _cell_assign_udf(cents, 4)("embedding").alias("cells")
+    ).collect()}
+    assert got == {0: [0, 1, 2, 3], 1: [0, 3, 1, 2], 2: [1, 2, 0, 3]}
 
 
 def test_degenerate_bucket_matmul_is_memory_bounded():
     """Round-4 verdict item 3: a degenerate bucket (10k all-zero
-    vectors, which all hash to the same hyperplane bucket) previously
-    allocated an n x n similarity matrix (~800 MB) inside the
-    applyInPandas kernel; the tiled verify must stay under ~150 MB of
-    numpy scratch while examining the same pairs.  Runs the kernel
-    directly (plain pandas) so tracemalloc sees the numpy buffers."""
+    vectors, which all hash to the same hyperplane bucket) must not
+    allocate an n x n similarity matrix (~800 MB) or an all-pairs
+    index inside the applyInPandas kernel; the tiled verify must stay
+    under ~150 MB of numpy scratch, for a whole bucket and for an
+    off-diagonal (lo, hi) triangle tile.  Runs the kernel directly
+    (plain pandas) so tracemalloc sees the numpy buffers."""
     import tracemalloc
 
-    import numpy as np
     import pandas as pd
 
-    from vision_parse_spark.operators.similarity import _bucket_pairs_pdf
+    from vision_parse_spark.operators.similarity import (
+        _bucket_pairs_exact_pdf,
+    )
 
     n, dim = 10_000, 16
     pdf = pd.DataFrame({
         "vec_id": np.arange(n, dtype=np.int64),
-        "embedding": [np.zeros(dim)] * n,
+        "embedding": [np.zeros(dim, dtype=np.float32)] * n,
+        "_blk": np.arange(n) % 2,
     })
-    tracemalloc.start()
-    out = _bucket_pairs_pdf(pdf, "vec_id", "embedding", threshold=0.95)
-    _, peak = tracemalloc.get_traced_memory()
-    tracemalloc.stop()
-    assert len(out) == 0          # zero vectors -> cosine 0 < threshold
-    assert peak < 150 * 1024 * 1024, f"peak {peak/1e6:.0f} MB"
+    for tile in ({}, {"blk_col": "_blk", "lo": 0, "hi": 1}):
+        tracemalloc.start()
+        out = _bucket_pairs_exact_pdf(pdf, "vec_id", "embedding",
+                                      threshold=0.95, **tile)
+        _, peak = tracemalloc.get_traced_memory()
+        tracemalloc.stop()
+        assert len(out) == 0      # zero vectors pair with nothing
+        assert peak < 150 * 1024 * 1024, f"{tile}: peak {peak/1e6:.0f} MB"
 
 
-def test_tiled_bucket_pairs_match_full_matmul():
-    """Tiling must not change the pair set: compare against a direct
-    full n x n reference on a small random bucket with many pairs
-    straddling tile boundaries (tile size forced tiny)."""
-    import numpy as np
+def test_tiled_bucket_pairs_match_full_matmul(monkeypatch):
+    """Tiling and the candidate filter must not change the pair set
+    or any cosine double: compare against an untiled all-pairs
+    ``_fold_dot`` reference on a small random bucket, with the tile
+    forced tiny so pairs straddle tile boundaries — for the whole
+    bucket and for every (lo, hi) triangle tile of it."""
     import pandas as pd
 
     from vision_parse_spark.operators import similarity as sim
 
     rng = np.random.default_rng(11)
     n, dim = 700, 8
-    vecs = rng.normal(size=(n, dim))
+    vecs = rng.normal(size=(n, dim)).astype(np.float32)
+    blk = rng.integers(0, 3, n)
     pdf = pd.DataFrame({"vec_id": np.arange(n, dtype=np.int64),
-                        "embedding": list(vecs)})
-    m = vecs / np.maximum(np.linalg.norm(vecs, axis=1, keepdims=True), 1e-12)
-    full = m @ m.T
+                        "embedding": list(vecs), "_blk": blk})
+    norms = np.sqrt(sim._fold_dot(vecs, vecs))
     iu, ju = np.triu_indices(n, k=1)
-    keep = full[iu, ju] >= 0.5
-    want = set(zip(iu[keep].tolist(), ju[keep].tolist()))
+    cos = sim._fold_dot(vecs[iu], vecs[ju]) / (norms[iu] * norms[ju])
+    keep = cos >= 0.5
+    want = dict(zip(zip(iu[keep].tolist(), ju[keep].tolist()),
+                    cos[keep].tolist()))
+    assert len(want) > 0
 
-    old_tile = sim._BUCKET_TILE_ELEMS
-    sim._BUCKET_TILE_ELEMS = 1  # forces tile = max(128, ...) = 128 rows
-    try:
-        out = sim._bucket_pairs_pdf(pdf, "vec_id", "embedding",
-                                    threshold=0.5)
-    finally:
-        sim._BUCKET_TILE_ELEMS = old_tile
-    got = set(zip(out["id_a"].tolist(), out["id_b"].tolist()))
-    assert got == want and len(want) > 0
+    def pairs(out):
+        return dict(zip(zip(out["id_a"].tolist(), out["id_b"].tolist()),
+                        out["_cos"].tolist()))
+
+    monkeypatch.setattr(sim, "_EXACT_PAIR_TILE", 1)  # one row per tile
+    got = pairs(sim._bucket_pairs_exact_pdf(pdf, "vec_id", "embedding",
+                                            threshold=0.5))
+    assert got == want                 # float == float: bit-identical
+    tiles = {}
+    for lo in range(3):
+        for hi in range(lo, 3):
+            sub = pdf[np.isin(blk, [lo, hi])]
+            tiles.update(pairs(sim._bucket_pairs_exact_pdf(
+                sub, "vec_id", "embedding", threshold=0.5,
+                blk_col="_blk", lo=lo, hi=hi)))
+    assert tiles == want

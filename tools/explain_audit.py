@@ -102,23 +102,24 @@ def main():
         grab(salted),
     ))
 
-    from vision_parse_spark.operators.similarity import ivf_topk_portable
+    import numpy as np
+
+    from vision_parse_spark.operators.similarity import ivf_topk
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    ivf = ivf_topk_portable(emb, emb.filter(F.col("vec_id") < 8),
-                            n_centroids=8, nprobe=3, k=5)
+    seeds = emb.filter(F.col("vec_id") < 8)
+    cents = np.array([r.embedding for r in
+                      seeds.orderBy("vec_id").select("embedding").collect()],
+                     dtype=np.float32)
+    ivf = ivf_topk(emb, seeds, cents, k=5, nprobe=3)
     sections.append((
-        "IVF ANN (cell-restricted search) — portable contract twin",
-        "the only cross joins are against the BROADCAST 8-row centroid "
-        "set (cell assignment — O(N x n_centroids), the IVF contract); "
-        "the corpus-vs-query comparison itself is a broadcast hash "
-        "join on the cell id, never an unrestricted cartesian over "
-        "the corpus.  NOTE: this portable twin picks each row's cell "
-        "with a row_number window (an Exchange on vec id) so DuckDB "
-        "can replay the argmax exactly; the PRODUCTION path "
-        "(`ivf_topk` + k-means centroids) does the same assignment "
-        "NARROWLY inside an Arrow UDF (one matmul per batch, no "
-        "shuffle) — that is the 100 TB shape.",
+        "IVF ANN (cell-restricted search) — data-seeded contract quantizer",
+        "cell assignment runs NARROWLY inside an Arrow UDF against the "
+        "broadcast centroid matrix (fold-exact cosine, ties to the "
+        "lowest cell; no shuffle, no cross join) — the same operator "
+        "serves k-means centroids.  The corpus-vs-query comparison is "
+        "a broadcast hash join on the cell id, never an unrestricted "
+        "cartesian over the corpus.",
         grab(ivf),
     ))
 
@@ -211,13 +212,13 @@ def main():
         "centroid sums, <= k*(dim+1) rows leave each batch; the "
         "dim-wide Catalyst aggregate alternative paid a per-iteration "
         "codegen compile that dominated the scan — kmeans_assign "
-        "8.7 -> 1.3 s after the fusion).  Round 6: the within-cell "
-        "verify is the TILED Arrow matmul kernel "
-        "(groupBy(cluster).applyInPandas over _bucket_pairs_pdf, "
-        "32 MB scratch cap) — no per-pair interpreted folds; the "
-        "Catalyst fold survives as verify='portable' for the oracle "
-        "twin (set-equality pytest-asserted).  The greedy lowest-id "
-        "survivor rule is a single LeftAnti join — no iterative CC.  "
+        "8.7 -> 1.3 s after the fusion).  The within-cell verify is "
+        "the embedding near-dup kernel (groupBy(cluster).applyInPandas "
+        "over _bucket_pairs_exact_pdf): a tiled normalized matmul picks "
+        "candidates with bounded scratch, then the bit-exact Catalyst "
+        "fold cosine decides — no per-pair interpreted folds.  The "
+        "greedy lowest-id survivor rule is a single LeftAnti join — "
+        "no iterative CC.  "
         "The within-cell pass is O(sum cell^2) by design: scale k "
         "with N to bound cells (measured in BASELINE.md: k=8 33 s "
         "-> k=64 8.2 s at 8x data, and the matmul kernel cut the "

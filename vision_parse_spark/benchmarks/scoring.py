@@ -124,73 +124,17 @@ def rouge_n_pairs(pairs, id_cols: list[str], cand_col: str,
     recipe).  Pairs whose reference has zero n-grams are absent from
     the output (recall is undefined there).
 
-    Scale shape: both gram streams union with a side tag and
-    aggregate ONCE on the (pair, gram) key (map-side combine), then
-    the clipped/total sums collapse on the pair key — two shuffles,
-    no join, no UDF; the n-gram window is a codegen'd
-    transform/slice over the token array.
+    Scale shape: one ``mapInPandas`` kernel reduces each pair to two
+    exact integers (clipped overlap and reference total, a Counter
+    intersection) inside the scan — no gram-level exchange; the final
+    ``round(clip / tot, 6)`` runs in Catalyst.
     """
-    from pyspark.sql import functions as F
-
-    from ..functions.text_stats import ws_tokens_sql
-
-    if n < 1:
-        raise ValueError(f"rouge_n_pairs: n must be >= 1, got {n}")
-
-    def grams(col: str):
-        toks = ws_tokens_sql(col)
-        if n == 1:
-            return F.expr(toks)
-        # sliding window: position i joins n consecutive tokens
-        return F.expr(
-            f"CASE WHEN size({toks}) >= {n} THEN "
-            f"transform(sequence(1, size({toks}) - {n - 1}), "
-            f"i -> array_join(slice({toks}, i, {n}), ' ')) "
-            f"ELSE array() END")
-
-    sides = (
-        pairs.select(*id_cols, F.explode(grams(ref_col)).alias("g"),
-                     F.lit(1).alias("_r"), F.lit(0).alias("_c"))
-        .unionByName(
-            pairs.select(*id_cols, F.explode(grams(cand_col)).alias("g"),
-                         F.lit(0).alias("_r"), F.lit(1).alias("_c")))
-    )
-    per_gram = (sides.groupBy(*id_cols, "g")
-                .agg(F.sum("_r").alias("r"), F.sum("_c").alias("c")))
-    per_pair = (per_gram.filter(F.col("r") > 0)
-                .groupBy(*id_cols)
-                .agg(F.sum(F.least("r", "c")).alias("clip"),
-                     F.sum("r").alias("tot")))
-    return per_pair.select(
-        *id_cols,
-        F.round(F.col("clip") / F.col("tot"), 6).alias(f"rouge{n}"))
-
-
-def rouge_n_pairs_fast(pairs, id_cols: list[str], cand_col: str,
-                       ref_col: str, n: int = 2):
-    """Arrow twin of :func:`rouge_n_pairs` with IDENTICAL results:
-    the clipped-overlap and reference-total counts are exact
-    integers, so computing them per pair in one ``mapInPandas``
-    kernel (Counter intersection over the ``ws_tokens`` stream)
-    instead of a corpus-sized (pair, gram) exchange changes no
-    value; the final ``round(clip / tot, 6)`` stays in Catalyst so
-    even the float division/rounding runs through the same engine
-    code path.  Pairs whose reference has no n-gram are absent,
-    exactly as the relational form's ``r > 0`` filter.
-
-    Scale shape: the (pair, gram) aggregation previously shuffled
-    one row per gram occurrence of BOTH sides (2x corpus token
-    count); this kernel reduces each pair to two integers inside
-    the scan — zero gram-level exchange.
-    """
-    from collections import Counter
-
     from pyspark.sql import functions as F
 
     from ..functions.text_stats import java_ws_tokens
 
     if n < 1:
-        raise ValueError(f"rouge_n_pairs_fast: n must be >= 1, got {n}")
+        raise ValueError(f"rouge_n_pairs: n must be >= 1, got {n}")
     dtypes = dict(pairs.dtypes)
     schema = ", ".join([f"{c} {dtypes[c]}" for c in id_cols]
                        + ["clip long", "tot long"])

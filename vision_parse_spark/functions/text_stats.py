@@ -45,8 +45,8 @@ JAVA_WS_RE = _re.compile(r"[ \t\n\x0b\f\r]+")
 def java_ws_tokens(text) -> list:
     """Python twin of :func:`ws_tokens_sql` for Arrow kernels:
     lower / trim / split on the Java ``\\s+`` class / drop empties —
-    token-identical to the Catalyst expression (pytest-asserted via
-    the SimHash/MinHash portable twins)."""
+    token-identical to the Catalyst expression (the DuckDB oracles
+    of the kernels that use it replay the SQL recipe)."""
     return [t for t in JAVA_WS_RE.split((text or "").strip().lower())
             if t]
 

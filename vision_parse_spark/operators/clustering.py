@@ -37,6 +37,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import IntegerType
 
+from .similarity import _bucket_pairs_exact_pdf
+
 # rows per distance-matrix tile in the Arrow assignment kernel:
 # peak scratch is TILE x k doubles (plus the TILE x dim batch), so
 # memory stays bounded for any k
@@ -172,8 +174,7 @@ def kmeans_assign(df: DataFrame, k: int = 8, iters: int = 2,
 def semdedup(df: DataFrame, k: int = 8, iters: int = 2,
              threshold: float = 0.95, id_col: str = "vec_id",
              vec_col: str = "embedding",
-             dim: int | None = None,
-             verify: str = "arrow") -> DataFrame:
+             dim: int | None = None) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): semantic dedup by KMeans
     partitioning + within-cluster cosine pruning.  Returns the
     SURVIVOR set ``(id_col,)``: an embedding is dropped iff ANY
@@ -192,71 +193,30 @@ def semdedup(df: DataFrame, k: int = 8, iters: int = 2,
     smaller-id near-duplicate in its cell, the standard SemDeDup
     greedy order).
 
-    ``verify`` picks the within-cell exact-verify kernel:
-
-    * ``"arrow"`` (default, the production path): ONE shuffle on the
-      cluster id into ``applyInPandas`` running the same TILED
-      normalized-matmul kernel the embedding near-dup family uses
-      (``similarity._bucket_pairs_pdf`` — scratch capped at
-      ``_BUCKET_TILE_ELEMS`` doubles ≈ 32 MB even for a degenerate
-      cell).  The round-5 fold path paid an interpreted O(dim)
-      Catalyst lambda per candidate pair — ~10x the matmul constant.
-    * ``"portable"`` — the per-pair ``zip_with``/``aggregate`` fold
-      self-join, kept as the cross-engine reference (the DuckDB
-      oracle replays its float shape); pytest asserts set-equality
-      of the two survivor sets.  Like every cross-implementation
-      float compare, the paths can only diverge for a pair within
-      ~1 ulp of the threshold (the embedding_near_dups lesson).
+    The within-cell verify is ONE shuffle on the cluster id into
+    ``applyInPandas`` running the embedding near-dup family's kernel
+    (``similarity._bucket_pairs_exact_pdf``): a tiled normalized
+    matmul picks candidates with bounded scratch even for a degenerate
+    cell, and each candidate's cosine is the bit-exact twin of the
+    Catalyst fold over the ``array<double>`` vectors
+    (``dot / (norm_a * norm_b)``, float64 products, strict
+    left-to-right sum) — the float shape the DuckDB oracle replays.
     """
-    if verify not in ("arrow", "portable"):
-        raise ValueError(f"semdedup: verify must be 'arrow' or "
-                         f"'portable', got {verify!r}")
     centroids, data = kmeans_fit(df, k=k, iters=iters, id_col=id_col,
                                  vec_col=vec_col, dim=dim)
-    if verify == "arrow":
-        from vision_parse_spark.operators.similarity import _bucket_pairs_pdf
+    tagged = data.select(F.col(id_col), "_v", _assign_col("_v", centroids))
+    idt = df.schema[id_col].dataType.simpleString()
 
-        tagged = data.select(F.col(id_col), "_v",
-                             _assign_col("_v", centroids))
-        idt = df.schema[id_col].dataType.simpleString()
+    def pairs_in_cell(pdf: pd.DataFrame) -> pd.DataFrame:
+        return _bucket_pairs_exact_pdf(pdf, id_col, "_v", threshold)
 
-        def pairs_in_cell(pdf: pd.DataFrame) -> pd.DataFrame:
-            return _bucket_pairs_pdf(pdf, id_col, "_v", threshold)
-
-        # dropped ids are tiny; eager-checkpoint them so the fit
-        # cache can be released before the final anti-join runs
-        dropped = (tagged.groupBy("cluster")
-                   .applyInPandas(
-                       pairs_in_cell,
-                       schema=f"id_a {idt}, id_b {idt}, cosine double")
-                   .select(F.col("id_b").alias(id_col))
-                   .distinct()
-                   .localCheckpoint(eager=True))
-        data.unpersist()
-        return (df.select(id_col)
-                  .join(dropped, id_col, "left_anti"))
-
-    sq = F.aggregate(F.zip_with("_v", "_v", lambda x, y: x * y),
-                     F.lit(0.0), lambda acc, x: acc + x)
-    # one pass over the fit cache: final assignment + per-row norm
-    # (not once per pair); checkpointed because the self-join below
-    # reads it twice, then the fit cache is released
-    tagged = (data.select(F.col(id_col), "_v",
-                          _assign_col("_v", centroids))
-                  .withColumn("_nm", F.sqrt(sq))
-                  .localCheckpoint(eager=True))
+    # dropped ids are tiny; eager-checkpoint them so the fit cache can
+    # be released before the final anti-join runs
+    dropped = (tagged.groupBy("cluster")
+               .applyInPandas(pairs_in_cell,
+                              schema=f"id_a {idt}, id_b {idt}, _cos double")
+               .select(F.col("id_b").alias(id_col))
+               .distinct()
+               .localCheckpoint(eager=True))
     data.unpersist()
-
-    a = tagged.select(F.col(id_col).alias("_ida"), F.col("_v").alias("_va"),
-                      F.col("_nm").alias("_na"), F.col("cluster").alias("_c"))
-    b = tagged.select(F.col(id_col).alias("_idb"), F.col("_v").alias("_vb"),
-                      F.col("_nm").alias("_nb"), F.col("cluster").alias("_c"))
-    dot = F.aggregate(F.zip_with("_va", "_vb", lambda x, y: x * y),
-                      F.lit(0.0), lambda acc, x: acc + x)
-    dropped = (a.join(b, "_c")
-               .filter(F.col("_ida") < F.col("_idb"))
-               .filter(dot / (F.col("_na") * F.col("_nb")) >= threshold)
-               .select(F.col("_idb").alias(id_col))
-               .distinct())
-    return (df.select(id_col)
-              .join(dropped, id_col, "left_anti"))
+    return df.select(id_col).join(dropped, id_col, "left_anti")

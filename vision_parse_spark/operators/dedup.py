@@ -27,7 +27,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from vision_parse_spark.functions.text_stats import ws_tokens_sql
 from pyspark.sql.types import LongType, StructField, StructType
 
 # ---------------------------------------------------------------------------
@@ -581,28 +580,26 @@ def minhash_dedup_incremental(
                        num_perm, bands, shingle_n, rebalance=True
                        ).withColumnRenamed(id_col, f"id_{suffix}")
 
-    n = banded(new_df, "n").persist()
-    n.count()  # barrier: both the join and the anti-join lineage
     # distinct collided pairs first (a pair colliding in several bands
     # is verified once; the loser set is a distinct over id_n either
-    # way), then shingles for EXACTLY the collided rows
+    # way), then shingles for EXACTLY the collided rows.  Checkpointed
+    # in one eager job: the verify gets real stats and reads the
+    # pairs, not the banding lineage.
     coll = (
-        n.join(banded(corpus_df, "c"), ["band", "bucket"])
+        banded(new_df, "n").join(banded(corpus_df, "c"), ["band", "bucket"])
         .select("id_n", "id_c")
         .dropDuplicates(["id_n", "id_c"])
-        .persist()
+        .localCheckpoint(eager=True)
     )
-    coll.count()
     losers = (
         _verified(coll, new_df, corpus_df, id_col, text_col, shingle_n,
                   jaccard_threshold, "id_n", "id_c")
         .select(F.col("id_n").alias(id_col))
         .distinct()
     )
-    out = new_df.join(losers, id_col, "left_anti")
-    out = out.localCheckpoint(eager=True)
-    n.unpersist()
-    coll.unpersist()
+    # eager: a caller may append the survivors to the corpus the
+    # verify reads (foreach_batch_dedup_append)
+    out = new_df.join(losers, id_col, "left_anti").localCheckpoint(eager=True)
     if dedup_within_batch:
         out = minhash_dedup(
             out, id_col, text_col, num_perm=num_perm, bands=bands,
@@ -667,9 +664,8 @@ def _simhash_lo_hi_batch(texts: pd.Series) -> tuple[np.ndarray, np.ndarray]:
 @F.pandas_udf(StructType([StructField("simhash_lo", LongType()),
                           StructField("simhash_hi", LongType())]))
 def simhash64_cols(texts: pd.Series) -> pd.DataFrame:
-    """Production SimHash: two packed 32-bit halves (ANSI-BIGINT-safe
-    in both engines); value-identical to ``simhash64_portable_cols``
-    and the DuckDB oracle."""
+    """SimHash as two packed 32-bit halves (ANSI-BIGINT-safe in both
+    engines); value-identical to the DuckDB oracle."""
     lo, hi = _simhash_lo_hi_batch(texts)
     return pd.DataFrame({"simhash_lo": lo, "simhash_hi": hi},
                         index=texts.index)
@@ -682,41 +678,6 @@ def simhash64(texts: pd.Series) -> pd.Series:
     lo, hi = _simhash_lo_hi_batch(texts)
     packed = (hi.astype(np.uint64) << np.uint64(32)) | lo.astype(np.uint64)
     return pd.Series(packed.astype(np.int64), index=texts.index)
-
-
-def simhash64_portable_cols(df: DataFrame, text_col: str = "text",
-                            id_col: str = "doc_id") -> DataFrame:
-    """Portable 64-bit SimHash twin: md5-derived token hashes (two
-    independent 32-bit fields from the md5 hex halves), per-bit ±1
-    majority vote, packed into two 32-bit halves (hi/lo) so the packed
-    values stay ANSI-BIGINT-safe in both engines.  The production
-    ``simhash64`` (pandas hashing, single shuffle-free UDF) is the
-    throughput path; THIS construction is replayable in DuckDB and
-    hash-checked by the driver."""
-    toks = ws_tokens_sql(text_col)
-    h_lo = (f"transform({toks}, s -> cast(conv(substring(md5(s), 1, 15),"
-            f" 16, 10) as bigint) % {_PRIME})")
-    h_hi = (f"transform({toks}, s -> cast(conv(substring(md5(s), 17, 15),"
-            f" 16, 10) as bigint) % {_PRIME})")
-
-    def packed(col: str) -> str:
-        return " + ".join(
-            f"(CASE WHEN aggregate(transform({col}, x -> CASE WHEN"
-            f" ((x >> {k}) & 1) = 1 THEN 1 ELSE -1 END), 0,"
-            f" (a, v) -> a + v) > 0 THEN {1 << k}L ELSE 0L END)"
-            for k in range(32)
-        )
-
-    return (
-        df.select(id_col, text_col)
-        .withColumn("_hlo", F.expr(h_lo))
-        .withColumn("_hhi", F.expr(h_hi))
-        .select(
-            id_col,
-            F.expr(packed("_hlo")).cast("long").alias("simhash_lo"),
-            F.expr(packed("_hhi")).cast("long").alias("simhash_hi"),
-        )
-    )
 
 
 def _simhash_block_plan(max_hamming: int, bits: int = 64

@@ -176,16 +176,14 @@ def embedding_near_dups(
     threshold itself (~1 ulp odds).  The rounded cosine stays as a
     diagnostic column.
 
-    Round-7 shape: the within-bucket verify runs in ``applyInPandas``
-    kernels whose arithmetic is the bit-exact twin of the old
-    per-pair Catalyst fold (:func:`_bucket_pairs_exact_pdf` —
-    float32 products, strict left-to-right float64 accumulation,
-    same threshold compare), so the pair set and every cosine double
-    are unchanged while the O(pairs x dim) interpreted-lambda cost
-    (measured 76 s at sf1.0) collapses into vectorized numpy.  Each
-    bucket is additionally cut into ``_PAIR_BLOCKS`` deterministic
-    id-hash blocks and the kernels run per TRIANGLE TILE
-    (bucket, lo, hi) — every unordered pair lives in exactly one
+    The within-bucket verify is :func:`_bucket_pairs_exact_pdf` in
+    ``applyInPandas``: a tiled normalized matmul picks the candidate
+    pairs, and the cosine of each candidate is the bit-exact twin of
+    the Catalyst ``dot / (norm_a * norm_b)`` fold (:func:`_fold_dot`),
+    so the pair set and every cosine double are the ones the DuckDB
+    oracle replays.  Each bucket is cut into ``_PAIR_BLOCKS``
+    deterministic id-hash blocks and the kernel runs per TRIANGLE
+    TILE (bucket, lo, hi) — every unordered pair lives in exactly one
     tile, so a handful of hot buckets no longer serialize onto a
     handful of tasks (guide §2.5 skew).  The final ``round(_, 4)``
     stays in Catalyst."""
@@ -215,14 +213,24 @@ def embedding_near_dups(
     )
 
 
-# peak extra doubles per similarity tile (tile_rows x bucket_size);
-# 4M doubles = 32 MB — bounds the per-bucket matmul regardless of how
-# degenerate the bucket is (round-4 verdict item 3)
-_BUCKET_TILE_ELEMS = 4_000_000
+# the benchmark's historical name for the same operator
+embedding_near_dups_fast = embedding_near_dups
 
-# pairs per product-matrix tile in the EXACT-fold kernel below: each
-# tile holds (pairs x dim) float32 products (~64 MB at 250k x 64)
+
+# pairs per verify tile: a tile's candidate-filter similarities
+# (tile_rows x bucket doubles) and its exact-fold products
+# (<= pairs x dim values) are both bounded by this, whatever the
+# bucket size (round-4 verdict item 3)
 _EXACT_PAIR_TILE = 250_000
+
+# the candidate filter keeps pairs whose float64 normalized-matmul
+# cosine is >= threshold - _COS_MARGIN.  The fold cosine of float32
+# vectors differs from the true cosine by <= ~2^-23 (each float32
+# product carries <= 2^-24 relative error, the norms <= 2^-25), and by
+# ~dim * 2^-53 for float64 vectors, so the margin keeps every pair the
+# exact compare can accept (for finite products above the float32
+# underflow range)
+_COS_MARGIN = 1e-6
 
 # deterministic id-hash blocks per LSH bucket for the triangle-tiled
 # exact verify: B blocks -> B(B+1)/2 independent tiles per bucket
@@ -232,20 +240,27 @@ _EXACT_PAIR_TILE = 250_000
 _PAIR_BLOCKS = 4
 
 
-def _fold_dot(a32: np.ndarray, b32: np.ndarray) -> np.ndarray:
+def _fold_dot(a: np.ndarray, b: np.ndarray) -> np.ndarray:
     """Bit-exact twin of the Catalyst ``aggregate(zip_with(a, b,
-    (x, y) -> x * y), 0.0D, (acc, v) -> acc + v)`` fold over
-    ``array<float>`` columns: the products are FLOAT32 multiplies
-    (``x * y`` stays float in Spark), the accumulation is a strict
-    left-to-right FLOAT64 sum (each float32 product upcast at the
-    add) — vectorized ACROSS rows, sequential across dimensions, so
-    every IEEE operation matches the interpreted fold's order and
-    width exactly."""
-    prod = a32 * b32                       # float32, same rounding
-    acc = np.zeros(len(prod), dtype=np.float64)
-    for j in range(prod.shape[1]):
-        acc += prod[:, j]                  # f64 += f32 upcast-add
+    (x, y) -> x * y), 0.0D, (acc, v) -> acc + v)`` fold over the last
+    axis: the products keep the arrays' own width (``x * y`` stays
+    FLOAT32 for ``array<float>``, FLOAT64 for ``array<double>``), the
+    accumulation is a strict left-to-right FLOAT64 sum (each product
+    upcast at the add) — vectorized ACROSS rows, sequential across
+    dimensions, so every IEEE operation matches the interpreted
+    fold's order and width exactly."""
+    prod = a * b                           # same width, same rounding
+    acc = np.zeros(prod.shape[:-1], dtype=np.float64)
+    for j in range(prod.shape[-1]):
+        acc += prod[..., j]                # f64 += upcast-add
     return acc
+
+
+def _vectors(vecs: pd.Series) -> np.ndarray:
+    """Stack an array column's values, keeping float32 (``array<float>``)
+    and widening anything else to float64."""
+    m = np.array([np.asarray(v) for v in vecs])
+    return m if m.dtype == np.float32 else m.astype(np.float64)
 
 
 def _bucket_pairs_exact_pdf(pdf: pd.DataFrame, id_col: str,
@@ -258,8 +273,12 @@ def _bucket_pairs_exact_pdf(pdf: pd.DataFrame, id_col: str,
     ``_cos >= threshold``, where ``_cos`` is bit-identical to the
     Catalyst ``dot / (norm_a * norm_b)`` fold expression (see
     :func:`_fold_dot`; the dot fold is exactly symmetric, so pair
-    orientation cannot change the double).  Tiled so scratch stays
-    bounded for degenerate buckets.
+    orientation cannot change the double).
+
+    Two steps per tile of at most ``_EXACT_PAIR_TILE`` pairs: a
+    float64 normalized matmul keeps the pairs within ``_COS_MARGIN``
+    of the threshold, then the exact fold decides on those candidates
+    only.  Scratch stays bounded for degenerate buckets.
 
     With ``blk_col``/``lo``/``hi`` set, the frame is one TRIANGLE
     TILE of the bucket: rows carry a block tag in {lo, hi} and only
@@ -276,180 +295,39 @@ def _bucket_pairs_exact_pdf(pdf: pd.DataFrame, id_col: str,
     if len(pdf) < 2:
         return empty
     ids = pdf[id_col].to_numpy()
-    m32 = np.array([np.asarray(v, dtype=np.float32)
-                    for v in pdf[vec_col]])
-    norms = np.sqrt(_fold_dot(m32, m32))
-    if blk_col is None or lo == hi:
-        if blk_col is not None:
-            sel = np.flatnonzero(pdf[blk_col].to_numpy() == lo)
-            if len(sel) < 2:
-                return empty
-            ids, m32, norms = ids[sel], m32[sel], norms[sel]
-        iu, ju = np.triu_indices(len(ids), k=1)
-        ids_a = ids_b = ids
-        m_a = m_b = m32
-        n_a = n_b = norms
+    m = _vectors(pdf[vec_col])
+    norms = np.sqrt(_fold_dot(m, m))
+    f = m.astype(np.float64)
+    f /= np.where(norms > 0, norms, 1.0)[:, None]
+    if blk_col is None:
+        xs = ys = np.arange(len(ids))
     else:
         blk = pdf[blk_col].to_numpy()
         xs, ys = np.flatnonzero(blk == lo), np.flatnonzero(blk == hi)
-        if not len(xs) or not len(ys):
-            return empty
-        iu = np.repeat(np.arange(len(xs)), len(ys))
-        ju = np.tile(np.arange(len(ys)), len(xs))
-        ids_a, ids_b = ids[xs], ids[ys]
-        m_a, m_b = m32[xs], m32[ys]
-        n_a, n_b = norms[xs], norms[ys]
+    tri = blk_col is None or lo == hi      # pairs i < j of one row set
+    fx = f[xs]
+    fy = fx if tri else f[ys]
+    tile = max(1, _EXACT_PAIR_TILE // max(len(ys), 1))
     outs: list[pd.DataFrame] = []
-    for s in range(0, len(iu), _EXACT_PAIR_TILE):
-        ic, jc = iu[s:s + _EXACT_PAIR_TILE], ju[s:s + _EXACT_PAIR_TILE]
-        cos = _fold_dot(m_a[ic], m_b[jc]) / (n_a[ic] * n_b[jc])
+    for s in range(0, len(xs), tile):
+        c0 = s + 1 if tri else 0           # columns that can pair
+        li, lj = np.nonzero(fx[s:s + tile] @ fy[c0:].T
+                            >= threshold - _COS_MARGIN)
+        gi, gj = li + s, lj + c0
+        if tri:
+            gi, gj = gi[gj > gi], gj[gj > gi]
+        i, j = xs[gi], ys[gj]
+        cos = _fold_dot(m[i], m[j]) / (norms[i] * norms[j])
         keep = cos >= threshold            # same f64 compare
         if not keep.any():
             continue
-        ia, ib = ids_a[ic[keep]], ids_b[jc[keep]]
+        ia, ib = ids[i[keep]], ids[j[keep]]
         outs.append(pd.DataFrame({
             "id_a": np.minimum(ia, ib),
             "id_b": np.maximum(ia, ib),
             "_cos": cos[keep],
         }))
     return pd.concat(outs, ignore_index=True) if outs else empty
-
-
-def _bucket_pairs_pdf(pdf: pd.DataFrame, id_col: str, vec_col: str,
-                      threshold: float) -> pd.DataFrame:
-    """Within-bucket exact verify, TILED: similarity is computed in
-    row blocks of at most ``_BUCKET_TILE_ELEMS / n`` rows, so peak
-    memory is O(tile x bucket) instead of O(bucket^2).  A degenerate
-    bucket (all-zero vectors, near-identical embeddings all hashing
-    together) previously built an n x n matrix — 800 MB for a 10k-row
-    bucket — and could OOM an executor; the tiled pass caps the
-    scratch space at ~32 MB while examining exactly the same pairs."""
-    empty = pd.DataFrame({"id_a": pd.Series(dtype="int64"),
-                          "id_b": pd.Series(dtype="int64"),
-                          "cosine": pd.Series(dtype="float64")})
-    n = len(pdf)
-    if n < 2:
-        return empty
-    ids = pdf[id_col].to_numpy()
-    m = np.array([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-    m /= np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
-    tile = max(128, _BUCKET_TILE_ELEMS // n)
-    outs: list[pd.DataFrame] = []
-    for s in range(0, n, tile):
-        e = min(s + tile, n)
-        sims = m[s:e] @ m.T                      # (e-s) x n block
-        li, gj = np.nonzero(sims >= threshold)
-        gi = li + s
-        keep = gj > gi                           # upper triangle only
-        if not keep.any():
-            continue
-        ia, ib = ids[gi[keep]], ids[gj[keep]]
-        outs.append(pd.DataFrame({
-            "id_a": np.minimum(ia, ib),
-            "id_b": np.maximum(ia, ib),
-            "cosine": np.round(sims[li[keep], gj[keep]], 4),
-        }))
-    return pd.concat(outs, ignore_index=True) if outs else empty
-
-
-def embedding_near_dups_fast(
-    df: DataFrame,
-    dim: int,
-    threshold: float = 0.95,
-    n_planes: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Arrow hot-path twin of ``embedding_near_dups``: same hyperplane
-    buckets (Catalyst, narrow), but the within-bucket verify is a
-    TILED normalized matmul per bucket group (``applyInPandas``)
-    instead of a per-pair zip_with fold — the throughput shape for the
-    exact-verify stage at scale (each vector lives in exactly one
-    bucket, so every pair is examined once; one shuffle on the bucket
-    id; scratch memory bounded by ``_BUCKET_TILE_ELEMS`` even for
-    degenerate buckets).
-
-    Set-equality with the portable path is pytest-asserted on real
-    data; like any cross-implementation float compare it can only
-    diverge for a pair within ~1 ulp of the threshold (the
-    embedding_near_dups membership lesson)."""
-    b = with_lsh_bucket(df.select(id_col, vec_col), dim, n_planes, vec_col)
-
-    def pairs_in_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _bucket_pairs_pdf(pdf, id_col, vec_col, threshold)
-
-    return b.groupBy("lsh_bucket").applyInPandas(
-        pairs_in_bucket, schema="id_a long, id_b long, cosine double")
-
-
-def ivf_topk_portable(
-    df: DataFrame,
-    queries: DataFrame,
-    n_centroids: int = 8,
-    nprobe: int = 3,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF ANN with a DATA-SEEDED quantizer: centroids are the
-    embeddings of ids ``< n_centroids`` — a valid coarse quantizer
-    (quantizer choice moves recall, not the operator's semantics),
-    chosen because every step (argmax cell assignment, nprobe probing,
-    rank) is a deterministic relational expression replayable in ANSI
-    SQL, making the IVF join/shuffle shape hash-checkable against
-    DuckDB.  Assignment uses COSINE to the centroid, so centroid
-    normalization is unnecessary (cosine is scale-invariant) and no
-    cross-engine normalization math exists at all.  ``ivf_topk`` with
-    k-means ``train_ivf_centroids`` stays the production quantizer;
-    both share the same physical plan: corpus lives in 1 cell, queries
-    probe ``nprobe`` cells, dot products run per-cell, not all-pairs.
-
-    Cell assignment ties break on the lowest cell id (row_number over
-    (cosine DESC, cell ASC)) in both engines."""
-    # norms hoisted per row / per centroid (bit-identical float order
-    # dot / (norm_row * norm_cent) — the brute_force_topk hoist): the
-    # interpreted O(dim) fold runs once per row, not once per
-    # (row, centroid) and (query, neighbor) pair
-    cents = df.filter(F.col(id_col) < n_centroids).select(
-        F.col(id_col).alias("cell"), F.col(vec_col).alias("c_vec"),
-        _norm(F.col(vec_col)).alias("_cn"),
-    )
-    aw = Window.partitionBy("_vid").orderBy(F.desc("_csim"), F.asc("cell"))
-
-    def assign(side: DataFrame, rid: str, rvec: str, rnorm: str,
-               keep: int) -> DataFrame:
-        return (
-            side.select(F.col(id_col).alias("_vid"),
-                        F.col(vec_col).alias(rvec),
-                        _norm(F.col(vec_col)).alias(rnorm))
-            .crossJoin(F.broadcast(cents))
-            .withColumn("_csim", _dot(F.col(rvec), F.col("c_vec"))
-                        / (F.col(rnorm) * F.col("_cn")))
-            .withColumn("_rn", F.row_number().over(aw))
-            .filter(F.col("_rn") <= keep)
-            .select(F.col("_vid").alias(rid), rvec, rnorm, "cell")
-        )
-
-    corpus = assign(df, "neighbor_id", "n_vec", "_nn", 1)
-    probes = assign(queries, "query_id", "q_vec", "_qn", nprobe)
-    sims = (
-        corpus.join(F.broadcast(probes), "cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id", "neighbor_id",
-            F.round(_dot(F.col("q_vec"), F.col("n_vec"))
-                    / (F.col("_qn") * F.col("_nn")), 4)
-            .alias("cosine"),
-        )
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"),
-                                               F.asc("neighbor_id"))
-    return (
-        sims.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -491,18 +369,31 @@ def train_ivf_centroids(
 
 
 def _cell_assign_udf(centroids: np.ndarray, nprobe: int = 1):
-    """Arrow-batched assignment: one matmul per batch against the
-    broadcast centroid matrix; returns the nprobe nearest cell ids."""
+    """Arrow-batched assignment: the ``nprobe`` cells of highest
+    cosine to the broadcast centroid matrix, ties to the lowest cell.
+    The cosine is the :func:`_fold_dot` twin of the Catalyst
+    ``dot / (norm_row * norm_cent)`` fold (float32 products when the
+    vectors and centroids are float32), so with data-seeded float32
+    centroids the assignment is the one the DuckDB oracle replays.  A
+    NaN cosine (zero vector) sorts first, as NaN does in a Spark or
+    DuckDB ``DESC`` order."""
     from pyspark.sql.types import ArrayType, IntegerType
 
-    cmat = centroids.astype(np.float64)
+    cmat = np.asarray(centroids)
+    cnorm = np.sqrt(_fold_dot(cmat, cmat))
+    rows = max(1, _EXACT_PAIR_TILE // len(cmat))
 
     @F.pandas_udf(ArrayType(IntegerType()))
     def assign(vecs: pd.Series) -> pd.Series:
-        m = np.array([np.asarray(v, dtype=np.float64) for v in vecs])
-        m /= np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
-        sims = m @ cmat.T
-        top = np.argsort(-sims, axis=1)[:, :nprobe].astype(np.int32)
+        m = _vectors(vecs)
+        top = np.empty((len(m), min(nprobe, len(cmat))), dtype=np.int32)
+        for s in range(0, len(m), rows):
+            t = m[s:s + rows]
+            cos = (_fold_dot(t[:, None, :], cmat[None, :, :])
+                   / (np.sqrt(_fold_dot(t, t))[:, None] * cnorm))
+            key = np.where(np.isnan(cos), -np.inf, -cos)
+            top[s:s + rows] = np.argsort(key, axis=1,
+                                         kind="stable")[:, :nprobe]
         return pd.Series(list(top), index=vecs.index)
 
     # guide §4.4 duplication guard (probes explode the cell array)
@@ -522,9 +413,17 @@ def ivf_topk(
     query probes its ``nprobe`` nearest cells, so the dot products run
     against ~nprobe/n_centroids of the corpus instead of all of it.
     Shuffle plan: one exchange on cell id (the inverted file), then a
-    per-cell join — no cross product."""
-    import pandas as pd  # noqa: F401 (clarity: udf module scope)
+    per-cell join — no cross product.
 
+    ``centroids`` is any ``n_centroids x dim`` matrix; cell ``c`` is
+    row ``c``.  k-means centroids from :func:`train_ivf_centroids` are
+    the recall path.  A DATA-SEEDED quantizer (the float32 embeddings
+    of some rows, in a fixed order) makes every step — cosine cell
+    assignment, probing, rank — a deterministic relational expression
+    that DuckDB replays exactly; the ``ann_ivf`` contract query runs
+    that.  Cell assignment is by cosine, so centroid normalization is
+    unnecessary.  The neighbor cosine is the Catalyst fold, rounded
+    to 4 decimals; ranks break ties on the lower neighbor id."""
     corpus = df.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("n_vec")
     ).withColumn("cell", _cell_assign_udf(centroids, 1)(F.col("n_vec"))[0])

@@ -152,11 +152,13 @@ def _bucket_stats(spark: SparkSession, root: str, buckets: Sequence[int],
     ``root`` (audits the files, not the plan).  A bucket without a
     ``bucket=`` dir holds no rows: ``(0, 0, "0")`` — and when no bucket
     has one, no Spark job runs (the path may hold no parquet at all)."""
-    present = [b for b in buckets
-               if os.path.isdir(os.path.join(root, f"bucket={b}"))]
+    present = [d for d in (os.path.join(root, f"bucket={b}") for b in buckets)
+               if os.path.isdir(d)]
     stats = {}
     if present:
-        stored = spark.read.parquet(root).filter(F.col("bucket").isin(present))
+        # the bucket dirs, not root: Spark ignores (and warns about) a
+        # root whose own name is hidden, as "_staging_<run_id>" is
+        stored = spark.read.option("basePath", root).parquet(*present)
         stats = {b: s for (b,), s in
                  _stats(stored, key_cols, payload_col, ("bucket",)).items()}
     empty = {"row_count": 0, "bytes": 0, "checksum": "0"}
