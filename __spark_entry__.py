@@ -30,7 +30,9 @@ def _ensure_pkg(spark: SparkSession) -> None:
     The driver may build its own SparkSession from any cwd, so the
     package must be distributed explicitly — the sandbox analog of
     ``spark-submit --py-files engine.zip`` (north_rule deploy shape).
-    ``addPyFile`` is idempotent per file name."""
+    Shipped once per SparkContext, whose list of included zips is the
+    record: Spark refuses to add a path twice (and logs a warning for
+    every attempt)."""
     import hashlib
     import zipfile
 
@@ -41,6 +43,8 @@ def _ensure_pkg(spark: SparkSession) -> None:
         "/tmp",
         f"vision_parse_spark_pyfiles_"
         f"{hashlib.md5(_REPO.encode()).hexdigest()[:8]}.zip")
+    if os.path.basename(zpath) in spark.sparkContext._python_includes:
+        return
     src = os.path.join(_REPO, "vision_parse_spark")
     newest = max(
         os.path.getmtime(os.path.join(r, f))
@@ -57,93 +61,14 @@ def _ensure_pkg(spark: SparkSession) -> None:
     spark.sparkContext.addPyFile(zpath)
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str,
-       rebalance: bool = False) -> DataFrame:
+def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # every contract query reads through here, so every query gets
     # the package shipped — UDF closures in package modules pickle BY
     # REFERENCE (cloudpickle), and a vanilla session built from a
     # foreign cwd has no other way to import them on workers (the
-    # round-5 verify probe caught curate failing exactly this way;
-    # addPyFile is idempotent, the zip rebuilds only on mtime change)
+    # round-5 verify probe caught curate failing exactly this way)
     _ensure_pkg(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    if rebalance:
-        # guide §2.5 input skew: a single-file/single-ROW-GROUP
-        # parquet source is unsplittable, so the whole pre-exchange
-        # stage (signature kernels, gram explodes, interpreted HOF
-        # projections) would run on ONE task.  Opt-in per query —
-        # only consumers with per-row-expensive work BEFORE their
-        # first exchange ask for it (a narrow-cheap query or one
-        # that opens with its own shuffle would only pay the extra
-        # exchange) — and even then only when the scan actually
-        # yields fewer partitions than half the cores: at real
-        # scale the scan has many splits and this is a no-op
-        # (metadata check, no job).  The probe is cached per
-        # (sf_dir, table, cores, source mtime): building the
-        # RDD-conversion plan costs ~0.1 s of driver time per call,
-        # and a rewritten source gets a fresh probe.
-        p = spark.sparkContext.defaultParallelism
-        key = (sf_dir, name, p, _src_mtime(sf_dir, name))
-        n = _SCAN_PARTS_CACHE.get(key)
-        if n is None:
-            n = df.rdd.getNumPartitions()
-            _SCAN_PARTS_CACHE[key] = n
-        if n < max(p // 2, 1) and _src_bytes(sf_dir, name) >= \
-                _REBALANCE_MIN_BYTES:
-            # size guard (measured crossover): the exchange costs a
-            # fixed ~0.2-0.5 s (p tasks + a shuffle of every byte),
-            # so a sub-megabyte unsplittable file is cheaper to
-            # process serially than to repartition — isolated
-            # best-of-3 showed the exchange LOSING on every consumer
-            # at the 0.6 MB test corpus and winning on the same
-            # queries at the 6 MB 10x tile.  2 MiB splits those
-            # regimes with margin on both sides; parameterised for
-            # clusters where the fixed exchange cost differs.
-            df = df.repartition(p)
-    return df
-
-
-_REBALANCE_MIN_BYTES = int(os.environ.get(
-    "VPS_REBALANCE_MIN_BYTES", str(2 << 20)))
-
-
-def _src_mtime(sf_dir: str, name: str) -> int | None:
-    """Modification time (ns) of a parquet source; ``None`` when the
-    path is not local (object store)."""
-    try:
-        return os.stat(f"{sf_dir}/{name}.parquet").st_mtime_ns
-    except OSError:
-        return None
-
-
-def _src_bytes(sf_dir: str, name: str) -> int:
-    """On-disk size of a parquet source (file or directory), cached
-    per source mtime like the partition probe in :func:`_t`."""
-    path = f"{sf_dir}/{name}.parquet"
-    key = ("bytes", path, _src_mtime(sf_dir, name))
-    b = _SCAN_PARTS_CACHE.get(key)
-    if b is None:
-        try:
-            if os.path.isdir(path):
-                b = sum(os.path.getsize(os.path.join(r, f))
-                        for r, _d, fs in os.walk(path) for f in fs)
-            else:
-                b = os.path.getsize(path)
-        except OSError:
-            # non-local path (object store): size unknown — keep the
-            # pre-guard behaviour (rebalance) rather than silently
-            # serializing a possibly-huge scan
-            b = 1 << 62
-        _SCAN_PARTS_CACHE[key] = b
-    return b
-
-
-_SCAN_PARTS_CACHE: dict = {}
-
-
-def _tr(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Rebalanced read — see the ``rebalance`` note in :func:`_t`."""
-    return _t(spark, sf_dir, name, rebalance=True)
+    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 # ---------------------------------------------------------------------------
@@ -308,8 +233,9 @@ def _q_bloom_tokens(spark, sf_dir):
     from vision_parse_spark.functions.text_stats import ws_tokens
     from vision_parse_spark.operators.sketches import (
         bloom_build, bloom_probe)
+    from vision_parse_spark.session import spread
 
-    d = _tr(spark, sf_dir, "documents")
+    d = spread(_t(spark, sf_dir, "documents"))
     toks_en = (d.filter(F.col("lang") == "en")
                 .select(F.explode(ws_tokens("text")).alias("tok")))
     toks_all = d.select(F.explode(ws_tokens("text")).alias("tok"))
@@ -420,7 +346,7 @@ def _q_lang_id(spark, sf_dir):
 def _q_ngram_jaccard(spark, sf_dir):
     from vision_parse_spark.operators.dedup import ngram_jaccard_adjacent
 
-    return ngram_jaccard_adjacent(_tr(spark, sf_dir, "documents"))
+    return ngram_jaccard_adjacent(_t(spark, sf_dir, "documents"))
 
 
 def _q_top_ngrams(spark, sf_dir):
@@ -429,7 +355,7 @@ def _q_top_ngrams(spark, sf_dir):
     TakeOrderedAndProject bounded top-k (no global sort)."""
     from vision_parse_spark.operators.corpus_stats import top_ngrams
 
-    return top_ngrams(_tr(spark, sf_dir, "documents"), n=3, k=50)
+    return top_ngrams(_t(spark, sf_dir, "documents"), n=3, k=50)
 
 
 def _q_span_dedup(spark, sf_dir):
@@ -441,7 +367,7 @@ def _q_span_dedup(spark, sf_dir):
     filter, no UDF."""
     from vision_parse_spark.operators.spans import remove_frequent_spans
 
-    return remove_frequent_spans(_tr(spark, sf_dir, "documents"),
+    return remove_frequent_spans(_t(spark, sf_dir, "documents"),
                                  n=3, max_df=3)
 
 
@@ -452,7 +378,7 @@ def _q_unigram_logprob(spark, sf_dir):
     (ln differs cross-engine only in the last ulp)."""
     from vision_parse_spark.operators.corpus_stats import unigram_logprob
 
-    return unigram_logprob(_tr(spark, sf_dir, "documents"))
+    return unigram_logprob(_t(spark, sf_dir, "documents"))
 
 
 def _q_winnow_fps(spark, sf_dir):
@@ -464,7 +390,7 @@ def _q_winnow_fps(spark, sf_dir):
     selection exactly."""
     from vision_parse_spark.operators.dedup import winnow_fingerprints
 
-    return winnow_fingerprints(_tr(spark, sf_dir, "documents"))
+    return winnow_fingerprints(_t(spark, sf_dir, "documents"))
 
 
 def _q_bigram_logprob(spark, sf_dir):
@@ -474,7 +400,7 @@ def _q_bigram_logprob(spark, sf_dir):
     round-4 output per the unigram ulp analysis."""
     from vision_parse_spark.operators.corpus_stats import bigram_logprob
 
-    return bigram_logprob(_tr(spark, sf_dir, "documents"))
+    return bigram_logprob(_t(spark, sf_dir, "documents"))
 
 
 def _q_bpe_merges(spark, sf_dir):
@@ -485,7 +411,7 @@ def _q_bpe_merges(spark, sf_dir):
     documents table while keeping the replay oracle tractable."""
     from vision_parse_spark.operators.bpe import bpe_merges
 
-    return bpe_merges(_tr(spark, sf_dir, "documents"), n_merges=12)
+    return bpe_merges(_t(spark, sf_dir, "documents"), n_merges=12)
 
 
 def _q_ccnet_buckets(spark, sf_dir):
@@ -498,7 +424,7 @@ def _q_ccnet_buckets(spark, sf_dir):
     from vision_parse_spark.operators.corpus_stats import (
         perplexity_buckets)
 
-    return perplexity_buckets(_tr(spark, sf_dir, "documents"))
+    return perplexity_buckets(_t(spark, sf_dir, "documents"))
 
 
 def _q_postings(spark, sf_dir):
@@ -508,7 +434,7 @@ def _q_postings(spark, sf_dir):
     engine-portable layout."""
     from vision_parse_spark.operators.corpus_stats import build_postings
 
-    return build_postings(_tr(spark, sf_dir, "documents"), min_df=2)
+    return build_postings(_t(spark, sf_dir, "documents"), min_df=2)
 
 
 def _q_bm25(spark, sf_dir):
@@ -568,7 +494,7 @@ def _q_curate(spark, sf_dir):
     # replays all four stages and the semi-join structure).
     from vision_parse_spark.operators.curation import curate
 
-    return curate(_tr(spark, sf_dir, "documents")).select(
+    return curate(_t(spark, sf_dir, "documents")).select(
         "doc_id", F.md5("text").alias("scrubbed_md5"))
 
 
@@ -583,10 +509,10 @@ def _q_curate_full(spark, sf_dir):
     # subset-consistent KMeans init, anti-join drop semantics).
     from vision_parse_spark.operators.curation import curate_full
 
-    d = _tr(spark, sf_dir, "documents").select("doc_id", "text")
+    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
     ev = d.filter("doc_id % 10 = 0")
     tr = d.filter("doc_id % 10 != 0")
-    emb = _tr(spark, sf_dir, "embeddings")
+    emb = _t(spark, sf_dir, "embeddings")
     return curate_full(tr, ev, emb).select(
         "doc_id", F.md5("text").alias("scrubbed_md5"))
 
@@ -600,7 +526,7 @@ def _q_line_dedup(spark, sf_dir):
     # frequency); the cut is a codegen'd higher-order filter.
     from vision_parse_spark.operators.spans import remove_frequent_lines
 
-    d = _tr(spark, sf_dir, "documents").select("doc_id", "text")
+    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
     return remove_frequent_lines(d, max_df=3)
 
 
@@ -614,7 +540,7 @@ def _q_quality_clf(spark, sf_dir):
     whole table is then scored with keep_threshold=0.75."""
     from vision_parse_spark.operators.classifier import quality_classifier
 
-    d = _tr(spark, sf_dir, "documents").select("doc_id", "text")
+    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
     tgt = d.filter("concat(' ', text, ' ') LIKE '% spark %'")
     raw = d.filter("concat(' ', text, ' ') NOT LIKE '% spark %'")
     return quality_classifier(raw, tgt, score_df=d,
@@ -682,7 +608,7 @@ def _q_dsir_weights(spark, sf_dir):
     # per-doc gram aggregation.
     from vision_parse_spark.operators.selection import dsir_logweights
 
-    d = _tr(spark, sf_dir, "documents").select("doc_id", "text")
+    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
     tgt = d.filter("doc_id % 10 = 0")
     raw = d.filter("doc_id % 10 != 0")
     return dsir_logweights(raw, tgt, n_buckets=512)
@@ -697,7 +623,7 @@ def _q_decontaminate(spark, sf_dir):
     # same shingle construction + distinct-gram counting.
     from vision_parse_spark.operators.decontaminate import decontaminate
 
-    d = _tr(spark, sf_dir, "documents").select("doc_id", "text")
+    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
     ev = d.filter("doc_id % 10 = 0")
     tr = d.filter("doc_id % 10 != 0")
     return decontaminate(tr, ev, n=5, min_hits=2).select("doc_id")
@@ -711,7 +637,7 @@ def _q_contamination_hits(spark, sf_dir):
         contamination_hits,
     )
 
-    d = _tr(spark, sf_dir, "documents").select("doc_id", "text")
+    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
     ev = d.filter("doc_id % 10 = 0")
     tr = d.filter("doc_id % 10 != 0")
     return contamination_hits(tr, ev, n=5).select("doc_id", "n_hits")
@@ -732,7 +658,7 @@ def _q_repetition_stats(spark, sf_dir):
     # rounded to 6, fully replayable in DuckDB
     from vision_parse_spark.operators.repetition import repetition_stats
 
-    return repetition_stats(_tr(spark, sf_dir, "documents"))
+    return repetition_stats(_t(spark, sf_dir, "documents"))
 
 
 def _q_scrub_pii(spark, sf_dir):
@@ -795,7 +721,7 @@ def _q_minhash_signature(spark, sf_dir):
     # permutations of the signature the LSH operators compute
     from vision_parse_spark.operators.dedup import with_minhash
 
-    d = _tr(spark, sf_dir, "documents").select("doc_id", "text")
+    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
     return with_minhash(d, num_perm=4).select(
         "doc_id", *[F.col("minhash")[k].alias(f"perm{k}_min")
                     for k in range(4)])
@@ -808,10 +734,10 @@ def _q_simhash(spark, sf_dir):
     # (ANSI-BIGINT-safe in both engines), replayed by DuckDB.  Also
     # answers the historical ``simhash64_portable`` name.
     from vision_parse_spark.operators.dedup import simhash64_cols
+    from vision_parse_spark.session import spread
 
-    _ensure_pkg(spark)
     return (
-        _tr(spark, sf_dir, "documents")
+        spread(_t(spark, sf_dir, "documents"))
         .select("doc_id", simhash64_cols(F.col("text")).alias("_s"))
         .select("doc_id", "_s.simhash_lo", "_s.simhash_hi")
     )
@@ -825,8 +751,7 @@ def _q_simhash_pairs(spark, sf_dir):
     # xor/bit_count hamming exactly.
     from vision_parse_spark.operators.dedup import simhash_near_dups
 
-    _ensure_pkg(spark)
-    d = _tr(spark, sf_dir, "documents")
+    d = _t(spark, sf_dir, "documents")
     return simhash_near_dups(d, max_hamming=3).select(
         "id_a", "id_b", F.col("hamming").cast("long").alias("hamming"))
 
@@ -835,8 +760,9 @@ def _q_simhash16(spark, sf_dir):
     # 16-bit SimHash as one Catalyst expression (md5 token hashes):
     # per-bit +/-1 majority vote, packed to an int — the construction
     # of the 64-bit ``simhash`` kernel, written in SQL functions only
+    from vision_parse_spark.session import spread
     P = 4294967311
-    d = _tr(spark, sf_dir, "documents").select("doc_id", "text")
+    d = spread(_t(spark, sf_dir, "documents")).select("doc_id", "text")
     toks = d.withColumn(
         "_h",
         F.expr(
@@ -859,7 +785,7 @@ def _q_simhash16(spark, sf_dir):
 def _q_cosine_topk(spark, sf_dir):
     from vision_parse_spark.operators.similarity import brute_force_topk
 
-    e = _tr(spark, sf_dir, "embeddings")
+    e = _t(spark, sf_dir, "embeddings")
     return brute_force_topk(e, e.filter(F.col("vec_id") < 8), k=5)
 
 
@@ -869,7 +795,7 @@ def _q_ann_lsh(spark, sf_dir):
     # and replays bucket assignment + bucket join + rank exactly
     from vision_parse_spark.operators.similarity import ann_topk_lsh
 
-    e = _tr(spark, sf_dir, "embeddings")
+    e = _t(spark, sf_dir, "embeddings")
     dim = len(e.select("embedding").first()[0])
     return ann_topk_lsh(e, e.filter(F.col("vec_id") < 8), dim=dim, k=5,
                         n_planes=4)
@@ -883,7 +809,7 @@ def _q_ann_ivf(spark, sf_dir):
 
     from vision_parse_spark.operators.similarity import ivf_topk
 
-    e = _tr(spark, sf_dir, "embeddings")
+    e = _t(spark, sf_dir, "embeddings")
     seeds = e.filter(F.col("vec_id") < 8)
     cents = np.array([r.embedding for r in
                       seeds.orderBy("vec_id").select("embedding").collect()],
@@ -898,7 +824,7 @@ def _q_embedding_near_dups(spark, sf_dir):
     # differ by an ulp — seen once at sf0.1
     from vision_parse_spark.operators.similarity import embedding_near_dups
 
-    e = _tr(spark, sf_dir, "embeddings")
+    e = _t(spark, sf_dir, "embeddings")
     dim = len(e.select("embedding").first()[0])
     return embedding_near_dups(e, dim=dim, threshold=0.3, n_planes=4) \
         .select("id_a", "id_b")
@@ -913,7 +839,7 @@ def _q_embedding_dup_clusters(spark, sf_dir):
     from vision_parse_spark.operators.dedup import dup_clusters
     from vision_parse_spark.operators.similarity import embedding_near_dups
 
-    e = _tr(spark, sf_dir, "embeddings")
+    e = _t(spark, sf_dir, "embeddings")
     dim = len(e.select("embedding").first()[0])
     pairs = embedding_near_dups(e, dim=dim, threshold=0.3, n_planes=4) \
         .select("id_a", "id_b")
@@ -1019,8 +945,9 @@ def _q_hll_vocab(spark, sf_dir):
     validation twin the oracle checks both of."""
     from vision_parse_spark.functions.text_stats import ws_tokens
     from vision_parse_spark.operators.sketches import hll_distinct
+    from vision_parse_spark.session import spread
 
-    d = _tr(spark, sf_dir, "documents")
+    d = spread(_t(spark, sf_dir, "documents"))
     toks = d.select("lang", F.explode(ws_tokens("text")).alias("tok"))
     est = hll_distinct(toks, "tok", ["lang"], p=12)
     exact = toks.groupBy("lang").agg(
@@ -1036,8 +963,9 @@ def _q_cms_heavy(spark, sf_dir):
     counter table, so the corpus never shuffles for the probe."""
     from vision_parse_spark.functions.text_stats import ws_tokens
     from vision_parse_spark.operators.sketches import cms_counts
+    from vision_parse_spark.session import spread
 
-    d = _tr(spark, sf_dir, "documents")
+    d = spread(_t(spark, sf_dir, "documents"))
     toks = d.select(F.explode(ws_tokens("text")).alias("tok"))
     exact = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("exact_cnt"))
     probes = (exact.orderBy(F.desc("exact_cnt"), F.asc("tok"))
@@ -1119,7 +1047,7 @@ def _q_bpe_encode(spark, sf_dir):
     in word order."""
     from vision_parse_spark.operators.bpe import bpe_apply, bpe_merges
 
-    d = _tr(spark, sf_dir, "documents")
+    d = _t(spark, sf_dir, "documents")
     m = sorted(bpe_merges(d, n_merges=12).collect(),
                key=lambda r: r.rank)
     merges = [(r.left_sym, r.right_sym) for r in m]
@@ -1141,7 +1069,7 @@ def _q_vocab_growth(spark, sf_dir):
     all 20 sources and exercise the full operator."""
     from vision_parse_spark.operators.corpus_stats import vocab_growth
 
-    return vocab_growth(_tr(spark, sf_dir, "documents"), n=3)
+    return vocab_growth(_t(spark, sf_dir, "documents"), n=3)
 
 
 def _q_dialog_integrity(spark, sf_dir):
@@ -1197,7 +1125,7 @@ def _q_bpe_fertility(spark, sf_dir):
     DuckDB replay (w12 vocabulary joined onto per-doc word streams)."""
     from vision_parse_spark.operators.bpe import bpe_fertility, bpe_merges
 
-    d = _tr(spark, sf_dir, "documents")
+    d = _t(spark, sf_dir, "documents")
     m = sorted(bpe_merges(d, n_merges=12).collect(),
                key=lambda r: r.rank)
     merges = [(r.left_sym, r.right_sym) for r in m]
@@ -1269,7 +1197,7 @@ def _q_exact_substring_hits(spark, sf_dir):
         exact_substring_hits,
     )
 
-    d = _tr(spark, sf_dir, "documents")
+    d = _t(spark, sf_dir, "documents")
     frags = (d.filter(F.col("doc_id") < 5)
               .select(F.col("doc_id").alias("frag_id"),
                       F.substring("text", 20, 40).alias("fragment")))
@@ -1304,7 +1232,7 @@ def _q_source_divergence(spark, sf_dir):
         source_divergence,
     )
 
-    return source_divergence(_tr(spark, sf_dir, "documents"), top_k=20)
+    return source_divergence(_t(spark, sf_dir, "documents"), top_k=20)
 
 
 def _q_lexical_diversity(spark, sf_dir):
@@ -1316,7 +1244,7 @@ def _q_lexical_diversity(spark, sf_dir):
         lexical_diversity,
     )
 
-    return lexical_diversity(_tr(spark, sf_dir, "documents"))
+    return lexical_diversity(_t(spark, sf_dir, "documents"))
 
 
 def _q_burst_detection(spark, sf_dir):
@@ -1338,7 +1266,7 @@ def _q_keyword_extract(spark, sf_dir):
     under the bm25 ulp precedent."""
     from vision_parse_spark.operators.corpus_stats import keyword_extract
 
-    return keyword_extract(_tr(spark, sf_dir, "documents"), k=3)
+    return keyword_extract(_t(spark, sf_dir, "documents"), k=3)
 
 
 def _q_scalar_quantize(spark, sf_dir):
@@ -1365,7 +1293,7 @@ def _q_pq_codes(spark, sf_dir):
     strict-fold distance argmin."""
     from vision_parse_spark.operators.pq import pq_encode, pq_fit
 
-    e = _tr(spark, sf_dir, "embeddings")
+    e = _t(spark, sf_dir, "embeddings")
     books = pq_fit(e, **_PQ_PARAMS)
     return (pq_encode(e, books)
             .select("vec_id",
@@ -1404,8 +1332,9 @@ def _q_length_quantiles(spark, sf_dir):
     replay; only the exact twin needs round(4) (engine-specific
     interpolation, the event_quantiles precedent)."""
     from vision_parse_spark.operators.sketches import hist_quantiles
+    from vision_parse_spark.session import spread
 
-    d = _tr(spark, sf_dir, "documents")
+    d = spread(_t(spark, sf_dir, "documents"))
     lens = d.select(F.length("text").alias("len"))
     est = hist_quantiles(lens, "len", _LQ_PROBS, n_bins=64)
     arr = ", ".join(f"{p}D" for p in _LQ_PROBS)
@@ -1457,7 +1386,7 @@ def _q_chunk_documents(spark, sf_dir):
     # Catalyst sequence/slice/posexplode (no UDF, narrow Generate)
     from vision_parse_spark.operators.chunking import chunk_documents
 
-    d = _tr(spark, sf_dir, "documents").select("doc_id", "text")
+    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
     return chunk_documents(d, max_tokens=64, overlap=8)
 
 

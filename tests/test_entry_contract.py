@@ -51,6 +51,23 @@ def test_every_query_runs(spark):
         assert df.columns, name
 
 
+def test_package_shipped_once_per_context(spark, monkeypatch):
+    """Two contract reads ship the package zip at most once (none if an
+    earlier test shipped it): Spark refuses to add a path twice and
+    logs a warning for every repeat."""
+    sc = spark.sparkContext
+    calls = []
+
+    def add(path, _real=sc.addPyFile):
+        calls.append(path)
+        _real(path)
+
+    monkeypatch.setattr(sc, "addPyFile", add)
+    entrymod._t(spark, SF_DIR, "documents")
+    entrymod._t(spark, SF_DIR, "embeddings")
+    assert len(calls) <= 1, calls
+
+
 def test_oracle_keys_subset_of_queries():
     q = set(entrymod.queries())
     o = set(entrymod.oracle_sql())

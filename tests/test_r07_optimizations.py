@@ -272,46 +272,143 @@ def test_quality_fit_invariant_to_loop_partitioning(spark):
     assert abs(b1 - b2) < 1e-9
 
 
-# --- end-of-round wave: size-guarded scan rebalance -----------------
+# --- one parallelism policy: session.spread ------------------------
+
+SF = "/root/testdata/sf0.001"
+
+
+def _round_robins(df) -> set:
+    """Distinct round-robin repartitions in ``df``'s analyzed plan, by
+    canonical form: three reads of one spread input are one exchange
+    (the optimizer may push each read's filters below it)."""
+    found, todo = set(), [df._jdf.queryExecution().analyzed()]
+    while todo:
+        node = todo.pop()
+        if node.nodeName() == "Repartition" and node.shuffle():
+            found.add(node.canonicalized().toString())
+        kids = node.children()
+        todo.extend(kids.apply(i) for i in range(kids.size()))
+    return found
+
+
+@pytest.fixture
+def materialized(spark, monkeypatch):
+    """Round-robin exchanges of every frame an operator persists or
+    checkpoints: its result plan alone hides what ran before them."""
+    frame = type(spark.range(1))  # the session's DataFrame class
+    seen = set()
+    for name in ("persist", "localCheckpoint"):
+        real = getattr(frame, name)
+
+        def spy(self, *a, _real=real, **k):
+            seen.update(_round_robins(self))
+            return _real(self, *a, **k)
+
+        monkeypatch.setattr(frame, name, spy)
+    return seen
+
+
+def _write_docs(spark, path, splits):
+    (spark.read.parquet(f"{SF}/documents.parquet")
+     .select("doc_id", "text").repartition(splits)
+     .write.mode("overwrite").parquet(path))
+    df = spark.read.parquet(path)
+    assert df.rdd.getNumPartitions() == splits
+    return df
+
 
 def test_scan_rebalance_size_guard(spark, monkeypatch):
-    """_tr repartitions an unsplittable scan only when the file is
+    """spread repartitions an unsplittable scan only when its plan is
     big enough that serializing its per-row work beats the exchange;
-    below the threshold the read stays at its natural partitioning."""
-    import __spark_entry__ as em
+    below the threshold the read stays at its natural partitioning.
+    A spread frame is not spread again, and deciding that runs no
+    Spark job (its partition count is read off the shuffling plan)."""
+    from vision_parse_spark import session
 
-    sf = "/root/testdata/sf0.001"
-    em._SCAN_PARTS_CACHE.clear()
-    # tiny file, default 2 MiB threshold: no repartition
-    assert em._tr(spark, sf, "documents").rdd.getNumPartitions() == 1
-    # force the threshold to zero: the guard passes and the read is
-    # spread to the session's default parallelism
-    em._SCAN_PARTS_CACHE.clear()
-    monkeypatch.setattr(em, "_REBALANCE_MIN_BYTES", 0)
-    p = spark.sparkContext.defaultParallelism
-    assert em._tr(spark, sf, "documents").rdd.getNumPartitions() == p
-    em._SCAN_PARTS_CACHE.clear()
+    sc = spark.sparkContext
+    d = spark.read.parquet(f"{SF}/documents.parquet")
+    # tiny file, default 2 MiB threshold: returned untouched
+    assert session.spread(d) is d
+    # threshold forced to zero: spread to the default parallelism
+    monkeypatch.setattr(session, "SPREAD_MIN_BYTES", 0)
+    p = sc.defaultParallelism
+    s = session.spread(d)
+    sc.setJobGroup("spread-respread", "spread of a spread frame")
+    try:
+        assert session.spread(s) is s
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert not sc.statusTracker().getJobIdsForGroup("spread-respread")
+    assert s.rdd.getNumPartitions() == p
+    assert session.spread(s.select("doc_id", "text")).rdd \
+        .getNumPartitions() == p
 
 
 def test_scan_rebalance_follows_rewritten_source(spark, monkeypatch,
                                                  tmp_path):
-    """The partition probe and size caches behind _tr are keyed on the
-    source's mtime: a source rewritten past the size threshold gets a
-    fresh rebalance decision instead of the cached one."""
-    import __spark_entry__ as em
+    """Nothing is cached between decisions: a source rewritten past
+    the size threshold is spread on its next read."""
+    from vision_parse_spark import session
 
-    sf = str(tmp_path)
-    monkeypatch.setattr(em, "_REBALANCE_MIN_BYTES", 64 << 10)
+    path = str(tmp_path / "documents.parquet")
+    monkeypatch.setattr(session, "SPREAD_MIN_BYTES", 64 << 10)
 
-    def write(n):
+    def spread_parts(n):
         (spark.range(n).selectExpr("id AS doc_id",
                                    "md5(cast(id AS string)) AS text")
-         .coalesce(1).write.mode("overwrite")
-         .parquet(f"{sf}/documents.parquet"))
+         .coalesce(1).write.mode("overwrite").parquet(path))
+        return session.spread(spark.read.parquet(path)).rdd \
+            .getNumPartitions()
 
-    write(10)
-    assert em._tr(spark, sf, "documents").rdd.getNumPartitions() == 1
-    write(20000)
-    assert em._src_bytes(sf, "documents") >= 64 << 10
-    p = spark.sparkContext.defaultParallelism
-    assert em._tr(spark, sf, "documents").rdd.getNumPartitions() == p
+    assert spread_parts(10) == 1
+    assert spread_parts(20000) == spark.sparkContext.defaultParallelism
+
+
+def test_minhash_keeps_split_input_unshuffled(spark, monkeypatch,
+                                              tmp_path):
+    """An input above the size threshold that already has a split per
+    two cores reaches the MinHash signature kernel without a
+    round-robin exchange (the LSH used to repartition every input)."""
+    from vision_parse_spark import session
+    from vision_parse_spark.operators import dedup
+
+    d = _write_docs(spark, str(tmp_path / "docs.parquet"),
+                    spark.sparkContext.defaultParallelism)
+    monkeypatch.setattr(session, "SPREAD_MIN_BYTES", 1 << 10)
+    plans = []
+    real = dedup._banded
+
+    def spy(*a, **k):
+        out = real(*a, **k)
+        plans.append(out._jdf.queryExecution().executedPlan().toString())
+        return out
+
+    monkeypatch.setattr(dedup, "_banded", spy)
+    dedup.minhash_lsh_pairs(d).collect()
+    assert "ArrowEvalPython" in plans[0]  # the signature kernel
+    assert "RoundRobinPartitioning" not in plans[0]
+
+
+def test_curate_spreads_one_split_input_once(spark, monkeypatch,
+                                             tmp_path, materialized):
+    """A one-split input above the threshold gets exactly one
+    round-robin exchange over the whole of curate, not one per nested
+    operator (repetition gate, LSH banding)."""
+    from vision_parse_spark import session
+    from vision_parse_spark.operators.curation import curate
+
+    d = _write_docs(spark, str(tmp_path / "docs.parquet"), 1)
+    monkeypatch.setattr(session, "SPREAD_MIN_BYTES", 1 << 10)
+    out = curate(d)
+    out.collect()
+    assert len(materialized | _round_robins(out)) == 1
+
+
+def test_curate_leaves_small_input_unshuffled(spark, materialized):
+    """Below the size threshold no stage of curate adds a round-robin
+    exchange."""
+    from vision_parse_spark.operators.curation import curate
+
+    out = curate(spark.read.parquet(f"{SF}/documents.parquet"))
+    out.collect()
+    assert not materialized | _round_robins(out)

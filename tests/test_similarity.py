@@ -72,6 +72,16 @@ def test_embedding_near_dups_threshold(spark, vectors):
     assert got == {(0, 1)}
 
 
+def test_embedding_near_dups_builds_without_warning(spark, vectors):
+    """The grouped-map kernel's type hints name its eval type, so
+    building the plan raises no PySpark ``UserWarning``."""
+    import warnings
+
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", UserWarning)
+        embedding_near_dups(vectors, dim=DIM, threshold=0.95, n_planes=6)
+
+
 def test_ivf_topk_finds_planted_near_dup(spark, vectors):
     from vision_parse_spark.operators.similarity import (
         ivf_topk,

@@ -173,10 +173,12 @@ def lexical_diversity(df, id_col: str = "doc_id",
     """
     from pyspark.sql import functions as F
 
+    from ..session import spread
+
     toks = ws_tokens(f"coalesce({text_col}, '')")
     hapax = (f"size(filter(array_distinct(_toks), t -> "
              f"size(filter(_toks, x -> x = t)) = 1))")
-    return (df.select(F.col(id_col), toks.alias("_toks"))
+    return (spread(df).select(F.col(id_col), toks.alias("_toks"))
               .select(
                   id_col,
                   F.size("_toks").cast("long").alias("n_tokens"),

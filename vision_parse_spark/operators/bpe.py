@@ -34,6 +34,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Row, functions as F
 
 from vision_parse_spark.functions.text_stats import ws_tokens
+from vision_parse_spark.session import spread
 
 
 def _word_vocab(df: DataFrame, text_col: str) -> DataFrame:
@@ -86,7 +87,7 @@ def bpe_merges(df: DataFrame, n_merges: int = 20,
         raise ValueError(f"bpe_merges: n_merges must be >= 1 "
                          f"(got {n_merges})")
     spark = df.sparkSession
-    vocab = _word_vocab(df, text_col).localCheckpoint(eager=True)
+    vocab = _word_vocab(spread(df), text_col).localCheckpoint(eager=True)
     merges: list[Row] = []
     for rank in range(n_merges):
         pairs = (vocab.filter(F.size("syms") >= 2)
@@ -164,7 +165,7 @@ def bpe_apply(df: DataFrame, merges: list[tuple[str, str]],
              for t in texts],
             index=texts.index)
 
-    return df.withColumn(out_col, encode(F.col(text_col)))
+    return spread(df).withColumn(out_col, encode(F.col(text_col)))
 
 
 def bpe_fertility(df: DataFrame, merges: list[tuple[str, str]],

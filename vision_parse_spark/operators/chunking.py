@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import spread
+
 
 def chunk_documents(
     df: DataFrame,
@@ -63,7 +65,7 @@ def chunk_documents(
             yield pd.DataFrame({id_col: ids, "chunk_idx": idxs,
                                 "chunk_text": texts})
 
-    out = df.select(id_col, text_col).mapInPandas(
+    out = spread(df).select(id_col, text_col).mapInPandas(
         kernel, f"{id_col} {id_type}, chunk_idx int, chunk_text string")
     return out.withColumn(
         "n_tokens",

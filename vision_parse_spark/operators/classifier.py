@@ -39,6 +39,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from ..session import spread
 from .selection import _gram_stream
 
 _SIG_CLIP = 60.0  # |z| beyond this, sigmoid saturates in float64 anyway
@@ -209,9 +210,9 @@ def quality_classifier(
         raise ValueError(f"n_buckets must be >= 2, got {n_buckets}")
     if iters < 1:
         raise ValueError(f"iters must be >= 1, got {iters}")
-    raw_feats = _doc_buckets(raw_df, id_col, text_col, n_buckets) \
+    raw_feats = _doc_buckets(spread(raw_df), id_col, text_col, n_buckets) \
         .localCheckpoint(eager=True)
-    tgt_feats = _doc_buckets(target_df, id_col, text_col, n_buckets)
+    tgt_feats = _doc_buckets(spread(target_df), id_col, text_col, n_buckets)
     w, b = _fit_from_features(raw_feats.withColumn("y", F.lit(0)),
                               tgt_feats.withColumn("y", F.lit(1)),
                               n_buckets, iters, lr)
@@ -222,5 +223,5 @@ def quality_classifier(
             f"{id_col} {id_type}, score double")
         return out.withColumn("quality_keep",
                               F.col("score") >= F.lit(keep_threshold))
-    return quality_classifier_score(score_df, w, b, id_col, text_col,
-                                    keep_threshold)
+    return quality_classifier_score(spread(score_df), w, b, id_col,
+                                    text_col, keep_threshold)

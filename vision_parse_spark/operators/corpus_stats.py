@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from vision_parse_spark.functions.text_stats import ws_tokens
+from vision_parse_spark.session import spread
 
 
 def bm25_topk(df: DataFrame, query_terms: list[str], k: int = 10,
@@ -83,7 +84,7 @@ def build_postings(df: DataFrame, id_col: str = "doc_id",
     are exactly the statistics that pick those terms.
     """
     toks = ws_tokens(text_col)
-    tf = (df.select(F.col(id_col), F.explode(toks).alias("term"))
+    tf = (spread(df).select(F.col(id_col), F.explode(toks).alias("term"))
             .groupBy("term", id_col)
             .agg(F.count(F.lit(1)).alias("tf")))
     posting = F.concat_ws(
@@ -131,7 +132,7 @@ def unigram_logprob(df: DataFrame, id_col: str = "doc_id",
     (~1e-11 per doc — the bm25 precedent ships the same analysis).
     """
     toks = ws_tokens(text_col)
-    terms = (df.select(F.col(id_col), F.explode(toks).alias("term")))
+    terms = (spread(df).select(F.col(id_col), F.explode(toks).alias("term")))
     counts = (terms.groupBy("term").agg(F.count(F.lit(1)).alias("c"))
                    .localCheckpoint(eager=True))
     n_total, v = counts.agg(F.sum("c"), F.count(F.lit(1))).first()
@@ -169,7 +170,7 @@ def top_ngrams(df: DataFrame, text_col: str = "text", n: int = 3,
 
     grams = word_ngrams_udf(n)
     return (
-        df.select(F.explode(grams(F.col(text_col))).alias("ngram"))
+        spread(df).select(F.explode(grams(F.col(text_col))).alias("ngram"))
         .groupBy("ngram")
         .agg(F.count(F.lit(1)).alias("freq"))
         .orderBy(F.desc("freq"), F.asc("ngram"))
@@ -271,7 +272,7 @@ def bigram_logprob(df: DataFrame, id_col: str = "doc_id",
     token.
     """
     toks = ws_tokens(text_col)
-    base = (df.select(F.col(id_col), toks.alias("_t"))
+    base = (spread(df).select(F.col(id_col), toks.alias("_t"))
               .filter(F.size("_t") > 0))
 
     uni = (base.select(F.explode("_t").alias("term"))
@@ -341,6 +342,7 @@ def vocab_growth(df: DataFrame, text_col: str = "text",
 
     if n < 1:
         raise ValueError(f"vocab_growth: n must be >= 1, got {n}")
+    df = spread(df)
     if n == 1:
         typed = df.select(F.col(group_col).alias("g"),
                           F.explode(ws_tokens(text_col)).alias("tok"))
@@ -393,8 +395,8 @@ def keyword_extract(df: DataFrame, id_col: str = "doc_id",
     # checkpointed: document frequency AND the score join both read
     # this relation — without the barrier the explode+agg shuffle
     # runs twice (guide §2.4)
-    tf = (df.select(F.col(id_col),
-                    F.explode(ws_tokens(text_col)).alias("term"))
+    tf = (spread(df).select(F.col(id_col),
+                            F.explode(ws_tokens(text_col)).alias("term"))
             .groupBy(id_col, "term")
             .agg(F.count(F.lit(1)).alias("tf"))
             .localCheckpoint(eager=True))
@@ -446,8 +448,8 @@ def source_divergence(df: DataFrame, text_col: str = "text",
     # coarsening pass, and a THIRD full explode counted the corpus
     # total — n_corpus is the exact integer sum of these counts, so
     # one pass now feeds all three consumers (guide §2.4)
-    st = (df.select(F.col(group_col).alias("g"),
-                    F.explode(toks).alias("tok"))
+    st = (spread(df).select(F.col(group_col).alias("g"),
+                            F.explode(toks).alias("tok"))
             .groupBy("g", "tok")
             .agg(F.count(F.lit(1)).alias("c"))
             .localCheckpoint(eager=True))

@@ -29,6 +29,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.scrub import scrub_pii
+from ..session import spread
 from .dedup import minhash_dedup
 from .repetition import repetition_stats
 
@@ -63,7 +64,13 @@ def curate(
     so the duplicate-cluster representative is the min id among
     gate-passing docs (a cluster whose min-id member fails quality
     still keeps one surviving representative — the standard
-    filter-then-dedup order)."""
+    filter-then-dedup order).
+
+    ``df`` goes through :func:`~vision_parse_spark.session.spread`
+    once, before the gates' per-row regexes; the nested repetition
+    and LSH stages apply the same policy to what they read, which
+    adds no second exchange over an input that is already spread."""
+    df = spread(df)
     n_tok = F.size(F.regexp_extract_all(text_col,
                                         F.lit("[A-Za-z0-9]+"), 0))
     qual = (
@@ -90,12 +97,7 @@ def curate(
     # reclaims it on GC.
     gated = gated.localCheckpoint(eager=True)
     survivors = minhash_dedup(
-        gated, id_col, text_col, jaccard_threshold=jaccard_threshold,
-        # gated is an eager checkpoint of a join output — already
-        # spread over the shuffle partitions; the LSH's default
-        # source rebalance would just re-shuffle the texts
-        rebalance=False,
-    )
+        gated, id_col, text_col, jaccard_threshold=jaccard_threshold)
     return scrub_pii(survivors, text_col)
 
 
@@ -150,11 +152,14 @@ def curate_full(
     only gate+decon survivors; the span doc-frequency aggregate runs
     over dedup survivors only; everything else is narrow or
     broadcast.  Every stage is individually oracled — this query
-    proves the seven-stage composition end to end."""
+    proves the seven-stage composition end to end.  ``df`` and
+    ``embeddings`` go through :func:`~vision_parse_spark.session.spread`
+    at entry, as in :func:`curate`."""
     from .clustering import semdedup
     from .decontaminate import decontaminate
     from .spans import remove_frequent_spans
 
+    df, embeddings = spread(df), spread(embeddings)
     n_tok = F.size(F.regexp_extract_all(text_col,
                                         F.lit("[A-Za-z0-9]+"), 0))
     qual = (
@@ -207,10 +212,7 @@ def curate_full(
     sem_surv = sem_surv.localCheckpoint(eager=True)
 
     deduped = minhash_dedup(sem_surv, id_col, text_col,
-                            jaccard_threshold=jaccard_threshold,
-                            # sem_surv is an eager checkpoint of a
-                            # join output — already well-partitioned
-                            rebalance=False)
+                            jaccard_threshold=jaccard_threshold)
     cut = remove_frequent_spans(deduped, n=span_n, max_df=span_max_df,
                                 id_col=id_col, text_col=text_col)
     return scrub_pii(

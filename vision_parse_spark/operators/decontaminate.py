@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import spread
 from .dedup import make_shingle_udf
 
 
@@ -45,10 +46,10 @@ def contamination_hits(
     corpus side, measured 8.5s -> ~1s at sf0.1)."""
     sh = make_shingle_udf(n)
     eval_grams = (
-        eval_df.select(F.explode(sh(F.col(text_col))).alias("gram"))
+        spread(eval_df).select(F.explode(sh(F.col(text_col))).alias("gram"))
         .distinct()
     )
-    train_grams = train_df.select(
+    train_grams = spread(train_df).select(
         id_col, F.explode(sh(F.col(text_col))).alias("gram"))
     hits = train_grams.join(F.broadcast(eval_grams), "gram")
     return hits.groupBy(id_col).agg(
@@ -100,7 +101,7 @@ def exact_substring_hits(
     """
     frags = F.broadcast(
         fragments_df.select(frag_id_col, frag_col))
-    return (train_df.select(id_col, text_col)
+    return (spread(train_df).select(id_col, text_col)
             .join(frags,
                   F.contains(F.col(text_col), F.col(frag_col)))
             .select(id_col, frag_id_col))

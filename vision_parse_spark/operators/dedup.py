@@ -29,6 +29,8 @@ from pyspark.sql import DataFrame, functions as F
 
 from pyspark.sql.types import LongType, StructField, StructType
 
+from ..session import spread
+
 # ---------------------------------------------------------------------------
 # exact dedup (hash groupBy — S2.? training-data op)
 # ---------------------------------------------------------------------------
@@ -86,7 +88,7 @@ def ngram_jaccard_adjacent(df: DataFrame, id_col: str = "doc_id",
     corpus (the two join sides shuffle on different keys, so Spark
     cannot reuse the exchange)."""
     sh_udf = make_shingle_udf(n)
-    sh = (df.select(id_col, sh_udf(F.col(text_col)).alias("shingles"))
+    sh = (spread(df).select(id_col, sh_udf(F.col(text_col)).alias("shingles"))
             .localCheckpoint(eager=True))
     a = sh.select(F.col(id_col).alias("id_a"), F.col("shingles").alias("sh_a"))
     b = sh.select(F.col(id_col).alias("id_b"), F.col("shingles").alias("sh_b"))
@@ -145,7 +147,7 @@ def with_minhash(df: DataFrame, text_col: str = "text", num_perm: int = 32,
     this is the reference the Arrow kernel :func:`make_minhash_udf` is
     tested against, not the path the LSH operators run."""
     _check_num_perm(num_perm)
-    sh = with_shingles(df, text_col, shingle_n, out_col="_sh")
+    sh = with_shingles(spread(df), text_col, shingle_n, out_col="_sh")
     hashed = sh.withColumn("_h", F.expr(
         f"transform(_sh, s -> cast(conv(substring(md5(s), 1, 15),"
         f" 16, 10) as bigint) % {_PRIME})"))
@@ -240,26 +242,19 @@ def make_minhash_udf(num_perm: int = 32, shingle_n: int = 3):
 
 
 def _banded(src: DataFrame, id_col: str, text_col: str, num_perm: int,
-            bands: int, shingle_n: int, rebalance: bool) -> DataFrame:
+            bands: int, shingle_n: int) -> DataFrame:
     """``(id_col, band, bucket)`` rows: the signature sliced into
     ``bands`` runs of ``num_perm // bands`` values, each run joined
     into a string bucket key (the key the DuckDB replay joins on).
     Only ids cross the bucket shuffle; shingles are joined back for
-    candidate pairs by :func:`_verified`.
-
-    ``rebalance=True`` repartitions to the session's default
-    parallelism before the signature kernel: small sources often
-    arrive as one file -> one partition, which would serialize it.
-    At cluster scale the scan already yields many splits — pass
-    ``rebalance=False`` to skip the extra shuffle (checking the actual
-    partition count would force an RDD conversion on the driver, so
-    the choice is an explicit flag instead)."""
+    candidate pairs by :func:`_verified`.  ``src`` goes through
+    :func:`~vision_parse_spark.session.spread` before the signature
+    kernel, so a big source that arrives as one split is not
+    signed on one core."""
     rows_per_band = num_perm // bands
-    if rebalance:
-        src = src.repartition(src.sparkSession.sparkContext.defaultParallelism)
     mh_udf = make_minhash_udf(num_perm, shingle_n)
     return (
-        src.withColumn("minhash", mh_udf(F.col(text_col)))
+        spread(src).withColumn("minhash", mh_udf(F.col(text_col)))
         .select(
             F.col(id_col),
             F.posexplode(F.expr(
@@ -313,13 +308,15 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
     shuffle plan: explode to (band, bucket) -> self-join on the bucket
     (only collisions compared) -> dedupe pairs -> verify with exact
     shingle jaccard >= threshold.  Returns (id_a, id_b, jaccard) with
-    id_a < id_b.  See :func:`_banded` for ``rebalance``."""
+    id_a < id_b.  Whether the signature input is spread over the
+    cores is :func:`~vision_parse_spark.session.spread`'s decision;
+    ``rebalance`` is accepted for old callers and ignored."""
     src = df.select(id_col, text_col)
     # id-only banded frame, persisted: it feeds BOTH sides of the
     # self-join — without materialization the signature UDF lineage
     # would be recomputed per join side
-    banded = _banded(src, id_col, text_col, num_perm, bands, shingle_n,
-                     rebalance).persist()
+    banded = _banded(src, id_col, text_col, num_perm, bands,
+                     shingle_n).persist()
     banded.count()  # materialize BEFORE the self-join so both sides
     # read the cache (persist alone doesn't guarantee reuse when both
     # branches of one job race to populate it)
@@ -577,7 +574,7 @@ def minhash_dedup_incremental(
     whole pipeline."""
     def banded(side: DataFrame, suffix: str) -> DataFrame:
         return _banded(side.select(id_col, text_col), id_col, text_col,
-                       num_perm, bands, shingle_n, rebalance=True
+                       num_perm, bands, shingle_n
                        ).withColumnRenamed(id_col, f"id_{suffix}")
 
     # distinct collided pairs first (a pair colliding in several bands
@@ -717,7 +714,8 @@ def simhash_near_dups(df: DataFrame, id_col: str = "doc_id",
         # near-dup question any more
         raise ValueError(
             f"max_hamming must be in [0, 12], got {max_hamming}")
-    sig = df.select(id_col, text_col).withColumn("sim", simhash64(F.col(text_col)))
+    sig = spread(df).select(id_col, text_col).withColumn(
+        "sim", simhash64(F.col(text_col)))
     widths, offsets, combos = _simhash_block_plan(max_hamming)
 
     def combo_key(combo: tuple) -> F.Column:
@@ -840,5 +838,5 @@ def winnow_fingerprints(df: DataFrame, id_col: str = "doc_id",
                     "fingerprint": np.concatenate(out_fp),
                 })
 
-    return df.select(id_col, text_col).mapInPandas(
+    return spread(df).select(id_col, text_col).mapInPandas(
         fps_fn, f"{id_col} {id_type}, pos int, fingerprint long")

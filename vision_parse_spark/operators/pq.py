@@ -41,6 +41,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..session import spread
+
 _TILE = 4096
 
 
@@ -115,9 +117,9 @@ def pq_fit(df: DataFrame, m: int = 4, k: int = 8, iters: int = 2,
     if k < 1 or iters < 0:
         raise ValueError(f"pq_fit: need k >= 1, iters >= 0;"
                          f" got k={k} iters={iters}")
-    base = df.select(F.col(id_col),
-                     F.col(vec_col).cast("array<double>").alias("_v")
-                     ).persist()
+    base = spread(df).select(F.col(id_col),
+                             F.col(vec_col).cast("array<double>").alias("_v")
+                             ).persist()
     first = base.select(F.size("_v")).first()
     if first is None:
         base.unpersist()
@@ -189,9 +191,9 @@ def pq_encode(df: DataFrame, codebooks: list[list[list[float]]],
     """``(id_col, codes)`` — one int code per subspace.  One narrow
     Arrow pass, zero shuffle."""
     enc = _encode_udf(codebooks)
-    return df.select(F.col(id_col),
-                     enc(F.col(vec_col).cast("array<double>"))
-                     .alias("codes"))
+    return spread(df).select(F.col(id_col),
+                             enc(F.col(vec_col).cast("array<double>"))
+                             .alias("codes"))
 
 
 def pq_adc_topk(df: DataFrame, queries: DataFrame,

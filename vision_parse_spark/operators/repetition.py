@@ -23,6 +23,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import spread
+
 
 def repetition_stats(
     df: DataFrame,
@@ -65,7 +67,7 @@ def repetition_stats(
         f"filter(transform(split({text_col}, '\\n'), x -> trim(x)),"
         f" x -> x != '')"
     )
-    return df.select(
+    return spread(df).select(
         F.col(id_col),
         lines.alias("_lines"),
         bigram_stats(F.col(text_col)).alias("_bg"),

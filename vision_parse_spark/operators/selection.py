@@ -41,6 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions.text_stats import ws_tokens
+from ..session import spread
 from .sampling import hash_bucket
 
 # --- Gopher rules (Rae et al. 2021, A1.1 "quality filtering") ------
@@ -192,8 +193,8 @@ def dsir_logweights(
     """
     if n_buckets < 2:
         raise ValueError(f"n_buckets must be >= 2, got {n_buckets}")
-    raw_s = _gram_stream(raw_df, id_col, text_col, n_buckets)
-    tgt_s = _gram_stream(target_df, id_col, text_col, n_buckets)
+    raw_s = _gram_stream(spread(raw_df), id_col, text_col, n_buckets)
+    tgt_s = _gram_stream(spread(target_df), id_col, text_col, n_buckets)
     q = _bucket_dist(raw_s, "qc")
     p = _bucket_dist(tgt_s, "pc")
     # full outer over the bounded bucket space; unseen buckets get

@@ -19,6 +19,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import spread
+
 
 def _dot(a, b):
     return F.aggregate(
@@ -59,7 +61,7 @@ def brute_force_topk(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"),
         _norm(F.col(vec_col)).alias("_qn"),
     )
-    c = df.select(
+    c = spread(df).select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("n_vec"),
         _norm(F.col(vec_col)).alias("_nn"),
     )
@@ -128,9 +130,9 @@ def ann_topk_lsh(
     # float order: dot / (norm_q * norm_n) — the brute_force_topk
     # hoist), so the fold cost is per row, not per collision pair
     c = with_lsh_bucket(
-        df.select(F.col(id_col).alias("neighbor_id"),
-                  F.col(vec_col).alias("n_vec"),
-                  _norm(F.col(vec_col)).alias("_nn")),
+        spread(df).select(F.col(id_col).alias("neighbor_id"),
+                          F.col(vec_col).alias("n_vec"),
+                          _norm(F.col(vec_col)).alias("_nn")),
         dim, n_planes, "n_vec",
     )
     q = with_lsh_bucket(
@@ -188,7 +190,7 @@ def embedding_near_dups(
     handful of tasks (guide §2.5 skew).  The final ``round(_, 4)``
     stays in Catalyst."""
     idt = df.schema[id_col].dataType.simpleString()
-    b = (with_lsh_bucket(df.select(id_col, vec_col), dim, n_planes,
+    b = (with_lsh_bucket(spread(df).select(id_col, vec_col), dim, n_planes,
                          vec_col)
          .withColumn("_blk", F.pmod(F.xxhash64(F.col(id_col)),
                                     F.lit(_PAIR_BLOCKS)).cast("int"))
@@ -197,7 +199,7 @@ def embedding_near_dups(
              f"struct(least(_blk, q) as lo, greatest(_blk, q) as hi))"
          ))))
 
-    def pairs_in_tile(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def pairs_in_tile(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         return _bucket_pairs_exact_pdf(pdf, id_col, vec_col, threshold,
                                        blk_col="_blk", lo=key[1],
                                        hi=key[2])
@@ -424,7 +426,7 @@ def ivf_topk(
     that.  Cell assignment is by cosine, so centroid normalization is
     unnecessary.  The neighbor cosine is the Catalyst fold, rounded
     to 4 decimals; ranks break ties on the lower neighbor id."""
-    corpus = df.select(
+    corpus = spread(df).select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("n_vec")
     ).withColumn("cell", _cell_assign_udf(centroids, 1)(F.col("n_vec"))[0])
     probes = queries.select(

@@ -42,6 +42,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from vision_parse_spark.functions.text_stats import ws_tokens as _tokens
+from vision_parse_spark.session import spread
 
 
 def remove_frequent_spans(df: DataFrame, n: int = 3, max_df: int = 3,
@@ -59,7 +60,7 @@ def remove_frequent_spans(df: DataFrame, n: int = 3, max_df: int = 3,
     """
     if n < 1:
         raise ValueError(f"n must be >= 1, got {n}")
-    toks = (df.select(F.col(id_col), _tokens(text_col).alias("_toks"))
+    toks = (spread(df).select(F.col(id_col), _tokens(text_col).alias("_toks"))
               .withColumn("_len", F.size("_toks")))
 
     grams = F.expr(
@@ -142,7 +143,7 @@ def remove_frequent_lines(df: DataFrame, max_df: int = 3,
     cut is a narrow higher-order filter over the split array —
     zero Python, inside whole-stage codegen.
     """
-    lines = (df.select(F.col(id_col),
+    lines = (spread(df).select(F.col(id_col),
                        F.split(F.col(text_col), "\n").alias("_lines"))
                .withColumn("_n", F.size("_lines")))
     stream = (lines.select(
