@@ -289,22 +289,16 @@ def _q_token_count(spark, sf_dir):
 
 
 def _quality_scored(d):
-    """(doc_id, source, quality_e4) — the ONE quality formula shared
-    by _q_quality_score and _q_top_quality (and, in SQL form, by
-    _QUALITY_SQL_CTES): a drift in one place would silently
-    desynchronize the score from the ranking that claims to use it."""
+    """(doc_id, source, quality_e4) for _q_quality_score and
+    _q_top_quality, scored by ``curation.quality_e4_col`` — the formula
+    ``curate`` gates on; _QUALITY_SQL_CTES is its SQL form for the
+    oracle.  One formula, so the score, the ranking and the gate
+    cannot drift apart."""
+    from vision_parse_spark.operators.curation import quality_e4_col
+
     n_tok = F.size(F.regexp_extract_all("text", F.lit("[A-Za-z0-9]+"), 0))
-    n_stop = F.size(F.regexp_extract_all(
-        F.lower("text"),
-        F.lit(r"\b(?:the|a|an|and|or|of|to|in|is|it)\b"), 0))
-    len_ok = F.least(F.length("text") / 200.0, F.lit(1.0))
-    stop_ok = F.least(n_stop / n_tok / 0.2, F.lit(1.0))
-    # floor(x * 1e4) as integer: identical double bits in both engines
-    # (same expression order) -> identical floor; round() differs at
-    # half-way points (Spark decimal HALF_UP vs DuckDB double round)
-    score = F.floor((len_ok * 0.5 + stop_ok * 0.5) * 10000).cast("long")
     return d.filter(n_tok > 0).select(
-        "doc_id", "source", score.alias("quality_e4"))
+        "doc_id", "source", quality_e4_col("text").alias("quality_e4"))
 
 
 def _q_quality_score(spark, sf_dir):

@@ -2,7 +2,6 @@
 conversation assembly."""
 
 import os
-import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -32,49 +31,49 @@ def test_salted_agg_two_exchanges(spark):
 
 
 def test_stateful_conversation_assembly(spark, tmp_path):
-    from vision_parse_spark import ExtractConfig
+    """Streamed assembly equals the batch path's ordered collect.  A
+    sentinel turn one day later, in a second file (so a later
+    micro-batch), moves the watermark past every synth conversation;
+    the sentinel's own conversation stays open and never emits."""
+    import datetime as dt
+
+    from vision_parse_spark import ExtractConfig, extract
+    from vision_parse_spark.schema import TRANSCRIPT_SCHEMA
+    from vision_parse_spark.streaming.stateful import assembled_stream_event
     from vision_parse_spark.streaming.stream import extract_stream
-    from vision_parse_spark.streaming.stateful import assembled_stream
     from vision_parse_spark.synth import synth_transcripts_pdf
 
     in_dir = str(tmp_path / "in")
     os.makedirs(in_dir)
     n = 96
-    spark.createDataFrame(synth_transcripts_pdf(n)).coalesce(2) \
+    turns_pdf = synth_transcripts_pdf(n)
+    spark.createDataFrame(turns_pdf).coalesce(1) \
+        .write.mode("append").parquet(in_dir)
+    late = turns_pdf["ts"].max().to_pydatetime() + dt.timedelta(days=1)
+    spark.createDataFrame([("sentinel", 0, "user", "sentinel turn", None,
+                            late)], TRANSCRIPT_SCHEMA).coalesce(1) \
         .write.mode("append").parquet(in_dir)
 
-    turns = extract_stream(spark, in_dir, ExtractConfig()).select(
-        "conv_id", "turn_idx", "markdown"
+    turns = extract_stream(spark, in_dir, ExtractConfig(),
+                           max_files_per_trigger=1).select(
+        "conv_id", "turn_idx", "markdown", "ts"
     )
     q = (
-        assembled_stream(turns)
+        assembled_stream_event(turns)
         .writeStream.format("memory").queryName("assembled")
         .outputMode("append")
-        .trigger(processingTime="1 second")
+        .trigger(availableNow=True)
         .start()
     )
     try:
-        # wait for the idle timeout to fire emissions
-        deadline = time.time() + 90
-        want = spark.createDataFrame(synth_transcripts_pdf(n)) \
-            .select("conv_id").distinct().count()
-        while time.time() < deadline:
-            got = spark.sql(
-                "select count(*) c from assembled where conv_id is not null"
-            ).first().c
-            if got >= want:
-                break
-            time.sleep(2)
+        assert q.awaitTermination(120), "availableNow drain timed out"
     finally:
         q.stop()
-
     rows = {r.conv_id: r for r in spark.sql(
         "select * from assembled where conv_id is not null").collect()}
-    assert len(rows) == want
-    # ordered assembly equals the batch path
-    from vision_parse_spark import extract, ExtractConfig as EC
 
-    batch = extract(synth_transcripts_spark(spark, n, partitions=2), EC())
+    batch = extract(synth_transcripts_spark(spark, n, partitions=2),
+                    ExtractConfig())
     expected = (
         batch.groupBy("conv_id")
         .agg(F.expr(
@@ -83,6 +82,8 @@ def test_stateful_conversation_assembly(spark, tmp_path):
         ).alias("document"), F.count(F.lit(1)).alias("n_turns"))
         .collect()
     )
+    assert "sentinel" not in rows
+    assert set(rows) == {e.conv_id for e in expected}
     for e in expected:
         got = rows[e.conv_id]
         assert got.n_turns == e.n_turns

@@ -102,19 +102,9 @@ def test_encode_png_roundtrip_shape():
     assert len(raw) == 2 * (1 + 3 * 3)
 
 
-def test_detection_scale_half_finds_large_region():
-    """detection_scale=0.5: 2x-decimated detection still finds big
-    regions, boxes mapped back to full resolution (even coords)."""
-    page = render_page(200, 200, seed=21)
-    full = extract_images(page, "url", 0)
-    half = extract_images(page, "url", 0, detection_scale=0.5)
-    assert len(full) == 1 and len(half) == 1
-    assert half[0]["image_url"] == "image_1_1.png"
-
-
 # ---------------------------------------------------------------------------
 # round 5: PDFPageConfig knob parity (parser.py:20-26) — raster_dpi,
-# color_space, preserve_transparency, wider detection_scale
+# color_space, preserve_transparency
 # ---------------------------------------------------------------------------
 
 
@@ -215,23 +205,13 @@ def test_raster_dpi_144_still_detects_figure():
     assert [d["image_url"] for d in out] == ["image_1_1.png"]
 
 
-def test_detection_scale_quarter_finds_large_region():
-    page = render_page(220, 220, seed=21)
-    full = extract_images(page, "url", 0)
-    quarter = extract_images(page, "url", 0, detection_scale=0.25)
-    assert quarter and quarter[0]["image_url"] == full[0]["image_url"]
-
-
 def test_config_validates_new_knobs():
     import pytest as _pytest
 
     from vision_parse_spark import ExtractConfig
 
-    ExtractConfig(raster_dpi=144, color_space="GRAY",
-                  detection_scale=0.25).validate()
+    ExtractConfig(raster_dpi=144, color_space="GRAY").validate()
     with _pytest.raises(ValueError):
         ExtractConfig(raster_dpi=10).validate()
     with _pytest.raises(ValueError):
         ExtractConfig(color_space="CMYK").validate()
-    with _pytest.raises(ValueError):
-        ExtractConfig(detection_scale=0.3).validate()

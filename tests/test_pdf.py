@@ -123,7 +123,7 @@ def test_non_pdf_raises():
 def test_series_fallback_to_header_strip():
     good = make_pdf_bytes([["real parse"]]).decode("latin-1")
     legacy = "%PDF-1.4\nactual text layer content here."
-    out, ok = extract_pdf_text_series(pd.Series([good, legacy]))
+    out, ok, _, _ = extract_pdf_text_series(pd.Series([good, legacy]))
     assert list(ok) == [True, False]
     assert out.iloc[0] == "real parse"
     assert out.iloc[1] == "actual text layer content here."
@@ -135,7 +135,7 @@ def test_corrupt_flate_falls_back_in_series():
                       b"stream\nXXXX\nendstream")
     # make it claim FlateDecode so decompression fails
     bad = bad.replace(b"<< /Length", b"<< /Filter /FlateDecode /Length")
-    out, ok = extract_pdf_text_series(
+    out, ok, _, _ = extract_pdf_text_series(
         pd.Series([bad.decode("latin-1")]))
     assert list(ok) == [False]
 
@@ -305,7 +305,7 @@ def test_cmap_pdf_survives_extract_series():
         make_pdf_bytes_cmap([["cmap text"]]).decode("latin-1"),
         make_pdf_bytes_objstm([["objstm text"]]).decode("latin-1"),
     ])
-    out, ok = extract_pdf_text_series(payloads)
+    out, ok, _, _ = extract_pdf_text_series(payloads)
     assert list(ok) == [True, True]
     assert list(out) == ["cmap text", "objstm text"]
 
@@ -742,8 +742,8 @@ def test_vector_figure_inside_form_xobject():
 
     from vision_parse_spark.functions.pdf import extract_pdf_text_series
 
-    _, ok, vec = extract_pdf_text_series(
-        pd.Series([pdf.decode("latin-1")]), with_vector_flag=True)
+    _, ok, vec, _ = extract_pdf_text_series(
+        pd.Series([pdf.decode("latin-1")]))
     assert bool(ok.iloc[0]) and bool(vec.iloc[0])
 
 
@@ -902,12 +902,11 @@ def test_annot_stamp_ink_reaches_rasterizer():
     assert inside.sum() > 1000           # the pie painted
     assert inside.mean() > 0.9           # >=90% of ink mass in-Rect
     assert rasterize_pdf_vector_pages(pdf, include_annotations=False) == []
-    _, ok, vec = extract_pdf_text_series(
-        pd.Series([pdf.decode("latin-1")]), with_vector_flag=True)
+    _, ok, vec, _ = extract_pdf_text_series(
+        pd.Series([pdf.decode("latin-1")]))
     assert bool(ok[0]) and bool(vec[0])
-    _, ok2, vec2 = extract_pdf_text_series(
-        pd.Series([pdf.decode("latin-1")]), with_vector_flag=True,
-        include_annotations=False)
+    _, ok2, vec2, _ = extract_pdf_text_series(
+        pd.Series([pdf.decode("latin-1")]), include_annotations=False)
     assert bool(ok2[0]) and not bool(vec2[0])
 
 

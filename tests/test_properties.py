@@ -127,7 +127,7 @@ def test_pdf_series_total_on_garbage(data):
 
     payload = ("%PDF-1.4\n" + data.decode("latin-1")
                if data else "%PDF-")
-    out, ok = extract_pdf_text_series(pd.Series([payload]))
+    out, ok, _, _ = extract_pdf_text_series(pd.Series([payload]))
     assert len(out) == 1 and isinstance(out.iloc[0], str)
 
 
@@ -221,7 +221,7 @@ def test_annot_paths_total_on_garbage(data):
         + str(len(junk)) + " >>\nstream\n" + junk + "\nendstream\nendobj\n"
         "trailer\n<< /Root 1 0 R >>\n"
     )
-    out, ok = extract_pdf_text_series(pd.Series([body]))
+    out, ok, _, _ = extract_pdf_text_series(pd.Series([body]))
     assert len(out) == 1 and isinstance(out.iloc[0], str)
     imgs = extract_images_from_marker_text(body, "url", 0)
     assert isinstance(imgs, list)

@@ -8,7 +8,7 @@ probing (``utils.py:146-165`` is cluster sizing -> spark-submit flags).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Optional
 
 
@@ -27,31 +27,17 @@ class ExtractConfig:
     * ``custom_transform`` — the lift of ``custom_prompt``
       (``parser.py:55``): an optional user hook applied to the final
       markdown Series (vectorized; pd.Series -> pd.Series).
-    * ``fast_path_confidence`` — P2 threshold (``llm.py:338``).
+
+    The reference's hard-coded thresholds are module constants next to
+    the code that applies them: the P2 fast-path confidence in
+    ``operators/pipeline.py``, the P4/P5 region bounds in
+    ``operators/images.py``.
     """
 
     image_mode: Optional[str] = None          # "url" | "base64" | None
     detailed_extraction: bool = True
-    fast_path_confidence: float = 0.6         # llm.py:338
-    min_image_dims: tuple = (100, 100)        # utils.py:67
     strict: bool = False                      # raise on first error (tests)
-    salt_buckets: int = 32                    # skew salting for repartition
     custom_transform: Optional[object] = None # Callable[[pd.Series], pd.Series]
-    # region validity thresholds — utils.py:52-57
-    region_std_min: float = 25.0
-    region_mean_lo: float = 20.0
-    region_mean_hi: float = 235.0
-    region_area_ratio_min: float = 0.4
-    region_laplacian_var_max: float = 500.0
-    # page-size cap for regions — utils.py:99-103 (0.95 * page dims)
-    region_page_frac_max: float = 0.95
-    # 1.0 = reference-faithful full-res detection; 0.5 / 0.25 run the
-    # CV threshold/labeling passes on a 2x / 4x-decimated page (4x /
-    # 16x fewer pixels) while P4/P5 still measure the full-res crop.
-    # Costs recall on thin/small regions (~25% fewer detections at
-    # 0.5 on the synthetic corpus) — an explicit speed/recall knob,
-    # not a default.
-    detection_scale: float = 1.0
     # round 5 — PDFPageConfig parity (parser.py:20-26):
     # * raster_dpi: resolution of the VECTOR raster channel
     #   (scale = dpi/72, the reference's dpi knob; its default 400 is
@@ -97,11 +83,6 @@ class ExtractConfig:
         if self.image_mode not in (None, "url", "base64"):
             raise ValueError(
                 f"image_mode must be 'url', 'base64' or None, got {self.image_mode!r}"
-            )
-        if self.detection_scale not in (1.0, 0.5, 0.25):
-            raise ValueError(
-                f"detection_scale must be 1.0, 0.5 or 0.25, "
-                f"got {self.detection_scale!r}"
             )
         if not (36 <= int(self.raster_dpi) <= 600):
             raise ValueError(

@@ -15,6 +15,8 @@ no per-row Python (north_rule).
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
 import pandas as pd
 
@@ -22,11 +24,13 @@ from .fences import strip_code_fences
 from .html import looks_like_html, strip_html_boilerplate
 
 # Synthetic page-image placeholder embedded in transcript text payloads.
-# The images operator re-renders a deterministic numpy page from these
-# params and runs the real region-detection pipeline (see
-# operators/images.py).  Stands in for the reference's rendered PDF
-# bitmap (parser.py:116-121) since raster libs are out of scope here.
-PAGE_IMAGE_MARKER_RE = r"\[\[PAGE_IMAGE w=\d+ h=\d+ seed=\d+(?: noise=\d+)?\]\]"
+# The images operator re-renders a deterministic numpy page from the
+# captured (w, h, seed, noise) and runs the real region-detection
+# pipeline (see operators/images.py).  Stands in for the reference's
+# rendered PDF bitmap (parser.py:116-121) since raster libs are out of
+# scope here.
+PAGE_IMAGE_MARKER_RE = re.compile(
+    r"\[\[PAGE_IMAGE w=(\d+) h=(\d+) seed=(\d+)(?: noise=(\d+))?\]\]")
 
 # Table signals: HTML tables, pipe rows, or aligned-column blocks
 # (>=2 lines with >=2 multi-space-separated runs).
@@ -82,8 +86,7 @@ def detect_payload_kind(text: pd.Series) -> pd.Series:
     return kind
 
 
-def classify_batch(text: pd.Series, payload_kind: pd.Series | None = None,
-                   include_annotations: bool = True,
+def classify_batch(text: pd.Series, include_annotations: bool = True,
                    html_density_filter: bool = False) -> pd.DataFrame:
     """Classify a batch of turn payloads.
 
@@ -96,8 +99,7 @@ def classify_batch(text: pd.Series, payload_kind: pd.Series | None = None,
     block drop in the HTML channel (ExtractConfig.html_density_filter).
     """
     t = text.fillna("")
-    if payload_kind is None:
-        payload_kind = detect_payload_kind(t)
+    payload_kind = detect_payload_kind(t)
 
     # --- extracted_text: main-content extraction per payload kind ---
     # pdf_text: REAL text-layer parse (object walk, FlateDecode,
@@ -115,9 +117,7 @@ def classify_batch(text: pd.Series, payload_kind: pd.Series | None = None,
 
         parsed_pdf, _parse_ok, vec_ink, encrypted = \
             extract_pdf_text_series(
-                t[pdf_mask], with_vector_flag=True,
-                include_annotations=include_annotations,
-                with_encrypted_flag=True)
+                t[pdf_mask], include_annotations=include_annotations)
         extracted = extracted.mask(pd.Series(pdf_mask, index=t.index), parsed_pdf)
         pdf_vector_ink.loc[vec_ink.index] = vec_ink
         if encrypted.any():
@@ -136,7 +136,7 @@ def classify_batch(text: pd.Series, payload_kind: pd.Series | None = None,
     # T6 fence strip applies to every payload (llm.py:444-449)
     extracted = strip_code_fences(extracted)
     # drop image markers from the text channel (they live in `images`)
-    has_marker = extracted.str.contains(PAGE_IMAGE_MARKER_RE, regex=True, na=False)
+    has_marker = extracted.str.count(PAGE_IMAGE_MARKER_RE) > 0
     extracted = extracted.str.replace(PAGE_IMAGE_MARKER_RE, "", regex=True)
     extracted = extracted.str.replace(r"[ \t]+\n", "\n", regex=True).str.strip()
 

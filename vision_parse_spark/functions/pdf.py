@@ -1960,26 +1960,24 @@ _VECTOR_PAINT_RE = re.compile(
 
 
 def extract_pdf_text_series(texts: pd.Series, page_sep: str = "\n\n",
-                            with_vector_flag: bool = False,
                             include_annotations: bool = True,
-                            with_encrypted_flag: bool = False,
                             ) -> tuple[pd.Series, ...]:
     """Batch wrapper for %PDF- payloads stored as latin-1 strings.
 
-    Returns (extracted_text, parse_ok) — plus a has_vector_ink bool
-    series when ``with_vector_flag`` (computed from the same parse, so
-    the classifier's P3 gate costs no extra decode).  Rows that fail
-    structural parsing fall back to the header-strip treatment (legacy
-    pdf_text payloads that are really text blobs with a %PDF- first
-    line).  ``include_annotations`` appends /AP /N appearance text
-    (filled form fields) after each page and lets annotation ink trip
-    the vector flag (reference parity: parser.py:25, 118-120)."""
+    Returns (extracted_text, parse_ok, has_vector_ink, encrypted)
+    series.  The vector-ink flag comes from the same parse, so the
+    classifier's P3 gate costs no extra decode; ``encrypted`` marks
+    files locked with a real password.  Rows that fail structural
+    parsing fall back to the header-strip treatment (legacy pdf_text
+    payloads that are really text blobs with a %PDF- first line).
+    ``include_annotations`` appends /AP /N appearance text (filled
+    form fields) after each page and lets annotation ink trip the
+    vector flag (reference parity: parser.py:25, 118-120)."""
     out = []
     ok = []
     vec = []
     enc = []
     for s in texts.fillna(""):
-        enc.append(False)
         try:
             data = s.encode("latin-1", errors="replace")
             objs, order = _parse(data)
@@ -1989,9 +1987,9 @@ def extract_pdf_text_series(texts: pd.Series, page_sep: str = "\n\n",
                 content = _page_content(objs, p)  # decoded ONCE per page
                 page_texts.append(_page_text_with_annots(
                     objs, p, include_annotations, content=content))
-                if with_vector_flag and not has_ink:
+                if not has_ink:
                     has_ink = _VECTOR_PAINT_RE.search(content) is not None
-                if with_vector_flag and not has_ink:
+                if not has_ink:
                     # depth-1 Form XObjects can carry the figure's ink
                     res = _resources_dict(objs, p)
                     for num in _named_refs(res, b"XObject").values():
@@ -2006,7 +2004,7 @@ def extract_pdf_text_series(texts: pd.Series, page_sep: str = "\n\n",
                                 break
                         except (zlib.error, ValueError):
                             continue
-                if with_vector_flag and not has_ink and include_annotations:
+                if not has_ink and include_annotations:
                     for num in _page_annots(objs, p):
                         ap = _annot_appearance(objs, num)
                         if ap is not None and \
@@ -2015,29 +2013,25 @@ def extract_pdf_text_series(texts: pd.Series, page_sep: str = "\n\n",
                             break
             out.append(page_sep.join(page_texts))
             ok.append(True)
-            if with_vector_flag:
-                vec.append(has_ink)
+            vec.append(has_ink)
+            enc.append(False)
         except PdfEncryptedError:
             # locked with a REAL password: emit nothing rather than
             # the header-strip garbage a ciphertext blob would yield;
             # the flag lets the pipeline set status='encrypted'
             out.append("")
             ok.append(False)
-            enc[-1] = True
-            if with_vector_flag:
-                vec.append(False)
+            vec.append(False)
+            enc.append(True)
         except (PdfParseError, zlib.error, ValueError):
             out.append(re.sub(r"^%PDF-[^\n]*\n?", "", s))
             ok.append(False)
-            if with_vector_flag:
-                vec.append(False)
-    res = (pd.Series(out, index=texts.index, dtype="object"),
-           pd.Series(ok, index=texts.index, dtype=bool))
-    if with_vector_flag:
-        res = res + (pd.Series(vec, index=texts.index, dtype=bool),)
-    if with_encrypted_flag:
-        res = res + (pd.Series(enc, index=texts.index, dtype=bool),)
-    return res
+            vec.append(False)
+            enc.append(False)
+    return (pd.Series(out, index=texts.index, dtype="object"),
+            pd.Series(ok, index=texts.index, dtype=bool),
+            pd.Series(vec, index=texts.index, dtype=bool),
+            pd.Series(enc, index=texts.index, dtype=bool))
 
 
 # ---------------------------------------------------------------------------

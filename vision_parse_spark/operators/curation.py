@@ -48,6 +48,44 @@ def quality_e4_col(text_col: str = "text") -> Column:
     return F.floor((len_ok * 0.5 + stop_ok * 0.5) * 10000).cast("long")
 
 
+def _gated(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    min_quality_e4: int,
+    max_dup_line_frac: float,
+    max_top_bigram_frac: float,
+) -> DataFrame:
+    """``(id_col, text_col)`` of the documents that pass the quality
+    and repetition gates, as two semi-joins against narrow aggregates,
+    materialized ONCE: the stages after the gates re-read it (the LSH
+    dedup three times: signature pass + both sides of the verify join;
+    decontamination twice: gram stream + the anti-join back), and
+    without the barrier each read would recompute the repetition
+    explode-agg and quality regexes (measured 1.9x slower at sf0.1).
+    localCheckpoint (not persist) so the context cleaner reclaims it
+    on GC."""
+    n_tok = F.size(F.regexp_extract_all(text_col,
+                                        F.lit("[A-Za-z0-9]+"), 0))
+    qual = (
+        df.filter(n_tok > 0)
+        .filter(quality_e4_col(text_col) >= min_quality_e4)
+        .select(id_col)
+    )
+    rep = (
+        repetition_stats(df, id_col, text_col)
+        .filter((F.col("dup_line_frac") <= max_dup_line_frac)
+                & (F.col("top_bigram_frac") <= max_top_bigram_frac))
+        .select(id_col)
+    )
+    gated = (
+        df.select(id_col, text_col)
+        .join(qual, id_col, "left_semi")
+        .join(rep, id_col, "left_semi")
+    )
+    return gated.localCheckpoint(eager=True)
+
+
 def curate(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -70,32 +108,8 @@ def curate(
     once, before the gates' per-row regexes; the nested repetition
     and LSH stages apply the same policy to what they read, which
     adds no second exchange over an input that is already spread."""
-    df = spread(df)
-    n_tok = F.size(F.regexp_extract_all(text_col,
-                                        F.lit("[A-Za-z0-9]+"), 0))
-    qual = (
-        df.filter(n_tok > 0)
-        .filter(quality_e4_col(text_col) >= min_quality_e4)
-        .select(id_col)
-    )
-    rep = (
-        repetition_stats(df, id_col, text_col)
-        .filter((F.col("dup_line_frac") <= max_dup_line_frac)
-                & (F.col("top_bigram_frac") <= max_top_bigram_frac))
-        .select(id_col)
-    )
-    gated = (
-        df.select(id_col, text_col)
-        .join(qual, id_col, "left_semi")
-        .join(rep, id_col, "left_semi")
-    )
-    # materialize the gated survivors ONCE: the LSH dedup reads its
-    # input three times (signature pass + both sides of the verify
-    # join) — without the barrier each read would recompute the
-    # repetition explode-agg and quality regexes (measured 1.9x slower
-    # at sf0.1).  localCheckpoint (not persist) so the context cleaner
-    # reclaims it on GC.
-    gated = gated.localCheckpoint(eager=True)
+    gated = _gated(spread(df), id_col, text_col, min_quality_e4,
+                   max_dup_line_frac, max_top_bigram_frac)
     survivors = minhash_dedup(
         gated, id_col, text_col, jaccard_threshold=jaccard_threshold)
     return scrub_pii(survivors, text_col)
@@ -160,29 +174,8 @@ def curate_full(
     from .spans import remove_frequent_spans
 
     df, embeddings = spread(df), spread(embeddings)
-    n_tok = F.size(F.regexp_extract_all(text_col,
-                                        F.lit("[A-Za-z0-9]+"), 0))
-    qual = (
-        df.filter(n_tok > 0)
-        .filter(quality_e4_col(text_col) >= min_quality_e4)
-        .select(id_col)
-    )
-    rep = (
-        repetition_stats(df, id_col, text_col)
-        .filter((F.col("dup_line_frac") <= max_dup_line_frac)
-                & (F.col("top_bigram_frac") <= max_top_bigram_frac))
-        .select(id_col)
-    )
-    gated = (
-        df.select(id_col, text_col)
-        .join(qual, id_col, "left_semi")
-        .join(rep, id_col, "left_semi")
-    )
-    # materialize the gate survivors ONCE (the curate() barrier,
-    # round-7): decontaminate reads its train side twice (gram stream
-    # + the anti-join back), so without this the quality regexes and
-    # the repetition explode-agg recompute per read
-    gated = gated.localCheckpoint(eager=True)
+    gated = _gated(df, id_col, text_col, min_quality_e4,
+                   max_dup_line_frac, max_top_bigram_frac)
     decon = decontaminate(gated, eval_df, id_col, text_col,
                           n=decon_n, min_hits=decon_min_hits)
     # one barrier: SemDeDup (k+1 scans for Lloyd), the LSH dedup

@@ -28,13 +28,12 @@ detection pipeline itself operates on any HxWx3 uint8 array.
 from __future__ import annotations
 
 import base64
-import re
 import struct
 import zlib
 
 import numpy as np
 
-MARKER_RE = re.compile(r"\[\[PAGE_IMAGE w=(\d+) h=(\d+) seed=(\d+)(?: noise=(\d+))?\]\]")
+from ..functions.classify import PAGE_IMAGE_MARKER_RE
 
 # ---------------------------------------------------------------------------
 # deterministic synthetic page rendering (stand-in for parser.py:116-121)
@@ -271,19 +270,22 @@ def encode_png(rgb: np.ndarray) -> bytes:
 # ---------------------------------------------------------------------------
 
 
+# P4 size bounds (utils.py:67, 96-104): a region is at least
+# MIN_REGION_DIMS (w, h) and at most PAGE_FRAC_MAX of the page per side
+MIN_REGION_DIMS = (100, 100)
+PAGE_FRAC_MAX = 0.95
+# P5 validity predicate (utils.py:52-57)
+REGION_STD_MIN = 25.0
+REGION_MEAN_LO, REGION_MEAN_HI = 20.0, 235.0
+REGION_AREA_RATIO_MIN = 0.4
+REGION_LAPLACIAN_VAR_MAX = 500.0
+
+
 def extract_images(
     page_image: np.ndarray,
     image_mode: str,
     page_number: int,
-    min_dimensions: tuple[int, int] = (100, 100),
     *,
-    std_min: float = 25.0,
-    mean_lo: float = 20.0,
-    mean_hi: float = 235.0,
-    area_ratio_min: float = 0.4,
-    laplacian_var_max: float = 500.0,
-    page_frac_max: float = 0.95,
-    detection_scale: float = 1.0,
     start_idx: int = 1,
     color_space: str = "RGB",
     alpha_plane: np.ndarray | None = None,
@@ -303,30 +305,19 @@ def extract_images(
             f"Unsupported image format with {page_image.shape[2]} channels"
         )
 
-    min_w, min_h = min_dimensions
+    min_w, min_h = MIN_REGION_DIMS
     img_h, img_w = page_image.shape[:2]
 
-    # detection_scale=1/n runs the thresholding/labeling passes on an
-    # n x-decimated page (n^2 fewer pixels — the CV chain is the hot
-    # path); boxes are mapped back and P4/P5 still measured on the
-    # FULL-resolution crop.  Default 1.0 = reference-faithful.
-    if detection_scale in (0.5, 0.25):
-        ds = int(round(1.0 / detection_scale))
-        det_img = page_image[::ds, ::ds]
-    else:
-        det_img, ds = page_image, 1
-
-    processed = prepare_for_detection(det_img)
+    processed = prepare_for_detection(page_image)
     comp_labels, n = connected_components(processed)
     if n == 0:
         return []
 
-    det_h, det_w = det_img.shape[:2]
     ys, xs = np.nonzero(comp_labels)
     lab = comp_labels[ys, xs]
-    x0 = np.full(n + 1, det_w, dtype=np.int64)
+    x0 = np.full(n + 1, img_w, dtype=np.int64)
     x1 = np.zeros(n + 1, dtype=np.int64)
-    y0 = np.full(n + 1, det_h, dtype=np.int64)
+    y0 = np.full(n + 1, img_h, dtype=np.int64)
     y1 = np.zeros(n + 1, dtype=np.int64)
     np.minimum.at(x0, lab, xs)
     np.maximum.at(x1, lab, xs)
@@ -339,15 +330,15 @@ def extract_images(
     # horizontal spans (exact for convex/ring-shaped components).
     # Direct scatter on a dense (n+1, H) grid beats sort-based
     # np.unique for the typical (few components x page height) sizes.
-    row_key = lab.astype(np.int64) * np.int64(det_h) + ys
-    grid = (n + 1) * det_h
-    row_minx = np.full(grid, det_w, dtype=np.int64)
+    row_key = lab.astype(np.int64) * np.int64(img_h) + ys
+    grid = (n + 1) * img_h
+    row_minx = np.full(grid, img_w, dtype=np.int64)
     row_maxx = np.full(grid, -1, dtype=np.int64)
     np.minimum.at(row_minx, row_key, xs)
     np.maximum.at(row_maxx, row_key, xs)
     occupied = row_maxx >= 0
     spans = np.where(occupied, row_maxx - row_minx + 1, 0).astype(np.float64)
-    areas = spans.reshape(n + 1, det_h).sum(axis=1)  # index = comp id
+    areas = spans.reshape(n + 1, img_h).sum(axis=1)  # index = comp id
 
     order = np.argsort(-areas[1:], kind="stable") + 1  # area-desc (T11 sort)
 
@@ -355,21 +346,21 @@ def extract_images(
     # continue the numbering so names never collide
     out: list[dict] = []
     for comp in order:
-        # map detection-space boxes back to full resolution
-        cx, cy = int(x0[comp]) * ds, int(y0[comp]) * ds
-        cw = int(x1[comp] - x0[comp] + 1) * ds
-        ch = int(y1[comp] - y0[comp] + 1) * ds
+        cx, cy = int(x0[comp]), int(y0[comp])
+        cw = int(x1[comp] - x0[comp] + 1)
+        ch = int(y1[comp] - y0[comp] + 1)
         # P4 size filter (utils.py:96-104)
-        if cw < min_w or ch < min_h or cw > img_w * page_frac_max or ch > img_h * page_frac_max:
+        if cw < min_w or ch < min_h or cw > img_w * PAGE_FRAC_MAX \
+                or ch > img_h * PAGE_FRAC_MAX:
             continue
         region = page_image[cy : cy + ch, cx : cx + cw]
-        # P5 validity predicate (utils.py:52-57) on the FULL-res crop
-        area_ratio = float(areas[comp]) * ds * ds / float(cw * ch)
+        # P5 validity predicate (utils.py:52-57)
+        area_ratio = float(areas[comp]) / float(cw * ch)
         if not (
-            float(np.std(region)) > std_min
-            and mean_lo < float(np.mean(region)) < mean_hi
-            and area_ratio > area_ratio_min
-            and _laplacian_var(bgr_to_gray(region)) < laplacian_var_max
+            float(np.std(region)) > REGION_STD_MIN
+            and REGION_MEAN_LO < float(np.mean(region)) < REGION_MEAN_HI
+            and area_ratio > REGION_AREA_RATIO_MIN
+            and _laplacian_var(bgr_to_gray(region)) < REGION_LAPLACIAN_VAR_MAX
         ):
             continue
         image_url = f"image_{page_number + 1}_{idx}.png"
@@ -432,8 +423,7 @@ def extract_images_from_marker_text(
     text: str, image_mode: str, page_number: int,
     vector_figures: bool = True, include_annotations: bool = True,
     raster_dpi: int = 72, preserve_transparency: bool = False,
-    skipped_out: list | None = None,
-    **kwargs
+    skipped_out: list | None = None, color_space: str = "RGB",
 ) -> list[dict]:
     """Image regions for one turn payload.
 
@@ -482,8 +472,7 @@ def extract_images_from_marker_text(
             found = extract_images(
                 page, image_mode, page_idx,
                 start_idx=page_region_count.get(page_idx, 0) + 1,
-                alpha_plane=alpha,
-                **kwargs)
+                color_space=color_space, alpha_plane=alpha)
             page_region_count[page_idx] = (
                 page_region_count.get(page_idx, 0) + len(found))
             results.extend(found)
@@ -516,13 +505,14 @@ def extract_images_from_marker_text(
                 extract_images(
                     page, image_mode, page_idx,
                     start_idx=page_region_count.get(page_idx, 0) + 1,
-                    **kwargs)
+                    color_space=color_space)
             )
-    for m in MARKER_RE.finditer(text or ""):
+    for m in PAGE_IMAGE_MARKER_RE.finditer(text or ""):
         w, h, seed = int(m.group(1)), int(m.group(2)), int(m.group(3))
         noise = int(m.group(4) or 0)
         page = render_page(w, h, seed, noise)
         results.extend(
-            extract_images(page, image_mode, page_number, **kwargs)
+            extract_images(page, image_mode, page_number,
+                           color_space=color_space)
         )
     return results

@@ -51,6 +51,10 @@ from .images import extract_images_from_marker_text
 
 _INPUT_COLS = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
 
+# P2 fast-path threshold: classifier confidence above this skips the
+# formatter (llm.py:338)
+FAST_PATH_CONFIDENCE = 0.6
+
 
 def _fallback_analysis(texts: pd.Series) -> pd.DataFrame:
     """C4 fallback defaults, mirroring llm.py:371-377: extracted_text
@@ -131,7 +135,7 @@ def extract_pandas(pdf: pd.DataFrame, cfg: ExtractConfig) -> pd.DataFrame:
 
     # ---- P2 fast-path mask (llm.py:336-346) ----------------------
     fast = (
-        (conf > cfg.fast_path_confidence)
+        (conf > FAST_PATH_CONFIDENCE)
         & ~tables
         & ~latex
         & (~images_det | (cfg.image_mode is None))
@@ -186,14 +190,6 @@ def extract_pandas(pdf: pd.DataFrame, cfg: ExtractConfig) -> pd.DataFrame:
                     cfg.image_mode,
                     int(turn_idx_vals[pos]),
                     skipped_out=skipped,
-                    min_dimensions=cfg.min_image_dims,
-                    std_min=cfg.region_std_min,
-                    mean_lo=cfg.region_mean_lo,
-                    mean_hi=cfg.region_mean_hi,
-                    area_ratio_min=cfg.region_area_ratio_min,
-                    laplacian_var_max=cfg.region_laplacian_var_max,
-                    page_frac_max=cfg.region_page_frac_max,
-                    detection_scale=cfg.detection_scale,
                     vector_figures=cfg.vector_figures,
                     include_annotations=cfg.include_annotations,
                     raster_dpi=cfg.raster_dpi,
@@ -291,7 +287,7 @@ def extract(
     cols = [c for c in _INPUT_COLS if c in df.columns]
     pruned = df.select(*cols)  # column pruning before the Python stage
     if salt_partitions:
-        pruned = salted_repartition(pruned, salt_partitions, cfg.salt_buckets)
+        pruned = salted_repartition(pruned, salt_partitions)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

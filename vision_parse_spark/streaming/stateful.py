@@ -4,17 +4,18 @@
 The reference's per-document ordered collect (``parser.py:183-190``)
 lifted to an unbounded stream: turns arrive out of order across
 micro-batches; per-``conv_id`` state accumulates (turn_idx, markdown)
-pairs and emits one assembled document row when the conversation goes
-idle past a processing-time timeout.  This is the class of operator
-SQL cannot express (timeout-driven emission + evolving state), hence
-no DuckDB oracle — pytest asserts assembly equality against the batch
-path instead.
+pairs and emits one assembled document row once the event-time
+watermark passes the conversation's last turn plus an idle gap.  This
+is the class of operator SQL cannot express (timeout-driven emission
++ evolving state), hence no DuckDB oracle — pytest asserts assembly
+equality against the batch path instead.
 
 State design at 10^12-turn scale: state is keyed by conv_id and holds
 only (idx, text) pairs for OPEN conversations; timeout eviction bounds
-the state store.  GroupStateTimeout.ProcessingTimeTimeout keeps the
-operator deterministic under replay (checkpointed offsets + versioned
-state store give exactly-once emission).
+the state store.  Emission is a function of the data alone
+(``GroupStateTimeout.EventTimeTimeout``), so checkpointed offsets plus
+the versioned state store give the same exactly-once emissions on
+every replay.
 """
 
 from __future__ import annotations
@@ -37,72 +38,8 @@ ASSEMBLED_SCHEMA = StructType(
 
 # state: accumulated turn indices and texts (parallel ARRAY fields —
 # delimiter-joined strings would desynchronize on payloads that happen
-# to contain the delimiter byte; arrays are content-safe)
-STATE_SCHEMA = StructType(
-    [
-        StructField("idxs", ArrayType(IntegerType()), False),
-        StructField("texts", ArrayType(StringType()), False),
-    ]
-)
-
-
-def assemble_conversations(
-    key: Tuple[str],
-    pdfs: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    """applyInPandasWithState function: accumulate turns per conv_id,
-    emit the ordered assembled document on idle timeout."""
-    (conv_id,) = key
-    if state.hasTimedOut:
-        st_idxs, st_texts = state.get
-        ordered = [t for _, t in sorted(zip(list(st_idxs), list(st_texts)))]
-        state.remove()
-        yield pd.DataFrame(
-            [{"conv_id": conv_id, "n_turns": len(ordered),
-              "document": "\n".join(ordered)}]
-        )
-        return
-
-    idxs: list[int] = []
-    texts: list[str] = []
-    if state.exists:
-        st_idxs, st_texts = state.get
-        idxs = [int(i) for i in st_idxs]
-        texts = [str(t) for t in st_texts]
-    for pdf in pdfs:
-        idxs.extend(int(i) for i in pdf["turn_idx"])
-        texts.extend(str(t) for t in pdf["markdown"])
-    state.update((idxs, texts))
-    state.setTimeoutDuration(2000)  # idle ms before emission
-    yield pd.DataFrame(
-        {"conv_id": pd.Series(dtype="object"),
-         "n_turns": pd.Series(dtype="int32"),
-         "document": pd.Series(dtype="object")}
-    )
-
-
-def assembled_stream(turns_stream):
-    """Wire the stateful assembler onto a streaming DataFrame with
-    (conv_id, turn_idx, markdown) columns."""
-    return (
-        turns_stream.groupBy("conv_id")
-        .applyInPandasWithState(
-            assemble_conversations,
-            outputStructType=ASSEMBLED_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# event-time variant — emission is DATA-deterministic under replay
-# ---------------------------------------------------------------------------
-
-# v2 state carries the max event time seen (epoch ms) so late rows
-# never regress the timeout
+# to contain the delimiter byte; arrays are content-safe) plus the max
+# event time seen (epoch ms), so late rows never regress the timeout
 STATE_SCHEMA_EVENT = StructType(
     [
         StructField("idxs", ArrayType(IntegerType()), False),
@@ -116,9 +53,7 @@ def make_event_assembler(gap_ms: int = 5000, session_tz: str = "UTC"):
     """Event-time conversation assembler: a conversation emits when
     the WATERMARK passes (its max event time + ``gap_ms``) — a
     function of the data alone, so two replays of the same input
-    produce identical emissions regardless of scheduling (the
-    ProcessingTimeTimeout variant's emission timing is wall-clock
-    dependent; round-2 robustness nit).
+    produce identical emissions regardless of scheduling.
 
     ``session_tz`` must be the session's ``spark.sql.session.timeZone``
     (``assembled_stream_event`` threads it through): Arrow hands pandas
@@ -180,8 +115,7 @@ def make_event_assembler(gap_ms: int = 5000, session_tz: str = "UTC"):
     return assemble
 
 
-def assembled_stream_event(turns_stream, gap: str = "5 seconds",
-                           watermark: str = "2 seconds",
+def assembled_stream_event(turns_stream, watermark: str = "2 seconds",
                            gap_ms: int = 5000):
     """Event-time assembly over (conv_id, turn_idx, markdown, ts):
     watermarked input + EventTimeTimeout, bounded state, replay-
