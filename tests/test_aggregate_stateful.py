@@ -31,10 +31,12 @@ def test_salted_agg_two_exchanges(spark):
 
 
 def test_stateful_conversation_assembly(spark, tmp_path):
-    """Streamed assembly equals the batch path's ordered collect.  A
-    sentinel turn one day later, in a second file (so a later
-    micro-batch), moves the watermark past every synth conversation;
-    the sentinel's own conversation stays open and never emits."""
+    """Streamed assembly equals the batch path's ordered collect for
+    every conversation held in one state store: synth turns 0..126
+    are conv-000000 through conv-000007, each complete.  A sentinel
+    turn one day later, in a second file (so a later micro-batch),
+    moves the watermark past every synth conversation; the
+    sentinel's own conversation stays open and never emits."""
     import datetime as dt
 
     from vision_parse_spark import ExtractConfig, extract
@@ -45,8 +47,9 @@ def test_stateful_conversation_assembly(spark, tmp_path):
 
     in_dir = str(tmp_path / "in")
     os.makedirs(in_dir)
-    n = 96
+    n = 127  # CONV_LEN_PATTERN: 96 + 3 + 5 + 2 + 8 + 4 + 3 + 6 turns
     turns_pdf = synth_transcripts_pdf(n)
+    assert turns_pdf["conv_id"].nunique() == 8
     spark.createDataFrame(turns_pdf).coalesce(1) \
         .write.mode("append").parquet(in_dir)
     late = turns_pdf["ts"].max().to_pydatetime() + dt.timedelta(days=1)
@@ -84,6 +87,7 @@ def test_stateful_conversation_assembly(spark, tmp_path):
     )
     assert "sentinel" not in rows
     assert set(rows) == {e.conv_id for e in expected}
+    assert len(rows) == 8
     for e in expected:
         got = rows[e.conv_id]
         assert got.n_turns == e.n_turns

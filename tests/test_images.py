@@ -8,6 +8,7 @@ import base64
 import zlib
 
 import numpy as np
+import pytest
 
 from vision_parse_spark.operators.images import (
     connected_components,
@@ -18,14 +19,25 @@ from vision_parse_spark.operators.images import (
 )
 
 
+def _comp_at(runs, y, x):
+    """Component id of the run covering pixel (y, x); 0 if none does."""
+    row, x_start, x_end, comp, _n = runs
+    hit = (row == y) & (x_start <= x) & (x < x_end)
+    assert hit.sum() <= 1
+    return int(comp[hit][0]) if hit.any() else 0
+
+
 def test_connected_components_basic():
     b = np.zeros((20, 20), dtype=np.uint8)
     b[2:6, 2:6] = 255
     b[10:15, 10:18] = 255
-    labels, n = connected_components(b)
-    assert n == 2
-    assert labels[3, 3] != labels[12, 12]
-    assert labels[0, 0] == 0
+    runs = connected_components(b)
+    assert runs[4] == 2
+    assert _comp_at(runs, 3, 3) == 1  # numbered by first run
+    assert _comp_at(runs, 12, 12) == 2
+    assert _comp_at(runs, 0, 0) == 0  # background is in no run
+    row, x_start, x_end, _comp, _n = runs
+    assert int((x_end - x_start).sum()) == int((b > 0).sum())
 
 
 def test_connected_components_ring_merges():
@@ -34,8 +46,47 @@ def test_connected_components_ring_merges():
     b[5:25, 23:25] = 255  # right bar
     b[5:7, 5:25] = 255   # top bar
     b[23:25, 5:25] = 255  # bottom bar
-    labels, n = connected_components(b)
-    assert n == 1
+    runs = connected_components(b)
+    assert runs[4] == 1
+    assert set(runs[3].tolist()) == {1}
+    assert _comp_at(runs, 15, 15) == 0  # the hole is background
+
+
+def _flood_fill_labels(b):
+    """Reference 4-connected labelling: components numbered in raster
+    order of their first pixel, 0 = background."""
+    h, w = b.shape
+    lab = np.zeros((h, w), dtype=np.int64)
+    n = 0
+    for y in range(h):
+        for x in range(w):
+            if b[y, x] and not lab[y, x]:
+                n += 1
+                lab[y, x] = n
+                stack = [(y, x)]
+                while stack:
+                    cy, cx = stack.pop()
+                    for ny, nx in ((cy - 1, cx), (cy + 1, cx),
+                                   (cy, cx - 1), (cy, cx + 1)):
+                        if 0 <= ny < h and 0 <= nx < w and b[ny, nx] \
+                                and not lab[ny, nx]:
+                            lab[ny, nx] = n
+                            stack.append((ny, nx))
+    return lab, n
+
+
+@pytest.mark.parametrize("seed", range(12))
+def test_connected_components_matches_flood_fill(seed):
+    rng = np.random.default_rng(seed)
+    h, w = rng.integers(1, 40, size=2)
+    b = rng.random((h, w)) < rng.uniform(0.2, 0.8)
+    row, x_start, x_end, comp, n = connected_components(b * np.uint8(255))
+    got = np.zeros((h, w), dtype=np.int64)
+    for r, s, e, k in zip(row, x_start, x_end, comp):
+        got[r, s:e] = k
+    want, want_n = _flood_fill_labels(b)
+    assert n == want_n
+    assert np.array_equal(got, want)
 
 
 def test_region_detected_on_synthetic_page():

@@ -6,9 +6,9 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from vision_parse_spark.functions.jpeg import decode_jpeg
 from vision_parse_spark.operators.images import encode_png, render_page
 from vision_parse_spark.operators.multimodal import (
-    decode_jpeg,
     decode_png,
     image_features,
     resize_nearest,

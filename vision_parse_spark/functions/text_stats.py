@@ -33,10 +33,11 @@ def ws_tokens(text_col: str):
     return F.expr(ws_tokens_sql(text_col))
 
 
-# Java's Pattern \s (what Spark's split(.., '\\s+') matches) is the
-# ASCII class [ \t\n\x0b\f\r]; Python's re \s is unicode-wide, so the
-# Arrow twins spell the class out for engine parity (the SimHash
-# kernel precedent — dedup._TOKEN_SPLIT_RE aliases this).
+# Java's Pattern \s (what Spark's split(.., '\\s+') matches) and RE2's
+# \s (DuckDB string_split_regex) are the ASCII class [ \t\n\x0b\f\r];
+# Python's re \s is unicode-wide, so the Arrow kernels spell the class
+# out for engine parity: SimHash, winnowing, repetition and BPE
+# tokenize through java_ws_tokens, chunking splits on JAVA_WS_RE.
 import re as _re  # noqa: E402
 
 JAVA_WS_RE = _re.compile(r"[ \t\n\x0b\f\r]+")

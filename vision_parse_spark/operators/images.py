@@ -10,8 +10,9 @@ ordering contract:
   mean, block 11, C=2, BINARY_INV) -> morphological close (3x3).
 * T10 channel normalization (``utils.py:76-83``): BGRA->BGR.
 * T11 contour detect + **area-descending sort** (``utils.py:86-89``)
-  — here connected components via vectorized run-based union-find;
-  component pixel area stands in for ``cv2.contourArea``.
+  — here 4-connected components of horizontal pixel runs, labelled by
+  the shared min-label kernel (``functions/components.py``); the
+  filled per-row span area stands in for ``cv2.contourArea``.
 * P4 size filter (``utils.py:96-104``): w/h >= 100 and <= 0.95*page.
 * P5 validity predicate (``utils.py:41-59``): std>25,
   20<mean<235, area_ratio>0.4, laplacian variance<500.
@@ -34,6 +35,7 @@ import zlib
 import numpy as np
 
 from ..functions.classify import PAGE_IMAGE_MARKER_RE
+from ..functions.components import min_labels
 
 # ---------------------------------------------------------------------------
 # deterministic synthetic page rendering (stand-in for parser.py:116-121)
@@ -131,91 +133,55 @@ def prepare_for_detection(img: np.ndarray) -> np.ndarray:
     local_mean = _sep_convolve(smooth, _gaussian_kernel1d(11))
     binary = (smooth <= local_mean - 2.0).astype(np.uint8)  # INV, C=2
     # close = dilate then erode with 3x3 ones
-    return _erode3(_dilate3(binary)) * np.uint8(255)
+    return _morph3(_morph3(binary, np.maximum), np.minimum) \
+        * np.uint8(255)
 
 
-def _dilate3(b: np.ndarray) -> np.ndarray:
-    """3x3 max filter via shifted-view maxima (separable: rows then
-    cols) — ~40x faster than a sliding_window_view reduction."""
+def _morph3(b: np.ndarray, op: np.ufunc) -> np.ndarray:
+    """3x3 rank filter with edge-replicated borders: ``np.maximum``
+    dilates, ``np.minimum`` erodes.  Shifted-view reductions, rows then
+    cols (separable) — ~40x faster than a sliding_window_view
+    reduction."""
     h, w = b.shape
     p = np.pad(b, 1, mode="edge")
-    rows = np.maximum(np.maximum(p[0 : h, 1 : w + 1], p[1 : h + 1, 1 : w + 1]),
-                      p[2 : h + 2, 1 : w + 1])
+    rows = op(op(p[0:h, 1:w + 1], p[1:h + 1, 1:w + 1]), p[2:h + 2, 1:w + 1])
     p2 = np.pad(rows, ((0, 0), (1, 1)), mode="edge")
-    return np.maximum(np.maximum(p2[:, 0:w], p2[:, 1 : w + 1]), p2[:, 2 : w + 2])
-
-
-def _erode3(b: np.ndarray) -> np.ndarray:
-    h, w = b.shape
-    p = np.pad(b, 1, mode="edge")
-    rows = np.minimum(np.minimum(p[0 : h, 1 : w + 1], p[1 : h + 1, 1 : w + 1]),
-                      p[2 : h + 2, 1 : w + 1])
-    p2 = np.pad(rows, ((0, 0), (1, 1)), mode="edge")
-    return np.minimum(np.minimum(p2[:, 0:w], p2[:, 1 : w + 1]), p2[:, 2 : w + 2])
+    return op(op(p2[:, 0:w], p2[:, 1:w + 1]), p2[:, 2:w + 2])
 
 
 # ---------------------------------------------------------------------------
-# T11 — connected components via run-based union-find (contour analog)
+# T11 — connected components of pixel runs (contour analog)
 # ---------------------------------------------------------------------------
 
 
-def connected_components(binary: np.ndarray) -> tuple[np.ndarray, int]:
-    """Label 4-connected components of ``binary > 0``.
+def connected_components(
+    binary: np.ndarray,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray, int]:
+    """4-connected components of ``binary > 0`` as a run table.
 
-    Vectorized run extraction per row; union-find merges runs that
-    overlap vertically.  Returns (label image int32 with 0=background,
-    n_components)."""
-    b = binary > 0
-    h, w = b.shape
-    padded = np.zeros((h, w + 1), dtype=bool)
-    padded[:, :w] = b
-    flat = padded.ravel()
-    starts = flat.copy()
-    starts[1:] &= ~flat[:-1]
-    run_id = np.cumsum(starts, dtype=np.int32)  # 1-based ids on fg
-    labels = np.where(flat, run_id, np.int32(0)).reshape(h, w + 1)[:, :w]
-
-    n_runs = int(run_id[-1])
-    if n_runs == 0:
-        return np.zeros((h, w), dtype=np.int32), 0
-
-    parent = np.arange(n_runs + 1)
-
-    def find(x: int) -> int:
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    overlap = b[1:] & b[:-1]
-    ys, xs = np.nonzero(overlap)
-    # dedupe on a single int64 key: one flat sort instead of the
-    # lexicographic 2-column row sort (the dominant cost on dense
-    # thresholded pages)
-    keys = labels[ys + 1, xs].astype(np.int64) * np.int64(n_runs + 1) \
-        + labels[ys, xs]
-    uniq_keys = np.unique(keys)
-    pairs = np.stack(
-        [uniq_keys // (n_runs + 1), uniq_keys % (n_runs + 1)], axis=1
-    )
-    for a, c in pairs:
-        ra, rc = find(int(a)), find(int(c))
-        if ra != rc:
-            parent[max(ra, rc)] = min(ra, rc)
-
-    # resolve all run roots at once (vectorized pointer-jumping: the
-    # union loop above only touches overlap pairs, so full resolution
-    # here is a handful of O(n) passes instead of n find() calls)
-    roots = parent
-    while True:
-        hopped = roots[roots]
-        if np.array_equal(hopped, roots):
-            break
-        roots = hopped
-    uniq, compact = np.unique(roots[1:], return_inverse=True)
-    lut = np.zeros(n_runs + 1, dtype=np.int32)
-    lut[1:] = compact + 1
-    return lut[labels], len(uniq)
+    Returns ``(row, x_start, x_end, comp, n)``: one entry per
+    horizontal foreground run ``binary[row, x_start:x_end]`` in raster
+    order, its component id in ``1..n`` (numbered in the order of each
+    component's first run), and the component count.  Runs in adjacent
+    rows join when their column ranges overlap."""
+    h, w = binary.shape
+    padded = np.zeros((h, w + 2), dtype=bool)
+    padded[:, 1:-1] = binary > 0
+    # row-wise boundaries alternate: each run's start, then its end
+    row, x = np.nonzero(np.diff(padded, axis=1))
+    row, x_start, x_end = row[::2], x[::2], x[1::2]
+    # the runs of row r+1 that overlap run i form the index range
+    # [lo, hi): ends past x_start[i] and starts before x_end[i], found
+    # by binary search over the raster-ordered (row, x) keys
+    below = (row + 1) * (w + 1)
+    lo = np.searchsorted(row * (w + 1) + x_end, below + x_start, "right")
+    hi = np.searchsorted(row * (w + 1) + x_start, below + x_end, "left")
+    count = np.maximum(hi - lo, 0)
+    a = np.repeat(np.arange(len(row)), count)
+    c = np.arange(len(a)) - np.repeat(np.cumsum(count) - count - lo, count)
+    root = min_labels(a, c, len(row))
+    is_root = root == np.arange(len(row))
+    return row, x_start, x_end, np.cumsum(is_root)[root], int(is_root.sum())
 
 
 def _laplacian_var(gray: np.ndarray) -> float:
@@ -309,53 +275,47 @@ def extract_images(
     img_h, img_w = page_image.shape[:2]
 
     processed = prepare_for_detection(page_image)
-    comp_labels, n = connected_components(processed)
+    row, x_start, x_end, comp, n = connected_components(processed)
     if n == 0:
         return []
 
-    ys, xs = np.nonzero(comp_labels)
-    lab = comp_labels[ys, xs]
-    x0 = np.full(n + 1, img_w, dtype=np.int64)
-    x1 = np.zeros(n + 1, dtype=np.int64)
-    y0 = np.full(n + 1, img_h, dtype=np.int64)
-    y1 = np.zeros(n + 1, dtype=np.int64)
-    np.minimum.at(x0, lab, xs)
-    np.maximum.at(x1, lab, xs)
-    np.minimum.at(y0, lab, ys)
-    np.maximum.at(y1, lab, ys)
-
+    # one group of runs per (component, row), groups in component then
+    # row order; every component 1..n owns at least one group
+    key = comp * img_h + row
+    by = np.argsort(key, kind="stable")
+    key = key[by]
+    grp = np.flatnonzero(np.r_[True, key[1:] != key[:-1]])
+    left = np.minimum.reduceat(x_start[by], grp)
+    right = np.maximum.reduceat(x_end[by], grp)
+    g_comp, g_row = np.divmod(key[grp], img_h)
+    first = np.flatnonzero(np.r_[True, g_comp[1:] != g_comp[:-1]])
+    x0 = np.minimum.reduceat(left, first)
+    x1 = np.maximum.reduceat(right, first)  # exclusive
+    y0 = g_row[first]
+    y1 = g_row[np.r_[first[1:], len(g_row)] - 1]
     # "filled" area — the analog of cv2.contourArea on a RETR_EXTERNAL
     # contour (utils.py:48): the area ENCLOSED by the outer boundary,
     # not the component's pixel count.  Computed as the sum of per-row
-    # horizontal spans (exact for convex/ring-shaped components).
-    # Direct scatter on a dense (n+1, H) grid beats sort-based
-    # np.unique for the typical (few components x page height) sizes.
-    row_key = lab.astype(np.int64) * np.int64(img_h) + ys
-    grid = (n + 1) * img_h
-    row_minx = np.full(grid, img_w, dtype=np.int64)
-    row_maxx = np.full(grid, -1, dtype=np.int64)
-    np.minimum.at(row_minx, row_key, xs)
-    np.maximum.at(row_maxx, row_key, xs)
-    occupied = row_maxx >= 0
-    spans = np.where(occupied, row_maxx - row_minx + 1, 0).astype(np.float64)
-    areas = spans.reshape(n + 1, img_h).sum(axis=1)  # index = comp id
+    # spans from the leftmost run start to the rightmost run end
+    # (exact for convex/ring-shaped components).
+    areas = np.add.reduceat(right - left, first)
 
-    order = np.argsort(-areas[1:], kind="stable") + 1  # area-desc (T11 sort)
+    order = np.argsort(-areas, kind="stable")  # area-desc (T11 sort)
 
     idx = start_idx  # callers running several channels over ONE page
     # continue the numbering so names never collide
     out: list[dict] = []
-    for comp in order:
-        cx, cy = int(x0[comp]), int(y0[comp])
-        cw = int(x1[comp] - x0[comp] + 1)
-        ch = int(y1[comp] - y0[comp] + 1)
+    for k in order:
+        cx, cy = int(x0[k]), int(y0[k])
+        cw = int(x1[k] - x0[k])
+        ch = int(y1[k] - y0[k] + 1)
         # P4 size filter (utils.py:96-104)
         if cw < min_w or ch < min_h or cw > img_w * PAGE_FRAC_MAX \
                 or ch > img_h * PAGE_FRAC_MAX:
             continue
         region = page_image[cy : cy + ch, cx : cx + cw]
         # P5 validity predicate (utils.py:52-57)
-        area_ratio = float(areas[comp]) / float(cw * ch)
+        area_ratio = float(areas[k]) / float(cw * ch)
         if not (
             float(np.std(region)) > REGION_STD_MIN
             and REGION_MEAN_LO < float(np.mean(region)) < REGION_MEAN_HI

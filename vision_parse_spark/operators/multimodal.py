@@ -40,6 +40,7 @@ from pyspark.sql.types import (
     StructField, StructType,
 )
 
+from ..functions.jpeg import decode_jpeg
 from .images import encode_png, render_page
 
 MEDIA_SCHEMA = StructType(
@@ -149,16 +150,6 @@ def decode_png(png: bytes) -> np.ndarray:
         prev = img[i]
     out = img.reshape(h, w, ch)
     return out[:, :, 0] if ch == 1 else out
-
-
-def decode_jpeg(data: bytes) -> np.ndarray:
-    """Baseline (SOF0) JPEG -> uint8 array via the pure-Python codec
-    (functions/jpeg.py), baseline AND progressive (SOF2);
-    hierarchical/arithmetic files still raise ``NotImplementedError``
-    from the codec, honestly gated."""
-    from ..functions.jpeg import decode_jpeg as _dj
-
-    return _dj(data)
 
 
 def decode_wav(data: bytes) -> tuple[np.ndarray, int]:
