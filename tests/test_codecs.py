@@ -1,19 +1,23 @@
-"""Multimodal binary-column plumbing tests: real PNG round-trip,
-feature extraction over mapInPandas, stubbed codecs as error-as-data,
-resize + frame sampling."""
+"""PNG and JPEG codec tests: the library's ``encode_png`` read back by
+the test-side ``decode_png`` (all five scanline filters, gray/RGB/
+RGBA), ``decode_jpeg`` against the test-side baseline encoder (both
+samplings, odd dims), a test-side progressive encoder (spectral
+selection, DC and AC successive approximation), and malformed streams,
+truncated scans included, raising ``ValueError``."""
+
+import struct
+import zlib
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
-from vision_parse_spark.functions.jpeg import decode_jpeg
+from vision_parse_spark.functions.jpeg import (
+    _A, _ZZ, _canonical_codes, decode_jpeg,
+)
 from vision_parse_spark.operators.images import encode_png, render_page
-from vision_parse_spark.operators.multimodal import (
-    decode_png,
-    image_features,
-    resize_nearest,
-    sample_frames,
-    synth_media,
+from writers import (
+    _BitWriter, _Q_LUM, _blockify, _fixed_length_table, _magnitude,
+    _quality_scale, decode_png, encode_jpeg,
 )
 
 
@@ -29,8 +33,6 @@ def test_decode_rejects_non_png():
 
 
 def test_jpeg_roundtrip_rgb_and_gray():
-    from vision_parse_spark.functions.jpeg import encode_jpeg
-
     x = np.linspace(0, 255, 96)
     y = np.linspace(0, 255, 64)
     img = np.zeros((64, 96, 3), dtype=np.uint8)
@@ -49,8 +51,6 @@ def test_jpeg_roundtrip_rgb_and_gray():
 
 
 def test_jpeg_odd_dims_roundtrip():
-    from vision_parse_spark.functions.jpeg import encode_jpeg
-
     rng = np.random.default_rng(3)
     smooth = np.clip(
         rng.integers(80, 120, (1, 1, 3))
@@ -62,8 +62,6 @@ def test_jpeg_odd_dims_roundtrip():
 
 
 def test_jpeg_rejects_progressive_and_garbage():
-    import struct
-
     with pytest.raises(ValueError):
         decode_jpeg(b"\xff\xd8")  # SOI only, no SOS
     with pytest.raises(ValueError):
@@ -76,58 +74,12 @@ def test_jpeg_rejects_progressive_and_garbage():
         decode_jpeg(sof2)
 
 
-def test_resize_nearest():
-    img = np.arange(4 * 6 * 3, dtype=np.uint8).reshape(4, 6, 3)
-    out = resize_nearest(img, 2, 3)
-    assert out.shape == (2, 3, 3)
-    assert np.array_equal(out[0, 0], img[0, 0])
-
-
-def test_sample_frames():
-    h = w = 4
-    nf = 10
-    payload = (bytes(range(256)) * (h * w * 3 * nf // 256 + 1))[: h * w * 3 * nf]
-    frames = sample_frames(payload, h, w, nf, every=3)
-    assert len(frames) == 4  # 0,3,6,9
-    assert frames[0].shape == (4, 4, 3)
-
-
-def test_image_features_pipeline(spark):
-    media = synth_media(spark, 21, partitions=3)
-    feats = image_features(media).collect()
-    assert len(feats) == 21
-    ok = [r for r in feats if r.status == "ok"]
-    err = [r for r in feats if r.status == "error"]
-    # jpeg rows (i%7==6) now DECODE (real codec); raw-frames (i%7==5)
-    # and wav (i%7==4) rows are not images -> error-as-data
-    assert len(err) == 6 and len(ok) == 15
-    assert all("NotImplementedError" in r.error for r in err)
-    r = ok[0]
-    assert r.width >= 110 and r.height >= 110
-    assert len(r.mean_rgb) == 3 and len(r.hist16) == 16
-    assert sum(r.hist16) == r.width * r.height * 3
-    # white page dominates -> high mean
-    assert all(m > 150 for m in r.mean_rgb)
-
-
-def test_media_schema_stable(spark):
-    media = synth_media(spark, 7)
-    assert [f.name for f in media.schema.fields] == [
-        "media_id", "kind", "codec", "width", "height", "n_frames", "payload",
-    ]
-    assert media.filter(F.col("codec") == "png").count() == 4
-    assert media.filter(F.col("codec") == "wav").count() == 1
-
-
 # --- full PNG unfiltering (decoder now handles external PNGs) ---------
 
 
 def _png_with_filters(img: "np.ndarray", filters: list) -> bytes:
     """Forward-filter an RGB image with a chosen filter per scanline
     and wrap it as a PNG (test-side reference encoder, PNG spec §9)."""
-    import struct
-    import zlib
-
     h, w, ch = img.shape
     raw = bytearray()
     prev = np.zeros((w, ch), dtype=np.int16)
@@ -176,9 +128,6 @@ def test_decode_png_all_filter_types():
 
 
 def test_decode_png_grayscale_and_rgba():
-    import struct
-    import zlib
-
     def chunk(tag, data):
         return (struct.pack(">I", len(data)) + tag + data
                 + struct.pack(">I", zlib.crc32(tag + data)))
@@ -198,77 +147,6 @@ def test_decode_png_grayscale_and_rgba():
     assert np.array_equal(decode_png(png), rgba)
 
 
-# --- PCM WAV decode + audio features ----------------------------------
-
-
-def test_wav_round_trip():
-    from vision_parse_spark.operators.multimodal import (
-        decode_wav,
-        make_wav_bytes,
-    )
-
-    t = np.arange(800) / 8000.0
-    mono = (0.25 * np.sin(2 * np.pi * 440 * t)).astype(np.float32)
-    x, rate = decode_wav(make_wav_bytes(mono, rate=8000))
-    assert rate == 8000 and x.shape == (800, 1)
-    assert np.allclose(x[:, 0], mono, atol=1e-4)
-    stereo = np.stack([mono, -mono], axis=1)
-    x2, _ = decode_wav(make_wav_bytes(stereo, rate=8000))
-    assert x2.shape == (800, 2)
-    assert np.allclose(x2[:, 1], -mono, atol=1e-4)
-
-
-def test_audio_features_pipeline(spark):
-    from vision_parse_spark.operators.multimodal import audio_features
-
-    media = synth_media(spark, 21, partitions=3)
-    feats = audio_features(
-        media.filter(F.col("codec") == "wav")).collect()
-    assert len(feats) == 3
-    for r in feats:
-        assert r.status == "ok"
-        assert r.sample_rate == 16000 and r.n_samples == 1600
-        assert abs(r.duration_sec - 0.1) < 1e-9
-        assert 0.3 < r.rms < 0.4  # 0.5-amplitude sine -> rms ~0.354
-        assert r.zero_cross_rate > 0.01
-
-    bad = audio_features(
-        media.filter(F.col("codec") == "jpeg")).collect()
-    assert all(r.status == "error" for r in bad)
-
-
-def test_video_features_motion(spark):
-    """A static clip has ~zero motion; an alternating clip has high
-    motion; non-video payloads error-as-data."""
-    from vision_parse_spark.operators.multimodal import (
-        VIDEO_FEATURES_SCHEMA,
-        video_features,
-    )
-
-    h = w = 8
-    nf = 9
-    static = bytes([100]) * (nf * h * w * 3)
-    frames = []
-    for i in range(nf):
-        frames.append(bytes([0 if i % 2 else 200]) * (h * w * 3))
-    moving = b"".join(frames)
-    media = spark.createDataFrame(
-        [(0, "video", "raw-frames", bytearray(static), w, h, nf),
-         (1, "video", "raw-frames", bytearray(moving), w, h, nf),
-         (2, "video", "raw-frames", bytearray(b"short"), w, h, nf)],
-        "media_id long, kind string, codec string, payload binary,"
-        " width int, height int, n_frames int")
-    rows = {r.media_id: r for r in video_features(media, every=1).collect()}
-    assert rows[0].status == "ok" and rows[0].motion == 0.0
-    assert rows[0].mean_luma == 100.0
-    assert rows[1].status == "ok" and rows[1].motion == 200.0
-    assert rows[1].n_sampled == 9
-    assert rows[2].status == "error"
-    # stride sampling: every=2 picks the even (identical) frames only
-    strided = {r.media_id: r
-               for r in video_features(media, every=2).collect()}
-    assert strided[1].n_sampled == 5 and strided[1].motion == 0.0
-
 
 # ---------------------------------------------------------------------------
 # round 4: progressive (SOF2) decode — test-side progressive encoder
@@ -282,15 +160,9 @@ def test_video_features_motion(spark):
 def _encode_progressive_gray(img, quality=85, dc_sa=True, bands=((1, 5), (6, 63))):
     """Progressive encoder (gray, 1x1): DC scan (optionally split into
     an Al=1 first pass + Al=0 refinement), then one AC scan per
-    spectral band.  Reuses the library's quant/huffman primitives so
-    the quantized coefficients match encode_jpeg exactly."""
-    import struct
-
-    from vision_parse_spark.functions.jpeg import (
-        _A, _ZZ, _BitWriter, _Q_LUM, _blockify, _canonical_codes,
-        _fixed_length_table, _magnitude, _quality_scale,
-    )
-
+    spectral band.  Reuses the baseline encoder's quant/huffman
+    primitives so the quantized coefficients match encode_jpeg
+    exactly."""
     h, w = img.shape
     q = _quality_scale(_Q_LUM, quality)
     ph, pw = -(-h // 8) * 8, -(-w // 8) * 8
@@ -388,8 +260,6 @@ def _encode_progressive_gray(img, quality=85, dc_sa=True, bands=((1, 5), (6, 63)
 
 
 def test_progressive_gray_equals_baseline():
-    from vision_parse_spark.functions.jpeg import encode_jpeg
-
     rng = np.random.default_rng(21)
     base = np.linspace(40, 215, 40)[None, :] * np.linspace(0.6, 1.3, 24)[:, None]
     img = np.clip(base + rng.normal(0, 12, (24, 40)), 0, 255).astype(np.uint8)
@@ -400,8 +270,6 @@ def test_progressive_gray_equals_baseline():
 
 
 def test_progressive_without_successive_approximation():
-    from vision_parse_spark.functions.jpeg import encode_jpeg
-
     img = (np.arange(16 * 24) % 211).astype(np.uint8).reshape(16, 24)
     prog = _encode_progressive_gray(img, quality=90, dc_sa=False,
                                     bands=((1, 63),))
@@ -414,13 +282,6 @@ def test_progressive_ac_refinement_scan():
     Al=1 then a refinement scan at Al=0 must reconstruct the exact
     coefficients (exercises the correction-bit path, incl. EOBRUN
     refinement and newly-nonzero insertion)."""
-    import struct
-
-    from vision_parse_spark.functions.jpeg import (
-        _ZZ, _BitWriter, _canonical_codes, _fixed_length_table,
-        _magnitude, decode_jpeg,
-    )
-
     # one 8x8 block, flat quant table of 1s -> output = IDCT(coef)+128
     target = np.zeros(64, dtype=np.int64)  # zigzag-domain target
     target[0] = 0
@@ -526,8 +387,34 @@ def test_progressive_ac_refinement_scan():
 
     got = decode_jpeg(bytes(out)).astype(np.float64)
     # expected: IDCT of the exact zigzag coefficients + 128
-    from vision_parse_spark.functions.jpeg import _A
     blk = np.zeros(64)
     blk[_ZZ] = target
     want = (_A.T @ blk.reshape(8, 8) @ _A) + 128.0
     assert np.abs(got - np.clip(want, 0, 255)).max() <= 1
+
+
+# ---------------------------------------------------------------------------
+# truncated entropy data: a scan cut anywhere before its last byte
+# raises instead of decoding a full-size, partly gray image
+# ---------------------------------------------------------------------------
+
+
+def _last_scan_start(jpg: bytes) -> int:
+    """Offset of the first entropy byte of the file's last scan."""
+    sos = jpg.rindex(b"\xff\xda")
+    return sos + 2 + struct.unpack(">H", jpg[sos + 2:sos + 4])[0]
+
+
+def test_truncated_jpeg_scan_raises_missing_eoi_decodes():
+    rng = np.random.default_rng(7)
+    gray = np.clip(np.add.outer(np.arange(16), np.arange(24)) * 5
+                   + rng.normal(0, 9, (16, 24)), 0, 255).astype(np.uint8)
+    rgb = np.stack([gray, gray[::-1], gray[:, ::-1]], axis=-1)
+    for jpg in (encode_jpeg(gray, 85), encode_jpeg(rgb, 85, subsample=True),
+                _encode_progressive_gray(gray, 85)):
+        assert jpg.endswith(b"\xff\xd9")
+        want = decode_jpeg(jpg)
+        assert np.array_equal(decode_jpeg(jpg[:-2]), want)  # no EOI
+        for cut in range(_last_scan_start(jpg), len(jpg) - 2):
+            with pytest.raises(ValueError, match="JPEG scan truncated"):
+                decode_jpeg(jpg[:cut])

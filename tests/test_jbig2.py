@@ -1,8 +1,8 @@
 """JBIG2 generic-region decoder tests: MQ round trips against the
-test-side encoder (the progressive-JPEG precedent — fixtures are
-authored by an in-test encoder that mirrors the spec walk), embedded
-segment-stream composition, MMR regions, honest NotImplementedError
-boundaries, and the /JBIG2Decode PDF image-channel integration."""
+test-side encoder (``writers.MQEncoder`` / ``encode_generic_region``,
+which mirror the decoder's spec walk), embedded segment-stream
+composition, MMR regions, honest NotImplementedError boundaries, and
+the /JBIG2Decode PDF image-channel integration."""
 
 import struct
 
@@ -11,11 +11,10 @@ import pytest
 
 from vision_parse_spark.functions.jbig2 import (
     MQDecoder,
-    MQEncoder,
     decode_generic_region,
     decode_jbig2_embedded,
-    encode_generic_region,
 )
+from writers import MQEncoder, encode_generic_region
 
 # ---------------- fixture builders ----------------
 

@@ -14,6 +14,14 @@ from vision_parse_spark.functions.pdf import (
     extract_pdf_text_series,
     make_pdf_bytes,
 )
+from writers import (
+    decode_png,
+    encode_jpeg,
+    encrypt_pdf_bytes,
+    make_pdf_bytes_annots,
+    make_pdf_bytes_cmap,
+    make_pdf_bytes_objstm,
+)
 
 
 def mini(content: bytes) -> bytes:
@@ -169,10 +177,7 @@ def test_tounicode_cmap_font_decodes():
     """Subset-font hex codes decode through the /ToUnicode CMap —
     latin-1 would produce control bytes (the reference sidesteps this
     by rasterizing, parser.py:116-121)."""
-    from vision_parse_spark.functions.pdf import (
-        extract_pdf_pages,
-        make_pdf_bytes_cmap,
-    )
+    from vision_parse_spark.functions.pdf import extract_pdf_pages
 
     pages = [["Hello, CMap!", "fi & fl — done"], ["Zweite Seite: äöü"]]
     got = extract_pdf_pages(make_pdf_bytes_cmap(pages))
@@ -196,10 +201,7 @@ def test_differences_encoding_decodes():
 def test_objstm_pdf15_layout_parses():
     """Catalog/pages/page dicts inside a /Type /ObjStm container (the
     xref-stream file layout) parse via object-stream expansion."""
-    from vision_parse_spark.functions.pdf import (
-        extract_pdf_pages,
-        make_pdf_bytes_objstm,
-    )
+    from vision_parse_spark.functions.pdf import extract_pdf_pages
 
     got = extract_pdf_pages(make_pdf_bytes_objstm(
         [["ObjStm page one", "second line"], ["two"]]))
@@ -295,11 +297,7 @@ def test_cmap_pdf_survives_extract_series():
     structural parser (parse_ok True)."""
     import pandas as pd
 
-    from vision_parse_spark.functions.pdf import (
-        extract_pdf_text_series,
-        make_pdf_bytes_cmap,
-        make_pdf_bytes_objstm,
-    )
+    from vision_parse_spark.functions.pdf import extract_pdf_text_series
 
     payloads = pd.Series([
         make_pdf_bytes_cmap([["cmap text"]]).decode("latin-1"),
@@ -315,7 +313,6 @@ def test_dctdecode_image_xobject_decodes():
     decodes through the baseline codec and reaches the image channel."""
     import numpy as np
 
-    from vision_parse_spark.functions.jpeg import encode_jpeg
     from vision_parse_spark.functions.pdf import extract_pdf_images
 
     x = np.linspace(0, 255, 64)
@@ -842,10 +839,7 @@ def test_annot_widget_value_reaches_text_channel():
     """A filled AcroForm text widget's value lives ONLY in its /AP /N
     appearance stream; the text channel must surface it after the
     page content, and include_annotations=False must drop it."""
-    from vision_parse_spark.functions.pdf import (
-        extract_pdf_text,
-        make_pdf_bytes_annots,
-    )
+    from vision_parse_spark.functions.pdf import extract_pdf_text
 
     pdf = make_pdf_bytes_annots(["Application form:"],
                                 field_value="Jane Q. Applicant")
@@ -861,10 +855,7 @@ def test_annot_widget_value_reaches_text_channel():
 def test_annot_checkbox_state_and_hidden_flag():
     """/N state sub-dicts resolve through /AS (checked vs unchecked
     appearance), and /F Hidden (bit 2) annotations never surface."""
-    from vision_parse_spark.functions.pdf import (
-        extract_pdf_text,
-        make_pdf_bytes_annots,
-    )
+    from vision_parse_spark.functions.pdf import extract_pdf_text
 
     on = extract_pdf_text(make_pdf_bytes_annots(
         ["form"], checkbox_on=True, hidden_field="SECRET-HIDDEN"))
@@ -883,7 +874,6 @@ def test_annot_stamp_ink_reaches_rasterizer():
 
     from vision_parse_spark.functions.pdf import (
         extract_pdf_text_series,
-        make_pdf_bytes_annots,
         rasterize_pdf_vector_pages,
     )
 
@@ -1065,7 +1055,6 @@ def test_rotate_90_twin_extracts_matching_region_set():
     from vision_parse_spark.operators.images import (
         extract_images_from_marker_text,
     )
-    from vision_parse_spark.operators.multimodal import decode_png
 
     pdf = make_pdf_bytes([[]], vector_figures=[0])
     got = extract_images_from_marker_text(pdf.decode("latin-1"),
@@ -1090,14 +1079,8 @@ def test_rotate_90_twin_extracts_matching_region_set():
 # ---------------------------------------------------------------------------
 
 
-def _enc_builders():
-    from vision_parse_spark.functions.pdf import encrypt_pdf_bytes
-    return encrypt_pdf_bytes
-
-
 def test_encrypted_text_roundtrip_all_modes():
     from vision_parse_spark.functions.pdf import (
-        encrypt_pdf_bytes,
         extract_pdf_text,
         make_pdf_bytes,
     )
@@ -1115,7 +1098,6 @@ def test_encrypted_vector_and_image_channels_roundtrip():
     import numpy as np
 
     from vision_parse_spark.functions.pdf import (
-        encrypt_pdf_bytes,
         extract_pdf_images,
         make_pdf_bytes,
         rasterize_pdf_vector_pages,
@@ -1139,10 +1121,7 @@ def test_locked_pdf_is_error_as_data_status_encrypted():
 
     from vision_parse_spark.config import ExtractConfig
     from vision_parse_spark.errors import EncryptedPayloadError
-    from vision_parse_spark.functions.pdf import (
-        encrypt_pdf_bytes,
-        make_pdf_bytes,
-    )
+    from vision_parse_spark.functions.pdf import make_pdf_bytes
     from vision_parse_spark.operators.pipeline import extract_pandas
 
     locked = encrypt_pdf_bytes(
@@ -1161,10 +1140,7 @@ def test_locked_pdf_is_error_as_data_status_encrypted():
 
 
 def test_locked_pdf_never_leaks_ciphertext_text():
-    from vision_parse_spark.functions.pdf import (
-        encrypt_pdf_bytes,
-        make_pdf_bytes,
-    )
+    from vision_parse_spark.functions.pdf import make_pdf_bytes
     from vision_parse_spark.functions.classify import classify_batch
     import pandas as pd
 

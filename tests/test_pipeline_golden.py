@@ -206,7 +206,7 @@ def test_include_annotations_config_knob(spark):
     import pandas as pd
 
     from vision_parse_spark import ExtractConfig, extract
-    from vision_parse_spark.functions.pdf import make_pdf_bytes_annots
+    from writers import make_pdf_bytes_annots
 
     payload = make_pdf_bytes_annots(
         ["Application form:"], field_value="Jane Q. Applicant",

@@ -145,7 +145,8 @@ def test_jpeg_round_trip_bounded_error(h, w, base, subsample, gray):
     both samplings, gray and RGB."""
     import numpy as np
 
-    from vision_parse_spark.functions.jpeg import decode_jpeg, encode_jpeg
+    from vision_parse_spark.functions.jpeg import decode_jpeg
+    from writers import encode_jpeg
 
     # genuinely smooth: a scaled linear ramp, no modulo wraparound
     ramp = (np.add.outer(np.arange(h), np.arange(w))

@@ -133,100 +133,6 @@ class MQDecoder:
         return d
 
 
-class MQEncoder:
-    """Matching MQ encoder (T.88 E.3.5-E.3.9) — used by the test
-    fixtures to author real arithmetic-coded generic regions (the
-    progressive-JPEG test-side-encoder precedent)."""
-
-    __slots__ = ("out", "b", "c", "a", "ct", "_started")
-
-    def __init__(self):
-        self.out = bytearray()
-        self.b = -1          # pending byte (-1 = none yet)
-        self.c = 0
-        self.a = 0x8000
-        self.ct = 12
-        self._started = False
-
-    def _emit(self) -> None:
-        if self._started:
-            self.out.append(self.b)
-        self._started = True
-
-    def _byteout(self) -> None:
-        # BYTEOUT per T.88 E.3.7 (the jbig2enc/openjpeg register
-        # conventions: 32-bit C, carry = magnitude >= 0x8000000)
-        if self.b == 0xFF:
-            self._emit()
-            self.b = (self.c >> 20) & 0xFF
-            self.c &= 0xFFFFF
-            self.ct = 7
-        elif self.c < 0x8000000:
-            self._emit()
-            self.b = (self.c >> 19) & 0xFF
-            self.c &= 0x7FFFF
-            self.ct = 8
-        else:
-            self.b += 1
-            if self.b == 0xFF:
-                self.c &= 0x7FFFFFF
-                self._emit()
-                self.b = (self.c >> 20) & 0xFF
-                self.c &= 0xFFFFF
-                self.ct = 7
-            else:
-                self._emit()
-                self.b = (self.c >> 19) & 0xFF
-                self.c &= 0x7FFFF
-                self.ct = 8
-
-    def encode(self, cx: list, d: int) -> None:
-        i, mps = cx
-        qe, nmps, nlps, switch = _QE[i]
-        if d == mps:                      # CODEMPS
-            self.a -= qe
-            if self.a & 0x8000:
-                self.c += qe
-                return
-            if self.a < qe:
-                self.a = qe
-            else:
-                self.c += qe
-            cx[0] = nmps
-        else:                             # CODELPS
-            self.a -= qe
-            if self.a < qe:
-                self.c += qe
-            else:
-                self.a = qe
-            if switch:
-                cx[1] = 1 - mps
-            cx[0] = nlps
-        while True:                       # RENORME
-            if self.ct == 0:
-                self._byteout()
-            self.a = (self.a << 1) & 0xFFFF
-            self.c = (self.c << 1) & 0xFFFFFFFF
-            self.ct -= 1
-            if self.a & 0x8000:
-                break
-
-    def flush(self) -> bytes:
-        # SETBITS + two shifted byteouts (T.88 E.3.8; trailing 0xFF
-        # dropped — the decoder feeds 1-bits past end-of-data)
-        temp = (self.c + self.a) & 0xFFFFFFFF
-        self.c |= 0xFFFF
-        if self.c >= temp:
-            self.c -= 0x8000
-        self.c = (self.c << self.ct) & 0xFFFFFFFF
-        self._byteout()
-        self.c = (self.c << self.ct) & 0xFFFFFFFF
-        self._byteout()
-        if self.b != 0xFF and self._started:
-            self.out.append(self.b)
-        return bytes(self.out)
-
-
 # --- generic region (T.88 §6.2.5.7) --------------------------------
 
 # Per template: fixed NON-current-row pixels as (dx, dy, bit), the
@@ -352,44 +258,6 @@ def decode_generic_region(data: bytes, width: int, height: int,
                 row[x] = bit
                 reg = (reg << 1) | bit
     return bmp
-
-
-def encode_generic_region(bmp: np.ndarray, template: int = 0,
-                          at: list[tuple[int, int]] | None = None,
-                          tpgdon: bool = False) -> bytes:
-    """Test-fixture encoder: the exact context walk of
-    :func:`decode_generic_region` driven through :class:`MQEncoder`."""
-    spec = _TEMPLATES[template]
-    at = list(at) if at else list(spec["at_nominal"])
-    pixels = list(spec["fixed"]) + [
-        (ax, ay, bit) for (ax, ay), bit in zip(at, spec["at_bits"])]
-    height, width = bmp.shape
-    enc = MQEncoder()
-    cxs = [[0, 0] for _ in range(1 << 16)]
-    cur_mask = (1 << spec["cur_bits"]) - 1
-    ltp = 0
-    for y in range(height):
-        if tpgdon:
-            same = bool(y > 0 and np.array_equal(bmp[y], bmp[y - 1]))
-            sltp = 1 if same != bool(ltp) else 0
-            enc.encode(cxs[spec["tpgdon_cx"]], sltp)
-            ltp ^= sltp
-            if ltp:
-                continue
-        reg = 0
-        for x in range(width):
-            ctx = reg & cur_mask
-            for ax, ay, bit in pixels:
-                if ay == 0:
-                    px, py = x + ax, y
-                else:
-                    px, py = x + ax, y + ay
-                if 0 <= px < width and 0 <= py < height and bmp[py, px]:
-                    ctx |= 1 << bit
-            b = int(bmp[y, x])
-            enc.encode(cxs[ctx], b)
-            reg = (reg << 1) | b
-    return enc.flush()
 
 
 # --- embedded segment stream (PDF organization, T.88 Annex) --------

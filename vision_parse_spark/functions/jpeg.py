@@ -1,29 +1,22 @@
-"""Pure-Python/numpy baseline JPEG codec (ITU-T T.81, SOF0).
+"""Pure-Python/numpy JPEG decoder (ITU-T T.81) for the PDF
+``/DCTDecode`` filter: ``extract_pdf_images`` surfaces JPEG-compressed
+image XObjects with stdlib + numpy only (no codec libraries exist in
+this environment).
 
-Retires the multimodal channel's biggest stub (round-2 verdict item
-7): ``image_features`` can now decode ``codec='jpeg'`` payloads, and
-``extract_pdf_images`` can surface /DCTDecode XObjects — with stdlib +
-numpy only (no codec libraries exist in this environment).
-
-Scope — baseline sequential DCT profile:
-* decoder: SOF0 (8-bit) and — since round 4 — progressive SOF2
-  (spectral selection + successive approximation, DC/AC initial and
-  refinement scans, T.81 G.1.2), 1 or 3 components, any sampling up
-  to 2x2 (4:4:4 / 4:2:2 / 4:2:0), custom DQT/DHT (8/16-bit quant),
-  restart intervals, byte de-stuffing; hierarchical/lossless/
-  arithmetic coding raise ``NotImplementedError`` honestly.
-* encoder (fixture/synth source): 4:4:4 or 4:2:0, standard-shape
-  quant tables scaled by quality, per-image canonical Huffman tables
-  emitted in DHT (fixed-length canonical codes — valid per the spec,
-  simpler than Annex-K defaults, and exercises the decoder's DHT path
-  for real instead of assuming baked-in tables).
+Scope: baseline SOF0 (8-bit) and progressive SOF2 (spectral selection
++ successive approximation, DC/AC initial and refinement scans, T.81
+G.1.2), 1 or 3 components, any sampling up to 2x2 (4:4:4 / 4:2:2 /
+4:2:0), custom DQT/DHT (8/16-bit quant), restart intervals, byte
+de-stuffing.  Hierarchical/lossless/arithmetic coding raise
+``NotImplementedError``; malformed data, including a scan whose
+entropy bytes end before its last block, raises ``ValueError``, which
+the PDF image channel records as a ``jpeg_decode_failed`` skip.
 
 Cost model: entropy decode is a per-byte Python loop — per-ENTITY
-cost, run inside Arrow-batched UDFs (`operators/multimodal.py`), the
-same cost class as the reference's per-page pypdfium2 render
-(``/root/reference/src/vision_parse/parser.py:116-121``).  The
-blockwise DCT/IDCT, color transforms and upsampling are vectorized
-numpy over all blocks at once.
+cost, run once per DCT image XObject inside the Arrow-batched
+extraction UDF, the same cost class as the reference's per-page
+pypdfium2 render (``parser.py:116-121``).  The blockwise IDCT, color
+transform and upsampling are vectorized numpy over all blocks at once.
 """
 
 from __future__ import annotations
@@ -45,7 +38,6 @@ def _zigzag_order() -> np.ndarray:
 
 
 _ZZ = _zigzag_order()          # block index -> zigzag position
-_UNZZ = np.argsort(_ZZ)        # kept for clarity; _ZZ used directly
 
 # orthonormal 8-point DCT-II matrix: forward F = A @ b @ A.T
 _A = np.zeros((8, 8))
@@ -54,57 +46,10 @@ for _k in range(8):
         _A[_k, _n] = np.cos((2 * _n + 1) * _k * np.pi / 16) * \
             (np.sqrt(0.125) if _k == 0 else 0.5)
 
-# standard-shape quant tables (ITU-T T.81 Annex K layout); embedded in
-# DQT, so encoder/decoder agreement never depends on these constants
-_Q_LUM = np.array([
-    16, 11, 10, 16, 24, 40, 51, 61,
-    12, 12, 14, 19, 26, 58, 60, 55,
-    14, 13, 16, 24, 40, 57, 69, 56,
-    14, 17, 22, 29, 51, 87, 80, 62,
-    18, 22, 37, 56, 68, 109, 103, 77,
-    24, 35, 55, 64, 81, 104, 113, 92,
-    49, 64, 78, 87, 103, 121, 120, 101,
-    72, 92, 95, 98, 112, 100, 103, 99,
-], dtype=np.float64).reshape(8, 8)
-_Q_CHROM = np.array([
-    17, 18, 24, 47, 99, 99, 99, 99,
-    18, 21, 26, 66, 99, 99, 99, 99,
-    24, 26, 56, 99, 99, 99, 99, 99,
-    47, 66, 99, 99, 99, 99, 99, 99,
-    99, 99, 99, 99, 99, 99, 99, 99,
-    99, 99, 99, 99, 99, 99, 99, 99,
-    99, 99, 99, 99, 99, 99, 99, 99,
-    99, 99, 99, 99, 99, 99, 99, 99,
-], dtype=np.float64).reshape(8, 8)
-
 
 # ---------------------------------------------------------------------------
 # bit IO
 # ---------------------------------------------------------------------------
-
-
-class _BitWriter:
-    def __init__(self) -> None:
-        self.out = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def write(self, value: int, length: int) -> None:
-        self.acc = (self.acc << length) | (value & ((1 << length) - 1))
-        self.nbits += length
-        while self.nbits >= 8:
-            byte = (self.acc >> (self.nbits - 8)) & 0xFF
-            self.out.append(byte)
-            if byte == 0xFF:
-                self.out.append(0x00)  # byte stuffing
-            self.nbits -= 8
-        self.acc &= (1 << self.nbits) - 1
-
-    def flush(self) -> bytes:
-        if self.nbits:
-            pad = 8 - self.nbits
-            self.write((1 << pad) - 1, pad)  # 1-fill per spec
-        return bytes(self.out)
 
 
 class _BitReader:
@@ -119,7 +64,8 @@ class _BitReader:
     def read_bit(self) -> int:
         if self.nbits == 0:
             if self.pos >= len(self.data):
-                return 0  # spec: pad with 1s; 0 also terminates safely
+                # a complete scan never reads past its padded last byte
+                raise ValueError("JPEG scan truncated")
             self.acc = self.data[self.pos]
             self.pos += 1
             self.nbits = 8
@@ -161,31 +107,6 @@ def _decode_table(bits: list[int], values: list[int]) -> dict[tuple[int, int], i
             for sym, (code, length) in _canonical_codes(bits, values).items()}
 
 
-def _fixed_length_table(symbols: set[int]) -> tuple[list[int], list[int]]:
-    """A valid JPEG Huffman table assigning the SAME length L to every
-    used symbol, with 2^L >= n+1 (the all-ones code must stay unused
-    per the spec).  Simple, canonical, and forces decoders to honor
-    the DHT segment."""
-    syms = sorted(symbols) if symbols else [0]
-    n = len(syms)
-    length = max(1, (n + 1 - 1).bit_length())
-    while (1 << length) < n + 1:
-        length += 1
-    bits = [0] * 16
-    bits[length - 1] = n
-    return bits, syms
-
-
-def _magnitude(v: int) -> tuple[int, int]:
-    """(size category, appended bits) for a DC diff / AC coefficient."""
-    if v == 0:
-        return 0, 0
-    size = int(abs(v)).bit_length()
-    if v < 0:
-        return size, v + (1 << size) - 1
-    return size, v
-
-
 def _extend(bits: int, size: int) -> int:
     if size == 0:
         return 0
@@ -199,16 +120,6 @@ def _extend(bits: int, size: int) -> int:
 # ---------------------------------------------------------------------------
 
 
-def _rgb_to_ycbcr(rgb: np.ndarray) -> np.ndarray:
-    r = rgb[..., 0].astype(np.float64)
-    g = rgb[..., 1].astype(np.float64)
-    b = rgb[..., 2].astype(np.float64)
-    y = 0.299 * r + 0.587 * g + 0.114 * b
-    cb = -0.168736 * r - 0.331264 * g + 0.5 * b + 128.0
-    cr = 0.5 * r - 0.418688 * g - 0.081312 * b + 128.0
-    return np.stack([y, cb, cr], axis=-1)
-
-
 def _ycbcr_to_rgb(y: np.ndarray, cb: np.ndarray, cr: np.ndarray) -> np.ndarray:
     cb = cb - 128.0
     cr = cr - 128.0
@@ -218,197 +129,9 @@ def _ycbcr_to_rgb(y: np.ndarray, cb: np.ndarray, cr: np.ndarray) -> np.ndarray:
     return np.clip(np.stack([r, g, b], axis=-1), 0, 255).astype(np.uint8)
 
 
-def _blockify(plane: np.ndarray) -> np.ndarray:
-    """HxW (multiple of 8) -> (n_blocks, 8, 8) in raster-MCU order."""
-    h, w = plane.shape
-    return (plane.reshape(h // 8, 8, w // 8, 8)
-            .transpose(0, 2, 1, 3).reshape(-1, 8, 8))
-
-
 def _unblockify(blocks: np.ndarray, h: int, w: int) -> np.ndarray:
     return (blocks.reshape(h // 8, w // 8, 8, 8)
             .transpose(0, 2, 1, 3).reshape(h, w))
-
-
-# ---------------------------------------------------------------------------
-# encoder
-# ---------------------------------------------------------------------------
-
-
-def _quality_scale(q: np.ndarray, quality: int) -> np.ndarray:
-    quality = min(max(int(quality), 1), 100)
-    s = 5000 / quality if quality < 50 else 200 - 2 * quality
-    return np.clip(np.floor((q * s + 50) / 100), 1, 255)
-
-
-def _encode_component_blocks(blocks_q: np.ndarray) -> tuple[list, set, set]:
-    """Quantized (n,8,8) int blocks -> list of per-block symbol streams
-    [(dc_size, dc_bits), [(ac_sym, ac_bits), ...]] + used symbol sets."""
-    out = []
-    dc_syms: set[int] = set()
-    ac_syms: set[int] = set()
-    prev_dc = 0
-    zz = blocks_q.reshape(-1, 64)[:, _ZZ]
-    for row in zz:
-        dc = int(row[0])
-        size, bits = _magnitude(dc - prev_dc)
-        prev_dc = dc
-        dc_syms.add(size)
-        acs = []
-        run = 0
-        nz = np.flatnonzero(row[1:])
-        last = nz[-1] + 1 if len(nz) else 0
-        for k in range(1, last + 1):
-            v = int(row[k])
-            if v == 0:
-                run += 1
-                continue
-            while run > 15:
-                acs.append((0xF0, (0, 0)))
-                ac_syms.add(0xF0)
-                run -= 16
-            s, b = _magnitude(v)
-            sym = (run << 4) | s
-            acs.append((sym, (s, b)))
-            ac_syms.add(sym)
-            run = 0
-        if last < 63:
-            acs.append((0x00, (0, 0)))  # EOB
-            ac_syms.add(0x00)
-        out.append(((size, bits), acs))
-    return out, dc_syms, ac_syms
-
-
-def encode_jpeg(img: np.ndarray, quality: int = 85,
-                subsample: bool = False) -> bytes:
-    """Encode an HxW (gray) or HxWx3 (RGB) uint8 array as baseline
-    JPEG.  ``subsample=True`` uses 4:2:0 chroma (exercises the
-    decoder's upsampling path); default 4:4:4."""
-    gray = img.ndim == 2
-    h, w = img.shape[:2]
-    if gray:
-        planes = [img.astype(np.float64)]
-    else:
-        ycc = _rgb_to_ycbcr(img)
-        planes = [ycc[..., 0], ycc[..., 1], ycc[..., 2]]
-
-    qt = [_quality_scale(_Q_LUM, quality)]
-    if not gray:
-        qt.append(_quality_scale(_Q_CHROM, quality))
-
-    # sampling factors per component
-    if gray:
-        samp = [(1, 1)]
-    elif subsample:
-        samp = [(2, 2), (1, 1), (1, 1)]
-    else:
-        samp = [(1, 1), (1, 1), (1, 1)]
-    hmax = max(s[0] for s in samp)
-    vmax = max(s[1] for s in samp)
-
-    mcux = -(-w // (8 * hmax))
-    mcuy = -(-h // (8 * vmax))
-
-    comp_blocks = []
-    for ci, plane in enumerate(planes):
-        sh, sv = samp[ci]
-        ch = -(-h * sv // vmax)   # subsampled content size
-        cw = -(-w * sh // hmax)
-        if (sh, sv) != (hmax, vmax):
-            fy, fx = vmax // sv, hmax // sh
-            ph = -(-h // fy) * fy
-            pw = -(-w // fx) * fx
-            p = np.pad(plane, ((0, ph - h), (0, pw - w)), mode="edge")
-            plane = p.reshape(ph // fy, fy, pw // fx, fx).mean(axis=(1, 3))
-        # pad the component plane to its MCU-grid extent (mcuy*sv x
-        # mcux*sh blocks) — block-multiple padding alone under-sizes
-        # the grid whenever the image isn't an MCU multiple
-        bh_blocks, bw_blocks = mcuy * sv, mcux * sh
-        plane = np.pad(
-            plane[:ch, :cw],
-            ((0, bh_blocks * 8 - ch), (0, bw_blocks * 8 - cw)),
-            mode="edge")
-        blocks = _blockify(plane - 128.0)
-        coef = np.einsum("ij,njk,lk->nil", _A, blocks, _A)
-        q = qt[0] if ci == 0 else qt[1]
-        blocks_q = np.round(coef / q).astype(np.int64)
-        # reorder into MCU VISIT order before symbolizing: the DC
-        # predictor chains along the scan's traversal, not the plane's
-        # raster order (identical only at 1x1 sampling)
-        visit = [
-            (my * sv + by) * bw_blocks + (mx * sh + bx)
-            for my in range(mcuy) for mx in range(mcux)
-            for by in range(sv) for bx in range(sh)
-        ]
-        comp_blocks.append(blocks_q[np.array(visit, dtype=np.int64)])
-
-    # per-component symbol streams + huffman tables (lum / chrom pair)
-    streams = []
-    dc_sets = [set(), set()]
-    ac_sets = [set(), set()]
-    for ci, bq in enumerate(comp_blocks):
-        st, ds, asy = _encode_component_blocks(bq)
-        streams.append(st)
-        t = 0 if ci == 0 else 1
-        dc_sets[t] |= ds
-        ac_sets[t] |= asy
-    n_tables = 1 if gray else 2
-    dc_tables = [_fixed_length_table(dc_sets[t]) for t in range(n_tables)]
-    ac_tables = [_fixed_length_table(ac_sets[t]) for t in range(n_tables)]
-    dc_codes = [_canonical_codes(*t) for t in dc_tables]
-    ac_codes = [_canonical_codes(*t) for t in ac_tables]
-
-    # ---- entropy-coded scan (interleaved MCUs; streams are already
-    # in MCU visit order, so emission is sequential per component) ----
-    bw = _BitWriter()
-    idx = [0] * len(planes)
-    for _my in range(mcuy):
-        for _mx in range(mcux):
-            for ci in range(len(planes)):
-                sh, sv = samp[ci]
-                t = 0 if ci == 0 else min(1, n_tables - 1)
-                for _ in range(sv * sh):
-                    (size, bits), acs = streams[ci][idx[ci]]
-                    idx[ci] += 1
-                    code, length = dc_codes[t][size]
-                    bw.write(code, length)
-                    if size:
-                        bw.write(bits, size)
-                    for sym, (s, b) in acs:
-                        code, length = ac_codes[t][sym]
-                        bw.write(code, length)
-                        if s:
-                            bw.write(b, s)
-    scan = bw.flush()
-
-    # ---- container ----
-    out = bytearray(b"\xff\xd8")  # SOI
-    out += b"\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00\x01\x01\x00" \
-        + struct.pack(">HH", 1, 1) + b"\x00\x00"
-    for ti, q in enumerate(qt):
-        zzq = q.reshape(-1)[_ZZ].astype(np.uint8).tobytes()
-        out += b"\xff\xdb" + struct.pack(">H", 67) + bytes([ti]) + zzq
-    # SOF0
-    ncomp = 1 if gray else 3
-    sof = struct.pack(">BHHB", 8, h, w, ncomp)
-    for ci in range(ncomp):
-        sh, sv = samp[ci]
-        tq = 0 if ci == 0 else 1
-        sof += bytes([ci + 1, (sh << 4) | sv, tq])
-    out += b"\xff\xc0" + struct.pack(">H", len(sof) + 2) + sof
-    for tc, tables in ((0, dc_tables), (1, ac_tables)):
-        for th, (bits, vals) in enumerate(tables):
-            seg = bytes([(tc << 4) | th]) + bytes(bits) + bytes(vals)
-            out += b"\xff\xc4" + struct.pack(">H", len(seg) + 2) + seg
-    sos = bytes([ncomp])
-    for ci in range(ncomp):
-        t = 0 if ci == 0 else min(1, n_tables - 1)
-        sos += bytes([ci + 1, (t << 4) | t])
-    sos += b"\x00\x3f\x00"
-    out += b"\xff\xda" + struct.pack(">H", len(sos) + 2) + sos
-    out += scan
-    out += b"\xff\xd9"  # EOI
-    return bytes(out)
 
 
 # ---------------------------------------------------------------------------
@@ -524,9 +247,10 @@ def decode_jpeg(data: bytes) -> np.ndarray:
     raise ValueError("no SOS segment found")
 
 
-def _destuff(data: bytes, start: int) -> tuple[bytes, list[int]]:
+def _destuff(data: bytes, start: int) -> tuple[bytes, list[int], int]:
     """Entropy bytes with 0xFF00 collapsed; restart-marker positions
-    recorded as offsets in the DE-STUFFED stream."""
+    recorded as offsets in the DE-STUFFED stream; and the source offset
+    of the marker that ended the scan (``len(data)`` if none did)."""
     out = bytearray()
     rst_at: list[int] = []
     i = start
@@ -546,7 +270,7 @@ def _destuff(data: bytes, start: int) -> tuple[bytes, list[int]]:
             break  # any other marker ends the scan
         out.append(b)
         i += 1
-    return bytes(out), rst_at
+    return bytes(out), rst_at, i
 
 
 def _decode_scan(data, start, frame, scomps, qt, dc_t, ac_t, restart):
@@ -563,7 +287,7 @@ def _decode_scan(data, start, frame, scomps, qt, dc_t, ac_t, restart):
         c["bh"] = mcuy * c["v"]
         c["coef"] = np.zeros((c["bh"] * c["bw"], 8, 8))
 
-    stream, rst_at = _destuff(data, start)
+    stream, rst_at, _ = _destuff(data, start)
     br = _BitReader(stream)
     rst_iter = iter(rst_at)
     next_rst = next(rst_iter, None)
@@ -664,8 +388,7 @@ def _decode_scan_progressive(data, start, frame, scomps, qt, dc_t, ac_t,
     for c, s in zip(order, scomps):
         c["td"], c["ta"] = s["td"], s["ta"]
 
-    stream, rst_at = _destuff(data, start)
-    consumed = _destuffed_end(data, start)
+    stream, rst_at, consumed = _destuff(data, start)
     br = _BitReader(stream)
     rst_iter = iter(rst_at)
     next_rst = next(rst_iter, None)
@@ -799,22 +522,6 @@ def _decode_scan_progressive(data, start, frame, scomps, qt, dc_t, ac_t,
                     k += 1
                 eobrun -= 1
     return consumed
-
-
-def _destuffed_end(data: bytes, start: int) -> int:
-    """Source offset just past the scan's entropy bytes (the marker
-    that ended the scan) — mirrors _destuff's walk."""
-    i = start
-    n = len(data)
-    while i < n:
-        if data[i] == 0xFF:
-            nxt = data[i + 1] if i + 1 < n else 0xD9
-            if nxt == 0x00 or 0xD0 <= nxt <= 0xD7:
-                i += 2
-                continue
-            return i
-        i += 1
-    return n
 
 
 def _finish_progressive(frame, qt) -> np.ndarray:

@@ -2152,6 +2152,12 @@ def make_pdf_bytes(
             f"/Length {len(raw)} >>".encode()
             + b"\nstream\n" + raw + b"\nendstream")
 
+    return _serialize_pdf(objects)
+
+
+def _serialize_pdf(objects: list[bytes]) -> bytes:
+    """PDF 1.4 file of ``objects`` (object number = index + 1, the
+    catalog first) with a classic xref table and trailer."""
     buf = bytearray(b"%PDF-1.4\n%\xe2\xe3\xcf\xd3\n")
     offsets = [0]
     for num, body in enumerate(objects, start=1):
@@ -2167,365 +2173,3 @@ def make_pdf_bytes(
         f"startxref\n{xref_at}\n%%EOF\n".encode())
     return bytes(buf)
 
-
-def make_pdf_bytes_annots(
-    lines: list[str],
-    field_value: str = "Jane Q. Applicant",
-    vector_stamp: bool = False,
-    checkbox_on: bool | None = None,
-    hidden_field: str | None = None,
-) -> bytes:
-    """One-page PDF with an AcroForm TEXT WIDGET whose filled value
-    lives ONLY in its /AP /N appearance stream — the structure Acrobat
-    writes for filled forms (the reference renders these via
-    ``may_draw_forms=include_annotations``, parser.py:118-120).
-    Optionally adds a /Stamp annotation whose appearance paints vector
-    ink, a checkbox with /N state sub-dict + /AS, and a /F-hidden
-    field that must NOT surface."""
-    objects: list[bytes] = []
-
-    def add(body: bytes) -> int:
-        objects.append(body)
-        return len(objects)  # object number
-
-    def add_stream(head: str, stream: bytes) -> int:
-        return add(f"<< {head} /Length {len(stream)} >>".encode()
-                   + b"\nstream\n" + stream + b"\nendstream")
-
-    cat = add(b"<< /Type /Catalog /Pages 2 0 R >>")
-    assert cat == 1
-    add(b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>")
-    page_num = add(b"PLACEHOLDER-PAGE")
-    ops = [b"BT /F1 12 Tf 72 720 Td"]
-    for j, line in enumerate(lines):
-        if j:
-            ops.append(b"0 -14 Td")
-        ops.append(b"(" + _esc(line) + b") Tj")
-    ops.append(b"ET")
-    content_num = add_stream("", b" ".join(ops))
-    font_num = add(b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>")
-
-    annot_nums: list[int] = []
-    # --- filled text widget: value only in the appearance stream ---
-    ap_ops = (b"/Tx BMC q BT /F1 10 Tf 2 6 Td ("
-              + _esc(field_value) + b") Tj ET Q EMC")
-    ap_num = add_stream(
-        f"/Type /XObject /Subtype /Form /BBox [0 0 200 20] "
-        f"/Resources << /Font << /F1 {font_num} 0 R >> >>", ap_ops)
-    annot_nums.append(add(
-        f"<< /Type /Annot /Subtype /Widget /FT /Tx /T (applicant) "
-        f"/Rect [100 600 300 620] /AP << /N {ap_num} 0 R >> >>".encode()))
-    if vector_stamp:
-        stamp_ap = add_stream(
-            "/Type /XObject /Subtype /Form /BBox [0 0 300 300]",
-            vector_figure_ops(cx=150, cy=150, r=120))
-        annot_nums.append(add(
-            f"<< /Type /Annot /Subtype /Stamp /Rect [150 350 450 650] "
-            f"/AP << /N {stamp_ap} 0 R >> >>".encode()))
-    if checkbox_on is not None:
-        on_ap = add_stream(
-            f"/Type /XObject /Subtype /Form /BBox [0 0 12 12] "
-            f"/Resources << /Font << /F1 {font_num} 0 R >> >>",
-            b"q BT /F1 10 Tf 2 2 Td (X-CHECKED) Tj ET Q")
-        off_ap = add_stream(
-            "/Type /XObject /Subtype /Form /BBox [0 0 12 12]", b"")
-        state = "On" if checkbox_on else "Off"
-        annot_nums.append(add(
-            f"<< /Type /Annot /Subtype /Widget /FT /Btn /AS /{state} "
-            f"/Rect [100 560 112 572] "
-            f"/AP << /N << /On {on_ap} 0 R /Off {off_ap} 0 R >> >> >>"
-            .encode()))
-    if hidden_field is not None:
-        hid_ap = add_stream(
-            f"/Type /XObject /Subtype /Form /BBox [0 0 200 20] "
-            f"/Resources << /Font << /F1 {font_num} 0 R >> >>",
-            b"q BT /F1 10 Tf 2 6 Td (" + _esc(hidden_field)
-            + b") Tj ET Q")
-        annot_nums.append(add(
-            f"<< /Type /Annot /Subtype /Widget /FT /Tx /F 2 "
-            f"/Rect [100 520 300 540] /AP << /N {hid_ap} 0 R >> >>"
-            .encode()))
-
-    annots = " ".join(f"{n} 0 R" for n in annot_nums)
-    objects[page_num - 1] = (
-        f"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
-        f"/Resources << /Font << /F1 {font_num} 0 R >> >> "
-        f"/Contents {content_num} 0 R /Annots [{annots}] >>".encode())
-
-    buf = bytearray(b"%PDF-1.4\n%\xe2\xe3\xcf\xd3\n")
-    offsets = [0]
-    for num, body in enumerate(objects, start=1):
-        offsets.append(len(buf))
-        buf += f"{num} 0 obj\n".encode() + body + b"\nendobj\n"
-    xref_at = len(buf)
-    buf += f"xref\n0 {len(objects) + 1}\n".encode()
-    buf += b"0000000000 65535 f \n"
-    for off in offsets[1:]:
-        buf += f"{off:010d} 00000 n \n".encode()
-    buf += (
-        f"trailer\n<< /Size {len(objects) + 1} /Root 1 0 R >>\n"
-        f"startxref\n{xref_at}\n%%EOF\n".encode())
-    return bytes(buf)
-
-
-def make_pdf_bytes_cmap(
-    pages: list[list[str]],
-    codes: dict[str, int] | None = None,
-) -> bytes:
-    """A PDF whose text is shown through a SUBSET FONT with remapped
-    byte codes and a /ToUnicode CMap — the structure real generators
-    emit for embedded fonts, which latin-1 decoding garbles.  Each
-    distinct character in ``pages`` gets a code (1-based, in first-seen
-    order unless ``codes`` pins them); strings are written as hex with
-    those codes; the CMap carries code -> UTF-16BE mappings."""
-    if codes is None:
-        codes = {}
-        for lines in pages:
-            for line in lines:
-                for ch in line:
-                    if ch not in codes:
-                        codes[ch] = len(codes) + 1
-    n_pages = len(pages)
-    objects: list[bytes] = []
-    font_num = 3 + 2 * n_pages
-    cmap_num = font_num + 1
-    kids = " ".join(f"{3 + 2 * i} 0 R" for i in range(n_pages))
-    objects.append(b"<< /Type /Catalog /Pages 2 0 R >>")
-    objects.append(
-        f"<< /Type /Pages /Kids [{kids}] /Count {n_pages} >>".encode())
-    for i, lines in enumerate(pages):
-        content_num = 3 + 2 * i + 1
-        objects.append(
-            f"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
-            f"/Resources << /Font << /F1 {font_num} 0 R >> >> "
-            f"/Contents {content_num} 0 R >>".encode())
-        ops = [b"BT /F1 12 Tf 72 720 Td"]
-        for j, line in enumerate(lines):
-            if j:
-                ops.append(b"0 -14 Td")
-            hexes = "".join(f"{codes[ch]:02x}" for ch in line)
-            ops.append(f"<{hexes}> Tj".encode())
-        ops.append(b"ET")
-        stream = zlib.compress(b" ".join(ops))
-        objects.append(
-            f"<< /Length {len(stream)} /Filter /FlateDecode >>".encode()
-            + b"\nstream\n" + stream + b"\nendstream")
-    objects.append(
-        f"<< /Type /Font /Subtype /TrueType /BaseFont /AAAAAA+Subset "
-        f"/FirstChar 1 /LastChar {len(codes)} "
-        f"/ToUnicode {cmap_num} 0 R >>".encode())
-    bfchars = "\n".join(
-        f"<{code:02x}> <{ch.encode('utf-16-be').hex()}>"
-        for ch, code in codes.items())
-    cmap = (
-        "/CIDInit /ProcSet findresource begin\n"
-        "12 dict begin begincmap\n"
-        "/CMapName /Adobe-Identity-UCS def /CMapType 2 def\n"
-        "1 begincodespacerange <01> <ff> endcodespacerange\n"
-        f"{len(codes)} beginbfchar\n{bfchars}\nendbfchar\n"
-        "endcmap CMapName currentdict /CMap defineresource pop end end"
-    ).encode("latin-1")
-    objects.append(f"<< /Length {len(cmap)} >>".encode()
-                   + b"\nstream\n" + cmap + b"\nendstream")
-
-    buf = bytearray(b"%PDF-1.4\n%\xe2\xe3\xcf\xd3\n")
-    offsets = [0]
-    for num, body in enumerate(objects, start=1):
-        offsets.append(len(buf))
-        buf += f"{num} 0 obj\n".encode() + body + b"\nendobj\n"
-    xref_at = len(buf)
-    buf += f"xref\n0 {len(objects) + 1}\n".encode()
-    buf += b"0000000000 65535 f \n"
-    for off in offsets[1:]:
-        buf += f"{off:010d} 00000 n \n".encode()
-    buf += (
-        f"trailer\n<< /Size {len(objects) + 1} /Root 1 0 R >>\n"
-        f"startxref\n{xref_at}\n%%EOF\n".encode())
-    return bytes(buf)
-
-
-def make_pdf_bytes_objstm(pages: list[list[str]]) -> bytes:
-    """A PDF 1.5 layout: catalog, page tree and page dicts live inside
-    a compressed /Type /ObjStm object stream (content streams stay
-    file-level, as the spec requires streams outside ObjStm); the
-    trailer dict carries /Root as in an xref-stream file."""
-    n_pages = len(pages)
-    # numbering: 1 catalog, 2 pages, 3..(2+n) page dicts  (in ObjStm)
-    #            10.. content streams, font, objstm        (file level)
-    content_base = 10
-    font_num = content_base + n_pages
-    objstm_num = font_num + 1
-    kids = " ".join(f"{3 + i} 0 R" for i in range(n_pages))
-    embedded: list[tuple[int, bytes]] = [
-        (1, b"<< /Type /Catalog /Pages 2 0 R >>"),
-        (2, f"<< /Type /Pages /Kids [{kids}] /Count {n_pages} >>".encode()),
-    ]
-    for i in range(n_pages):
-        embedded.append((3 + i, (
-            f"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
-            f"/Resources << /Font << /F1 {font_num} 0 R >> >> "
-            f"/Contents {content_base + i} 0 R >>").encode()))
-    bodies = [b for _, b in embedded]
-    offs = []
-    at = 0
-    for b in bodies:
-        offs.append(at)
-        at += len(b) + 1
-    header = " ".join(f"{num} {off}"
-                      for (num, _), off in zip(embedded, offs)).encode()
-    payload = header + b"\n" + b"\n".join(bodies) + b"\n"
-    first = len(header) + 1
-    stm = zlib.compress(payload)
-
-    file_objs: list[tuple[int, bytes]] = []
-    for i, lines in enumerate(pages):
-        ops = [b"BT /F1 12 Tf 72 720 Td"]
-        for j, line in enumerate(lines):
-            if j:
-                ops.append(b"0 -14 Td")
-            ops.append(b"(" + _esc(line) + b") Tj")
-        ops.append(b"ET")
-        cstream = zlib.compress(b" ".join(ops))
-        file_objs.append((content_base + i, (
-            f"<< /Length {len(cstream)} /Filter /FlateDecode >>".encode()
-            + b"\nstream\n" + cstream + b"\nendstream")))
-    file_objs.append((font_num,
-                      b"<< /Type /Font /Subtype /Type1"
-                      b" /BaseFont /Helvetica >>"))
-    file_objs.append((objstm_num, (
-        f"<< /Type /ObjStm /N {len(embedded)} /First {first} "
-        f"/Filter /FlateDecode /Length {len(stm)} >>".encode()
-        + b"\nstream\n" + stm + b"\nendstream")))
-
-    buf = bytearray(b"%PDF-1.5\n%\xe2\xe3\xcf\xd3\n")
-    for num, body in file_objs:
-        buf += f"{num} 0 obj\n".encode() + body + b"\nendobj\n"
-    # xref-stream files carry /Root in the xref stream's dict; the
-    # parser reads it from the raw bytes, so a minimal trailer works
-    buf += (b"trailer\n<< /Root 1 0 R >>\n%%EOF\n")
-    return bytes(buf)
-
-
-def encrypt_pdf_bytes(pdf: bytes, mode: str = "rc4",
-                      user_pwd: bytes = b"",
-                      owner_pwd: bytes = b"o") -> bytes:
-    """Re-serialize a (writer-produced) PDF with its streams encrypted
-    under the standard security handler — the test/synth twin of
-    :func:`_maybe_decrypt`.  ``mode``: ``rc4`` (V2 R3), ``aesv2``
-    (V4 R4 /AESV2) or ``aes256`` (V5 R6).  A non-empty ``user_pwd``
-    produces a file the engine must REFUSE (PdfEncryptedError ->
-    status 'encrypted')."""
-    import hashlib
-    import struct
-
-    from .pdfcrypt import _PAD, StdSecurityHandler, _hash_2b
-    from .pdfcrypt import aes_cbc_encrypt, rc4 as _rc4k
-
-    objs = _scan_objects(pdf)
-    enc_num = max(objs) + 1
-    id0 = hashlib.md5(pdf[:256]).digest()
-    p = -44
-
-    def pad(pwd: bytes) -> bytes:
-        return (pwd + _PAD)[:32]
-
-    if mode in ("rc4", "aesv2"):
-        r = 3 if mode == "rc4" else 4
-        okey = hashlib.md5(pad(owner_pwd)).digest()
-        for _ in range(50):
-            okey = hashlib.md5(okey).digest()
-        okey = okey[:16]
-        o = _rc4k(okey, pad(user_pwd))
-        for i in range(1, 20):
-            o = _rc4k(bytes(b ^ i for b in okey), o)
-        h = hashlib.md5(pad(user_pwd) + o + struct.pack("<i", p) + id0)
-        key = h.digest()[:16]
-        for _ in range(50):
-            key = hashlib.md5(key[:16]).digest()[:16]
-        u = _rc4k(key, hashlib.md5(_PAD + id0).digest())
-        for i in range(1, 20):
-            u = _rc4k(bytes(b ^ i for b in key), u)
-        u = u + b"\x00" * 16
-        extra = (b" /CF << /StdCF << /CFM /AESV2 /Length 16 >> >> "
-                 b"/StmF /StdCF /StrF /StdCF" if mode == "aesv2" else b"")
-        enc_body = (b"<< /Filter /Standard /V %d /R %d /Length 128 "
-                    b"/P %d /O <%s> /U <%s>%s >>"
-                    % (2 if mode == "rc4" else 4, r, p,
-                       o.hex().encode(), u.hex().encode(), extra))
-    elif mode == "aes256":
-        file_key = hashlib.sha256(b"vps-file-key").digest()
-        vs, ks = b"VALSALT!", b"KEYSALT!"
-        u48 = _hash_2b(user_pwd, vs) + vs + ks
-        ue = aes_cbc_encrypt(_hash_2b(user_pwd, ks), b"\x00" * 16,
-                             file_key)
-        ovs, oks = b"OVALSLT!", b"OKEYSLT!"
-        o48 = _hash_2b(owner_pwd, ovs, u48) + ovs + oks
-        oe = aes_cbc_encrypt(_hash_2b(owner_pwd, oks, u48),
-                             b"\x00" * 16, file_key)
-        enc_body = (b"<< /Filter /Standard /V 5 /R 6 /Length 256 "
-                    b"/P %d /O <%s> /U <%s> /OE <%s> /UE <%s> >>"
-                    % (p, o48.hex().encode(), u48.hex().encode(),
-                       oe.hex().encode(), ue.hex().encode()))
-    else:
-        raise ValueError(f"unknown mode {mode!r}")
-
-    # a handler built from the dict itself does the per-object
-    # encryption (keys derive from the EMPTY-or-real user pwd exactly
-    # as the reader will re-derive them); for a passworded fixture we
-    # must encrypt with the real key, so rebuild the trailer data the
-    # handler reads (it only needs /ID)
-    trailer_stub = b"/ID [<" + id0.hex().encode() + b"> <" \
-        + id0.hex().encode() + b">]"
-    if user_pwd:
-        # derive the real-user-password key by temporarily building a
-        # handler whose verification is bypassed: re-derive inline
-        class _H(StdSecurityHandler):
-            def __init__(self):  # noqa: D401 - fixture shim
-                pass
-
-        hd = _H()
-        if mode == "aes256":
-            hd.key, hd.algo, hd.v5 = file_key, "aes", True
-        else:
-            h2 = hashlib.md5(pad(user_pwd) + o
-                             + struct.pack("<i", p) + id0)
-            k2 = h2.digest()[:16]
-            for _ in range(50):
-                k2 = hashlib.md5(k2[:16]).digest()[:16]
-            hd.key = k2
-            hd.algo = "aes" if mode == "aesv2" else "rc4"
-            hd.v5 = False
-    else:
-        hd = StdSecurityHandler(enc_body, trailer_stub)
-
-    order = [int(m.group(1)) for m in _OBJ_HEAD_RE.finditer(pdf)
-             if int(m.group(1)) in objs]
-    seen: list[int] = []
-    for num in order:
-        if num not in seen:
-            seen.append(num)
-    buf = bytearray(b"%PDF-1.6\n%\xe2\xe3\xcf\xd3\n")
-    offsets: dict[int, int] = {}
-    for num in seen:
-        body, stream = objs[num]
-        if stream is not None:
-            stream = hd.encrypt_stream(num, 0, stream)
-            body = re.sub(rb"/Length\s+\d+",
-                          b"/Length %d" % len(stream), body)
-        offsets[num] = len(buf)
-        buf += b"%d 0 obj\n" % num + body
-        if stream is not None:
-            buf += b"\nstream\n" + stream + b"\nendstream"
-        buf += b"\nendobj\n"
-    offsets[enc_num] = len(buf)
-    buf += b"%d 0 obj\n" % enc_num + enc_body + b"\nendobj\n"
-    nums = sorted(offsets)
-    xref_at = len(buf)
-    buf += b"xref\n"
-    buf += b"0 1\n0000000000 65535 f \n"
-    for num in nums:
-        buf += b"%d 1\n%010d 00000 n \n" % (num, offsets[num])
-    buf += (b"trailer\n<< /Size %d /Root 1 0 R /Encrypt %d 0 R "
-            % (max(nums) + 1, enc_num) + trailer_stub
-            + b" >>\nstartxref\n%d\n%%%%EOF\n" % xref_at)
-    return bytes(buf)

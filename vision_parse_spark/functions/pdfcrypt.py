@@ -448,16 +448,3 @@ class StdSecurityHandler:
         if 1 <= pad <= 16 and pt[-pad:] == bytes([pad]) * pad:
             pt = pt[:-pad]
         return pt
-
-    def encrypt_stream(self, num: int, gen: int, plain: bytes) -> bytes:
-        """Inverse of :meth:`decrypt_stream` — used by the test/synth
-        fixture builders only."""
-        if self.algo == "none":
-            return plain
-        key = self._object_key(num, gen)
-        if self.algo == "rc4":
-            return rc4(key, plain)
-        pad = 16 - (len(plain) % 16)
-        iv = hashlib.md5(struct.pack("<ii", num, gen)).digest()
-        return iv + aes_cbc_encrypt(key, iv,
-                                    plain + bytes([pad]) * pad)
