@@ -1906,7 +1906,8 @@ def oracle_sql() -> dict[str, str]:
     # curation composition (gate-first semantics)
     def _mh_pairs_cte(src: str = "documents") -> str:
         return f"""toks AS (
-          SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS t
+          SELECT doc_id, list_filter(string_split_regex(lower(trim(text)), '\\s+'),
+                                     x -> x != '') AS t
           FROM {src}),
         sh AS (
           SELECT doc_id,
@@ -1970,7 +1971,8 @@ def oracle_sql() -> dict[str, str]:
     # only new x corpus collisions verified, mirroring the operator
     minhash_incremental_sql = f"""
         WITH toks AS (
-          SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS t
+          SELECT doc_id, list_filter(string_split_regex(lower(trim(text)), '\\s+'),
+                                     x -> x != '') AS t
           FROM documents),
         sh AS (
           SELECT doc_id,
@@ -2188,7 +2190,8 @@ def oracle_sql() -> dict[str, str]:
         "ngram_jaccard": r"""
             WITH toks AS (
               SELECT doc_id,
-                     string_split_regex(lower(trim(text)), '\s+') AS t
+                     list_filter(string_split_regex(lower(trim(text)), '\s+'),
+                                 x -> x != '') AS t
               FROM documents),
             sh AS (
               SELECT doc_id,
@@ -2473,7 +2476,8 @@ def oracle_sql() -> dict[str, str]:
         "minhash_signature": """
             WITH toks AS (
               SELECT doc_id,
-                     string_split_regex(lower(trim(text)), '\\s+') AS t
+                     list_filter(string_split_regex(lower(trim(text)), '\\s+'),
+                                 x -> x != '') AS t
               FROM documents),
             sh AS (
               SELECT doc_id,
@@ -2547,7 +2551,8 @@ def oracle_sql() -> dict[str, str]:
         "decontaminate": f"""
             WITH toks AS (
               SELECT doc_id,
-                     string_split_regex(lower(trim(text)), '\\s+') AS t
+                     list_filter(string_split_regex(lower(trim(text)), '\\s+'),
+                                 x -> x != '') AS t
               FROM documents),
             sh AS (
               SELECT doc_id,
@@ -2575,7 +2580,8 @@ def oracle_sql() -> dict[str, str]:
         "contamination_hits": f"""
             WITH toks AS (
               SELECT doc_id,
-                     string_split_regex(lower(trim(text)), '\\s+') AS t
+                     list_filter(string_split_regex(lower(trim(text)), '\\s+'),
+                                 x -> x != '') AS t
               FROM documents),
             sh AS (
               SELECT doc_id,

@@ -77,7 +77,9 @@ def test_arrow_shingles_equal_catalyst_shingles(spark):
     docs = spark.read.parquet(
         "/root/testdata/sf0.001/documents.parquet"
     ).select("doc_id", "text").union(spark.createDataFrame(
-        [(9001, ""), (9002, "   "), (9003, "one"), (9004, "two words")],
+        [(9001, ""), (9002, "   "), (9003, "one"), (9004, "two words"),
+         (9005, "a b c\n"), (9006, "\ta b c d"), (9007, "p q\n\n"),
+         (9008, "\xa0abc def ghi"), (9009, "x y\u2003z w")],
         ["doc_id", "text"]))
     for n in (3, 5):
         cat = {(r.doc_id, tuple(r.shingles)) for r in

@@ -21,6 +21,7 @@ from writers import (
     make_pdf_bytes_annots,
     make_pdf_bytes_cmap,
     make_pdf_bytes_objstm,
+    make_pdf_bytes_xobject,
 )
 
 
@@ -337,6 +338,54 @@ def test_dctdecode_image_xobject_decodes():
     assert arr.shape == (48, 64, 3)
     # lossy codec: near-equal, not byte-equal
     assert np.abs(arr.astype(int) - img.astype(int)).mean() < 4
+
+
+def test_header_truncated_jpeg_xobject_is_a_skip():
+    """A JPEG XObject cut anywhere is a visible skip or a decoded
+    image, never an exception out of extract_pdf_images (which would
+    fail the whole row): every cut inside its header segments
+    (DQT/DHT/SOF/SOS) gives the ``jpeg_decode_failed`` marker."""
+    import numpy as np
+
+    from vision_parse_spark.functions.pdf import extract_pdf_images
+
+    img = np.linspace(40, 220, 48 * 64).reshape(48, 64).astype(np.uint8)
+    jpg = encode_jpeg(img, 90)
+    sos = jpg.rindex(b"\xff\xda")
+    scan = sos + 2 + int.from_bytes(jpg[sos + 2:sos + 4], "big")
+    entries = ("/Width 64 /Height 48 /ColorSpace /DeviceGray "
+               "/BitsPerComponent 8 /Filter /DCTDecode")
+    for k in range(1, len(jpg)):
+        skipped = []
+        ims = extract_pdf_images(make_pdf_bytes_xobject(jpg[:k], entries),
+                                 skipped_out=skipped)
+        assert len(ims) + len(skipped) == 1, k
+        if k <= scan:
+            assert not ims, k
+            assert skipped[0][:2] == (0, "Im0")
+            assert skipped[0][2].startswith("jpeg_decode_failed:"), k
+
+
+def test_missing_image_xobject_is_reported():
+    """A PDF cut inside its image object keeps its page text and
+    reports the lost image per row instead of dropping it silently."""
+    import numpy as np
+
+    from vision_parse_spark.functions.pdf import extract_pdf_images
+
+    img = np.linspace(40, 220, 24 * 32 * 3).reshape(24, 32, 3) \
+        .astype(np.uint8)
+    pdf = make_pdf_bytes([["hello page", "second"]], images={0: img})
+    ref = pdf.index(b"/XObject << /Im0 ")
+    num = int(pdf[ref + 17:].split()[0])
+    start = pdf.index(b"\n%d 0 obj" % num) + 1
+    body = pdf.index(b"stream", start)
+    for k in range(start, body):
+        cut = pdf[:k]
+        skipped = []
+        assert extract_pdf_images(cut, skipped_out=skipped) == []
+        assert skipped == [(0, "Im0", "xobject_missing")], k
+        assert extract_pdf_text(cut) == "hello page\nsecond"
 
 
 def test_ascii85_filter():

@@ -97,12 +97,23 @@ def test_rouge_kernel_equals_counter_reference(spark):
 
 # --- MinHash Arrow kernel vs the Catalyst reference ----------------
 
+# edge and non-ASCII whitespace: Spark's trim strips only spaces, its
+# split keeps edge empties, Java's \s is ASCII-only (U+00A0 and U+2003
+# are token characters)
+EDGE_WS_DOCS = [
+    (9101, "a b c\n"), (9102, "\ta b c d"), (9103, "p q\n\n"),
+    (9104, "\xa0abc def ghi"), (9105, "x y\u2003z w"),
+]
+
+
 def test_minhash_udf_equals_catalyst(spark):
     from vision_parse_spark.operators.dedup import (
         make_minhash_udf, with_minhash)
 
     d = (spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-         .select("doc_id", "text").limit(60))
+         .select("doc_id", "text").limit(60)
+         .union(spark.createDataFrame(EDGE_WS_DOCS,
+                                      "doc_id long, text string")))
     cat = {
         r["doc_id"]: list(r["minhash"])
         for r in with_minhash(d, "text", 32, 3).select(
@@ -376,14 +387,14 @@ def test_minhash_keeps_split_input_unshuffled(spark, monkeypatch,
                     spark.sparkContext.defaultParallelism)
     monkeypatch.setattr(session, "SPREAD_MIN_BYTES", 1 << 10)
     plans = []
-    real = dedup._banded
+    real = dedup._signed
 
     def spy(*a, **k):
         out = real(*a, **k)
         plans.append(out._jdf.queryExecution().executedPlan().toString())
         return out
 
-    monkeypatch.setattr(dedup, "_banded", spy)
+    monkeypatch.setattr(dedup, "_signed", spy)
     dedup.minhash_lsh_pairs(d).collect()
     assert "ArrowEvalPython" in plans[0]  # the signature kernel
     assert "RoundRobinPartitioning" not in plans[0]
@@ -412,3 +423,25 @@ def test_curate_leaves_small_input_unshuffled(spark, materialized):
     out = curate(spark.read.parquet(f"{SF}/documents.parquet"))
     out.collect()
     assert not materialized | _round_robins(out)
+
+
+def test_curate_pass_runs_at_most_ten_jobs(spark, tmp_path):
+    """One curate pass is one featurization pass: the gated checkpoint
+    (quality filter, one gate-and-signature kernel, one filter) is its
+    only eager job, and the LSH body after it runs lazily inside the
+    sink's jobs: no banding cache and no candidate checkpoint."""
+    from vision_parse_spark.operators.curation import curate
+
+    path = str(tmp_path / "docs.parquet")
+    (spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
+     .select("doc_id", "text").orderBy("doc_id").limit(2000)
+     .repartition(4).write.parquet(path))
+    d = spark.read.parquet(path)
+    sc = spark.sparkContext
+    sc.setJobGroup("curate-pass", "one curate pass")
+    try:
+        curate(d).write.format("noop").mode("overwrite").save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("curate-pass")
+    assert 0 < len(jobs) <= 10, f"{len(jobs)} jobs"

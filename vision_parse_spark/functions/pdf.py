@@ -1142,6 +1142,9 @@ def extract_pdf_images(data: bytes,
         for name, num in sorted(_named_refs(res, b"XObject").items()):
             obj = objs.get(num)
             if obj is None or obj.stream is None:
+                # a truncated file loses the object: its image is gone,
+                # and that must show per row
+                skip(page_idx, name, "xobject_missing")
                 continue
             body = obj.body
             if not re.search(rb"/Subtype\s*/Image\b", body):
@@ -1189,7 +1192,10 @@ def extract_pdf_images(data: bytes,
 
                     out.append((page_idx, name.decode("latin-1"),
                                 decode_jpeg(raw)))
-                except (ValueError, NotImplementedError) as e:
+                except (ValueError, NotImplementedError, struct.error,
+                        IndexError) as e:
+                    # struct.error / IndexError: a stream cut inside
+                    # its DQT/DHT/SOF/SOS header segments
                     skip(page_idx, name, f"jpeg_decode_failed:{e}")
                 continue
             if b"CCITTFaxDecode" in filters or b"CCF" in filters:

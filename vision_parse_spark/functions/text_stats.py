@@ -45,11 +45,13 @@ JAVA_WS_RE = _re.compile(r"[ \t\n\x0b\f\r]+")
 
 def java_ws_tokens(text) -> list:
     """Python twin of :func:`ws_tokens_sql` for Arrow kernels:
-    lower / trim / split on the Java ``\\s+`` class / drop empties —
+    lower / split on the Java ``\\s+`` class / drop empties —
     token-identical to the Catalyst expression (the DuckDB oracles
-    of the kernels that use it replay the SQL recipe)."""
-    return [t for t in JAVA_WS_RE.split((text or "").strip().lower())
-            if t]
+    of the kernels that use it replay the SQL recipe).  No strip:
+    Spark's ``trim`` removes only spaces, which the split drops
+    anyway, while Python's ``str.strip`` would also remove Unicode
+    whitespace such as U+00A0 that Spark keeps inside a token."""
+    return [t for t in JAVA_WS_RE.split((text or "").lower()) if t]
 
 
 def word_ngrams_udf(n: int):

@@ -14,24 +14,41 @@ Every stage is individually oracled (`quality_score`,
 ``curate`` is their composition and is oracled as such — DuckDB
 replays the full pipeline end to end.
 
-Scale notes: the two filter gates are semi-joins against narrow
-aggregates that prune the corpus BEFORE the LSH shuffle (the only
-heavy exchange) — the dedup stage therefore reads ONLY gate
-survivors, through ``minhash_dedup``: the md5 MinHash construction
-the DuckDB oracle replays step for step, with its signatures computed
-by an Arrow kernel.  The scrub is a codegen'd Project over dedup
-survivors only.  Filter order is the plan: cheap-and-selective first.
+Scale notes: the gates are one featurization pass.  The Catalyst
+quality filter runs first; one Arrow kernel then tokenizes each
+surviving doc ONCE and returns its bigram census and its md5 MinHash
+signature (the construction the DuckDB oracle replays step for step);
+the duplicate-line threshold joins the quality filter before it and
+one filter after it applies the top-bigram threshold; the gated
+``(id, text, sig)`` relation is checkpointed once.  The LSH stage
+(the only heavy exchange) reads that checkpoint, so it signs nothing
+again, and everything after it is lazy: banding, the bucket
+self-join, the verify and the scrub (a codegen'd Project over dedup
+survivors only) run in the sink's own jobs.
 """
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
 from ..functions.scrub import scrub_pii
+from ..functions.text_stats import java_ws_tokens
 from ..session import spread
-from .dedup import minhash_dedup
-from .repetition import repetition_stats
+from .dedup import (_lsh_pairs, _without_losers, minhash_signatures,
+                    shingles_of)
+from .repetition import (bigram_census, dup_line_frac_col, lines_col,
+                         top_bigram_frac_col)
+
+# the standalone forms of curate's stages, importable from here under
+# the names perfbench's traced run wraps
+from .dedup import minhash_dedup  # noqa: F401
+from .repetition import repetition_stats  # noqa: F401
+
+# the MinHash construction ``minhash_dedup`` defaults to
+_NUM_PERM, _BANDS, _SHINGLE_N = 32, 16, 3
 
 
 def quality_e4_col(text_col: str = "text") -> Column:
@@ -48,6 +65,34 @@ def quality_e4_col(text_col: str = "text") -> Column:
     return F.floor((len_ok * 0.5 + stop_ok * 0.5) * 10000).cast("long")
 
 
+def _gate_features_udf():
+    """Arrow kernel of the gate pass: each doc is tokenized ONCE with
+    ``java_ws_tokens``; returns ``(bigram_top, bigram_total, sig)`` —
+    the :func:`~.repetition.bigram_census` and the
+    :func:`~.dedup.minhash_signatures` of the doc's shingles, the same
+    integers ``repetition_stats`` and ``make_minhash_udf`` give."""
+
+    @F.pandas_udf(StructType([
+        StructField("bigram_top", LongType()),
+        StructField("bigram_total", LongType()),
+        StructField("sig", ArrayType(LongType())),
+    ]))
+    def gate_features(texts: pd.Series) -> pd.DataFrame:
+        toks = [java_ws_tokens(t) for t in texts.fillna("")]
+        census = [bigram_census(t) for t in toks]
+        out = pd.DataFrame(census, columns=["bigram_top", "bigram_total"],
+                           index=texts.index)
+        out["sig"] = pd.Series(minhash_signatures(
+            [shingles_of(t, _SHINGLE_N) for t in toks], _NUM_PERM),
+            index=texts.index, dtype=object)
+        return out
+
+    # guide §4.4: the repetition filter reads this struct; a
+    # deterministic UDF would be inlined into the pushed-down filter
+    # and evaluated twice
+    return gate_features.asNondeterministic()
+
+
 def _gated(
     df: DataFrame,
     id_col: str,
@@ -56,34 +101,42 @@ def _gated(
     max_dup_line_frac: float,
     max_top_bigram_frac: float,
 ) -> DataFrame:
-    """``(id_col, text_col)`` of the documents that pass the quality
-    and repetition gates, as two semi-joins against narrow aggregates,
-    materialized ONCE: the stages after the gates re-read it (the LSH
-    dedup three times: signature pass + both sides of the verify join;
-    decontamination twice: gram stream + the anti-join back), and
-    without the barrier each read would recompute the repetition
-    explode-agg and quality regexes (measured 1.9x slower at sf0.1).
+    """``(id_col, text_col, sig)`` of the documents that pass the
+    quality and repetition gates, ``sig`` their MinHash signature:
+    ONE Catalyst filter (quality score and duplicate-line fraction),
+    then ONE projection (the gate kernel, which only sees the docs that
+    filter keeps) and ONE filter (top-bigram fraction), each threshold
+    applied with ``repetition_stats``' expressions; materialized ONCE:
+    the stages after the gates re-read it (the LSH self-join sides and
+    verify; decontamination's gram stream and anti-join back).
     localCheckpoint (not persist) so the context cleaner reclaims it
     on GC."""
     n_tok = F.size(F.regexp_extract_all(text_col,
                                         F.lit("[A-Za-z0-9]+"), 0))
-    qual = (
-        df.filter(n_tok > 0)
-        .filter(quality_e4_col(text_col) >= min_quality_e4)
-        .select(id_col)
-    )
-    rep = (
-        repetition_stats(df, id_col, text_col)
-        .filter((F.col("dup_line_frac") <= max_dup_line_frac)
-                & (F.col("top_bigram_frac") <= max_top_bigram_frac))
-        .select(id_col)
-    )
+    feats = _gate_features_udf()
     gated = (
-        df.select(id_col, text_col)
-        .join(qual, id_col, "left_semi")
-        .join(rep, id_col, "left_semi")
+        df.filter((n_tok > 0)
+                  & (quality_e4_col(text_col) >= min_quality_e4)
+                  & (dup_line_frac_col(lines_col(text_col))
+                     <= max_dup_line_frac))
+        .select(id_col, text_col, feats(F.col(text_col)).alias("_f"))
+        .filter(top_bigram_frac_col(F.col("_f.bigram_top"),
+                                    F.col("_f.bigram_total"))
+                <= max_top_bigram_frac)
+        .select(id_col, text_col, F.col("_f.sig").alias("sig"))
     )
     return gated.localCheckpoint(eager=True)
+
+
+def _near_dup_survivors(signed: DataFrame, id_col: str, text_col: str,
+                        jaccard_threshold: float) -> DataFrame:
+    """``(id_col, text_col)`` of a gated, signed checkpoint minus the
+    larger id of every verified near-dup pair: ``minhash_dedup`` with
+    its default construction, over signatures already computed."""
+    pairs = _lsh_pairs(signed, id_col, text_col, _NUM_PERM, _BANDS,
+                       _SHINGLE_N, jaccard_threshold)
+    return _without_losers(signed.select(id_col, text_col), pairs,
+                           id_col)
 
 
 def curate(
@@ -107,12 +160,15 @@ def curate(
     ``df`` goes through :func:`~vision_parse_spark.session.spread`
     once, before the gates' per-row regexes; the nested repetition
     and LSH stages apply the same policy to what they read, which
-    adds no second exchange over an input that is already spread."""
+    adds no second exchange over an input that is already spread.
+
+    One eager job (the gated checkpoint); the near-dedup and the scrub
+    are lazy and run in the caller's action."""
     gated = _gated(spread(df), id_col, text_col, min_quality_e4,
                    max_dup_line_frac, max_top_bigram_frac)
-    survivors = minhash_dedup(
-        gated, id_col, text_col, jaccard_threshold=jaccard_threshold)
-    return scrub_pii(survivors, text_col)
+    return scrub_pii(
+        _near_dup_survivors(gated, id_col, text_col, jaccard_threshold),
+        text_col)
 
 
 def curate_full(
@@ -174,6 +230,8 @@ def curate_full(
     from .spans import remove_frequent_spans
 
     df, embeddings = spread(df), spread(embeddings)
+    # gated rows carry their MinHash signature through decontamination
+    # and SemDeDup to the LSH stage
     gated = _gated(df, id_col, text_col, min_quality_e4,
                    max_dup_line_frac, max_top_bigram_frac)
     decon = decontaminate(gated, eval_df, id_col, text_col,
@@ -200,12 +258,12 @@ def curate_full(
     sem_surv = decon.join(
         sem_dropped.select(F.col(vec_id_col).alias(id_col)),
         id_col, "left_anti")
-    # the LSH dedup reads its input 3x (signature + both verify
-    # sides) and the span pass re-reads survivors: barrier once
+    # the LSH dedup reads its input 3x (both self-join sides + the
+    # verify) and the span pass re-reads survivors: barrier once
     sem_surv = sem_surv.localCheckpoint(eager=True)
 
-    deduped = minhash_dedup(sem_surv, id_col, text_col,
-                            jaccard_threshold=jaccard_threshold)
+    deduped = _near_dup_survivors(sem_surv, id_col, text_col,
+                                  jaccard_threshold)
     cut = remove_frequent_spans(deduped, n=span_n, max_df=span_max_df,
                                 id_col=id_col, text_col=text_col)
     return scrub_pii(

@@ -7,11 +7,16 @@ pandas UDFs; no row-at-a-time Python.
 
 Scale design notes:
 * exact dedup: one hash-shuffle on md5(text) with map-side partial agg.
-* MinHash+LSH: per-row md5 signature (narrow), explode to (band,
-  bucket) (x BANDS rows), shuffle on bucket, self-join inside buckets
-  only — the classic sub-quadratic near-dup join.  Candidate
-  verification is a cheap exact-jaccard filter on the pair.  One
-  construction, replayed step for step by the DuckDB oracle.
+* MinHash+LSH: per-row md5 signature (narrow Arrow kernel), signed
+  input checkpointed once; everything after it is lazy: bands sliced
+  from the signature in Catalyst, explode to (band, bucket) (x BANDS
+  rows), shuffle on bucket, self-join inside buckets only — the
+  classic sub-quadratic near-dup join.  Candidate verification joins
+  the pair's texts back and counts the two shingle sets' intersection
+  and union in one Arrow pair kernel; the Jaccard threshold is a
+  Catalyst filter.  One tokenization (``ws_tokens_sql`` and its Python
+  twin ``java_ws_tokens``) and one construction, replayed step for
+  step by the DuckDB oracle.
 * SimHash: 64-bit signature via one Arrow-batched pandas UDF (numpy
   bit ops); near-dups = Manku multi-block bucket tables (~32-bit
   keys), exact-popcount verified.
@@ -29,7 +34,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
 from ..functions.components import min_labels
-from ..functions.text_stats import java_ws_tokens
+from ..functions.text_stats import java_ws_tokens, ws_tokens_sql
 from ..session import spread
 
 # ---------------------------------------------------------------------------
@@ -57,8 +62,10 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
 def with_shingles(df: DataFrame, text_col: str, n: int = 3,
                   out_col: str = "shingles") -> DataFrame:
     """Word n-gram shingles as a distinct array column — all Catalyst
-    (split / transform / slice), no UDF."""
-    toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
+    (the shared :func:`ws_tokens_sql` stream, transform / slice), no
+    UDF.  The reference the Arrow kernels' gram sets are tested
+    against."""
+    toks = F.expr(ws_tokens_sql(text_col))
     # number of n-grams = size - n + 1, i.e. i in 0 .. size-n inclusive
     shingles = F.expr(
         f"array_distinct(transform(sequence(0, size(_toks) - {n}), "
@@ -162,24 +169,27 @@ def with_minhash(df: DataFrame, text_col: str = "text", num_perm: int = 32,
     return hashed.withColumn(out_col, mins).drop("_sh", "_h")
 
 
+def shingles_of(toks: list, n: int) -> list:
+    """Distinct word ``n``-grams of one token list, in first-occurrence
+    order (``array_distinct``'s order); a list shorter than ``n`` is
+    one joined gram, as in :func:`with_shingles`."""
+    if len(toks) < n:
+        return [" ".join(toks)]
+    return list(dict.fromkeys(
+        " ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)
+    ))
+
+
 def _shingle_lists(texts: pd.Series, n: int) -> pd.Series:
-    """Vectorized word n-gram shingling in pandas (distinct per doc)."""
-    toks = texts.fillna("").str.lower().str.findall(r"\S+")
-
-    def grams(ts: list) -> list:
-        if len(ts) < n:
-            return [" ".join(ts)]
-        return list(dict.fromkeys(
-            " ".join(ts[i : i + n]) for i in range(len(ts) - n + 1)
-        ))
-
-    return toks.map(grams)
+    """:func:`shingles_of` over the :func:`java_ws_tokens` stream of
+    each doc of an Arrow batch."""
+    return texts.fillna("").map(lambda t: shingles_of(java_ws_tokens(t), n))
 
 
 def make_shingle_udf(n: int = 3):
     """Arrow-batched shingle UDF: distinct word n-grams per doc, the
-    EXACT gram set ``with_shingles`` produces (lower/trim/\\s+ split,
-    short docs collapse to one joined gram) — Spark's interpreted
+    EXACT gram set ``with_shingles`` produces (the ``ws_tokens_sql``
+    stream, short docs collapse to one joined gram) — Spark's interpreted
     higher-order array lambdas are ~10x slower at this work, so ops
     that only need the gram SET (decontamination) explode this
     instead."""
@@ -199,72 +209,112 @@ def make_shingle_udf(n: int = 3):
     return shingles.asNondeterministic()
 
 
-def make_minhash_udf(num_perm: int = 32, shingle_n: int = 3):
-    """Arrow-batched MinHash kernel producing the EXACT signature
-    integers of :func:`with_minhash`: per-doc distinct shingles (the
-    ``_shingle_lists`` recipe — gram sets identical to
-    ``with_shingles`` by construction, pytest-asserted), md5-hex
-    15-digit hashes (``int(md5(s).hexdigest()[:15], 16) % P`` ==
+def minhash_signatures(sh_lists, num_perm: int) -> list:
+    """The ``num_perm``-long md5 MinHash signature of each shingle list
+    of a batch, as lists of ints: the EXACT integers of
+    :func:`with_minhash`.  md5-hex 15-digit hashes
+    (``int(md5(s).hexdigest()[:15], 16) % P`` ==
     ``conv(substring(md5(s),1,15),16,10) % P`` — integer arithmetic,
-    no float), and the same affine permutations as one
-    (num_perm x total_shingles) matrix op per batch reduced with a
-    segmented min.  Each UNIQUE shingle is hashed once per batch and
-    mapped back.  All values are exact int64 (``a*h + b < 2^62``), so
-    the bucket strings built from these signatures are byte-identical
-    to the Catalyst and DuckDB constructions."""
+    no float), and the affine permutations as one
+    (num_perm x total_shingles) matrix op reduced with a segmented
+    min.  Each UNIQUE shingle is hashed once per batch and mapped
+    back.  All values are exact int64 (``a*h + b < 2^62``), so the
+    bucket strings built from these signatures are byte-identical to
+    the Catalyst and DuckDB constructions.  Every list must be
+    non-empty (:func:`shingles_of` never returns an empty one)."""
+    if not len(sh_lists):
+        return []
+    a = np.array(_PERMS_A[:num_perm], dtype=np.int64)
+    b = np.array(_PERMS_B[:num_perm], dtype=np.int64)
+    lengths = np.fromiter(map(len, sh_lists), dtype=np.int64,
+                          count=len(sh_lists))
+    flat = [s for lst in sh_lists for s in lst]
+    # factorize (hash-based) beats np.unique (sort-based) ~10x on
+    # large object arrays; each unique shingle is hashed once
+    inv, uniq = pd.factorize(np.array(flat, dtype=object))
+    hu = np.empty(len(uniq), dtype=np.int64)
+    for i, s in enumerate(uniq):
+        hu[i] = int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15],
+                    16) % _PRIME
+    h = hu[inv]
+    perm = (a[:, None] * h[None, :] + b[:, None]) % _PRIME
+    offsets = np.concatenate([[0], np.cumsum(lengths)[:-1]])
+    return np.minimum.reduceat(perm, offsets, axis=1).T.tolist()
+
+
+def make_minhash_udf(num_perm: int = 32, shingle_n: int = 3):
+    """Arrow-batched MinHash kernel: :func:`minhash_signatures` of the
+    per-doc :func:`shingles_of` gram sets (identical to
+    ``with_shingles`` by construction, pytest-asserted)."""
     from pyspark.sql.types import ArrayType, LongType
 
     _check_num_perm(num_perm)
-    a = np.array(_PERMS_A[:num_perm], dtype=np.int64)
-    b = np.array(_PERMS_B[:num_perm], dtype=np.int64)
 
     @F.pandas_udf(ArrayType(LongType()))
     def minhash_md5(texts: pd.Series) -> pd.Series:
-        sh = _shingle_lists(texts, shingle_n)
-        lengths = sh.map(len).to_numpy()
-        flat = [s for lst in sh for s in lst]
-        if not flat:
-            return pd.Series([[]] * len(texts), index=texts.index)
-        # factorize (hash-based) beats np.unique (sort-based) ~10x on
-        # large object arrays; each unique shingle is hashed once
-        inv, uniq = pd.factorize(np.array(flat, dtype=object))
-        hu = np.empty(len(uniq), dtype=np.int64)
-        for i, s in enumerate(uniq):
-            hu[i] = int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15],
-                        16) % _PRIME
-        h = hu[inv]
-        perm = (a[:, None] * h[None, :] + b[:, None]) % _PRIME
-        offsets = np.concatenate([[0], np.cumsum(lengths)[:-1]])
-        mins = np.minimum.reduceat(perm, offsets, axis=1)
-        return pd.Series(mins.T.tolist(), index=texts.index)
+        return pd.Series(minhash_signatures(
+            _shingle_lists(texts, shingle_n), num_perm), index=texts.index,
+            dtype=object)
 
     # guide §4.4 duplication guard — see make_shingle_udf
     return minhash_md5.asNondeterministic()
 
 
-def _banded(src: DataFrame, id_col: str, text_col: str, num_perm: int,
-            bands: int, shingle_n: int) -> DataFrame:
-    """``(id_col, band, bucket)`` rows: the signature sliced into
+def make_overlap_udf(shingle_n: int = 3):
+    """Arrow-batched pair kernel: ``(inter, union)`` — the sizes of the
+    intersection and union of two docs' distinct :func:`shingles_of`
+    gram sets, the integers ``array_intersect`` / ``array_union`` give
+    over :func:`with_shingles`.  A text that recurs in the batch (a doc
+    in several candidate pairs) is shingled once."""
+
+    @F.pandas_udf(StructType([StructField("inter", LongType()),
+                              StructField("union", LongType())]))
+    def overlap(a: pd.Series, b: pd.Series) -> pd.DataFrame:
+        memo: dict = {}
+
+        def grams(t) -> set:
+            g = memo.get(t)
+            if g is None:
+                g = memo[t] = set(shingles_of(java_ws_tokens(t),
+                                              shingle_n))
+            return g
+
+        counts = []
+        for ta, tb in zip(a, b):
+            ga, gb = grams(ta), grams(tb)
+            inter = len(ga & gb)
+            counts.append((inter, len(ga) + len(gb) - inter))
+        return pd.DataFrame(counts, columns=["inter", "union"],
+                            index=a.index)
+
+    # guide §4.4: the threshold filter reads this struct; a
+    # deterministic UDF would be inlined into the pushed-down filter
+    # and evaluated twice
+    return overlap.asNondeterministic()
+
+
+def _signed(src: DataFrame, id_col: str, text_col: str, num_perm: int,
+            shingle_n: int) -> DataFrame:
+    """``(id_col, text_col, sig)``: ``src`` with its MinHash signature.
+    ``src`` goes through :func:`~vision_parse_spark.session.spread`
+    before the signature kernel, so a big source that arrives as one
+    split is not signed on one core."""
+    mh_udf = make_minhash_udf(num_perm, shingle_n)
+    return spread(src).select(id_col, text_col,
+                              mh_udf(F.col(text_col)).alias("sig"))
+
+
+def _banded(signed: DataFrame, id_col: str, num_perm: int,
+            bands: int) -> DataFrame:
+    """``(id_col, band, bucket)`` rows: the ``sig`` column sliced into
     ``bands`` runs of ``num_perm // bands`` values, each run joined
     into a string bucket key (the key the DuckDB replay joins on).
-    Only ids cross the bucket shuffle; shingles are joined back for
-    candidate pairs by :func:`_verified`.  ``src`` goes through
-    :func:`~vision_parse_spark.session.spread` before the signature
-    kernel, so a big source that arrives as one split is not
-    signed on one core."""
-    rows_per_band = num_perm // bands
-    mh_udf = make_minhash_udf(num_perm, shingle_n)
-    return (
-        spread(src).withColumn("minhash", mh_udf(F.col(text_col)))
-        .select(
-            F.col(id_col),
-            F.posexplode(F.expr(
-                f"transform(sequence(0, {bands - 1}), "
-                f"b -> concat_ws(',', slice(minhash, "
-                f"b * {rows_per_band} + 1, {rows_per_band})))"
-            )).alias("band", "bucket"),
-        )
-    )
+    Catalyst only; only ids cross the bucket shuffle."""
+    rows = num_perm // bands
+    keys = [F.concat_ws(",", F.slice("sig", b * rows + 1, rows))
+            for b in range(bands)]
+    return signed.select(
+        F.col(id_col), F.posexplode(F.array(*keys)).alias("band", "bucket"))
 
 
 def _verified(cand: DataFrame, left: DataFrame, right: DataFrame,
@@ -272,31 +322,58 @@ def _verified(cand: DataFrame, left: DataFrame, right: DataFrame,
               jaccard_threshold: float, a: str = "id_a",
               b: str = "id_b") -> DataFrame:
     """Exact shingle-Jaccard verify of candidate pairs ``(a, b)``:
-    ``a`` ids index ``left``, ``b`` ids index ``right``.  Shingles are
-    computed for CANDIDATE rows only (each side semi-joined to the
-    materialized candidate id set first, guide §1.2 per-task work),
-    with the same ``with_shingles`` expression the signature's gram
-    sets are derived from.  No explicit broadcast hint: ``cand`` is
-    materialized, so AQE has real stats — it broadcasts the id set
-    when small and falls back to a shuffle join when a pathological
-    corpus makes it big.  Returns ``(a, b, jaccard)`` rows at or above
-    the threshold."""
+    ``a`` ids index ``left``, ``b`` ids index ``right``.  Each pair
+    gets both texts joined back by id and goes through the
+    :func:`make_overlap_udf` pair kernel; ``round(inter / union, 6)
+    >= threshold`` stays a Catalyst expression, the arithmetic of the
+    ``array_intersect`` / ``array_union`` verify it replaces and of
+    the DuckDB replay.  No explicit broadcast hint: AQE picks each
+    join's strategy from the sizes it sees, so a pathological corpus
+    falls back to shuffle joins.  Returns ``(a, b, jaccard)`` rows at
+    or above the threshold."""
     def side(df: DataFrame, col: str) -> DataFrame:
-        return with_shingles(
-            df.select(id_col, text_col).join(
-                cand.select(F.col(col).alias(id_col)).distinct(),
-                id_col, "left_semi"),
-            text_col, shingle_n, f"sh_{col}",
-        ).select(F.col(id_col).alias(col), f"sh_{col}")
+        return df.select(F.col(id_col).alias(col),
+                         F.col(text_col).alias(f"t_{col}"))
 
-    inter = F.size(F.array_intersect(f"sh_{a}", f"sh_{b}"))
-    union = F.size(F.array_union(f"sh_{a}", f"sh_{b}"))
+    overlap = make_overlap_udf(shingle_n)
+    inter, union = F.col("_o.inter"), F.col("_o.union")
     jac = F.when(union > 0, inter / union).otherwise(F.lit(0.0))
     return (
         cand.join(side(left, a), a).join(side(right, b), b)
+        .select(a, b, overlap(f"t_{a}", f"t_{b}").alias("_o"))
         .select(a, b, F.round(jac, 6).alias("jaccard"))
         .filter(F.col("jaccard") >= jaccard_threshold)
     )
+
+
+def _lsh_pairs(signed: DataFrame, id_col: str = "doc_id",
+               text_col: str = "text", num_perm: int = 32,
+               bands: int = 16, shingle_n: int = 3,
+               jaccard_threshold: float = 0.5) -> DataFrame:
+    """The LSH body over a signed ``(id_col, text_col, sig)`` relation:
+    bucket self-join, distinct candidate pairs, verify.  Lazy — it
+    runs no Spark job.  ``signed`` is read by both sides of the
+    self-join and by the verify, so callers pass a materialized
+    relation (a checkpoint), or the signature kernel runs per read."""
+    banded = _banded(signed, id_col, num_perm, bands)
+    left = banded.select(F.col(id_col).alias("id_a"), "band", "bucket")
+    right = banded.select(F.col(id_col).alias("id_b"), "band", "bucket")
+    cand = (
+        left.join(right, ["band", "bucket"])
+        .filter(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b")
+        .dropDuplicates(["id_a", "id_b"])
+    )
+    texts = signed.select(id_col, text_col)
+    return _verified(cand, texts, texts, id_col, text_col, shingle_n,
+                     jaccard_threshold)
+
+
+def _without_losers(df: DataFrame, pairs: DataFrame,
+                    id_col: str) -> DataFrame:
+    """Rows of ``df`` that are not the larger id of a verified pair."""
+    losers = pairs.select(F.col("id_b").alias(id_col)).distinct()
+    return df.join(losers, id_col, "left_anti")
 
 
 def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
@@ -306,37 +383,21 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
                       rebalance: bool = True) -> DataFrame:
     """Near-duplicate pairs via banded LSH over MinHash signatures.
 
-    shuffle plan: explode to (band, bucket) -> self-join on the bucket
-    (only collisions compared) -> dedupe pairs -> verify with exact
-    shingle jaccard >= threshold.  Returns (id_a, id_b, jaccard) with
-    id_a < id_b.  Whether the signature input is spread over the
-    cores is :func:`~vision_parse_spark.session.spread`'s decision;
+    shuffle plan: sign ``df`` once (Arrow kernel, one eager local
+    checkpoint) -> explode to (band, bucket) -> self-join on the
+    bucket (only collisions compared) -> dedupe pairs -> verify with
+    exact shingle jaccard >= threshold.  Everything after the
+    checkpoint is lazy.  Returns (id_a, id_b, jaccard) with id_a <
+    id_b.  Whether the signature input is spread over the cores is
+    :func:`~vision_parse_spark.session.spread`'s decision;
     ``rebalance`` is accepted for old callers and ignored."""
-    src = df.select(id_col, text_col)
-    # id-only banded frame, persisted: it feeds BOTH sides of the
-    # self-join — without materialization the signature UDF lineage
-    # would be recomputed per join side
-    banded = _banded(src, id_col, text_col, num_perm, bands,
-                     shingle_n).persist()
-    banded.count()  # materialize BEFORE the self-join so both sides
-    # read the cache (persist alone doesn't guarantee reuse when both
-    # branches of one job race to populate it)
-    left = banded.select(F.col(id_col).alias("id_a"), "band", "bucket")
-    right = banded.select(F.col(id_col).alias("id_b"), "band", "bucket")
-    cand = (
-        left.join(right, ["band", "bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
-        # materialized: AQE gets real stats for the verify joins and
-        # the banded cache can be released.  A local checkpoint rather
-        # than a cache: its blocks go when the returned plan is
-        # garbage-collected, so the verify stays lazy (no job here).
-        .localCheckpoint(eager=True)
-    )
-    banded.unpersist()
-    return _verified(cand, src, src, id_col, text_col, shingle_n,
-                     jaccard_threshold)
+    # localCheckpoint (not persist): both self-join sides and the
+    # verify read it, and its blocks go when the returned plan is
+    # garbage-collected
+    signed = _signed(df.select(id_col, text_col), id_col, text_col,
+                     num_perm, shingle_n).localCheckpoint(eager=True)
+    return _lsh_pairs(signed, id_col, text_col, num_perm, bands,
+                      shingle_n, jaccard_threshold)
 
 
 def minhash_dedup(df: DataFrame, id_col: str = "doc_id",
@@ -344,9 +405,8 @@ def minhash_dedup(df: DataFrame, id_col: str = "doc_id",
     """Rows that survive near-dup removal: a row is dropped when it is
     the larger id of any verified near-dup pair (union-by-min after one
     LSH round — the standard single-pass policy)."""
-    pairs = minhash_lsh_pairs(df, id_col, text_col, **kwargs)
-    losers = pairs.select(F.col("id_b").alias(id_col)).distinct()
-    return df.join(losers, id_col, "left_anti")
+    return _without_losers(
+        df, minhash_lsh_pairs(df, id_col, text_col, **kwargs), id_col)
 
 
 def _local_star(batches):
@@ -560,20 +620,20 @@ def minhash_dedup_incremental(
     banding and verify are shared), so the DuckDB oracle replays the
     whole pipeline."""
     def banded(side: DataFrame, suffix: str) -> DataFrame:
-        return _banded(side.select(id_col, text_col), id_col, text_col,
-                       num_perm, bands, shingle_n
+        signed = _signed(side.select(id_col, text_col), id_col, text_col,
+                         num_perm, shingle_n)
+        return _banded(signed, id_col, num_perm, bands
                        ).withColumnRenamed(id_col, f"id_{suffix}")
 
     # distinct collided pairs first (a pair colliding in several bands
     # is verified once; the loser set is a distinct over id_n either
-    # way), then shingles for EXACTLY the collided rows.  Checkpointed
-    # in one eager job: the verify gets real stats and reads the
-    # pairs, not the banding lineage.
+    # way), then the pair kernel over EXACTLY the collided pairs.  Each
+    # side is signed once (one band stream per side, no self-join),
+    # so nothing is materialized before the survivors.
     coll = (
         banded(new_df, "n").join(banded(corpus_df, "c"), ["band", "bucket"])
         .select("id_n", "id_c")
         .dropDuplicates(["id_n", "id_c"])
-        .localCheckpoint(eager=True)
     )
     losers = (
         _verified(coll, new_df, corpus_df, id_col, text_col, shingle_n,

@@ -3,27 +3,64 @@
 Web-scale corpora are polluted by documents that repeat themselves
 (boilerplate line spam, keyword stuffing, template loops); standard
 curation drops documents whose duplicate-line fraction or top-n-gram
-fraction exceeds a threshold.  Both signals here are PURE relational
-expressions:
+fraction exceeds a threshold.  Both signals are per-document:
 
 * ``dup_line_frac`` — 1 - distinct/total over the line split, a
   narrow Catalyst expression (no shuffle, no UDF);
 * ``top_bigram_frac`` — the most frequent bigram's share of all
-  bigrams, via explode -> per-(doc, bigram) count -> per-doc max —
-  two hash aggregations that combine map-side, so the hot-doc skew a
-  pathological repeater creates collapses before the shuffle.
+  bigrams, from :func:`bigram_census` in a narrow Arrow kernel (no
+  shuffle: the census never leaves the row).
 
 Integer-counting throughout; the only floats are final int/int
-divisions rounded to 6, so the DuckDB oracle replays exactly.
+divisions rounded to 6, so the DuckDB oracle replays exactly.  The
+column builders are shared with ``curate``'s gate, so the gate and
+``repetition_stats`` apply one definition.
 """
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+from collections import Counter
 
+import pandas as pd
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
+
+from ..functions.text_stats import java_ws_tokens
 from ..session import spread
+
+
+def bigram_census(toks: list) -> tuple[int, int]:
+    """``(top, total)`` of one token list: the count of its most
+    frequent bigram and the number of bigrams, both 0 below two
+    tokens.  The one bigram census: ``repetition_stats`` and the
+    ``curate`` gate kernel both call it."""
+    if len(toks) < 2:
+        return 0, 0
+    return max(Counter(zip(toks, toks[1:])).values()), len(toks) - 1
+
+
+def lines_col(text_col: str) -> Column:
+    """The doc's non-empty space-trimmed lines (Spark ``trim`` strips
+    only spaces), the input of :func:`dup_line_frac_col`."""
+    return F.expr(f"filter(transform(split({text_col}, '\\n'),"
+                  f" x -> trim(x)), x -> x != '')")
+
+
+def dup_line_frac_col(lines: Column) -> Column:
+    """``1 - distinct/total`` over ``lines``, rounded to 6; 0.0 for a
+    doc without lines."""
+    return (F.when(F.size(lines) > 0,
+                   F.round(1 - F.size(F.array_distinct(lines))
+                           / F.size(lines), 6))
+            .otherwise(F.lit(0.0)))
+
+
+def top_bigram_frac_col(top: Column, total: Column) -> Column:
+    """``top / total`` of a :func:`bigram_census`, rounded to 6; 0.0
+    for a doc without bigrams."""
+    return (F.when(total > 0, F.round(top / total, 6))
+            .otherwise(F.lit(0.0)))
 
 
 def repetition_stats(
@@ -33,12 +70,6 @@ def repetition_stats(
 ) -> DataFrame:
     """Per-document repetition signals: (id, n_lines, dup_line_frac,
     n_bigrams, top_bigram_frac)."""
-    from collections import Counter
-
-    from pyspark.sql.types import (LongType, StructField, StructType)
-
-    from vision_parse_spark.functions.text_stats import java_ws_tokens
-
     # Both signals are PER-DOCUMENT statistics, so the bigram census
     # never needs to leave the row (round 7; guide §2.4 "remove
     # shuffles outright"): the old plan exploded every bigram
@@ -50,38 +81,21 @@ def repetition_stats(
     @F.pandas_udf(StructType([StructField("top", LongType()),
                               StructField("total", LongType())]))
     def bigram_stats(texts: pd.Series) -> pd.DataFrame:
-        tops, totals = [], []
-        for t in texts:
-            toks = java_ws_tokens(t)
-            if len(toks) < 2:
-                tops.append(0)
-                totals.append(0)
-                continue
-            c = Counter(zip(toks, toks[1:]))
-            tops.append(max(c.values()))
-            totals.append(len(toks) - 1)
-        return pd.DataFrame({"top": tops, "total": totals},
+        census = [bigram_census(java_ws_tokens(t)) for t in texts]
+        return pd.DataFrame(census, columns=["top", "total"],
                             index=texts.index)
 
-    lines = F.expr(
-        f"filter(transform(split({text_col}, '\\n'), x -> trim(x)),"
-        f" x -> x != '')"
-    )
     return spread(df).select(
         F.col(id_col),
-        lines.alias("_lines"),
+        lines_col(text_col).alias("_lines"),
         bigram_stats(F.col(text_col)).alias("_bg"),
     ).select(
         id_col,
         F.size("_lines").alias("n_lines"),
-        F.when(F.size("_lines") > 0,
-               F.round(1 - F.size(F.array_distinct("_lines"))
-                       / F.size("_lines"), 6))
-        .otherwise(F.lit(0.0)).alias("dup_line_frac"),
+        dup_line_frac_col(F.col("_lines")).alias("dup_line_frac"),
         F.col("_bg.total").alias("n_bigrams"),
-        F.when(F.col("_bg.total") > 0,
-               F.round(F.col("_bg.top") / F.col("_bg.total"), 6))
-        .otherwise(F.lit(0.0)).alias("top_bigram_frac"),
+        top_bigram_frac_col(F.col("_bg.top"), F.col("_bg.total"))
+        .alias("top_bigram_frac"),
     )
 
 
