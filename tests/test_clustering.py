@@ -69,6 +69,50 @@ def test_validation_errors(spark):
         kmeans_fit(_vecs(spark, [(0, [1.0])]), k=0)
     with pytest.raises(ValueError):
         kmeans_fit(_vecs(spark, [(0, [1.0])]), k=2)   # k > n rows
+    with pytest.raises(ValueError, match="empty input"):
+        kmeans_fit(_vecs(spark, [(0, [1.0])]).limit(0), k=1)
+
+
+def test_raising_fits_release_their_cache(spark):
+    """A fit that raises after persisting its input must unpersist it:
+    the cache manager is left as the fit found it."""
+    from vision_parse_spark.operators.pq import pq_fit
+
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    one = _vecs(spark, [(0, [1.0, 2.0])])
+    for fit in (lambda: kmeans_fit(one.limit(0), k=2),
+                lambda: kmeans_fit(one, k=2),
+                lambda: pq_fit(one.limit(0), m=2, k=1),
+                lambda: pq_fit(one, m=2, k=2)):
+        with pytest.raises(ValueError):
+            fit()
+        assert cm.isEmpty()
+
+
+def test_fits_run_no_probe_job(spark):
+    """Both trainers read ``dim`` from their seed collect: a fit is
+    one seed job plus at most two jobs per Lloyd step."""
+    from vision_parse_spark.operators.pq import pq_fit
+
+    emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
+    sc = spark.sparkContext
+
+    def jobs(group, fit):
+        sc.setJobGroup(group, group)
+        try:
+            fit()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    for iters in (0, 1, 2):
+        def km():
+            kmeans_fit(emb, k=8, iters=iters)[1].unpersist()
+        n = jobs(f"kmeans-fit-{iters}", km)
+        assert 0 < n <= 1 + 2 * iters, (iters, n)
+    n = jobs("pq-fit", lambda: pq_fit(emb, m=4, k=8, iters=2))
+    assert 0 < n <= 5, n
 
 
 def test_semdedup_greedy_survivors(spark):

@@ -26,6 +26,8 @@ def test_pq_fit_shapes_and_validation(spark):
         pq_fit(df, m=3)
     with pytest.raises(ValueError, match="m must be"):
         pq_fit(df, m=0)
+    with pytest.raises(ValueError, match="empty input"):
+        pq_fit(df.limit(0), m=2)
 
 
 def test_pq_encode_clusters_separable_modes(spark):

@@ -83,12 +83,12 @@ def test_embedding_near_dups_builds_without_warning(spark, vectors):
 
 
 def test_ivf_topk_finds_planted_near_dup(spark, vectors):
-    from vision_parse_spark.operators.similarity import (
-        ivf_topk,
-        train_ivf_centroids,
-    )
+    from vision_parse_spark.operators.clustering import kmeans_fit
+    from vision_parse_spark.operators.similarity import ivf_topk
 
-    cents = train_ivf_centroids(vectors, DIM, n_centroids=4, sample_size=20)
+    cents, data = kmeans_fit(vectors, k=4)
+    data.unpersist()
+    cents = np.asarray(cents)
     assert cents.shape == (4, DIM)
     out = ivf_topk(vectors, vectors.filter(F.col("vec_id") == 0), cents,
                    k=3, nprobe=2)
@@ -97,12 +97,12 @@ def test_ivf_topk_finds_planted_near_dup(spark, vectors):
 
 
 def test_ivf_recall_vs_brute_force(spark, vectors):
-    from vision_parse_spark.operators.similarity import (
-        ivf_topk,
-        train_ivf_centroids,
-    )
+    from vision_parse_spark.operators.clustering import kmeans_fit
+    from vision_parse_spark.operators.similarity import ivf_topk
 
-    cents = train_ivf_centroids(vectors, DIM, n_centroids=4, sample_size=20)
+    cents, data = kmeans_fit(vectors, k=4)
+    data.unpersist()
+    cents = np.asarray(cents)
     q = vectors.filter(F.col("vec_id") < 5)
     exact = {(r.query_id, r.neighbor_id)
              for r in brute_force_topk(vectors, q, k=3).collect()}

@@ -86,7 +86,7 @@ def main():
             print(f"FAIL  {name}: {'; '.join(str(p) for p in problems)}")
             failures += 1
         else:
-            print(f"OK    {name}: {len(sdf)} rows match")
+            print(f"OK    {name}: {len(sdf)} rows match {hs}")
     sys.exit(1 if failures else 0)
 
 

@@ -516,10 +516,12 @@ def main():
         "per Lloyd iteration, iters+1 corpus scans total — warm "
         "pq_codes 12.2 -> 1.7 s at sf0.1); the plan below is the "
         "SEARCH: one narrow "
-        "ArrowEvalPython encode + MapInPandas scoring pass over the "
-        "corpus (codes, not vectors — a dim-64 float64 row shrinks "
-        "512 B -> 4 B at 100 TB), then the per-query window on the "
-        "bounded |Q| x corpus candidate stream.  scalar_quantize "
+        "ArrowEvalPython encode over the corpus (codes, not vectors "
+        "— a dim-64 float64 row shrinks 512 B -> 4 B at 100 TB), a "
+        "cross join with the BROADCAST |Q| query indices, the "
+        "MapInPandas scoring pass ivf_adc_topk shares, then the "
+        "per-query window on the bounded |Q| x corpus candidate "
+        "stream.  scalar_quantize "
         "needs no section: one bounded-key stats agg + a narrow "
         "codegen'd Project.",
         grab(adc),

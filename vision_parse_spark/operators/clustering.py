@@ -21,7 +21,12 @@ Scale design (100 TB): the classic MLlib shape —
   the compile dominates the scan.  Tiling bounds the scratch at
   ``tile x k`` doubles regardless of batch size or ``k``.
 * The input is persisted once and re-scanned ``iters + 1`` times
-  (each scan is one narrow job), exactly the Lloyd's access pattern.
+  (the seed collect, then one narrow pass per step), exactly the
+  Lloyd's access pattern.
+* One trainer, :func:`_lloyd`, serves both k-means (one subspace)
+  and product quantization (``pq.pq_fit``, ``m`` subspaces trained
+  in the same pass); its assignment and the partial sums share one
+  tiled argmin, :func:`_argmin_rows`.
 
 Determinism: init picks the ``k`` lowest-id vectors (rank order =
 cluster id), all arithmetic is float64, and every argmin tie-breaks
@@ -39,28 +44,34 @@ from pyspark.sql.types import IntegerType
 
 from .similarity import _bucket_pairs_exact_pdf
 
-# rows per distance-matrix tile in the Arrow assignment kernel:
+# rows per distance tile in the Arrow kernels (here and in pq.py):
 # peak scratch is TILE x k doubles (plus the TILE x dim batch), so
 # memory stays bounded for any k
-_ASSIGN_TILE = 4096
+_TILE = 4096
+
+
+def _argmin_rows(m: np.ndarray, cmat: np.ndarray) -> np.ndarray:
+    """Tiled squared-Euclidean argmin of each row of ``m`` against
+    ``cmat``: first minimum (numpy argmin) = lowest cluster id, the
+    oracle's ``ORDER BY dist, cid`` replay."""
+    out = np.empty(len(m), dtype=np.int64)
+    for lo in range(0, len(m), _TILE):
+        tile = m[lo:lo + _TILE]                             # t x d
+        d2 = ((tile[:, None, :] - cmat[None, :, :]) ** 2).sum(axis=2)
+        out[lo:lo + _TILE] = np.argmin(d2, axis=1)
+    return out
 
 
 def _assign_udf(centroids: list[list[float]]):
-    """Arrow-batched Lloyd assignment: squared-Euclidean argmin
-    against the broadcast centroid matrix, first-minimum tie-break
-    (numpy argmin) = lowest cluster id, matching the oracle's
-    ``ORDER BY dist, cid`` replay."""
+    """Arrow-batched Lloyd assignment against the broadcast centroid
+    matrix (:func:`_argmin_rows`)."""
     cmat = np.asarray(centroids, dtype=np.float64)          # k x d
 
     @F.pandas_udf(IntegerType())
     def assign(vecs: pd.Series) -> pd.Series:
         m = np.array([np.asarray(v, dtype=np.float64) for v in vecs])
-        out = np.empty(len(m), dtype=np.int32)
-        for lo in range(0, len(m), _ASSIGN_TILE):
-            tile = m[lo:lo + _ASSIGN_TILE]                  # t x d
-            d2 = ((tile[:, None, :] - cmat[None, :, :]) ** 2).sum(axis=2)
-            out[lo:lo + _ASSIGN_TILE] = np.argmin(d2, axis=1)
-        return pd.Series(out, index=vecs.index)
+        return pd.Series(_argmin_rows(m, cmat).astype(np.int32),
+                         index=vecs.index)
 
     return assign
 
@@ -69,102 +80,125 @@ def _assign_col(vec_col: str, centroids: list[list[float]]) -> Column:
     return _assign_udf(centroids)(F.col(vec_col)).alias("cluster")
 
 
+def _lloyd(base: DataFrame, k: int, iters: int, m: int,
+           who: str) -> list[list[list[float]]]:
+    """The one Lloyd trainer: ``iters`` update steps over the
+    persisted ``(id, _v)`` relation ``base``, one ``k``-centroid
+    codebook for each of the ``m`` equal column slices of ``_v``.
+    Returns ``books[m][k][dim/m]``; ``m = 1`` is plain k-means.
+
+    Init: the ``k`` lowest-id vectors, in id order (cluster ``c``
+    starts at the rank-``c`` vector, sliced per subspace); ``dim`` is
+    read from those seed rows.  A cluster that captures no points
+    keeps its previous centroid.  Every raise releases ``base``.
+
+    Each step is ONE fused narrow pass over all ``m`` subspaces:
+    assign + per-batch partial centroid sums inside one Arrow kernel,
+    emitting <= m * k * (dim/m + 1) rows per batch (dim index -1
+    carries the member count).  The combine is a hash agg over those
+    partials — a bounded-key exchange, never the data.  (A groupBy
+    with ``dim`` separate F.sum columns was 3x slower: Catalyst
+    compiles a fresh wide codegen'd aggregate per iteration and the
+    compile dominates the scan.)  Jobs: one seed collect plus two per
+    step.
+    """
+    def fail(msg: str):
+        base.unpersist()
+        raise ValueError(f"{who}: {msg}")
+
+    if k < 1 or iters < 0:
+        fail(f"need k >= 1, iters >= 0; got k={k} iters={iters}")
+    seed_rows = base.orderBy(base.columns[0]).limit(k).collect()
+    if not seed_rows:
+        fail("empty input")
+    dim = len(seed_rows[0]["_v"])
+    if dim % m != 0:
+        fail(f"dim {dim} not divisible by m={m}")
+    if len(seed_rows) < k:
+        fail(f"k={k} but only {len(seed_rows)} rows")
+    sub = dim // m
+    books = [[list(r["_v"])[j * sub:(j + 1) * sub] for r in seed_rows]
+             for j in range(m)]
+    for _ in range(iters):
+        agg = (base.mapInPandas(_partial_sums_fn(books),
+                                "j int, cluster int, i int, s double")
+               .groupBy("j", "cluster", "i").agg(F.sum("s").alias("s"))
+               .collect())
+        counts: dict[tuple[int, int], float] = {}
+        sums: dict[tuple[int, int], dict[int, float]] = {}
+        for r in agg:
+            key = (r["j"], r["cluster"])
+            if r["i"] == -1:
+                counts[key] = r["s"]
+            else:
+                sums.setdefault(key, {})[r["i"]] = r["s"]
+        nxt = [list(b) for b in books]   # empty cluster keeps its centroid
+        for (j, c), dims in sums.items():
+            nxt[j][c] = [dims[i] / counts[(j, c)] for i in range(sub)]
+        books = nxt
+    return books
+
+
+def _partial_sums_fn(books: list[list[list[float]]]):
+    """Lloyd partials for every subspace ``j``: each slices the same
+    row matrix, assigns by :func:`_argmin_rows` and emits
+    ``(j, cluster, i, s)`` rows of ``np.add.at`` member sums plus the
+    member count at ``i = -1``."""
+    mats = [np.asarray(b, dtype=np.float64) for b in books]
+    k, sub = mats[0].shape
+
+    def fn(batches):
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            full = np.array([np.asarray(v, dtype=np.float64)
+                             for v in pdf["_v"]])
+            parts = []
+            for j, cmat in enumerate(mats):
+                mm = full[:, j * sub:(j + 1) * sub]
+                asg = _argmin_rows(mm, cmat)
+                sums = np.zeros((k, sub))
+                np.add.at(sums, asg, mm)
+                counts = np.bincount(asg, minlength=k)
+                hit = np.flatnonzero(counts)
+                parts.append(pd.DataFrame({
+                    "j": np.full(len(hit) * (sub + 1), j, dtype=np.int32),
+                    "cluster": np.concatenate([np.repeat(hit, sub), hit]),
+                    "i": np.concatenate([np.tile(np.arange(sub), len(hit)),
+                                         np.full(len(hit), -1)]),
+                    "s": np.concatenate([sums[hit].ravel(),
+                                         counts[hit].astype(np.float64)]),
+                }))
+            yield pd.concat(parts, ignore_index=True)
+
+    return fn
+
+
 def kmeans_fit(df: DataFrame, k: int = 8, iters: int = 2,
                id_col: str = "vec_id", vec_col: str = "embedding",
-               dim: int | None = None
                ) -> tuple[list[list[float]], DataFrame]:
-    """Run ``iters`` Lloyd update steps and return
-    ``(final_centroids, cached_float64_input)``.
-
-    Init: the ``k`` lowest-``id_col`` vectors, in id order (cluster
-    ``j`` starts at the rank-``j`` vector).  A cluster that captures
-    no points keeps its previous centroid.
+    """Run ``iters`` Lloyd update steps (:func:`_lloyd` with one
+    subspace) and return ``(final_centroids, cached_float64_input)``.
 
     The returned DataFrame ``(id_col, _v)`` is persisted — the
     CALLER owns the cache and must ``unpersist()`` it once its
     derived result is materialized (``kmeans_assign``/``semdedup``
     checkpoint their outputs and release it immediately).
     """
-    if k < 1 or iters < 0:
-        raise ValueError(f"need k >= 1, iters >= 0; got k={k} iters={iters}")
     data = (df.select(F.col(id_col),
                       F.col(vec_col).cast("array<double>").alias("_v"))
               .persist())
-    if dim is None:
-        first = data.select(F.size("_v")).first()
-        if first is None:
-            raise ValueError("kmeans_fit: empty input")
-        dim = first[0]
-
-    seed_rows = data.orderBy(id_col).limit(k).collect()
-    if len(seed_rows) < k:
-        raise ValueError(f"kmeans_fit: k={k} but only {len(seed_rows)} rows")
-    centroids = [list(r["_v"]) for r in seed_rows]
-
-    # Each Lloyd step is ONE fused narrow pass: assign + per-batch
-    # partial centroid sums inside the same Arrow kernel, emitting
-    # <= k * (dim + 1) rows per batch (dim index -1 carries the
-    # member count).  The combine is a two-column hash agg over
-    # those partials — a k*dim-row exchange, never the data.  (A
-    # groupBy with `dim` separate F.sum columns was 3x slower:
-    # Catalyst compiles a fresh wide codegen'd aggregate per
-    # iteration and the compile dominates the scan.)
-    for _ in range(iters):
-        update = data.mapInPandas(_partial_sums_fn(centroids),
-                                  "cluster int, i int, s double")
-        agg = (update.groupBy("cluster", "i").agg(F.sum("s").alias("s"))
-               .collect())
-        counts = {r["cluster"]: r["s"] for r in agg if r["i"] == -1}
-        sums: dict[int, dict[int, float]] = {}
-        for r in agg:
-            if r["i"] >= 0:
-                sums.setdefault(r["cluster"], {})[r["i"]] = r["s"]
-        nxt = list(centroids)            # empty cluster keeps its centroid
-        for c, dims in sums.items():
-            n = counts[c]
-            nxt[c] = [dims[i] / n for i in range(dim)]
-        centroids = nxt
-    return centroids, data
-
-
-def _partial_sums_fn(centroids: list[list[float]]):
-    cmat = np.asarray(centroids, dtype=np.float64)
-
-    def fn(batches):
-        k, d = cmat.shape
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            m = np.array([np.asarray(v, dtype=np.float64)
-                          for v in pdf["_v"]])
-            sums = np.zeros((k, d))
-            counts = np.zeros(k, dtype=np.int64)
-            for lo in range(0, len(m), _ASSIGN_TILE):
-                tile = m[lo:lo + _ASSIGN_TILE]
-                d2 = ((tile[:, None, :] - cmat[None, :, :]) ** 2).sum(axis=2)
-                asg = np.argmin(d2, axis=1)
-                np.add.at(sums, asg, tile)
-                np.add.at(counts, asg, 1)
-            hit = np.flatnonzero(counts)
-            yield pd.DataFrame({
-                "cluster": np.concatenate([np.repeat(hit, d), hit]),
-                "i": np.concatenate([np.tile(np.arange(d), len(hit)),
-                                     np.full(len(hit), -1)]),
-                "s": np.concatenate([sums[hit].ravel(),
-                                     counts[hit].astype(np.float64)]),
-            })
-
-    return fn
+    return _lloyd(data, k, iters, 1, "kmeans_fit")[0], data
 
 
 def kmeans_assign(df: DataFrame, k: int = 8, iters: int = 2,
                   id_col: str = "vec_id", vec_col: str = "embedding",
-                  dim: int | None = None) -> DataFrame:
+                  ) -> DataFrame:
     """``(id_col, cluster)`` after ``iters`` Lloyd update steps —
     the assignment against the final centroids.  Eager: the (small)
     assignment is checkpointed so the fit cache can be released."""
     centroids, data = kmeans_fit(df, k=k, iters=iters, id_col=id_col,
-                                 vec_col=vec_col, dim=dim)
+                                 vec_col=vec_col)
     out = (data.select(F.col(id_col), _assign_col("_v", centroids))
                .localCheckpoint(eager=True))
     data.unpersist()
@@ -173,8 +207,7 @@ def kmeans_assign(df: DataFrame, k: int = 8, iters: int = 2,
 
 def semdedup(df: DataFrame, k: int = 8, iters: int = 2,
              threshold: float = 0.95, id_col: str = "vec_id",
-             vec_col: str = "embedding",
-             dim: int | None = None) -> DataFrame:
+             vec_col: str = "embedding") -> DataFrame:
     """SemDeDup (Abbas et al. 2023): semantic dedup by KMeans
     partitioning + within-cluster cosine pruning.  Returns the
     SURVIVOR set ``(id_col,)``: an embedding is dropped iff ANY
@@ -203,7 +236,7 @@ def semdedup(df: DataFrame, k: int = 8, iters: int = 2,
     left-to-right sum) — the float shape the DuckDB oracle replays.
     """
     centroids, data = kmeans_fit(df, k=k, iters=iters, id_col=id_col,
-                                 vec_col=vec_col, dim=dim)
+                                 vec_col=vec_col)
     tagged = data.select(F.col(id_col), "_v", _assign_col("_v", centroids))
     idt = df.schema[id_col].dataType.simpleString()
 

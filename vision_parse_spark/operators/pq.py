@@ -11,18 +11,20 @@ the distance per candidate is ``m`` table lookups + ``m-1`` adds
 instead of a ``dim``-wide fold.
 
 Scale design:
-* ``pq_fit`` trains all ``m`` codebooks with control-plane Lloyd
-  steps FUSED across subspaces: one persisted base, one seed
-  collect, ONE Arrow pass per iteration emitting every subspace's
-  map-side-combined partials (``iters + 1`` corpus scans total, vs
-  ``m * (iters + 2)`` for independent trainings) — the corpus never
-  shuffles.
+* ``pq_fit`` trains all ``m`` codebooks with the one Lloyd trainer
+  (:func:`~.clustering._lloyd`, the engine behind ``kmeans_fit``): one
+  persisted base, one seed collect, ONE Arrow pass per iteration
+  emitting every subspace's map-side-combined partials — the corpus
+  never shuffles.
 * ``pq_encode`` is ONE narrow Arrow pass (tiled argmin per subspace,
   scratch bounded at tile x k doubles).
-* ``pq_adc_topk`` broadcasts the per-query lookup tables
-  (|Q| x m x k doubles — control-plane sized) and scans the corpus
-  codes narrowly; ranking is the family's standard
-  (rounded-distance, neighbor-id) window per query.
+* ADC search has one body: the queries are collected and turned into
+  per-query lookup tables (|Q| x m x k doubles — control-plane
+  sized), and one scorer sums the LUT entries of a
+  ``(query_idx, id, codes)`` candidate relation and ranks by the
+  family's standard (rounded-distance, neighbor-id) window.
+  ``ivf_adc_topk`` feeds it the probed cells, ``pq_adc_topk`` every
+  code (exhaustive IVF-ADC).
 
 Determinism (the repo's oracle discipline): every distance that
 DECIDES something (encode argmin, ADC ranking) is a strict
@@ -42,59 +44,10 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ..session import spread
+from .clustering import _TILE, _assign_col, _lloyd, kmeans_fit
 
-_TILE = 4096
-
-
-def _pq_partial_sums_fn(books: list[list[list[float]]], sub: int):
-    """One FUSED Lloyd update pass over every subspace at once: per
-    batch, each subspace slices the same row matrix and emits its
-    assignment partial sums tagged with the subspace index — the
-    per-subspace math is exactly :func:`~.clustering._partial_sums_fn`
-    (tiled squared-dist argmin, ``np.add.at`` accumulation), so the
-    trained codebooks match the per-subspace trainer's up to
-    partition-merge float order (the kmeans oracle's documented
-    ~1e-12 band)."""
-    mats = [np.asarray(b, dtype=np.float64) for b in books]
-
-    def fn(batches):
-        k = mats[0].shape[0]
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            full = np.array([np.asarray(v, dtype=np.float64)
-                             for v in pdf["_v"]])
-            out_j, out_c, out_i, out_s = [], [], [], []
-            for j, cmat in enumerate(mats):
-                mm = full[:, j * sub:(j + 1) * sub]
-                sums = np.zeros((k, sub))
-                counts = np.zeros(k, dtype=np.int64)
-                for lo in range(0, len(mm), 4096):
-                    tile = mm[lo:lo + 4096]
-                    d2 = ((tile[:, None, :]
-                           - cmat[None, :, :]) ** 2).sum(axis=2)
-                    asg = np.argmin(d2, axis=1)
-                    np.add.at(sums, asg, tile)
-                    np.add.at(counts, asg, 1)
-                hit = np.flatnonzero(counts)
-                out_j.append(np.full(len(hit) * (sub + 1), j,
-                                     dtype=np.int32))
-                out_c.append(np.concatenate(
-                    [np.repeat(hit, sub), hit]))
-                out_i.append(np.concatenate(
-                    [np.tile(np.arange(sub), len(hit)),
-                     np.full(len(hit), -1)]))
-                out_s.append(np.concatenate(
-                    [sums[hit].ravel(),
-                     counts[hit].astype(np.float64)]))
-            yield pd.DataFrame({
-                "j": np.concatenate(out_j),
-                "cluster": np.concatenate(out_c),
-                "i": np.concatenate(out_i),
-                "s": np.concatenate(out_s),
-            })
-
-    return fn
+# ADC distances rank after rounding to this many decimals
+_ROUND = 6
 
 
 def pq_fit(df: DataFrame, m: int = 4, k: int = 8, iters: int = 2,
@@ -103,58 +56,16 @@ def pq_fit(df: DataFrame, m: int = 4, k: int = 8, iters: int = 2,
     """Train ``m`` per-subspace codebooks of ``k`` centroids each
     (dim must divide evenly by ``m``).  Returns
     ``codebooks[m][k][dim/m]``.  Init = the ``k`` lowest-id vectors
-    sliced per subspace (the kmeans_fit contract).
-
-    Scale shape: ONE persisted base relation, ONE seed collect, and
-    ONE fused Arrow pass per Lloyd iteration that updates ALL ``m``
-    codebooks together (each batch emits <= m*k*(sub+1) partial
-    rows) — ``iters + 1`` corpus scans total, vs ``m * (iters + 2)``
-    for m independent trainings (measured 4x fewer actions at m=4;
-    the round-5 kmeans-fusion precedent applied across subspaces).
+    sliced per subspace (the kmeans_fit contract): all ``m`` codebooks
+    train together in :func:`~.clustering._lloyd`, ``iters + 1``
+    corpus scans in total.
     """
     if m < 1:
         raise ValueError(f"pq_fit: m must be >= 1, got {m}")
-    if k < 1 or iters < 0:
-        raise ValueError(f"pq_fit: need k >= 1, iters >= 0;"
-                         f" got k={k} iters={iters}")
     base = spread(df).select(F.col(id_col),
                              F.col(vec_col).cast("array<double>").alias("_v")
                              ).persist()
-    first = base.select(F.size("_v")).first()
-    if first is None:
-        base.unpersist()
-        raise ValueError("pq_fit: empty input")
-    dim = first[0]
-    if dim % m != 0:
-        base.unpersist()
-        raise ValueError(f"pq_fit: dim {dim} not divisible by m={m}")
-    sub = dim // m
-    seed_rows = base.orderBy(id_col).limit(k).collect()
-    if len(seed_rows) < k:
-        base.unpersist()
-        raise ValueError(f"pq_fit: k={k} but only {len(seed_rows)}"
-                         f" rows")
-    books = [[list(r["_v"])[j * sub:(j + 1) * sub]
-              for r in seed_rows] for j in range(m)]
-    for _ in range(iters):
-        update = base.mapInPandas(
-            _pq_partial_sums_fn(books, sub),
-            "j int, cluster int, i int, s double")
-        agg = (update.groupBy("j", "cluster", "i")
-               .agg(F.sum("s").alias("s")).collect())
-        counts: dict[tuple[int, int], float] = {}
-        sums: dict[tuple[int, int], dict[int, float]] = {}
-        for r in agg:
-            if r["i"] == -1:
-                counts[(r["j"], r["cluster"])] = r["s"]
-            else:
-                sums.setdefault((r["j"], r["cluster"]), {})[r["i"]] \
-                    = r["s"]
-        nxt = [list(b) for b in books]   # empty cluster keeps its seed
-        for (j, c), dims in sums.items():
-            n = counts[(j, c)]
-            nxt[j][c] = [dims[i] / n for i in range(sub)]
-        books = nxt
+    books = _lloyd(base, k, iters, m, "pq_fit")
     base.unpersist()
     return books
 
@@ -196,69 +107,86 @@ def pq_encode(df: DataFrame, codebooks: list[list[list[float]]],
                              .alias("codes"))
 
 
-def pq_adc_topk(df: DataFrame, queries: DataFrame,
-                codebooks: list[list[list[float]]], k: int = 5,
-                id_col: str = "vec_id", vec_col: str = "embedding",
-                round_digits: int = 6) -> DataFrame:
-    """Asymmetric-distance top-k: each query precomputes an
-    ``m x k_codes`` lookup table of subspace squared distances
-    (control-plane: queries are eval-sized and COLLECTED — the
-    brute_force_topk broadcast contract); the corpus side is its PQ
-    codes only, scanned narrowly with ``m`` lookups + ``m-1`` adds
-    per candidate.  Ranking: (rounded ADC distance, neighbor id) —
-    the similarity-family determinism rule.
-
-    Output: ``(query_id, neighbor_id, adc_dist, rank)``.
-    """
+def _query_luts(queries: DataFrame, codebooks: list[list[list[float]]],
+                id_col: str, vec_col: str, who: str):
+    """Collect the (eval-sized) query set — the brute_force_topk
+    broadcast contract — and build ``luts[q][j][c]``: the strict
+    left-fold squared distance of query slice ``j`` to centroid ``c``
+    (cumsum — bit-identical to the oracle's list_reduce fold).
+    Returns ``(query ids, query matrix, luts)``."""
     mats = [np.asarray(b, dtype=np.float64) for b in codebooks]
-    m, sub = len(mats), mats[0].shape[1]
+    sub = mats[0].shape[1]
     qrows = (queries.select(F.col(id_col),
                             F.col(vec_col).cast("array<double>"))
              .collect())
     if not qrows:
-        raise ValueError("pq_adc_topk: empty query set")
-    qids = [r[0] for r in qrows]
-    # LUT[q][j][c]: strict left-fold squared distance of query slice
-    # j to centroid c (cumsum — bit-identical to the oracle's
-    # list_reduce fold)
-    luts = np.empty((len(qrows), m, mats[0].shape[0]))
-    for qi, r in enumerate(qrows):
-        qv = np.asarray(r[1], dtype=np.float64)
-        for j, cmat in enumerate(mats):
-            sq = (qv[j * sub:(j + 1) * sub][None, :] - cmat) ** 2
-            luts[qi, j] = np.cumsum(sq, axis=1)[:, -1]
+        raise ValueError(f"{who}: empty query set")
+    qv = np.array([r[1] for r in qrows], dtype=np.float64)
+    luts = np.empty((len(qrows), len(mats), mats[0].shape[0]))
+    for j, cmat in enumerate(mats):
+        sq = (qv[:, None, j * sub:(j + 1) * sub] - cmat[None, :, :]) ** 2
+        luts[:, j] = np.cumsum(sq, axis=2)[:, :, -1]
+    return [r[0] for r in qrows], qv, luts
 
-    codes = pq_encode(df, codebooks, id_col=id_col, vec_col=vec_col)
 
-    out_schema = "query_idx int, neighbor_id long, adc_dist double"
+def _adc_rank(cand: DataFrame, qids: list, luts: np.ndarray, k: int,
+              id_col: str) -> DataFrame:
+    """The one ADC scorer: each ``(query_idx, id_col, codes)``
+    candidate costs ``m`` LUT lookups summed as a strict left fold
+    over subspaces, ``((l0+l1)+l2)+...``; the distance is rounded to
+    ``_ROUND`` decimals and ranked per query by (adc_dist,
+    neighbor_id), the similarity-family determinism rule.
+
+    Output: ``(query_id, neighbor_id, adc_dist, rank)``."""
+    m = luts.shape[1]
 
     def score(batches):
         for pdf in batches:
-            ids = pdf[id_col].to_numpy()
+            if not len(pdf):
+                continue
             cd = np.array(list(pdf["codes"]), dtype=np.int64)
-            for qi in range(len(qids)):
-                # strict left fold over subspaces: ((l0+l1)+l2)+...
-                acc = luts[qi, 0][cd[:, 0]]
-                for j in range(1, m):
-                    acc = acc + luts[qi, j][cd[:, j]]
-                yield pd.DataFrame({
-                    "query_idx": np.full(len(ids), qi, dtype=np.int32),
-                    "neighbor_id": ids,
-                    "adc_dist": acc,
-                })
+            qi = pdf["query_idx"].to_numpy()
+            acc = luts[qi, 0, cd[:, 0]]
+            for j in range(1, m):
+                acc = acc + luts[qi, j, cd[:, j]]
+            yield pd.DataFrame({
+                "query_idx": qi,
+                "neighbor_id": pdf[id_col].to_numpy(),
+                "adc_dist": acc,
+            })
 
     qmap = F.array(*[F.lit(q) for q in qids])
-    sims = (codes.mapInPandas(score, out_schema)
+    sims = (cand.mapInPandas(
+                score, "query_idx int, neighbor_id long, adc_dist double")
             .select(F.element_at(qmap, F.col("query_idx") + 1)
                     .alias("query_id"),
                     "neighbor_id",
-                    F.round("adc_dist", round_digits)
-                    .alias("adc_dist"))
+                    F.round("adc_dist", _ROUND).alias("adc_dist"))
             .filter(F.col("neighbor_id") != F.col("query_id")))
     w = Window.partitionBy("query_id").orderBy(
         F.asc("adc_dist"), F.asc("neighbor_id"))
     return (sims.withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= k))
+
+
+def pq_adc_topk(df: DataFrame, queries: DataFrame,
+                codebooks: list[list[list[float]]], k: int = 5,
+                id_col: str = "vec_id", vec_col: str = "embedding",
+                ) -> DataFrame:
+    """Asymmetric-distance top-k over every code: exhaustive IVF-ADC.
+    Each query's ``m x k_codes`` lookup table is built on the driver
+    (:func:`_query_luts`); the corpus side is its PQ codes only,
+    cross-joined with the broadcast query indices and scored by
+    :func:`_adc_rank` with ``m`` lookups + ``m-1`` adds per candidate.
+
+    Output: ``(query_id, neighbor_id, adc_dist, rank)``.
+    """
+    qids, _, luts = _query_luts(queries, codebooks, id_col, vec_col,
+                                "pq_adc_topk")
+    codes = pq_encode(df, codebooks, id_col=id_col, vec_col=vec_col)
+    qidx = F.broadcast(df.sparkSession.range(len(qids)).select(
+        F.col("id").cast("int").alias("query_idx")))
+    return _adc_rank(codes.crossJoin(qidx), qids, luts, k, id_col)
 
 
 def scalar_quantize(df: DataFrame, id_col: str = "vec_id",
@@ -327,7 +255,7 @@ def ivf_adc_topk(df: DataFrame, queries: DataFrame,
                  n_centroids: int = 8, nprobe: int = 3,
                  cell_iters: int = 2, k: int = 5,
                  id_col: str = "vec_id", vec_col: str = "embedding",
-                 round_digits: int = 6) -> DataFrame:
+                 ) -> DataFrame:
     """IVF-ADC search — the FAISS IVFPQ shape (non-residual variant,
     documented simplification: codes quantize the raw vectors, not
     the cell residuals): the corpus is partitioned into ``n_centroids``
@@ -347,41 +275,25 @@ def ivf_adc_topk(df: DataFrame, queries: DataFrame,
 
     Output: ``(query_id, neighbor_id, adc_dist, rank)``.
     """
-    from .clustering import _assign_col, kmeans_fit
-
     if nprobe < 1 or nprobe > n_centroids:
         raise ValueError(f"ivf_adc_topk: need 1 <= nprobe <= "
                          f"n_centroids, got {nprobe}/{n_centroids}")
-    mats = [np.asarray(b, dtype=np.float64) for b in codebooks]
-    m, sub = len(mats), mats[0].shape[1]
-    qrows = (queries.select(F.col(id_col),
-                            F.col(vec_col).cast("array<double>"))
-             .collect())
-    if not qrows:
-        raise ValueError("ivf_adc_topk: empty query set")
-    qids = [r[0] for r in qrows]
+    qids, qv, luts = _query_luts(queries, codebooks, id_col, vec_col,
+                                 "ivf_adc_topk")
 
     # coarse cells: ONE Lloyd training, assignments from the same
     # cached relation (the kmeans_assign contract kernel), and the
     # same centroids rank each query's nprobe probes (strict fold)
     cents, data = kmeans_fit(df, k=n_centroids, iters=cell_iters,
                              id_col=id_col, vec_col=vec_col)
-    cmat = np.asarray(cents, dtype=np.float64)
     cells = (data.select(F.col(id_col), _assign_col("_v", cents))
                  .localCheckpoint(eager=True))
     data.unpersist()
 
-    probes = []                      # (query_idx, cell)
-    luts = np.empty((len(qrows), m, mats[0].shape[0]))
-    for qi, r in enumerate(qrows):
-        qv = np.asarray(r[1], dtype=np.float64)
-        d2 = np.cumsum((qv[None, :] - cmat) ** 2, axis=1)[:, -1]
-        order = np.lexsort((np.arange(len(d2)), d2))  # dist, then cid
-        probes += [(qi, int(c)) for c in order[:nprobe]]
-        for j, cm in enumerate(mats):
-            sq = (qv[j * sub:(j + 1) * sub][None, :] - cm) ** 2
-            luts[qi, j] = np.cumsum(sq, axis=1)[:, -1]
-
+    cmat = np.asarray(cents, dtype=np.float64)
+    d2 = np.cumsum((qv[:, None, :] - cmat[None, :, :]) ** 2, axis=2)[:, :, -1]
+    probes = [(qi, int(c)) for qi, row in enumerate(d2)   # dist, then cid
+              for c in np.lexsort((np.arange(len(row)), row))[:nprobe]]
     probe_df = F.broadcast(
         df.sparkSession.createDataFrame(
             probes, "query_idx int, cluster int"))
@@ -390,33 +302,4 @@ def ivf_adc_topk(df: DataFrame, queries: DataFrame,
                        codes[id_col] == F.col("_cid"))
                  .join(probe_df, "cluster")
                  .select("query_idx", F.col(id_col), "codes"))
-
-    def score(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            cd = np.array(list(pdf["codes"]), dtype=np.int64)
-            qi = pdf["query_idx"].to_numpy()
-            acc = luts[qi, 0, cd[:, 0]]
-            for j in range(1, m):
-                acc = acc + luts[qi, j, cd[:, j]]
-            yield pd.DataFrame({
-                "query_idx": qi,
-                "neighbor_id": pdf[id_col].to_numpy(),
-                "adc_dist": acc,
-            })
-
-    qmap = F.array(*[F.lit(q) for q in qids])
-    sims = (cand.mapInPandas(
-                score, "query_idx int, neighbor_id long,"
-                       " adc_dist double")
-            .select(F.element_at(qmap, F.col("query_idx") + 1)
-                    .alias("query_id"),
-                    "neighbor_id",
-                    F.round("adc_dist", round_digits)
-                    .alias("adc_dist"))
-            .filter(F.col("neighbor_id") != F.col("query_id")))
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("adc_dist"), F.asc("neighbor_id"))
-    return (sims.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k))
+    return _adc_rank(cand, qids, luts, k, id_col)

@@ -338,38 +338,6 @@ def _bucket_pairs_exact_pdf(pdf: pd.DataFrame, id_col: str,
 # ---------------------------------------------------------------------------
 
 
-def train_ivf_centroids(
-    df: DataFrame,
-    dim: int,
-    n_centroids: int = 16,
-    sample_size: int = 4096,
-    iters: int = 8,
-    seed: int = 29,
-    vec_col: str = "embedding",
-) -> np.ndarray:
-    """Train coarse centroids with Lloyd iterations on a driver-side
-    sample (the standard IVF recipe: the quantizer is tiny and global;
-    only ASSIGNMENT is distributed).  Deterministic: seeded init on a
-    deterministic sample."""
-    sample = np.array(
-        [r[0] for r in df.select(vec_col).orderBy(F.xxhash64(vec_col))
-         .limit(sample_size).collect()],
-        dtype=np.float64,
-    )
-    sample /= np.maximum(np.linalg.norm(sample, axis=1, keepdims=True), 1e-12)
-    rng = np.random.default_rng(seed)
-    centroids = sample[rng.choice(len(sample), n_centroids, replace=False)]
-    for _ in range(iters):
-        sims = sample @ centroids.T
-        assign = sims.argmax(axis=1)
-        for c in range(n_centroids):
-            members = sample[assign == c]
-            if len(members):
-                v = members.mean(axis=0)
-                centroids[c] = v / max(np.linalg.norm(v), 1e-12)
-    return centroids
-
-
 def _cell_assign_udf(centroids: np.ndarray, nprobe: int = 1):
     """Arrow-batched assignment: the ``nprobe`` cells of highest
     cosine to the broadcast centroid matrix, ties to the lowest cell.
@@ -418,8 +386,8 @@ def ivf_topk(
     per-cell join — no cross product.
 
     ``centroids`` is any ``n_centroids x dim`` matrix; cell ``c`` is
-    row ``c``.  k-means centroids from :func:`train_ivf_centroids` are
-    the recall path.  A DATA-SEEDED quantizer (the float32 embeddings
+    row ``c``.  k-means centroids (``clustering.kmeans_fit``) are the
+    recall path.  A DATA-SEEDED quantizer (the float32 embeddings
     of some rows, in a fixed order) makes every step — cosine cell
     assignment, probing, rank — a deterministic relational expression
     that DuckDB replays exactly; the ``ann_ivf`` contract query runs
