@@ -398,11 +398,12 @@ def _q_bigram_logprob(spark, sf_dir):
 
 
 def _q_bpe_merges(spark, sf_dir):
-    """Distributed BPE merge learning (Sennrich et al. 2016): the
-    corpus collapses once to a (word, count) vocab; each round is a
-    bounded-key pair census + one-row argmax + narrow fold rewrite.
-    12 merges — enough to exercise multi-char chain merges on the
-    documents table while keeping the replay oracle tractable."""
+    """BPE merge learning (Sennrich et al. 2016): the corpus
+    collapses once to a (word, count) vocab, then one grouped-map
+    task fits every merge rank over it (pair census, argmax, merge
+    of every word).  12 merges — enough to exercise multi-char chain
+    merges on the documents table while keeping the replay oracle
+    tractable."""
     from vision_parse_spark.operators.bpe import bpe_merges
 
     return bpe_merges(_t(spark, sf_dir, "documents"), n_merges=12)
@@ -983,9 +984,9 @@ def _q_event_funnel(spark, sf_dir):
 def _q_event_pagerank(spark, sf_dir):
     """PageRank over the event-type transition graph (Page et al.
     1999): ONE corpus-sized pass (per-user lag window -> bounded-key
-    edge counts with map-side combine), then 5 fixed synchronous
-    rank iterations over the bounded edge relation.  Every float
-    reduction is an ordered left fold over a sorted list, so the
+    pair counts with map-side combine), then one grouped-map task
+    runs 5 fixed synchronous rank iterations over those few rows.
+    Every float reduction is an ordered left fold from 0.0, so the
     DuckDB CTE replay (generated by the same module) is
     bit-identical — no merge-order drift."""
     from vision_parse_spark.operators.graph import transition_pagerank
@@ -1032,9 +1033,9 @@ def _q_nfc_normalize(spark, sf_dir):
 
 def _q_bpe_encode(spark, sf_dir):
     """Corpus encoding with the learned BPE vocabulary: learn the
-    12-merge table (control-plane loop, 12 rows collected), then
-    segment every document with one narrow codegen'd nested-fold
-    Project — zero shuffle on the encode pass.  Pieces are
+    12-merge table (one fit task, 12 rows collected), then segment
+    every document with bpe_apply's narrow Arrow encoder — zero
+    shuffle on the encode pass.  Pieces are
     string-rendered (the postings precedent: arrays don't hash
     cross-engine).  Oracle: the bpe_merges CTE chain's final w12
     vocabulary joined back onto per-doc word streams and flattened
@@ -1112,7 +1113,7 @@ def _q_leak_safe_split(spark, sf_dir):
 
 def _q_bpe_fertility(spark, sf_dir):
     """Tokenizer fertility audit: learn the 12-merge BPE table
-    (control-plane loop), encode with the narrow fold Project, then
+    (one fit task), encode with bpe_apply's Arrow encoder, then
     collapse per source — pieces/word and chars/piece per shard, the
     standard pre-commit vocabulary check.  All counts exact integer
     sums; ratios are single double divisions, bit-identical in the
@@ -1798,7 +1799,7 @@ def oracle_sql() -> dict[str, str]:
     # census with the (freq DESC, pair lex) tie-break, then the
     # greedy left-to-right apply via gaps-and-islands parity (a run
     # of consecutive (a,b) matches merges its 1st/3rd/... — exactly
-    # the Spark fold's semantics, see operators/bpe.py docstring).
+    # bpe._merge_pair's semantics, see operators/bpe.py docstring).
     def _bpe_ctes(n: int) -> str:
         ctes = [r"""w0 AS MATERIALIZED (
           SELECT word, count(*) AS cnt,

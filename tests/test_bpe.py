@@ -73,6 +73,39 @@ def test_bpe_greedy_chain_and_tiebreak(spark):
     m2 = bpe_merges(df2, n_merges=1).collect()
     assert (m2[0].left_sym, m2[0].right_sym) == ("a", "b")
 
+    # ties break in code-point order: U+FF41 < U+1F600, though in
+    # UTF-16 U+1F600's lead surrogate 0xD83D sorts below 0xFF41;
+    # quote and backslash symbols stay literal (no SQL escaping)
+    for text in ("\uff41b \U0001f600b \uff41b \U0001f600b",
+                 r"a\'b it's x\ny a\'b it's x\ny a\'b"):
+        df3 = spark.createDataFrame([(0, text)], ["doc_id", "text"])
+        m3 = [(r.rank, r.left_sym, r.right_sym, r.freq)
+              for r in bpe_merges(df3, n_merges=8).collect()]
+        assert m3 == _bpe_py([text], 8), text
+
+
+def test_bpe_merges_build_with_no_spark_job(spark):
+    """The fit is one grouped-map task: building the DataFrame runs no
+    job, and materializing it a bounded few."""
+    from vision_parse_spark.operators.bpe import bpe_merges
+
+    docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
+    sc = spark.sparkContext
+
+    def jobs(group, action):
+        sc.setJobGroup(group, group)
+        try:
+            out = action()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    m, n = jobs("bpe-build", lambda: bpe_merges(docs, n_merges=12))
+    assert n == 0, n
+    _, n = jobs("bpe-write", lambda: m.write.format("noop")
+                .mode("overwrite").save())
+    assert 0 < n <= 6, n
+
 
 def test_bpe_early_stop_and_validation(spark):
     """No pair with freq >= 2 -> zero merges; n_merges < 1 raises."""

@@ -119,6 +119,52 @@ def test_pagerank_empty_events(spark):
     assert transition_pagerank(e).collect() == []
 
 
+def test_pagerank_null_type_events_hold_no_mass(spark):
+    """NULL-type events are dropped before pairing, as NULL-ts ones
+    are: no node holds mass it cannot pass on, the ranks sum to 1 and
+    the DuckDB replay agrees bit for bit."""
+    import duckdb
+
+    from vision_parse_spark.operators.graph import transition_pagerank_sql
+
+    e = _events(spark, [
+        (1, 1, TS(2024, 1, 1, 0), "a"),
+        (2, 1, TS(2024, 1, 1, 1), None),
+        (3, 1, TS(2024, 1, 1, 2), "b"),
+        (4, 2, TS(2024, 1, 1, 0), "b"),
+        (5, 2, TS(2024, 1, 1, 1), "a"),
+        (6, 2, TS(2024, 1, 1, 2), None),
+        (7, 3, TS(2024, 1, 1, 0), "c"),
+    ])
+    got = {r.node: r["rank"] for r in transition_pagerank(e).collect()}
+    con = duckdb.connect()
+    con.register("events", e.toPandas())
+    assert got == dict(con.execute(transition_pagerank_sql()).fetchall())
+    assert set(got) == {"a", "b", "c"}
+    assert sum(got.values()) == pytest.approx(1.0, abs=1e-12)
+
+
+def test_pagerank_builds_with_no_spark_job(spark):
+    """The power iteration is one grouped-map task: building the
+    DataFrame runs no job, and materializing it a bounded few."""
+    e = spark.read.parquet("/root/testdata/sf0.01/events.parquet")
+    sc = spark.sparkContext
+
+    def jobs(group, action):
+        sc.setJobGroup(group, group)
+        try:
+            out = action()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    pr, n = jobs("pagerank-build", lambda: transition_pagerank(e))
+    assert n == 0, n
+    _, n = jobs("pagerank-write", lambda: pr.write.format("noop")
+                .mode("overwrite").save())
+    assert 0 < n <= 6, n
+
+
 def test_cohort_retention_matrix(spark):
     # u1 first in wk0, active wk0+wk2; u2 first wk0, active wk0;
     # u3 first wk2, active wk2+wk3; NULL ts dropped

@@ -354,18 +354,15 @@ def main():
                    [("e", "r"), ("o", "r"), ("i", "n")])
     sections.append((
         "BPE merge learning (bpe_merges) + encoder (bpe_apply)",
-        "round 6, Sennrich et al. 2016.  bpe_merges is a "
-        "control-plane loop (the Lloyd's-iteration shape): the "
-        "corpus collapses ONCE to a checkpointed (word, cnt, syms) "
-        "vocab — the only corpus-sized shuffle — then each round is "
-        "a pair census whose agg runs on the BOUNDED symbol-pair "
-        "key space (map-side combine; exchange rows = distinct "
-        "pairs, not words), a 1-row TakeOrderedAndProject argmax to "
-        "the driver, and a NARROW codegen'd aggregate-fold rewrite "
-        "of the symbol arrays (no shuffle), re-checkpointed so "
-        "lineage never nests.  The plan below is bpe_apply on real "
-        "docs with 3 learned merges: one Project of nested folds — "
-        "ZERO Exchange, parallelism from input splits alone.",
+        "round 6, Sennrich et al. 2016.  bpe_merges: the corpus "
+        "collapses ONCE to a (word, cnt) vocab — the only "
+        "corpus-sized shuffle — then one grouped-map task over that "
+        "vocab fits every merge rank (weighted pair census, argmax, "
+        "merge of every word), so building the DataFrame runs no "
+        "Spark job.  The fit and the encoder share one merge step "
+        "(_merge_pair).  The plan below is bpe_apply on real docs "
+        "with 3 merges: one ArrowEvalPython encoder — ZERO "
+        "Exchange, parallelism from input splits alone.",
         grab(ba),
     ))
 
@@ -431,10 +428,11 @@ def main():
         "plan: one partitionBy(user) window (lag with the (ts, id) "
         "tiebreak) feeding a bounded-key (src, dst) count agg — "
         "map-side combine collapses every partition to <= |types|^2 "
-        "rows before the tiny exchange.  The 5 rank rounds then run "
-        "on the checkpointed bounded edge relation (joins over "
-        "<= |types|^2 rows — control-plane-sized, the bpe_merges / "
-        "kmeans split), so the corpus is never touched again.",
+        "rows before the tiny exchange.  transition_pagerank feeds "
+        "the same pair counts (plus each user's first event type, "
+        "so isolated types stay nodes) to ONE grouped-map task that "
+        "runs all 5 rank rounds in Python, so the corpus is never "
+        "touched again and no Spark job runs per round.",
         grab(te),
     ))
 

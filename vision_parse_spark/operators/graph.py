@@ -2,34 +2,53 @@
 
 Not in the reference (no graph ops); PageRank over the event-type
 transition graph is the standard "which states matter" primitive for
-behavioural corpora (Page et al. 1999), and the same rank-iteration
-kernel serves any bounded-node graph an LLM-data pipeline derives
-(domain link graphs, near-dup cluster graphs, topic transitions).
+behavioural corpora (Page et al. 1999), and the same rank iteration
+serves any bounded-node graph an LLM-data pipeline derives (domain
+link graphs, near-dup cluster graphs, topic transitions).
 
 Scale design (100 TB): the CORPUS-SIZED work is exactly one pass —
 a lag window per user (one ``partitionBy(user)`` Exchange, shared
 with every other per-user temporal op) that emits consecutive
 ``(src, dst)`` event-type pairs, followed by a BOUNDED-KEY count
 aggregation (map-side combine collapses the stream to at most
-|types|² rows per task before the tiny shuffle).  The rank iteration
-itself runs over that bounded edge relation — joins and aggregates
-on at most |types|² rows, never touching the corpus again — so the
-plan is one big shuffle plus control-plane-sized iterations, the
-same split ``bpe_merges`` and ``kmeans_fit`` use.
+|types|² + |types| rows per task before the tiny shuffle).  The rank
+iteration then runs as ONE grouped-map task over that bounded
+relation — outdegrees and every round in Python, no Spark job per
+round — so the corpus is never touched again.
 
 Determinism (cross-engine): every floating-point reduction in the
-iteration is an ORDERED left fold over a sorted list (incoming
-contributions sorted by source node; dangling ranks sorted by node),
-so Spark and the DuckDB oracle replay produce BIT-IDENTICAL doubles
-— no merge-order drift, the ``unigram_logprob`` lesson.  Edge
-extraction orders each user's events by ``(ts, id_col)``; the unique
-id tiebreak makes duplicate-timestamp pair streams deterministic
-(the ``top_k_per_group`` / ``asof_join`` lesson).
+iteration is an ORDERED left fold from 0.0 (incoming contributions
+in source-node order; dangling ranks in node order), so the task and
+the DuckDB oracle replay produce BIT-IDENTICAL doubles — no
+merge-order drift, the ``unigram_logprob`` lesson.  Edge extraction
+orders each user's events by ``(ts, id_col)``; the unique id
+tiebreak makes duplicate-timestamp pair streams deterministic (the
+``top_k_per_group`` / ``asof_join`` lesson).  Events with a NULL ts
+(no defined position) or a NULL type (no node to hold mass) are
+dropped before the window.
 """
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
+
+
+def _type_pairs(events: DataFrame, user_col: str, type_col: str,
+                ts_col: str, id_col: str) -> DataFrame:
+    """``(src, dst, cnt)`` over consecutive events of each user, with
+    ``src`` NULL for a user's first event — so every event type
+    appears as some row's ``dst``."""
+    us = F.unix_micros(F.col(ts_col).cast("timestamp"))
+    w = (Window.partitionBy(user_col)
+               .orderBy(us.asc(), F.col(id_col).asc()))
+    return (events
+            .filter(F.col(ts_col).isNotNull()
+                    & F.col(type_col).isNotNull())
+            .withColumn("_src", F.lag(type_col).over(w))
+            .groupBy(F.col("_src").alias("src"),
+                     F.col(type_col).alias("dst"))
+            .agg(F.count(F.lit(1)).alias("cnt")))
 
 
 def transition_edges(
@@ -41,26 +60,11 @@ def transition_edges(
 ) -> DataFrame:
     """Consecutive-event transition edges with counts: one row per
     observed ``(src, dst)`` event-type pair with ``cnt`` = number of
-    adjacent occurrences across all users.  NULL-ts events are
-    dropped (no defined position).  One corpus shuffle (the per-user
-    window); the count agg is bounded-key."""
-    us = F.unix_micros(F.col(ts_col).cast("timestamp"))
-    w = (Window.partitionBy(user_col)
-               .orderBy(us.asc(), F.col(id_col).asc()))
-    return (events
-            .filter(F.col(ts_col).isNotNull())
-            .withColumn("_src", F.lag(type_col).over(w))
-            .filter(F.col("_src").isNotNull())
-            .groupBy(F.col("_src").alias("src"),
-                     F.col(type_col).alias("dst"))
-            .agg(F.count(F.lit(1)).alias("cnt")))
-
-
-def _fold_sum(list_col):
-    """Deterministic left-fold sum over an already-sorted array of
-    doubles — the merge-order-free reduction both engines replay."""
-    return F.aggregate(list_col, F.lit(0.0),
-                       lambda acc, x: acc + x)
+    adjacent occurrences across all users.  NULL-ts and NULL-type
+    events are dropped before pairing.  One corpus shuffle (the
+    per-user window); the count agg is bounded-key."""
+    return (_type_pairs(events, user_col, type_col, ts_col, id_col)
+            .filter(F.col("src").isNotNull()))
 
 
 def transition_pagerank(
@@ -88,8 +92,8 @@ def transition_pagerank(
 
     Output: ``(node, rank)`` — one row per event type, ranks summing
     to 1 (up to float).  All per-node incoming sums and the dangling
-    sum are ordered folds over sorted lists → bit-identical across
-    engines.
+    sum are ordered folds → bit-identical across engines.  Building
+    the DataFrame runs no Spark job; empty events give no rows.
     """
     if not 0.0 < damping < 1.0:
         raise ValueError(f"transition_pagerank: damping {damping} "
@@ -97,63 +101,36 @@ def transition_pagerank(
     if n_iter < 1:
         raise ValueError(f"transition_pagerank: n_iter {n_iter} < 1")
 
-    edges = transition_edges(events, user_col, type_col, ts_col,
-                             id_col)
-    nodes = (events.filter(F.col(ts_col).isNotNull())
-                   .select(F.col(type_col).alias("node"))
-                   .distinct())
-    # bounded relations from here on: |nodes| event types,
-    # |edges| <= |nodes|^2.  Checkpoint both so the n_iter-deep
-    # iteration replans from a materialized leaf instead of
-    # re-running the corpus window every round.
-    nodes = nodes.localCheckpoint(eager=True)
-    edges = (edges.join(
-                 edges.groupBy("src")
-                      .agg(F.sum("cnt").alias("outdeg")),
-                 "src")
-             .localCheckpoint(eager=True))
+    def power_iterate(pdf: pd.DataFrame) -> pd.DataFrame:
+        nodes = sorted(set(pdf["dst"]))
+        edges = sorted(pdf.dropna(subset=["src"])
+                          .itertuples(index=False, name=None))
+        outdeg: dict = {}
+        for u, _, c in edges:
+            outdeg[u] = outdeg.get(u, 0) + c
+        dangling = [v for v in nodes if v not in outdeg]
+        nd = float(len(nodes))
+        rank = {v: 1.0 / nd for v in nodes}
+        # explicit left folds, not sum(): from Python 3.12 on, sum()
+        # of floats is compensated and would not round like the oracle
+        for _ in range(n_iter):
+            inc = dict.fromkeys(nodes, 0.0)
+            for u, v, c in edges:        # src order within each dst
+                inc[v] += rank[u] * c / outdeg[u]
+            dang = 0.0
+            for v in dangling:
+                dang += rank[v]
+            rank = {v: (1.0 - damping) / nd
+                    + damping * (inc[v] + dang / nd) for v in nodes}
+        return pd.DataFrame({"node": nodes,
+                             "rank": [rank[v] for v in nodes]})
 
-    n = nodes.count()
-    if n == 0:
-        return nodes.withColumn("rank", F.lit(0.0))
-
-    # every float constant is formed IN-ENGINE from double casts
-    # (never a Python-precomputed decimal literal): DuckDB parses
-    # bare decimal literals as DECIMAL, not DOUBLE, so the oracle
-    # can only be bit-identical if both engines run the same IEEE
-    # ops on the same double inputs.
-    nd = F.lit(float(n))
-    ranks = nodes.withColumn("rank", F.lit(1.0) / nd)
-    for _ in range(n_iter):
-        contrib = (ranks.join(edges,
-                              ranks["node"] == edges["src"])
-                        .select(edges["dst"].alias("node"),
-                                edges["src"].alias("src"),
-                                (ranks["rank"] * edges["cnt"]
-                                 / edges["outdeg"]).alias("c")))
-        inc = (contrib.groupBy("node")
-                      .agg(_fold_sum(
-                          F.array_sort(F.collect_list(
-                              F.struct("src", "c"))).c)
-                          .alias("inc")))
-        dang = (ranks.join(edges.select("src").distinct(),
-                           ranks["node"] == F.col("src"),
-                           "left_anti")
-                     .agg(F.coalesce(_fold_sum(
-                         F.array_sort(F.collect_list(
-                             F.struct("node", "rank"))).rank),
-                         F.lit(0.0)).alias("dang")))
-        ranks = (nodes.join(inc, "node", "left")
-                      .crossJoin(F.broadcast(dang))
-                      .select(
-                          "node",
-                          ((F.lit(1.0) - F.lit(damping)) / nd
-                           + F.lit(damping)
-                           * (F.coalesce("inc", F.lit(0.0))
-                              + F.col("dang") / nd))
-                          .alias("rank"))
-                      .localCheckpoint(eager=True))
-    return ranks
+    node_t = events.schema[type_col].dataType.simpleString()
+    return (_type_pairs(events, user_col, type_col, ts_col, id_col)
+            # one group; a bare integer literal would read as an ordinal
+            .groupBy(F.lit("all").alias("_g"))
+            .applyInPandas(power_iterate,
+                           schema=f"node {node_t}, rank double"))
 
 
 def transition_pagerank_sql(
@@ -169,15 +146,16 @@ def transition_pagerank_sql(
     iteration count unrolled as CTEs (the ``kmeans_fit`` oracle
     pattern), every float constant cast to DOUBLE in-engine and
     every reduction an ordered ``list_reduce`` left fold seeded by a
-    prepended 0.0 (bit-identical to Spark's ``aggregate(l, 0.0,
-    +)``)."""
+    prepended 0.0 (bit-identical to the task's ordered sums from
+    0.0)."""
     d = f"CAST({damping} AS DOUBLE)"
     fold = ("list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
             "list({val} ORDER BY {ord})), (a, b) -> a + b)")
     ctes = [f"""base AS (
       SELECT {user_col} AS u, {id_col} AS eid,
              epoch_us({ts_col}) AS us, {type_col} AS et
-      FROM {src} WHERE {ts_col} IS NOT NULL)""",
+      FROM {src}
+      WHERE {ts_col} IS NOT NULL AND {type_col} IS NOT NULL)""",
             """pairs AS (
       SELECT lag(et) OVER (PARTITION BY u ORDER BY us, eid) AS src,
              et AS dst
